@@ -303,11 +303,12 @@ object PipelineFlagshipRehearsal {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val idxPath = s"$outDir/ivfpq_$nlist"
       timed(s"ivf_pq index write (${reps}x, nlist=$nlist)") {
-        Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idxPath,
-          nlist = nlist)
+        Similarity.AnnIndex.fit(emb, "vec_id", "embedding", "IVF,PQ",
+          nlist = nlist).write(emb, "vec_id", "embedding", idxPath)
       }
-      val probe = Similarity.ivfPqTopKFromIndex(spark, idxPath, emb,
-        "vec_id", "embedding", queries, k = k)
+      val (idx, codes) = Similarity.AnnIndex.read(spark, idxPath)
+      val probe = idx.search(emb, "vec_id", "embedding", queries, k = k,
+        codes = codes)
       locally {
         val plan = probe.queryExecution.executedPlan.toString
         require(plan.contains("dynamicpruning"),

@@ -130,7 +130,8 @@ object ScaleRehearsal {
     timed("embed_ann_pq (train + ADC scan + rerank)") {
       val queries = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      forceCount(Similarity.pqTopK(emb, "vec_id", "embedding", queries, k = 10))
+      forceCount(Similarity.AnnIndex.fit(emb, "vec_id", "embedding", "PQ")
+        .search(emb, "vec_id", "embedding", queries, k = 10))
     }
     // IVF-PQ through the PERSISTED index at reps× — the registered
     // embed_ann_ivf_pq path's warehouse shape (same defaults:
@@ -164,18 +165,18 @@ object ScaleRehearsal {
             .getAbsolutePath
           try {
             timed(s"embed_ann_ivf_pq index write ($tag)") {
-              Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idxPath,
-                nlist = nlist)
+              Similarity.AnnIndex.fit(emb, "vec_id", "embedding", "IVF,PQ",
+                nlist = nlist).write(emb, "vec_id", "embedding", idxPath)
               spark.read.parquet(s"$idxPath/codes").count()
             }
             timed(s"embed_ann_ivf_pq from-index probe ($tag)") {
-              forceCount(Similarity.ivfPqTopKFromIndex(spark, idxPath, emb,
-                "vec_id", "embedding", queries, k = 10))
+              val (idx, codes) = Similarity.AnnIndex.read(spark, idxPath)
+              forceCount(idx.search(emb, "vec_id", "embedding", queries,
+                k = 10, codes = codes))
             }
-            val cents = spark.read.parquet(s"$idxPath/centroids")
-              .orderBy(col("cell")).collect().map(_.getSeq[Double](1).toArray)
-            val codes = spark.read.parquet(s"$idxPath/codes")
-              .select(col("vec_id"), col("cell").cast("int").as("cell"))
+            val (idx, idxCodes) = Similarity.AnnIndex.read(spark, idxPath)
+            val cents = idx.coarse.get
+            val codes = idxCodes.select(col("vec_id"), col("cell"))
             val total = codes.count()
             // per-QUERY scanned rows (the cost a single probe pays) —
             // the union over 8 queries would cover most cells and
@@ -187,8 +188,8 @@ object ScaleRehearsal {
                 Seq("cell"))
               .groupBy(col("qid")).agg(sum(col("n")).as("scanned"))
               .agg(avg(col("scanned"))).head().getDouble(0)
-            val ivf = Similarity.ivfPqTopKFromIndex(spark, idxPath, emb,
-                "vec_id", "embedding", queries, k = 10)
+            val ivf = idx.search(emb, "vec_id", "embedding", queries, k = 10,
+                codes = idxCodes)
               .select(col("qid"), col("vec_id")).collect()
               .map(r => (r.getLong(0), r.getLong(1))).toSet
             val recall = (bf & ivf).size.toDouble / bf.size

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * under symmetric quantization is SCALE-FREE (the per-vector scale
   * cancels in q·q′/‖q‖‖q′‖), so the codes alone support approximate
   * scoring; exact re-ranking fetches full vectors for the few
-  * candidates only ([[graft.operators.Similarity.sq8TopK]]).
+  * candidates only ([[graft.operators.Similarity.AnnIndex]]).
   *
   * Deterministic: rounding is Math.round's half-toward-+infinity
   * (asymmetric for negatives: a scaled -63.5 codes to -63, not -64),

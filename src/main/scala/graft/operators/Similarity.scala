@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{CentroidDots, IvfCells, Quantize}
+
 /** Embedding similarity search over an `array<float>` column —
-  * training-data-pipeline layer (builder brief). Two paths:
+  * training-data-pipeline layer. Top-k search has three shapes:
   *
   *  - [[bruteForceTopK]]: exact cosine top-k of every query against the
   *    full corpus. The corpus side streams (one pass, codegen'd dot
@@ -14,6 +16,13 @@ import org.apache.spark.sql.functions._
   *    bucketed by sign-pattern, candidates meet only inside a bucket
   *    (with optional multi-probe on 1-bit flips). At 100 TB this is the
   *    shape that scales: the bucket id is a shuffle key, no all-pairs.
+  *  - [[AnnIndex]]: one quantized index, optional IVF coarse cells ×
+  *    a code (flat, SQ8 or PQ) × exact rerank, searched inline or
+  *    written once and read back.
+  *
+  * All-vs-all near-duplicate shapes are [[nearestDupLsh]] (1-NN over
+  * LSH buckets) and [[semanticDuplicates]] (threshold pairs inside IVF
+  * cells).
   *
   * All vector math runs as native codegen'd expressions over doubles
   * (`DotProduct`, `LshKeys`, `IvfCells` — `graft.functions`): no UDFs
@@ -83,8 +92,8 @@ object Similarity {
     * diverge between the exact and approximate paths.
     *
     * CALLER CONTRACT: `scored` must be shortlist-bounded — candidates
-    * from a bucket/cell equi-join ([[lshTopK]], [[ivfTopK]]) or a
-    * `k·refine` shortlist ([[rerankTopK]]); the one exception is
+    * from a bucket/cell equi-join ([[lshTopK]], an IVF [[AnnIndex]])
+    * or a `k·refine` shortlist ([[AnnIndex.search]]); the one exception is
     * [[bruteForceTopK]], the documented quadratic oracle leg. A
     * `row_number` window partitions all of `scored` by qid, so
     * applying it to an UNBOUNDED scored relation is exactly the
@@ -611,246 +620,6 @@ object Similarity {
     runs.reduceLeft((best, cand) => if (cand._2 < best._2) cand else best)._1
   }
 
-  /** IVF-style coarse quantization: assign every corpus vector to its
-    * nearest of `nlist` centroids — trained from the data by
-    * [[trainIvfCentroids]] (spherical k-means on a deterministic
-    * bounded sample) — then search only the `nprobe` closest cells
-    * per query. Returns the same (qid, vec_id, cos, rn) shape as the
-    * other paths. Data-derived centroids place cells where the
-    * embedding mass actually is (random directions waste cells on
-    * empty regions). Defaults probe nprobe=16 of nlist=32 cells — the
-    * SAME 50% scan fraction as the former 8-of-16, but finer cells
-    * raise measured top-10 recall to 0.888–0.900 across sf0.001–0.1
-    * (floor-certified at 0.75 by `embed_ann_recall`; 8-of-16 measured
-    * 0.76–0.84, random directions 0.71–0.75): at equal candidate
-    * volume, smaller cells waste fewer candidates on far regions. At
-    * warehouse scale raise nlist (~√N, the FAISS rule) and tune
-    * nprobe for the recall/cost point instead. */
-  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, nlist: Int = 32, nprobe: Int = 16,
-      dim: Int = -1, sampleSize: Int = 10000,
-      centroids: Array[Array[Double]] = null): DataFrame = {
-    // dim keeps its pre-k-means position and meaning (positional
-    // callers must not silently retrain on a dim-sized sample): it
-    // skips the deriveDim job on the empty-corpus fallback path.
-    // `centroids` lets a caller composing several IVF paths (e.g. the
-    // embed_ann_recall certificate running ivfTopK AND ivfSq8TopK)
-    // train the quantizer once instead of per call. Supplied centroids
-    // REPLACE training, so nlist must agree — a silent mismatch would
-    // make nprobe mean a different cell fraction than the caller tuned.
-    require(centroids == null || centroids.length == nlist,
-      s"supplied centroids (${if (centroids == null) 0 else centroids.length}) " +
-        s"must match nlist=$nlist — pass nlist = centroids.length")
-    val cents = if (centroids != null) centroids
-      else trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleSize,
-        dim = dim)
-    // cell assignment is one native IvfCells pass per row (argmax /
-    // top-nprobe over centroid dots) — the interpreted array_sort
-    // comparator it replaces ran once per CORPUS row; the old chain
-    // survives as the reference implementation in the equivalence spec
-    val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("cell",
-        element_at(graft.functions.IvfCells.cells(col("v"), cents, 1), 1))
-    val probes = queries.select(col("qid"), col("qv"),
-      explode(graft.functions.IvfCells.cells(col("qv"), cents, nprobe)).as("cell"))
-    val scored = c.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos"))
-      .distinct()
-    topKByCos(scored, k)
-  }
-
-  /** The int8-quantized relation of a vector column: (id, int8 codes)
-    * — 8× smaller than float64 at rest and in shuffle. This is the
-    * relation a warehouse would PERSIST as the scan-side ANN index
-    * (quantization is a one-time pass; see [[sq8TopK]] for the
-    * search). Cosine needs no per-vector scale (it cancels), so the
-    * codes alone are the index. */
-  def quantizeInt8(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("vec_id"),
-      graft.functions.Quantize.int8(asDouble(col(vecCol))).as("codes"))
-
-  /** Exact-rerank SQ8 top-k: score the CORPUS against each query on
-    * int8 codes (8× less data streamed than [[bruteForceTopK]] — the
-    * standard scalar-quantization memory/IO path), keep the
-    * `k · refine` best candidates per query, then re-rank just those
-    * few with full-precision cosine. Only candidate rows ever touch
-    * the full vectors (an equi-join by id — at 100 TB the float
-    * vectors stay in cold storage and are fetched per candidate),
-    * and the output is ranked by the SAME rounded-cosine/id order as
-    * [[bruteForceTopK]], so results differ from exact only when a
-    * true top-k neighbour fell outside the quantized top-`k·refine`
-    * — measured top-10 recall ≥ 0.98 at the default refine=4
-    * (floor-certified by `embed_ann_recall`). Deterministic: integer
-    * quantization, integer dot products, id tie-breaks. */
-  def sq8TopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, refine: Int = 4): DataFrame =
-    sq8Search(quantizeInt8(corpus, idCol, vecCol),
-      corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v")),
-      queries, k, refine)
-
-  /** Persist the SQ8 code relation as a parquet index — the one-time
-    * quantization pass. At warehouse scale this index is the HOT
-    * relation (8× smaller than the float64 vectors) and the vectors
-    * stay cold: [[sq8TopKFromIndex]] scans only the codes and fetches
-    * full vectors per shortlisted candidate. */
-  def writeSq8Index(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit =
-    quantizeInt8(corpus, idCol, vecCol)
-      .write.mode("overwrite").parquet(path)
-
-  /** [[sq8TopK]] against a pre-built [[writeSq8Index]] index: the
-    * quantized scan reads the (small) code parquet; `corpus` is
-    * touched only by the per-candidate rerank join. Output is
-    * identical to [[sq8TopK]] over the same corpus (quantization is
-    * deterministic), spec-pinned. */
-  def sq8TopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, refine: Int = 4): DataFrame =
-    sq8Search(spark.read.parquet(path),
-      corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v")),
-      queries, k, refine)
-
-  private def sq8Search(codes: DataFrame, base: DataFrame,
-      queries: DataFrame, k: Int, refine: Int): DataFrame = {
-    val qCodes = queries.select(col("qid"),
-      graft.functions.Quantize.int8(col("qv")).as("qcodes"))
-    // quantized scan: corpus codes stream once, tiny query side is
-    // broadcast; qcos is one primitive int8 pass per (row, query)
-    val cand = codes.crossJoin(broadcast(qCodes))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        graft.functions.Quantize.cosine(col("codes"), col("qcodes")).as("qcos"))
-    rerankTopK(shortlistOf(cand, k * refine), base, queries, k)
-  }
-
-  /** The `perQuery` best (qcos desc, id) candidates of a scored
-    * (qid, vec_id, qcos) relation. */
-  private def shortlistOf(cand: DataFrame, perQuery: Int): DataFrame = {
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("qcos").desc, col("vec_id"))
-    cand.withColumn("qrn", row_number().over(wq))
-      .filter(col("qrn") <= perQuery)
-      .select(col("qid"), col("vec_id"))
-  }
-
-  /** Exact full-precision rerank of a (qid, vec_id) shortlist: fetch
-    * vectors by id (only shortlisted candidates ever touch the float
-    * relation), score with the SAME rounded-cosine/id order as
-    * [[bruteForceTopK]], keep top `k`. */
-  private def rerankTopK(shortlist: DataFrame, base: DataFrame,
-      queries: DataFrame, k: Int): DataFrame = {
-    val rescored = shortlist
-      .join(base, Seq("vec_id"))
-      .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos"))
-    topKByCos(rescored, k)
-  }
-
-  /** IVF + SQ8: the standard big-corpus ANN composition (FAISS
-    * IVF-SQ). The corpus index is (cell, int8 codes) — coarse
-    * quantizer from [[trainIvfCentroids]], codes from
-    * [[quantizeInt8]]; a query scans only its `nprobe` closest cells
-    * AND scores them on int8 codes, so the scan side is
-    * nlist/nprobe-pruned and ~8× lighter than [[ivfTopK]]'s
-    * full-vector scan; the float vectors are touched per shortlisted
-    * candidate only ([[rerankTopK]]). Each corpus vector lives in
-    * exactly one cell, so the cell equi-join yields each (query,
-    * candidate) pair at most once — no dedup stage. Recall is bounded
-    * by the IVF cell pruning (the sq8+rerank layer is near-exact
-    * within probed cells — measured equal to [[ivfTopK]]'s
-    * 0.888–0.900 at the shared 16-of-32 defaults, floored at 0.75 by
-    * `embed_ann_recall`). */
-  def ivfSq8TopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, nlist: Int = 32, nprobe: Int = 16,
-      refine: Int = 4, dim: Int = -1, sampleSize: Int = 10000,
-      centroids: Array[Array[Double]] = null): DataFrame = {
-    require(centroids == null || centroids.length == nlist,
-      s"supplied centroids (${if (centroids == null) 0 else centroids.length}) " +
-        s"must match nlist=$nlist — pass nlist = centroids.length")
-    val cents = if (centroids != null) centroids
-      else trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleSize,
-        dim = dim)
-    val base = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-    val c = base.select(col("vec_id"),
-      element_at(graft.functions.IvfCells.cells(col("v"), cents, 1), 1).as("cell"),
-      graft.functions.Quantize.int8(col("v")).as("codes"))
-    ivfSq8Search(c, base, cents, queries, k, nprobe, refine)
-  }
-
-  /** The probed-cell int8 scan + exact rerank shared by [[ivfSq8TopK]]
-    * and [[ivfSq8TopKFromIndex]]: equi-join the (cell, codes) relation
-    * with the broadcast exploded query probes, score on int8, rerank
-    * the `k·refine` shortlist on full floats. */
-  private def ivfSq8Search(codes: DataFrame, base: DataFrame,
-      cents: Array[Array[Double]], queries: DataFrame, k: Int,
-      nprobe: Int, refine: Int): DataFrame = {
-    val probes = queries.select(col("qid"),
-        graft.functions.Quantize.int8(col("qv")).as("qcodes"),
-        explode(graft.functions.IvfCells.cells(col("qv"), cents, nprobe)).as("cell"))
-    val cand = codes.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        graft.functions.Quantize.cosine(col("codes"), col("qcodes")).as("qcos"))
-    rerankTopK(shortlistOf(cand, k * refine), base, queries, k)
-  }
-
-  /** Persist the IVF×SQ8 index: the (vec_id, codes) relation written
-    * PARTITIONED BY cell at `path`/codes, plus the trained coarse
-    * quantizer at `path`/centroids (nlist rows — the index is useless
-    * without the exact centroids that defined its cells, so they
-    * travel with it). Cell-partitioned layout is the point at scale:
-    * [[ivfSq8TopKFromIndex]] joins the scan to a broadcast probe list
-    * on the partition column, so Spark's dynamic partition pruning
-    * reads ONLY the probed cells' files — a nprobe/nlist fraction of
-    * the index bytes, before any row is decoded. Returns the centroids
-    * used (pass them back for a bit-identical [[ivfSq8TopK]]). */
-  def writeIvfSq8Index(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, nlist: Int = 32, dim: Int = -1,
-      sampleSize: Int = 10000,
-      centroids: Array[Array[Double]] = null): Array[Array[Double]] = {
-    require(centroids == null || centroids.length == nlist,
-      s"supplied centroids (${if (centroids == null) 0 else centroids.length}) " +
-        s"must match nlist=$nlist — pass nlist = centroids.length")
-    val cents = if (centroids != null) centroids
-      else trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleSize,
-        dim = dim)
-    corpus.select(col(idCol).as("vec_id"),
-        element_at(graft.functions.IvfCells.cells(
-          asDouble(col(vecCol)), cents, 1), 1).as("cell"),
-        graft.functions.Quantize.int8(asDouble(col(vecCol))).as("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    val spark = corpus.sparkSession
-    spark.createDataFrame(cents.toIndexedSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toIndexedSeq) })
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cents
-  }
-
-  /** [[ivfSq8TopK]] against a pre-built [[writeIvfSq8Index]] index:
-    * reads the persisted centroids (nlist rows — bounded driver
-    * metadata), probes `nprobe` cells, and scans only those cells'
-    * code partitions (dynamic partition pruning on the cell-partitioned
-    * parquet — spec-pinned). `corpus` is touched only by the
-    * per-candidate rerank join. Output is identical to [[ivfSq8TopK]]
-    * over the same corpus and centroids (quantization and cell
-    * assignment are deterministic), spec-pinned. */
-  def ivfSq8TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, nprobe: Int = 16,
-      refine: Int = 4): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).orderBy(col("cell"))
-      .collect().map(_.getSeq[Double](1).toArray)
-    val codes = spark.read.parquet(s"$path/codes")
-      .select(col("vec_id"), col("cell").cast("int").as("cell"), col("codes"))
-    val base = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-    ivfSq8Search(codes, base, cents, queries, k, nprobe, refine)
-  }
-
   /** Product-quantization codebooks: `m` per-subspace codebooks of up
     * to `ksub` centroids each (`[m][ksub][dim/m]`), trained with
     * per-subspace Euclidean k-means (k-means++ seeding, deterministic
@@ -987,79 +756,6 @@ object Similarity {
     }.map(_.join())
   }
 
-  /** The PQ code relation of a vector column: (vec_id, m-byte binary
-    * blob). THIS is the 100 TB hot relation — at m=8, d=32 the
-    * persisted index is 4× smaller than SQ8's codes and 32× smaller
-    * than the float64 vectors; the floats stay cold and are fetched
-    * per shortlisted candidate only. */
-  def quantizePq(corpus: DataFrame, idCol: String, vecCol: String,
-      codebooks: Array[Array[Array[Double]]]): DataFrame =
-    corpus.select(col(idCol).as("vec_id"),
-      graft.functions.Pq.codes(asDouble(col(vecCol)), codebooks).as("pq_codes"))
-
-  /** Persist the PQ code relation — the one-time encode pass. */
-  def writePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      codebooks: Array[Array[Array[Double]]], path: String): Unit =
-    quantizePq(corpus, idCol, vecCol, codebooks)
-      .write.mode("overwrite").parquet(path)
-
-  /** PQ + exact-rerank top-k (FAISS ADC search): the corpus streams
-    * only m-byte codes; each query carries a precomputed m·ksub ADC
-    * lookup table (built once per query row on the broadcast side by
-    * [[graft.functions.PqAdcTable]]), so scoring a (corpus, query)
-    * pair is m table lookups — no float vector is touched until the
-    * exact rerank fetches the `k · refine` shortlist by id
-    * ([[rerankTopK]], the [[sq8TopK]] discipline: output ranked by
-    * the same rounded-cosine/id order as [[bruteForceTopK]]).
-    * `refine` defaults higher than SQ8's (8 vs 4): PQ's per-subspace
-    * residual error is coarser than per-dimension rounding, so the
-    * shortlist needs more slack for the same recall. Deterministic:
-    * deterministic codebooks, argmin ties keep the lower centroid
-    * index, id tie-breaks in the shortlist and rerank. */
-  def pqTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, m: Int = 8, ksub: Int = 256,
-      refine: Int = 8, sampleSize: Int = 10000,
-      codebooks: Array[Array[Array[Double]]] = null): DataFrame = {
-    // supplied codebooks REPLACE training (sampleSize is then unused),
-    // so m/ksub must agree with their shape — a caller passing m=4
-    // with 8-subspace books would otherwise get no signal that the m
-    // it tuned is ignored
-    require(codebooks == null || (codebooks.length == m &&
-        codebooks.forall(_.length <= ksub)),
-      s"supplied codebooks (m=${if (codebooks == null) 0 else codebooks.length}, " +
-        s"max ksub=${if (codebooks == null) 0
-          else codebooks.map(_.length).maxOption.getOrElse(0)}) " +
-        s"must be consistent with m=$m, ksub=$ksub")
-    val books = if (codebooks != null) codebooks
-      else trainPqCodebooks(corpus, idCol, vecCol, m, ksub, sampleSize)
-    pqSearch(quantizePq(corpus, idCol, vecCol, books),
-      corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v")),
-      queries, books, k, refine)
-  }
-
-  /** [[pqTopK]] against a pre-built [[writePqIndex]] index: the scan
-    * reads the m-byte code parquet; `corpus` is touched only by the
-    * per-candidate rerank join. Identical output to [[pqTopK]] over
-    * the same corpus and codebooks (encoding is deterministic). */
-  def pqTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, codebooks: Array[Array[Array[Double]]],
-      k: Int, refine: Int = 8): DataFrame =
-    pqSearch(spark.read.parquet(path),
-      corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v")),
-      queries, codebooks, k, refine)
-
-  private def pqSearch(codes: DataFrame, base: DataFrame, queries: DataFrame,
-      books: Array[Array[Array[Double]]], k: Int, refine: Int): DataFrame = {
-    val qTables = queries.select(col("qid"),
-      graft.functions.Pq.adcTable(col("qv"), books).as("qtable"))
-    val cand = codes.crossJoin(broadcast(qTables))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        graft.functions.Pq.adcScore(col("pq_codes"), col("qtable")).as("qcos"))
-    rerankTopK(shortlistOf(cand, k * refine), base, queries, k)
-  }
-
   /** RESIDUAL PQ codebooks for IVF-PQ (the FAISS IndexIVFPQ trainer):
     * per-subspace Euclidean k-means on the residuals of the sampled
     * unit vectors w.r.t. their nearest coarse centroid. Residuals span
@@ -1116,151 +812,241 @@ object Similarity {
     kmeansSubspaces(pts, m, dsub, ksub, iters, seed)
   }
 
-  /** IVF + PQ: the canonical billion-vector ANN composition (FAISS
-    * IndexIVFPQ). The corpus index is (cell, m-byte residual codes) —
-    * coarse quantizer from [[trainIvfCentroids]], residual codebooks
-    * from [[trainIvfPqCodebooks]], both encoded in one native pass per
-    * row ([[graft.functions.PqResidualCodes]]). A query scans only its
-    * `nprobe` closest cells AND scores them as m byte-table lookups:
-    * ⟨q,v⟩ ≈ ⟨q,c_cell⟩ (one scalar per probed cell, computed on the
-    * broadcast side) + ADC(residual codes, residual table) — the ADC
-    * table is CELL-INDEPENDENT because the residual codebooks are
-    * shared across cells, so it is built once per query row exactly
-    * like flat PQ. At 100 TB this is the shape that wins: the scan
-    * side is nprobe/nlist-pruned AND m bytes per vector (32× smaller
-    * than float64 at m=8/d=32); floats are fetched per shortlisted
-    * candidate only ([[rerankTopK]], same rounded-cosine/id contract
-    * as every other path). Recall is bounded by cell pruning (the
-    * residual-PQ layer is near-lossless within probed cells — residual
-    * quantization error ≪ flat PQ's at equal m). Deterministic
-    * throughout: deterministic trainers, argmin/argmax ties keep the
-    * lower index, id tie-breaks in shortlist and rerank. */
-  def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, nlist: Int = 32, nprobe: Int = 16,
-      m: Int = 8, ksub: Int = 256, refine: Int = 8,
-      sampleSize: Int = 10000,
-      centroids: Array[Array[Double]] = null,
-      codebooks: Array[Array[Array[Double]]] = null): DataFrame = {
-    require(centroids == null || centroids.length == nlist,
-      s"supplied centroids (${if (centroids == null) 0 else centroids.length}) " +
-        s"must match nlist=$nlist — pass nlist = centroids.length")
-    require(codebooks == null || (codebooks.length == m &&
-        codebooks.forall(_.length <= ksub)),
-      s"supplied codebooks (m=${if (codebooks == null) 0 else codebooks.length}) " +
-        s"must be consistent with m=$m, ksub=$ksub")
-    val cents = if (centroids != null) centroids
-      else trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleSize)
-    val books = if (codebooks != null) codebooks
-      else trainIvfPqCodebooks(corpus, idCol, vecCol, cents, m, ksub, sampleSize)
-    val base = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-    val codes = base.select(col("vec_id"),
-        graft.functions.Pq.residualCodes(col("v"), cents, books).as("rc"))
-      .select(col("vec_id"), col("rc.cell").as("cell"),
-        col("rc.codes").as("pq_codes"))
-    ivfPqSearch(codes, base, cents, books, queries, k, nprobe, refine)
+  /** One approximate-nearest-neighbour index, composed the way the
+    * FAISS index factory composes them: an optional IVF coarse
+    * quantizer × a vector code × exact rerank. Every kind returns the
+    * (qid, vec_id, cos, rn) top-k of [[bruteForceTopK]], ranked by the
+    * same rounded-cosine/id order, so results differ from exact only
+    * when a true neighbour was pruned or fell outside the shortlist.
+    *
+    *  - `coarse` = Some(centroids) ([[trainIvfCentroids]]) puts every
+    *    corpus vector in ONE cell, its nearest centroid, and a query
+    *    scans only its `nprobe` closest cells: the cell equi-join
+    *    yields each (query, candidate) pair at most once, and on a
+    *    written index it dynamic-partition-prunes the scan to the
+    *    probed cells' files. Recall is bounded by the pruning: 16 of 32
+    *    cells measured 0.888–0.900 top-10 across sf0.001–0.1 for every
+    *    code (8 of 16 measured 0.76–0.84 at the same scan fraction;
+    *    floored at 0.75 by `embed_ann_recall`). At warehouse scale
+    *    raise nlist (~√N, the FAISS rule) and tune nprobe. None scans
+    *    the whole corpus against the broadcast queries.
+    *  - `code` is what the scan scores. [[AnnIndex.Flat]] scores the
+    *    float vectors exactly and ranks them directly.
+    *    [[AnnIndex.Sq8]] scores int8 codes ([[graft.functions.Quantize]],
+    *    8× lighter than float64) and [[AnnIndex.Pq]] m-byte product
+    *    codes by per-query ADC table lookups; under a coarse quantizer
+    *    the PQ books encode the cell RESIDUAL
+    *    ([[trainIvfPqCodebooks]]) and a pair scores ⟨q,c_cell⟩ + ADC.
+    *  - a quantized scan keeps the `k·refine` best candidates per query
+    *    and reranks only those on full-precision cosine: the float
+    *    vectors are fetched per shortlisted candidate only, so at scale
+    *    they stay cold. SQ8 at refine 4 measured top-10 recall ≥ 0.98;
+    *    PQ defaults to refine 8 because its per-subspace error is
+    *    coarser than per-dimension rounding.
+    *
+    * Deterministic throughout: deterministic trainers, argmin/argmax
+    * ties keep the lower index, id tie-breaks in shortlist and rerank.
+    */
+  final case class AnnIndex(coarse: Option[Array[Array[Double]]],
+      code: AnnIndex.Code) {
+    import AnnIndex._
+
+    /** The corpus as the index stores it: (vec_id[, cell], code) — the
+      * relation a warehouse persists, one native pass per row. */
+    def encode(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
+      val v = asDouble(col(vecCol))
+      (coarse, code) match {
+        // one pass assigns the cell AND encodes the residual against it
+        case (Some(cents), Pq(books)) =>
+          corpus.select(col(idCol).as("vec_id"),
+              graft.functions.Pq.residualCodes(v, cents, books).as("rc"))
+            .select(col("vec_id"), col("rc.cell").as("cell"),
+              col("rc.codes").as(code.column))
+        case _ =>
+          val enc = code match {
+            case Flat => v
+            case Sq8 => Quantize.int8(v)
+            case Pq(books) => graft.functions.Pq.codes(v, books)
+          }
+          corpus.select((col(idCol).as("vec_id") +: coarse.map(cents =>
+            element_at(IvfCells.cells(v, cents, 1), 1).as("cell")).toSeq) :+
+            enc.as(code.column): _*)
+      }
+    }
+
+    /** Persist the index at `path`: the [[encode]]d corpus at
+      * `path`/codes, PARTITIONED BY cell under a coarse quantizer, plus
+      * the state that defined the codes beside it — `path`/centroids
+      * (cell, centroid) and `path`/codebooks (j, c, centroid), both
+      * small bounded relations. [[AnnIndex.read]] restores the index. */
+    def write(corpus: DataFrame, idCol: String, vecCol: String,
+        path: String): Unit = {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      val w = encode(corpus, idCol, vecCol).write.mode("overwrite")
+      (if (coarse.isDefined) w.partitionBy("cell") else w).parquet(s"$path/codes")
+      def meta(df: DataFrame, name: String): Unit =
+        df.coalesce(1).write.mode("overwrite").parquet(s"$path/$name")
+      coarse.foreach(cents => meta(cents.toSeq.zipWithIndex
+        .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid"), "centroids"))
+      code match {
+        case Pq(books) => meta(books.toSeq.zipWithIndex.flatMap { case (book, j) =>
+            book.toSeq.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) } }
+          .toDF("j", "c", "centroid"), "codebooks")
+        case _ =>
+      }
+    }
+
+    /** Top-`k` neighbours of every (qid, qv) query. The scan reads
+      * `codes` — [[AnnIndex.read]]'s relation for a written index —
+      * or, when null, encodes `corpus` inline; either way `corpus`
+      * feeds only the exact rerank of the shortlist. */
+    def search(corpus: DataFrame, idCol: String, vecCol: String,
+        queries: DataFrame, k: Int, nprobe: Int = 16,
+        refine: Int = code.refine, codes: DataFrame = null): DataFrame = {
+      // query side (tiny, broadcast): the code's per-query kernel input
+      // — the ADC table is cell-independent, residual books being shared
+      // across cells — and, under IVF, one row per probed cell
+      val (qSide, score) = code match {
+        case Flat => (Seq(col("qv")), round(cosine(col("v"), col("qv")), 6))
+        case Sq8 => (Seq(Quantize.int8(col("qv")).as("qcodes")),
+          Quantize.cosine(col("codes"), col("qcodes")))
+        case Pq(books) =>
+          val adc = graft.functions.Pq.adcScore(col("pq_codes"), col("qtable"))
+          (graft.functions.Pq.adcTable(col("qv"), books).as("qtable") +:
+            coarse.map(cents => CentroidDots.dots(col("qv"), cents).as("cdots")).toSeq,
+            if (coarse.isEmpty) adc else element_at(col("cdots"), col("cell") + 1) + adc)
+      }
+      val probes = queries.select((col("qid") +: qSide) ++ coarse.map(cents =>
+        explode(IvfCells.cells(col("qv"), cents, nprobe)).as("cell")): _*)
+      val scan = Option(codes).getOrElse(encode(corpus, idCol, vecCol))
+      val pairs = (if (coarse.isEmpty) scan.crossJoin(broadcast(probes))
+        else scan.join(broadcast(probes), Seq("cell")))
+        .filter(col("vec_id") =!= col("qid"))
+      if (code == Flat)
+        return topKByCos(pairs.select(col("qid"), col("vec_id"), score.as("cos")), k)
+      // the k·refine best (qcos desc, id) candidates per query, then the
+      // exact rerank fetches just their vectors by id
+      val wq = Window.partitionBy(col("qid")).orderBy(col("qcos").desc, col("vec_id"))
+      val shortlist = pairs.select(col("qid"), col("vec_id"), score.as("qcos"))
+        .withColumn("qrn", row_number().over(wq))
+        .filter(col("qrn") <= k * refine)
+        .select(col("qid"), col("vec_id"))
+      topKByCos(shortlist
+        .join(corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v")),
+          Seq("vec_id"))
+        .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
+        .select(col("qid"), col("vec_id"),
+          round(cosine(col("v"), col("qv")), 6).as("cos")), k)
+    }
   }
 
-  /** The probed-cell ADC scan + exact rerank shared by [[ivfPqTopK]]
-    * and [[ivfPqTopKFromIndex]]. Query side (tiny, broadcast): the
-    * residual ADC table, the dots against ALL nlist centroids (one
-    * array per query row — `element_at` picks the probed cell's), and
-    * the exploded nprobe probe cells. Corpus side: the (cell, codes)
-    * relation equi-joined on cell, scored as qcdot + m lookups. */
-  private def ivfPqSearch(codes: DataFrame, base: DataFrame,
-      cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
-      queries: DataFrame, k: Int, nprobe: Int, refine: Int): DataFrame = {
-    val probes = queries.select(col("qid"),
-        graft.functions.Pq.adcTable(col("qv"), books).as("qtable"),
-        graft.functions.CentroidDots.dots(col("qv"), cents).as("cdots"),
-        explode(graft.functions.IvfCells.cells(col("qv"), cents, nprobe)).as("cell"))
-      .select(col("qid"), col("qtable"), col("cell"),
-        element_at(col("cdots"), col("cell") + 1).as("qcdot"))
-    val cand = codes.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        (col("qcdot") +
-          graft.functions.Pq.adcScore(col("pq_codes"), col("qtable"))).as("qcos"))
-    rerankTopK(shortlistOf(cand, k * refine), base, queries, k)
+  object AnnIndex {
+    /** What an [[AnnIndex]] scan scores: its column name in the codes
+      * relation, and the default rerank shortlist factor (unused by
+      * Flat, which ranks directly). */
+    sealed abstract class Code(val column: String, val refine: Int)
+    /** The float vectors themselves: exact cosine, no rerank. */
+    case object Flat extends Code("v", 1)
+    /** Per-vector symmetric int8 codes — scale-free under cosine. */
+    case object Sq8 extends Code("codes", 4)
+    /** One byte per subspace under `books` (`[m][≤ksub][dim/m]`). */
+    final case class Pq(books: Array[Array[Array[Double]]]) extends Code("pq_codes", 8)
+
+    /** Train the index `kind` — a FAISS-factory string, `[IVF,]Flat`,
+      * `[IVF,]SQ8` or `[IVF,]PQ` — on `corpus` with the existing
+      * trainers: `nlist` coarse cells on the shared ≤`sampleSize`
+      * sample, `m` PQ subspaces of ≤`ksub` centroids (residual books
+      * under IVF). Supplied `centroids`/`codebooks` REPLACE training
+      * (e.g. to share one staged quantizer across kinds), so they must
+      * match the tuning params — a silent mismatch would make nprobe
+      * mean a different cell fraction, or m a different code width,
+      * than the caller tuned. `dim`, when > 0, fixes the dimension of
+      * an empty corpus's fallback without a deriveDim job. */
+    def fit(corpus: DataFrame, idCol: String, vecCol: String, kind: String,
+        nlist: Int = 32, m: Int = 8, ksub: Int = 256, sampleSize: Int = 10000,
+        dim: Int = -1, centroids: Array[Array[Double]] = null,
+        codebooks: Array[Array[Array[Double]]] = null): AnnIndex = {
+      val ivf = kind.startsWith("IVF,")
+      val codeName = kind.stripPrefix("IVF,")
+      require(Seq("Flat", "SQ8", "PQ").contains(codeName),
+        s"unknown ANN index kind '$kind': expected [IVF,]Flat, [IVF,]SQ8 or [IVF,]PQ")
+      require((centroids == null || ivf && centroids.length == nlist) &&
+          (codebooks == null || codeName == "PQ" && codebooks.length == m &&
+            codebooks.forall(_.length <= ksub)),
+        s"supplied quantizer state (${Option(centroids).fold(0)(_.length)} centroids, " +
+          s"codebook sizes ${Option(codebooks).fold("none")(_.map(_.length).mkString("/"))}) " +
+          s"must match kind=$kind, nlist=$nlist, m=$m, ksub=$ksub")
+      val coarse = if (!ivf) None else Some(Option(centroids).getOrElse(
+        trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleSize, dim = dim)))
+      AnnIndex(coarse, codeName match {
+        case "Flat" => Flat
+        case "SQ8" => Sq8
+        case _ => Pq(Option(codebooks).getOrElse(coarse.fold(
+          trainPqCodebooks(corpus, idCol, vecCol, m, ksub, sampleSize, dim = dim))(
+          cents => trainIvfPqCodebooks(corpus, idCol, vecCol, cents, m, ksub, sampleSize))))
+      })
+    }
+
+    /** Open an index [[AnnIndex.write]] wrote at `path`: the index —
+      * its kind read off the codes' schema (a `cell` column means a
+      * coarse quantizer, the code column names the code) — and its
+      * codes relation for [[AnnIndex.search]]. Centroids and codebooks
+      * are validated as they are read, so a truncated or corrupt index
+      * fails loud, naming the path, instead of an opaque empty-max
+      * error or a per-row dimension mismatch on executors. */
+    def read(spark: SparkSession, path: String): (AnnIndex, DataFrame) = {
+      val codes = parquetAt(spark, s"$path/codes")
+      val coarse = if (!codes.columns.contains("cell")) None else {
+        val rows = metadataAt(spark, s"$path/centroids", "cell", "centroid")
+        val cents = rows.map(_.getSeq[Double](1).toArray)
+        require(rows.map(_.getInt(0)).sameElements(rows.indices) &&
+            cents.forall(_.length == cents.head.length),
+          s"IVF centroids at $path/centroids are not cells 0..${rows.length - 1} of one dim")
+        Some(cents)
+      }
+      val code = if (codes.columns.contains(Sq8.column)) Sq8
+        else if (!codes.columns.contains("pq_codes")) Flat
+        else {
+          val rows = metadataAt(spark, s"$path/codebooks", "j", "c", "centroid")
+          val books = Array.tabulate(rows.map(_.getInt(0)).max + 1)(j =>
+            rows.filter(_.getInt(0) == j).map(_.getSeq[Double](2).toArray))
+          require(books.forall(_.nonEmpty) &&
+              coarse.forall(_.head.length == books.map(_.head.length).sum),
+            s"PQ codebooks at $path/codebooks are missing subspaces (m=${books.length}) " +
+              "or do not split the centroid dim")
+          Pq(books)
+        }
+      (AnnIndex(coarse, code), codes.select((col("vec_id") +: coarse.map(_ =>
+        col("cell").cast("int").as("cell")).toSeq) :+ col(code.column): _*))
+    }
+
+    private def parquetAt(spark: SparkSession, dir: String): DataFrame =
+      try spark.read.parquet(dir)
+      catch { case e: AnalysisException =>
+        throw new IllegalArgumentException(s"ANN index part missing or empty at $dir", e) }
+
+    /** All rows of a metadata relation, ordered by its key columns. */
+    private def metadataAt(spark: SparkSession, dir: String, cols: String*): Array[Row] = {
+      val rows = parquetAt(spark, dir).select(cols.map(col): _*)
+        .orderBy(cols.init.map(col): _*).collect()
+      require(rows.nonEmpty, s"ANN index part missing or empty at $dir")
+      rows
+    }
   }
 
-  /** Persist the IVF-PQ index: residual codes CELL-PARTITIONED at
-    * `path`/codes (the [[writeIvfSq8Index]] layout — the probe join
-    * dynamic-partition-prunes the scan to the probed cells' files),
-    * the coarse centroids at `path`/centroids, and the residual
-    * codebooks at `path`/codebooks (m·ksub rows — bounded metadata;
-    * the index is useless without the exact books that defined its
-    * codes, so they travel with it). Returns (centroids, codebooks)
-    * for a bit-identical [[ivfPqTopK]]. */
-  def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, nlist: Int = 32, m: Int = 8, ksub: Int = 256,
-      sampleSize: Int = 10000,
-      centroids: Array[Array[Double]] = null,
-      codebooks: Array[Array[Array[Double]]] = null):
-      (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    require(centroids == null || centroids.length == nlist,
-      s"supplied centroids (${if (centroids == null) 0 else centroids.length}) " +
-        s"must match nlist=$nlist — pass nlist = centroids.length")
-    require(codebooks == null || (codebooks.length == m &&
-        codebooks.forall(_.length <= ksub)),
-      s"supplied codebooks (m=${if (codebooks == null) 0 else codebooks.length}) " +
-        s"must be consistent with m=$m, ksub=$ksub")
-    val cents = if (centroids != null) centroids
-      else trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleSize)
-    val books = if (codebooks != null) codebooks
-      else trainIvfPqCodebooks(corpus, idCol, vecCol, cents, m, ksub, sampleSize)
-    corpus.select(col(idCol).as("vec_id"),
-        graft.functions.Pq.residualCodes(
-          asDouble(col(vecCol)), cents, books).as("rc"))
-      .select(col("vec_id"), col("rc.cell").as("cell"),
-        col("rc.codes").as("pq_codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    val spark = corpus.sparkSession
-    spark.createDataFrame(cents.toIndexedSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toIndexedSeq) })
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    spark.createDataFrame(books.toIndexedSeq.zipWithIndex.flatMap {
-        case (book, j) => book.toIndexedSeq.zipWithIndex.map {
-          case (cent, c) => (j, c, cent.toIndexedSeq) } })
-      .toDF("j", "c", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    (cents, books)
-  }
+  /** IVF-SQ8 on the [[AnnIndex.write]] layout — kept only because
+    * perfbench's `ann_search` workload compiles against these two
+    * names. */
+  def writeIvfSq8Index(corpus: DataFrame, idCol: String, vecCol: String,
+      path: String, nlist: Int = 32, centroids: Array[Array[Double]] = null): Unit =
+    AnnIndex.fit(corpus, idCol, vecCol, "IVF,SQ8", nlist, centroids = centroids)
+      .write(corpus, idCol, vecCol, path)
 
-  /** [[ivfPqTopK]] against a pre-built [[writeIvfPqIndex]] index:
-    * reads the persisted centroids + codebooks (bounded driver
-    * metadata), probes `nprobe` cells, and scans only those cells'
-    * code partitions (dynamic partition pruning, spec-pinned).
-    * `corpus` is touched only by the per-candidate rerank join.
-    * Output is identical to [[ivfPqTopK]] over the same corpus,
-    * centroids and codebooks (encoding is deterministic). */
-  def ivfPqTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, nprobe: Int = 16,
-      refine: Int = 8): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).orderBy(col("cell"))
-      .collect().map(_.getSeq[Double](1).toArray)
-    val bookRows = spark.read.parquet(s"$path/codebooks")
-      .select(col("j"), col("c"), col("centroid"))
-      .orderBy(col("j"), col("c")).collect()
-    // fail loud on a truncated/corrupt index instead of an opaque
-    // empty-max error or a per-row dimension mismatch on executors
-    require(cents.nonEmpty, s"no IVF-PQ centroids at $path/centroids")
-    require(bookRows.nonEmpty, s"no IVF-PQ codebooks at $path/codebooks")
-    val m = bookRows.map(_.getInt(0)).max + 1
-    val books = Array.tabulate(m)(j =>
-      bookRows.filter(_.getInt(0) == j).map(_.getSeq[Double](2).toArray))
-    require(books.forall(_.nonEmpty),
-      s"IVF-PQ codebooks at $path/codebooks are missing subspaces (m=$m)")
-    val dsubSum = books.map(_.head.length).sum
-    require(cents.head.length == dsubSum,
-      s"IVF-PQ index at $path is inconsistent: centroid dim " +
-        s"${cents.head.length} != sum of codebook subspace dims $dsubSum")
-    val codes = spark.read.parquet(s"$path/codes")
-      .select(col("vec_id"), col("cell").cast("int").as("cell"), col("pq_codes"))
-    val base = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-    ivfPqSearch(codes, base, cents, books, queries, k, nprobe, refine)
+  def ivfSq8TopKFromIndex(spark: SparkSession, path: String, corpus: DataFrame,
+      idCol: String, vecCol: String, queries: DataFrame, k: Int, nprobe: Int = 16,
+      refine: Int = 4): DataFrame = AnnIndex.read(spark, path) match {
+    case (idx, codes) => idx.search(corpus, idCol, vecCol, queries, k, nprobe, refine, codes)
   }
 
   /** The deduplicated corpus under [[semanticDuplicates]]: clusters

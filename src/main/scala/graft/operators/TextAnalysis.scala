@@ -74,7 +74,7 @@ object TextAnalysis {
     * is fully deterministic) and stops early when no pair repeats.
     * At 100 TB the sample stays the same size — training cost is a
     * constant, and a production run would persist the merges next to
-    * the corpus the way [[Similarity.writePqIndex]] persists codes. */
+    * the corpus the way [[Similarity.AnnIndex.write]] persists codes. */
   def trainBpeMerges(docs: DataFrame, idCol: String, textCol: String,
       numMerges: Int = 200, sampleSize: Int = 2000): Array[(String, String)] = {
     require(numMerges >= 0, "numMerges must be >= 0")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOf, Dedup, ImportanceSampling, LanguageModel, Multimodal, Packing, QualityModel, RangeJoin, Sampling, Similarity, TextAnalysis, Windows}
+import graft.operators.Similarity.AnnIndex
 
 /** Training-data-pipeline operator queries (builder brief): dedup
   * family, embedding similarity, text analysis, windowed/sketch
@@ -333,17 +334,19 @@ object PipelineQueries {
       ("lsh", 0.8,
         Similarity.lshTopK(emb, "vec_id", "embedding", queries, k = 10)),
       ("ivf", 0.75,
-        Similarity.ivfTopK(emb, "vec_id", "embedding", queries, k = 10,
-          centroids = cents)),
+        AnnIndex(Some(cents), AnnIndex.Flat)
+          .search(emb, "vec_id", "embedding", queries, k = 10)),
       ("sq8", 0.9,
-        Similarity.sq8TopK(emb, "vec_id", "embedding", queries, k = 10)),
+        AnnIndex(None, AnnIndex.Sq8)
+          .search(emb, "vec_id", "embedding", queries, k = 10)),
       ("ivf_sq8", 0.75,
-        Similarity.ivfSq8TopK(emb, "vec_id", "embedding", queries, k = 10,
-          centroids = cents)),
+        AnnIndex(Some(cents), AnnIndex.Sq8)
+          .search(emb, "vec_id", "embedding", queries, k = 10)),
       // PQ: observed 0.93-1.0 across sf0.001-0.1 at the default
       // m=8/ksub=256/refine=8 — floor 0.7 keeps >=30% margin
       ("pq", 0.7,
-        Similarity.pqTopK(emb, "vec_id", "embedding", queries, k = 10)),
+        AnnIndex.fit(emb, "vec_id", "embedding", "PQ")
+          .search(emb, "vec_id", "embedding", queries, k = 10)),
       // IVF-PQ: recall is bounded by the SAME cell pruning as the
       // plain ivf/ivf_sq8 paths (shared cents, nprobe 16 of 32 —
       // measured 0.875/0.888/0.900 at sf0.1/0.01/0.001, within a hit
@@ -351,8 +354,8 @@ object PipelineQueries {
       // near-lossless at refine=8) — same 0.75 floor as the other IVF
       // paths, >=16% margin
       ("ivf_pq", 0.75,
-        Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries, k = 10,
-          centroids = cents, codebooks = stagedIvfPqBooks(s, dir))))
+        AnnIndex(Some(cents), AnnIndex.Pq(stagedIvfPqBooks(s, dir)))
+          .search(emb, "vec_id", "embedding", queries, k = 10)))
     AnnRecallLegs(exact, exact1nn, nearestDup, methods)
   }
 
@@ -604,16 +607,7 @@ object PipelineQueries {
         // the silent-mismatch risk the operator's own contract warns
         // about if either side is ever edited alone
         val params @ (shingleN, k, bands) = (3, 128, 32)
-        // spread the hash-kernel input (r22, §2.5): the single-split
-        // fixture serialized the signature pass AND the index write
-        // onto one task (profiled 0.34 s + 0.22 s single-task write
-        // jobs); conditional — no-op on many-split inputs — and the
-        // text crosses the exchange once into the one write pass.
-        // Call-site spread, not inside writeNearDupIndex: the stream
-        // drains prepare indexes from limit(0) frames where a spread
-        // would only manufacture empty part-files.
-        Dedup.writeNearDupIndex(graft.operators.Scale.spreadForKernel(
-            docs, col("doc_id")), "doc_id", "text",
+        Dedup.writeNearDupIndex(docs, "doc_id", "text",
           idx, shingleN, k, bands)
         // self-matches are already excluded by the operator's
         // candidate filter (doc_new =!= indexed doc). The probe result
@@ -666,15 +660,7 @@ object PipelineQueries {
       (s, dir) => {
         val base = Tables.embeddings(s, dir)
           .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-        // spread before checkpointing (r22, §2.5): the union of two
-        // single-split legs checkpoints as 2 partitions, serializing
-        // every downstream cosine/cell kernel onto 2 tasks (profiled
-        // 0.33 s 2-task candidate-join stage per rep). One conditional
-        // exchange of the vectors INTO the checkpoint; every consumer
-        // then reads 32-way blocks — no repeated payload shuffle.
-        val corpus = graft.operators.Scale.spreadForKernel(
-            base.unionByName(plantedNearDups(base, twinOffsetBatch)),
-            col("vec_id"))
+        val corpus = base.unionByName(plantedNearDups(base, twinOffsetBatch))
           .localCheckpoint()
         val exact = certExactPairs(corpus, 0.95, twinOffsetBatch).localCheckpoint()
         val approx = Similarity
@@ -847,7 +833,8 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        Similarity.sq8TopK(emb, "vec_id", "embedding", queries, k = 10)
+        AnnIndex(None, AnnIndex.Sq8)
+          .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       // r17: full oracle — SQ8 is a pure per-vector function, so
       // DuckDB replays quantize → integer-exact quantized cosine →
@@ -861,7 +848,7 @@ object PipelineQueries {
         // actually runs: the scan side is nprobe/nlist-pruned AND 8×
         // lighter. Candidate membership depends on centroids AND the
         // quantized preselection → no SQL oracle on rows; recall is
-        // floored by embed_ann_recall (measured equal to ivfTopK's
+        // floored by embed_ann_recall (measured equal to plain IVF's
         // 0.888–0.900: the sq8+rerank layer is lossless within cells).
         // Coarse quantizer STAGED per (session, dir) — see
         // stagedIvfCents — so the row times the search (the per-query
@@ -871,8 +858,8 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        Similarity.ivfSq8TopK(emb, "vec_id", "embedding", queries, k = 10,
-          centroids = stagedIvfCents(s, dir))
+        AnnIndex(Some(stagedIvfCents(s, dir)), AnnIndex.Sq8)
+          .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       // r17: full oracle — the frozen golden quantizer
       // (GoldenAnnCents, fingerprint-dispatched; AnnGoldenSpec is the
@@ -894,7 +881,8 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        Similarity.pqTopK(emb, "vec_id", "embedding", queries, k = 10)
+        AnnIndex.fit(emb, "vec_id", "embedding", "PQ")
+          .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       Some(AnnOracles.pqSql())),
 
@@ -917,9 +905,8 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries, k = 10,
-          centroids = stagedIvfCents(s, dir),
-          codebooks = stagedIvfPqBooks(s, dir))
+        AnnIndex(Some(stagedIvfCents(s, dir)), AnnIndex.Pq(stagedIvfPqBooks(s, dir)))
+          .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       Some(AnnOracles.ivfPqSql())),
 
@@ -1034,8 +1021,8 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        Similarity.ivfTopK(emb, "vec_id", "embedding", queries, k = 10,
-          centroids = stagedIvfCents(s, dir))
+        AnnIndex(Some(stagedIvfCents(s, dir)), AnnIndex.Flat)
+          .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       // r17: full oracle over the frozen golden quantizer — see
       // embed_ann_ivf_sq8

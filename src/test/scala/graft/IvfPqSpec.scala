@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.operators.Similarity.AnnIndex
 import graft.queries.Tables
 
 /** IVF-PQ (FAISS IndexIVFPQ shape): residual encoding kernels, the
@@ -186,40 +187,12 @@ class IvfPqSpec extends SparkSpecBase {
   test("ivfPqTopK recall vs brute force") {
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivfpq = Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries, 10,
-        centroids = cents, codebooks = books)
+    val ivfpq = AnnIndex(Some(cents), AnnIndex.Pq(books))
+      .search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & ivfpq).size.toDouble / bf.size
     info(f"ivf-pq recall: $recall%.3f")
     assert(recall >= 0.75, s"IVF-PQ recall $recall too low")
-  }
-
-  test("ivfPqTopKFromIndex: index ≡ direct, cell-partitioned layout, pruned scan") {
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ivfpq_idx_${ProcessHandle.current().pid()}").getAbsolutePath
-    try {
-      val (wc, wb) = Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        centroids = cents, codebooks = books)
-      assert(wc eq cents); assert(wb eq books)
-      val cellDirs = new java.io.File(s"$idx/codes").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      assert(cellDirs.length > 1,
-        s"expected cell=* partition dirs, got ${cellDirs.length}")
-      val direct = Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries,
-          10, centroids = cents, codebooks = books)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      val fromIdxDf = Similarity.ivfPqTopKFromIndex(spark, idx, emb, "vec_id",
-        "embedding", queries, 10)
-      val fromIdx = fromIdxDf
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      assert(fromIdx === direct)
-      val plan = fromIdxDf.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning"),
-        s"expected a dynamic-partition-pruned cell scan in plan:\n$plan")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
   }
 
   test("trainIvfPqCodebooks contracts: divisibility, ksub cap, mismatch guards") {
@@ -233,11 +206,11 @@ class IvfPqSpec extends SparkSpecBase {
     }
     // supplied centroids/codebooks that disagree with nlist/m raise
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries, 10,
+      AnnIndex.fit(emb, "vec_id", "embedding", "IVF,PQ",
         nlist = 16, centroids = cents)
     }
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries, 10,
+      AnnIndex.fit(emb, "vec_id", "embedding", "IVF,PQ",
         m = 4, centroids = cents, codebooks = books)
     }
     // empty corpus: degenerate books of the right shape, no crash

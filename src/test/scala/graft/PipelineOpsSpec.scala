@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Sampling, Similarity, TextAnalysis, Windows}
+import graft.operators.Similarity.AnnIndex
 import graft.queries.Tables
 
 /** Behavior tests for the training-data-pipeline operators whose
@@ -750,16 +751,16 @@ class PipelineOpsSpec extends SparkSpecBase {
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val books = Similarity.trainPqCodebooks(emb, "vec_id", "embedding")
-    val pq = Similarity.pqTopK(emb, "vec_id", "embedding", queries, 10,
-        codebooks = books)
+    val pqIdx = AnnIndex(None, AnnIndex.Pq(books))
+    val pq = pqIdx.search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & pq).size.toDouble / bf.size
     assert(recall >= 0.7, s"PQ recall $recall below floor")
     // codes are m-byte blobs, deterministic under repartitioning
-    val codes = Similarity.quantizePq(emb, "vec_id", "embedding", books)
+    val codes = pqIdx.encode(emb, "vec_id", "embedding")
     assert(codes.select(length(col("pq_codes"))).distinct()
       .collect().map(_.getInt(0)).toSeq === Seq(8))
-    val again = Similarity.quantizePq(emb.repartition(7), "vec_id", "embedding", books)
+    val again = pqIdx.encode(emb.repartition(7), "vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toMap
     assert(codes.collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq))
       .forall { case (id, c) => again(id) == c })
@@ -778,9 +779,10 @@ class PipelineOpsSpec extends SparkSpecBase {
     // persisted index searches identically to the direct path
     val dir = java.nio.file.Files.createTempDirectory("pq_idx").toString
     try {
-      Similarity.writePqIndex(emb, "vec_id", "embedding", books, dir)
-      val fromIdx = Similarity.pqTopKFromIndex(spark, dir, emb, "vec_id",
-          "embedding", queries, books, 10)
+      pqIdx.write(emb, "vec_id", "embedding", dir)
+      val (back, backCodes) = AnnIndex.read(spark, dir)
+      val fromIdx = back.search(emb, "vec_id", "embedding", queries, 10,
+          codes = backCodes)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(fromIdx === pq)
     } finally {
@@ -791,7 +793,7 @@ class PipelineOpsSpec extends SparkSpecBase {
         (2L, Seq(1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)))
       .toDF("vec_id", "v")
     val zbooks = Similarity.trainPqCodebooks(z, "vec_id", "v", m = 2)
-    val zc = Similarity.quantizePq(z, "vec_id", "v", zbooks)
+    val zc = AnnIndex(None, AnnIndex.Pq(zbooks)).encode(z, "vec_id", "v")
       .collect().map(r => (r.getLong(0), r.isNullAt(1))).toMap
     assert(zc(1L) && !zc(2L), "zero-norm vector must code to null")
     // a PQ code is one byte: >256 centroids per subspace must be
@@ -803,7 +805,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     // degrades to an empty result (the deriveDim discipline), not a
     // trainer crash on the dim-divisibility check
     val none = z.filter(col("vec_id") < 0)
-    assert(Similarity.pqTopK(none, "vec_id", "v",
+    assert(AnnIndex.fit(none, "vec_id", "v", "PQ").search(none, "vec_id", "v",
       none.select(col("vec_id").as("qid"), col("v").as("qv")), 10).isEmpty)
   }
 
@@ -824,7 +826,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     val books = Similarity.trainPqCodebooks(dirty, "vec_id", "v", m = 2)
     assert(books.forall(_.forall(_.forall(java.lang.Double.isFinite))))
     // and the corrupt rows still code to null downstream
-    val codes = Similarity.quantizePq(dirty, "vec_id", "v", books)
+    val codes = AnnIndex(None, AnnIndex.Pq(books)).encode(dirty, "vec_id", "v")
       .collect().map(r => (r.getLong(0), r.isNullAt(1))).toMap
     assert(!codes(1L) && !codes(2L) && codes(3L) && codes(4L) && codes(5L))
   }
@@ -834,7 +836,8 @@ class PipelineOpsSpec extends SparkSpecBase {
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 10)
+    val ivf = AnnIndex.fit(emb, "vec_id", "embedding", "IVF,Flat")
+      .search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & ivf).size.toDouble / bf.size
     // measured 0.888-0.900 across sf0.001-0.1 with restart-trained
@@ -1033,7 +1036,8 @@ class PipelineOpsSpec extends SparkSpecBase {
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sq8 = Similarity.sq8TopK(emb, "vec_id", "embedding", queries, 10)
+    val sq8 = AnnIndex(None, AnnIndex.Sq8)
+      .search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & sq8).size.toDouble / bf.size
     // measured 1.0 across sf0.001/0.01/0.1 at the default refine=4
@@ -1048,9 +1052,12 @@ class PipelineOpsSpec extends SparkSpecBase {
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 10)
+    val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", nlist = 32)
+    val ivf = AnnIndex(Some(cents), AnnIndex.Flat)
+      .search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivfSq = Similarity.ivfSq8TopK(emb, "vec_id", "embedding", queries, 10)
+    val ivfSq = AnnIndex(Some(cents), AnnIndex.Sq8)
+      .search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & ivfSq).size.toDouble / bf.size
     // measured 0.888-0.900 across sf0.001-0.1 — exactly the plain-IVF
@@ -1059,56 +1066,6 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(recall >= 0.75, s"IVF-SQ8 recall $recall too low")
     assert((bf & ivfSq).size >= (bf & ivf).size - 1,
       "sq8 layer should not lose recall vs plain IVF beyond rounding ties")
-  }
-
-  test("ivfSq8TopKFromIndex: index ≡ direct, cell-partitioned layout, pruned scan") {
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ivfsq8_idx_${ProcessHandle.current().pid()}").getAbsolutePath
-    try {
-      val cents = Similarity.writeIvfSq8Index(emb, "vec_id", "embedding", idx)
-      // the one-time build wrote a cell-partitioned code relation —
-      // the layout dynamic partition pruning needs
-      val cellDirs = new java.io.File(s"$idx/codes").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      assert(cellDirs.length > 1, s"expected cell=* partition dirs, got ${cellDirs.length}")
-      val direct = Similarity.ivfSq8TopK(emb, "vec_id", "embedding", queries,
-          10, centroids = cents)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      val fromIdxDf = Similarity.ivfSq8TopKFromIndex(spark, idx, emb, "vec_id",
-        "embedding", queries, 10)
-      val fromIdx = fromIdxDf
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      assert(fromIdx === direct)
-      // the probe join must reach the scan as a partition-pruning
-      // filter: only the probed cells' files are read
-      val plan = fromIdxDf.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning"),
-        s"expected a dynamic-partition-pruned cell scan in plan:\n$plan")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  test("sq8TopKFromIndex over a persisted index equals the direct path") {
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_sq8_idx_${ProcessHandle.current().pid()}").getAbsolutePath
-    try {
-      Similarity.writeSq8Index(emb, "vec_id", "embedding", idx)
-      val direct = Similarity.sq8TopK(emb, "vec_id", "embedding", queries, 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      val fromIdx = Similarity.sq8TopKFromIndex(spark, idx, emb, "vec_id",
-          "embedding", queries, 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      assert(fromIdx === direct)
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
   }
 
   test("shuffleOrder is a deterministic layout-proof permutation; seeds decorrelate") {
@@ -1174,7 +1131,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     val queries = emb.filter(col("vec_id") < 2)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
     val none = emb.filter(col("vec_id") < 0)
-    assert(Similarity.sq8TopK(none, "vec_id", "embedding", queries, 10).count() === 0)
+    assert(AnnIndex(None, AnnIndex.Sq8)
+      .search(none, "vec_id", "embedding", queries, 10).count() === 0)
   }
 
   test("IVF centroid training is deterministic and partitioning-independent") {
@@ -1203,7 +1161,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(cents.length === 4)
     val q = same.filter(col("vec_id") === 1)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val hits = Similarity.ivfTopK(same, "vec_id", "embedding", q, k = 5)
+    val hits = AnnIndex.fit(same, "vec_id", "embedding", "IVF,Flat")
+      .search(same, "vec_id", "embedding", q, k = 5)
     assert(hits.count() === 5)
     // fewer usable vectors than nlist: falls back to hyperplane directions
     val tiny = (1L to 3L).map(i => (i, Array.fill(4)(i.toFloat))).toDF("vec_id", "embedding")
@@ -1619,29 +1578,22 @@ class PipelineOpsSpec extends SparkSpecBase {
     val books = Similarity.trainPqCodebooks(emb, "vec_id", "embedding",
       m = 8, ksub = 16, sampleSize = 200)
     // m mismatch and ksub smaller than the books' actual width both fail
-    intercept[IllegalArgumentException] {
-      Similarity.pqTopK(emb, "vec_id", "embedding", queries, 5,
-        m = 4, codebooks = books)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.pqTopK(emb, "vec_id", "embedding", queries, 5,
-        m = 8, ksub = 8, codebooks = books)
-    }
+    def fails(mk: => Any): Unit = intercept[IllegalArgumentException](mk)
+    fails(AnnIndex.fit(emb, "vec_id", "embedding", "PQ", m = 4, codebooks = books))
+    fails(AnnIndex.fit(emb, "vec_id", "embedding", "PQ", ksub = 8, codebooks = books))
     val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
       nlist = 8, sampleSize = 200)
-    intercept[IllegalArgumentException] {
-      Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 5,
-        nlist = 16, centroids = cents)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.ivfSq8TopK(emb, "vec_id", "embedding", queries, 5,
-        nlist = 16, centroids = cents)
-    }
+    fails(AnnIndex.fit(emb, "vec_id", "embedding", "IVF,Flat", nlist = 16, centroids = cents))
+    fails(AnnIndex.fit(emb, "vec_id", "embedding", "IVF,SQ8", nlist = 16, centroids = cents))
+    // state the kind has no use for, and an unknown kind, fail too
+    fails(AnnIndex.fit(emb, "vec_id", "embedding", "SQ8", nlist = 8, centroids = cents))
+    fails(AnnIndex.fit(emb, "vec_id", "embedding", "IVF,SQ8", ksub = 16, codebooks = books))
+    fails(AnnIndex.fit(emb, "vec_id", "embedding", "IVF,HNSW"))
     // consistent state is accepted
-    Similarity.pqTopK(emb, "vec_id", "embedding", queries, 5,
-      ksub = 16, codebooks = books)
-    Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 5,
-      nlist = 8, centroids = cents)
+    AnnIndex.fit(emb, "vec_id", "embedding", "PQ", ksub = 16, codebooks = books)
+      .search(emb, "vec_id", "embedding", queries, 5)
+    AnnIndex.fit(emb, "vec_id", "embedding", "IVF,Flat", nlist = 8, centroids = cents)
+      .search(emb, "vec_id", "embedding", queries, 5)
   }
 
   test("staged overlap pairs are memoized per session and released on eviction") {

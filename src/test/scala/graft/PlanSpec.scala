@@ -208,17 +208,14 @@ class PlanSpec extends SparkSpecBase {
         Similarity.asDouble(col("embedding")).as("qv"))
     assertBounded("lshTopK",
       Similarity.lshTopK(emb, "vec_id", "embedding", queries, 5))
-    assertBounded("ivfTopK",
-      Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 5, nlist = 8))
-    assertBounded("sq8TopK",
-      Similarity.sq8TopK(emb, "vec_id", "embedding", queries, 5))
-    assertBounded("ivfSq8TopK",
-      Similarity.ivfSq8TopK(emb, "vec_id", "embedding", queries, 5, nlist = 8))
-    assertBounded("pqTopK",
-      Similarity.pqTopK(emb, "vec_id", "embedding", queries, 5, m = 4, ksub = 16))
-    assertBounded("ivfPqTopK",
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries, 5,
-        nlist = 8, m = 4, ksub = 16))
+    // every AnnIndex kind but plain "Flat", which is the bruteForceTopK
+    // shape pinned below as the exception
+    Seq("IVF,Flat", "SQ8", "IVF,SQ8", "PQ", "IVF,PQ").foreach { kind =>
+      assertBounded(s"AnnIndex $kind",
+        Similarity.AnnIndex.fit(emb, "vec_id", "embedding", kind,
+            nlist = 8, m = 4, ksub = 16)
+          .search(emb, "vec_id", "embedding", queries, 5))
+    }
     // the documented exception: brute force IS the all-pairs oracle
     // leg — if this starts passing the bounded check, the contract
     // (and BASELINE.md's cost attribution) changed; notice it.

@@ -30,7 +30,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # r21 added per the round-closing convention: its committed artifacts
 # (BENCH_r21.json ran under documented ambient load, but the r21 gate
 # refs under tools/bench_gate_refs/ are quiet pairs) join the scan.
-SCAN_ROUNDS = (16, 18, 19, 20, 21)
+# r22 joins the same way: BENCH_r22.json plus its four gate refs.
+SCAN_ROUNDS = (16, 18, 19, 20, 21, 22)
 
 # Rows whose semantics changed AFTER r16 — floor must come only from
 # rounds at-or-after the change:
