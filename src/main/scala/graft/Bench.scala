@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.PipelineQueries
+
 /** Benchmark main (driver contract): runs the headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints exactly one JSON line on stdout —
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -218,125 +220,49 @@ object Bench {
     // 2-4x ambient inflation the block exists to attribute.
     val AttrRatio = 1.4
 
-    // The overlap_* rows consume a pair relation STAGED ONCE per
-    // (session, dir) — and with best-of-N reps every one of them
-    // reports the WARM consume cost, so the winnow self-join (the
-    // single heaviest join in the bench) would otherwise vanish from
-    // the reported numbers entirely, absorbed into the first overlap
-    // row's discarded cold rep. Stage it explicitly as its own timed
-    // row (one pass — reps would just hit the memo): per-row overlap
-    // numbers stay interpretable whatever the Headline order, and the
-    // join's true cost stays in the total. Added round 13; recorded
-    // in BASELINE.md — subtract this row when comparing totals to
-    // rounds ≤ 12.
-    // One timed cold pass per staged row (single pass — reps would
-    // just hit the memo), with the same detail capture as the per-rep
-    // loop below so staged rows participate in the artifact's
-    // ambient-vs-regression attribution too.
-    def stagedRow(name: String, desc: String)(body: => Unit): Unit = {
+    // One timed row: best of `passes` runs of `body`, with its rep
+    // times, GC delta and pre-row loadavg kept for the attr block.
+    // GC-settle OUTSIDE the timed region: in a single-JVM bench a query
+    // otherwise pays the previous query's garbage (round 3's
+    // distinct_users_approx "regression" was exactly this — 0.55 s
+    // single-pass right after the heaviest query vs 0.19-0.21 s
+    // steady-state in isolation).
+    def timedRow(name: String, passes: Int, note: String)(body: => Unit): Unit =
       try {
-        System.gc()
-        val gc0 = gcMs
-        val ld = osBean.getSystemLoadAverage
-        val t0 = System.nanoTime()
-        body
-        val t = (System.nanoTime() - t0) / 1e9
-        System.err.println(String.format(java.util.Locale.ROOT,
-          "[bench] %-28s cold=%.3f (%s)", name, Double.box(t), desc))
-        timings(name) = t
-        detail(name) = (Seq(t), gcMs - gc0, ld)
-      } catch {
-        case e: Throwable =>
-          errors(name) = Option(e.getMessage)
-            .getOrElse(e.getClass.getName).replaceAll("\\s+", " ").take(200)
-      }
-    }
-
-    if (names.exists(_.startsWith("overlap_")))
-      stagedRow("overlap_stage_join",
-        "winnow self-join staged; overlap_* rows read the memo") {
-        graft.queries.PipelineQueries.stagedOverlapPairs(spark, sfDir)
-      }
-
-    // Same discipline for the LSH nearest-dup key legs (added round
-    // 15): the derive + two checkpointed key explodes + hot-bucket
-    // histogram are per-(session, dir) work, and paying them inside
-    // every best-of rep made embed_nearest_dup_lsh the bench's
-    // highest-job-count row — its ambient scheduling spikes triggered
-    // false regression alarms in r11/r13/r14. Staged once, timed cold
-    // here; the per-rep row now times the candidate join + scoring.
-    // Subtract this row when comparing totals to rounds <= 14.
-    if (names.contains("embed_nearest_dup_lsh"))
-      stagedRow("lsh_stage_keys",
-        "LSH key legs staged; embed_nearest_dup_lsh reads the memo") {
-        graft.queries.PipelineQueries.stagedNearDupLsh(spark, sfDir)
-      }
-
-    // Same discipline for the bigram-LM trainer (added round 15 with
-    // the lm_perplexity row): training is two corpus aggregations
-    // whose result is deterministic per (session, dir) — staged once,
-    // timed cold here; the per-rep row times the codegen scoring map
-    // alone. Subtract this row when comparing totals to rounds <= 14.
-    if (names.contains("lm_perplexity"))
-      stagedRow("lm_stage_train",
-        "bigram model trained; lm_perplexity reads the memo") {
-        graft.queries.PipelineQueries.stagedLm(spark, sfDir)
-      }
-
-    // Same discipline for the DSIR ratio trainer (added round 15 with
-    // the select_importance row): two bounded aggregations, staged per
-    // (session, dir); the per-rep row times scoring + Gumbel top-k.
-    // Subtract this row when comparing totals to rounds <= 14.
-    if (names.contains("select_importance"))
-      stagedRow("isr_stage_train",
-        "ratio model trained; select_importance reads the memo") {
-        graft.queries.PipelineQueries.stagedRatio(spark, sfDir)
-      }
-
-    // Same discipline for the IVF coarse quantizer + residual-PQ
-    // codebooks (added round 16): at production scale these are
-    // trained once and served (FAISS's train/add/search split), and
-    // per-rep retraining was ~half of embed_ann_ivf_sq8's measured
-    // cost — the r15 "floor regression" on that row was this constant
-    // moving with bench-context warmth, not the search path. Staged
-    // once, timed cold here; the ivf rows now time the probe join +
-    // rerank alone. Subtract this row when comparing totals to
-    // rounds <= 15.
-    if (names.exists(n => n.startsWith("embed_ann_ivf")))
-      stagedRow("ann_stage_cents",
-        "IVF cents + PQ books trained; embed_ann_ivf* rows read the memo") {
-        graft.queries.PipelineQueries.stagedIvfCents(spark, sfDir)
-        graft.queries.PipelineQueries.stagedIvfPqBooks(spark, sfDir)
-      }
-
-    names.foreach { name =>
-      try {
-        // GC-settle OUTSIDE the timed region: in a single-JVM bench a
-        // query otherwise pays the previous query's garbage (round 3's
-        // distinct_users_approx "regression" was exactly this — 0.55 s
-        // single-pass right after the heaviest query vs 0.19-0.21 s
-        // steady-state in isolation)
         System.gc()
         val gc0 = gcMs
         val load = osBean.getSystemLoadAverage
-        val times = (0 until reps).map { _ =>
+        val times = (0 until passes).map { _ =>
           val t0 = System.nanoTime()
-          force(queries(name)(spark, sfDir))
+          body
           (System.nanoTime() - t0) / 1e9
         }
+        val gc = gcMs - gc0
         System.err.println(String.format(java.util.Locale.ROOT,
-          "[bench] %-28s reps=%s gc=%dms load=%.1f", name,
+          "[bench] %-28s reps=%s gc=%dms load=%.1f%s", name,
           times.map(t => String.format(java.util.Locale.ROOT, "%.3f", Double.box(t)))
             .mkString(","),
-          Long.box(gcMs - gc0), Double.box(load)))
+          Long.box(gc), Double.box(load), note))
         timings(name) = times.min
-        detail(name) = (times, gcMs - gc0, load)
+        detail(name) = (times, gc, load)
       } catch {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("\\s+", " ").take(200)
       }
-    }
+
+    // One cold pass (reps would just hit the memo) per registered stage
+    // that feeds a headline query — otherwise its build would vanish
+    // into the first consumer's discarded cold rep. Each staged row
+    // joined the series in its own round; BASELINE.md records which to
+    // subtract for older totals.
+    for (st <- PipelineQueries.Stages; row <- st.row if names.exists(row.feeds))
+      timedRow(row.name, 1, s" cold (${row.desc})") {
+        PipelineQueries.stage(spark, sfDir, st)
+      }
+    names.foreach(name => timedRow(name, reps, "") {
+      force(queries(name)(spark, sfDir))
+    })
 
     // OBSERVED cert metrics (round 15): the floored booleans in the
     // cert queries only fail on a cliff; emitting the measured values
@@ -344,7 +270,7 @@ object Bench {
     // BENCH_r{N} series. Not timed rows — computed once after the
     // loop, excluded from "value".
     val certs: Seq[(String, Double)] =
-      try graft.queries.PipelineQueries.certObserved(spark, sfDir)
+      try PipelineQueries.certObserved(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] certObserved failed: ${e.getMessage}")
         Seq.empty
@@ -374,9 +300,9 @@ object Bench {
     // Pinned cross-round subtotals (r18 ask #5 / r19 ask #3): "r2_18q"
     // is the 18-row set shared with the r2 recorded baseline
     // (BASELINE.md "18-query subtotal" — the long-lived ≤2×-gate
-    // comparison); "ex_staged" is every timed row minus the five
-    // per-(session,dir) staged cold rows, i.e. the number comparable
-    // across rounds without the five-row subtraction litany.
+    // comparison); "ex_staged" is every timed row minus the staged
+    // cold rows, i.e. the number comparable across rounds without the
+    // per-row subtraction litany.
     val R2Set = Set(
       "add_outer", "dedup_exact", "dedup_minhash_lsh",
       "distinct_users_approx", "embed_cosine_topk", "groupby_sum",
@@ -384,8 +310,7 @@ object Bench {
       "price_quantiles", "q1_agg", "q3_join", "scan_events_onehot",
       "take_rows", "text_stats", "todense_pivot", "token_count",
       "window_tumbling")
-    val StagedRows = Set("overlap_stage_join", "lsh_stage_keys",
-      "lm_stage_train", "isr_stage_train", "ann_stage_cents")
+    val StagedRows = PipelineQueries.Stages.flatMap(_.row.map(_.name)).toSet
     val subR2 = timings.collect { case (k, v) if R2Set(k) => v }.sum
     val subExStaged = timings.collect {
       case (k, v) if !StagedRows(k) => v }.sum

@@ -268,9 +268,9 @@ object Similarity {
     * one derive pass and is identical across evaluations, so a session
     * that evaluates the operator repeatedly (Bench's best-of reps; a
     * verify pass consuming it from two queries) should stage ONCE —
-    * `PipelineQueries.stagedNearDupLsh` memoizes per (session, dir) the
-    * way the winnow pair relation is staged — and re-evaluate only the
-    * candidate join + scoring via [[nearestDupLshFrom]]. Single-shot
+    * the `PipelineQueries.LshKeys` stage holds it per (session, dir)
+    * — and re-evaluate only the candidate join + scoring via
+    * [[nearestDupLshFrom]]. Single-shot
     * callers use [[nearestDupLsh]], which stages-then-consumes in one
     * call with behavior identical to the pre-staging implementation. */
   private[graft] final case class LshStage(

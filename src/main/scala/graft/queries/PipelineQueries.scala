@@ -1,5 +1,11 @@
 package graft.queries
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOf, Dedup, ImportanceSampling, LanguageModel, Multimodal, Packing, QualityModel, RangeJoin, Sampling, Similarity, TextAnalysis, Windows}
@@ -81,221 +87,124 @@ object PipelineQueries {
        |FROM p""".stripMargin
   private[graft] val twinOffsetStream = 1000001L
 
-  /** The winnow-index pair relation STAGED ONCE per (session, sf dir):
-    * `overlap_recall_cert`, `overlap_topk` and `overlap_topk_cert` all
-    * consume [[TextAnalysis.overlapPairs]] at the default parameters,
-    * and before this memo each query re-ran the full inverted-index
-    * self-join (the single most expensive join in the bench, ×3 per
-    * verify pass). A session computing both the certificate and the
-    * sink is exactly the warehouse case for a staged intermediate —
-    * compute the pair relation once (`localCheckpoint`, so consumers
-    * read materialized blocks instead of re-planning the join) and
-    * rank/certify over it. Keyed by session identity + dir: a new
-    * session (specs, fresh driver) gets a fresh checkpoint; Bench's
-    * repeated reps deliberately hit the memo — the timing semantics
-    * (pair join paid once per session, not once per row) are recorded
-    * in BASELINE.md.
-    *
-    * Keyed by the session OBJECT (SparkSession does not override
-    * equals, so tuple keys compare it by reference): an
-    * identity-hash string key could collide across sessions and hand
-    * a stale checkpoint bound to a stopped session to a fresh one.
-    * Entries are evicted — and the checkpointed blocks unpersisted —
-    * when the owning context ends (listener registered once per
-    * session) or via [[evictOverlapPairs]], so a long-lived
-    * multi-tenant driver does not pin executor storage for dead
-    * sessions. */
-  private val overlapPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-  private val overlapEvictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[
-      org.apache.spark.sql.SparkSession]
+  /** A deterministic per-corpus artifact STAGED ONCE per (session, sf
+    * dir) and shared by every consumer query — FAISS's train-once /
+    * search-many split. Bench's best-of reps would otherwise hide the
+    * build inside a discarded cold rep, so a stage with a `row` is timed
+    * as that cold row (one pass) whenever a headline query it `feeds`
+    * runs. */
+  private[graft] final case class Stage[A <: AnyRef](name: String,
+      row: Option[StageRow] = None)(val build: (SparkSession, String) => A)
 
-  /** Same staging discipline for the LSH nearest-dup key relations:
-    * the derive aggregate, the two checkpointed (vec_id, bucket) join
-    * legs and the hot-bucket map are identical across evaluations in a
-    * session, and before this memo every bench rep (and each of the
-    * two verify queries consuming the operator) re-materialized them —
-    * 3 extra jobs per evaluation whose scheduling jitter made this the
-    * bench's flakiest row three rounds running. Bench times the
-    * staging explicitly as its own cold row (`lsh_stage_keys`). */
-  private val nearDupStageCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      graft.operators.Similarity.LshStage]
+  /** The Bench cold row timing a [[Stage]]'s build. */
+  private[graft] final case class StageRow(name: String, desc: String,
+      feeds: String => Boolean)
 
-  /** Staged bigram LM per (session, dir): training is deterministic,
-    * so every consumer (`lm_perplexity`, the quality-stack capstone)
-    * shares one trained model per session instead of re-running the
-    * two training aggregations per evaluation. The model is a small
-    * driver-side case class (closed-alphabet counts — no checkpoint
-    * blocks to evict). Bench times the training explicitly as its own
-    * cold row (`lm_stage_train`). */
-  private val lmCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      graft.operators.LanguageModel.BigramLm]
-
-  private[graft] def stagedLm(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.operators.LanguageModel.BigramLm = {
-    hookEviction(s)
-    lmCache.computeIfAbsent((s, dir),
-      _ => LanguageModel.train(Tables.documents(s, dir), "doc_id", "text",
-        vocabSize = 64, alpha = 0.5))
+  /** The winnow-index pair relation behind the overlap_* rows — the
+    * bench's heaviest join — checkpointed so consumers read blocks. */
+  private[graft] val OverlapPairs = Stage[DataFrame]("overlap_pairs",
+      Some(StageRow("overlap_stage_join",
+        "winnow self-join staged; overlap_* rows read the memo",
+        _.startsWith("overlap_")))) { (s, dir) =>
+    TextAnalysis.overlapPairs(Tables.documents(s, dir), "doc_id", "text")
+      .localCheckpoint()
   }
 
-  /** Staged DSIR ratio model per (session, dir) — same discipline as
-    * [[stagedLm]]: training (two bounded aggregations) is
-    * deterministic, so `select_importance` and its certificate share
-    * one frozen model per session. Target = `lang = 'en'` documents;
-    * raw = the whole corpus. */
-  private val ratioCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      graft.operators.ImportanceSampling.RatioModel]
-
-  private[graft] def stagedRatio(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.operators.ImportanceSampling.RatioModel = {
-    hookEviction(s)
-    ratioCache.computeIfAbsent((s, dir),
-      _ => ImportanceSampling.train(Tables.documents(s, dir),
-        col("lang") === "en", "text", vocabSize = 64, alpha = 0.5))
+  /** The LSH nearest-dup key legs: derive aggregate, the two
+    * checkpointed (vec_id, bucket) legs and the hot-bucket map. */
+  private[graft] val LshKeys = Stage[Similarity.LshStage]("lsh_keys",
+      Some(StageRow("lsh_stage_keys",
+        "LSH key legs staged; embed_nearest_dup_lsh reads the memo",
+        _ == "embed_nearest_dup_lsh"))) { (s, dir) =>
+    Similarity.stageNearestDupLsh(Tables.embeddings(s, dir), "vec_id", "embedding")
   }
 
-  /** Staged TARGET-corpus bigram LM (the `lang = 'en'` slice) for the
-    * bigram DSIR variant — the raw-corpus twin is [[stagedLm]]. */
-  private val lmTargetCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      graft.operators.LanguageModel.BigramLm]
-
-  private[graft] def stagedLmTarget(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.operators.LanguageModel.BigramLm = {
-    hookEviction(s)
-    lmTargetCache.computeIfAbsent((s, dir),
-      _ => LanguageModel.train(
-        Tables.documents(s, dir).filter(col("lang") === "en"),
-        "doc_id", "text", vocabSize = 64, alpha = 0.5))
+  /** The raw-corpus bigram LM (`lm_perplexity`, the quality stack, the
+    * bigram DSIR variant's raw side). */
+  private[graft] val Lm = Stage[LanguageModel.BigramLm]("lm",
+      Some(StageRow("lm_stage_train",
+        "bigram model trained; lm_perplexity reads the memo",
+        _ == "lm_perplexity"))) { (s, dir) =>
+    LanguageModel.train(Tables.documents(s, dir), "doc_id", "text",
+      vocabSize = 64, alpha = 0.5)
   }
 
-  /** Staged IVF coarse quantizer per (session, dir) — the ANN-family
-    * analog of [[stagedLm]]: at production scale a coarse quantizer is
-    * trained ONCE and served to every query (FAISS's train/add/search
-    * split), so the three IVF query rows and the recall certificate
-    * share one deterministically-trained model per session instead of
-    * re-running the k-means per evaluation (r16: training was ~half of
-    * embed_ann_ivf_sq8's per-rep cost). Identical values to what each
-    * call would train itself (deterministic sample + seeds — the
-    * parameters below are exactly the ivf*TopK defaults). Bench times
-    * the training as its own cold row (`ann_stage_cents`). */
-  private val ivfCentsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), Array[Array[Double]]]
-
-  private[graft] def stagedIvfCents(s: org.apache.spark.sql.SparkSession,
-      dir: String): Array[Array[Double]] = {
-    hookEviction(s)
-    ivfCentsCache.computeIfAbsent((s, dir),
-      _ => Similarity.trainIvfCentroids(Tables.embeddings(s, dir),
-        "vec_id", "embedding", nlist = 32))
+  /** The target-corpus (`lang = 'en'`) bigram LM of the bigram DSIR
+    * variant. */
+  private[graft] val LmTarget = Stage[LanguageModel.BigramLm]("lm_target") {
+    (s, dir) => LanguageModel.train(
+      Tables.documents(s, dir).filter(col("lang") === "en"),
+      "doc_id", "text", vocabSize = 64, alpha = 0.5)
   }
 
-  /** Staged residual-PQ codebooks on top of [[stagedIvfCents]] — the
-    * IVF-PQ index's second trained artifact, same once-per-corpus
-    * discipline. */
-  private val ivfPqBooksCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      Array[Array[Array[Double]]]]
-
-  private[graft] def stagedIvfPqBooks(s: org.apache.spark.sql.SparkSession,
-      dir: String): Array[Array[Array[Double]]] = {
-    hookEviction(s)
-    ivfPqBooksCache.computeIfAbsent((s, dir),
-      _ => Similarity.trainIvfPqCodebooks(Tables.embeddings(s, dir),
-        "vec_id", "embedding", stagedIvfCents(s, dir)))
+  /** The DSIR ratio model: target = `lang = 'en'`, raw = the corpus. */
+  private[graft] val Ratio = Stage[ImportanceSampling.RatioModel]("ratio",
+      Some(StageRow("isr_stage_train",
+        "ratio model trained; select_importance reads the memo",
+        _ == "select_importance"))) { (s, dir) =>
+    ImportanceSampling.train(Tables.documents(s, dir),
+      col("lang") === "en", "text", vocabSize = 64, alpha = 0.5)
   }
 
-  private def hookEviction(s: org.apache.spark.sql.SparkSession): Unit =
-    if (overlapEvictionHooked.add(s)) {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evictOverlapPairs(s)
+  /** The IVF coarse quantizer (nlist 32) plus residual-PQ codebooks, at
+    * the trainers' defaults — the values frozen in [[GoldenAnnCents]] /
+    * [[GoldenAnnPq]] that the `embed_ann_ivf*` oracles replay. Consumers
+    * take its `coarse` and swap the code. */
+  private[graft] val Ann = Stage[AnnIndex]("ann",
+      Some(StageRow("ann_stage_cents",
+        "IVF cents + PQ books trained; embed_ann_ivf* rows read the memo",
+        _.startsWith("embed_ann_ivf")))) { (s, dir) =>
+    AnnIndex.fit(Tables.embeddings(s, dir), "vec_id", "embedding", "IVF,PQ")
+  }
+
+  /** Every stage, in Bench's cold-row order. */
+  private[graft] val Stages: Seq[Stage[_ <: AnyRef]] =
+    Seq(OverlapPairs, LshKeys, Lm, LmTarget, Ratio, Ann)
+
+  // Keyed by the session OBJECT (tuple equality compares it by
+  // reference), so a fresh session never sees another's checkpoint.
+  private val staged = new ConcurrentHashMap[(SparkSession, String, String), AnyRef]
+  private val hookedContexts = ConcurrentHashMap.newKeySet[SparkContext]()
+
+  private[graft] def stage[A <: AnyRef](s: SparkSession, dir: String,
+      st: Stage[A]): A = {
+    // one listener per context: when it ends, every session's entries go
+    val sc = s.sparkContext
+    if (hookedContexts.add(sc))
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          evictWhere(_.sparkContext eq sc)
+          hookedContexts.remove(sc)
+        }
       })
+    staged.computeIfAbsent((s, dir, st.name), _ => st.build(s, dir))
+      .asInstanceOf[A]
+  }
+
+  /** Drop every stage `s` holds and unpersist its checkpoint blocks.
+    * Safe on a stopped context: the blocks die with it anyway. */
+  private[graft] def evictStaged(s: SparkSession): Unit = evictWhere(_ eq s)
+
+  private def evictWhere(owned: SparkSession => Boolean): Unit = {
+    def unpersist(df: Dataset[_]): Unit = df.queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        try l.rdd.unpersist(blocking = false) catch { case _: Exception => () }
+      case _ => ()
     }
-
-  private[graft] def stagedOverlapPairs(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    hookEviction(s)
-    overlapPairsCache.computeIfAbsent((s, dir),
-      _ => TextAnalysis.overlapPairs(
-        Tables.documents(s, dir), "doc_id", "text").localCheckpoint())
-  }
-
-  private[graft] def stagedNearDupLsh(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.operators.Similarity.LshStage = {
-    hookEviction(s)
-    nearDupStageCache.computeIfAbsent((s, dir),
-      _ => graft.operators.Similarity.stageNearestDupLsh(
-        Tables.embeddings(s, dir), "vec_id", "embedding"))
-  }
-
-  /** Drop every staged relation owned by `s` (winnow pairs AND the
-    * LSH key stage) and unpersist their localCheckpoint blocks (the
-    * checkpoint RDD surfaces as the LogicalRDD leaf of the memoized
-    * frame). Safe to call on a stopped context — unpersist failures
-    * are swallowed because the blocks die with the context anyway. */
-  private[graft] def evictOverlapPairs(
-      s: org.apache.spark.sql.SparkSession): Unit = {
-    overlapEvictionHooked.remove(s)
-    def unpersistCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          try l.rdd.unpersist(blocking = false)
-          catch { case _: Exception => () }
+    staged.entrySet().removeIf { e =>
+      val mine = owned(e.getKey._1)
+      if (mine) e.getValue match {
+        case df: Dataset[_] => unpersist(df)
+        case st: Similarity.LshStage => st.checkpointed.foreach(unpersist)
         case _ => ()
       }
-    val it = overlapPairsCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        unpersistCheckpoint(e.getValue)
-        it.remove()
-      }
+      mine
     }
-    val jt = nearDupStageCache.entrySet().iterator()
-    while (jt.hasNext) {
-      val e = jt.next()
-      if (e.getKey._1 eq s) {
-        e.getValue.checkpointed.foreach(unpersistCheckpoint)
-        jt.remove()
-      }
-    }
-    lmCache.keySet().removeIf(k => k._1 eq s)
-    lmTargetCache.keySet().removeIf(k => k._1 eq s)
-    ratioCache.keySet().removeIf(k => k._1 eq s)
-    ivfCentsCache.keySet().removeIf(k => k._1 eq s)
-    ivfPqBooksCache.keySet().removeIf(k => k._1 eq s)
   }
 
-  /** Test hook: staged entries currently held for `s`. */
-  private[graft] def stagedOverlapCount(
-      s: org.apache.spark.sql.SparkSession): Int = {
-    var n = 0
-    overlapPairsCache.forEach((k, _) => if (k._1 eq s) n += 1)
-    n
-  }
-
-  /** Test hook: staged LSH key stages currently held for `s`. */
-  private[graft] def stagedNearDupCount(
-      s: org.apache.spark.sql.SparkSession): Int = {
-    var n = 0
-    nearDupStageCache.forEach((k, _) => if (k._1 eq s) n += 1)
-    n
-  }
+  /** Test hook: stages currently held for `s`. */
+  private[graft] def stagedCount(s: SparkSession): Int =
+    staged.keySet().stream().filter(_._1 eq s).count().toInt
 
   /** The ANN recall certificate's legs — THE single definition of
     * which approximate paths are gated, at which parameters, against
@@ -305,14 +214,11 @@ object PipelineQueries {
     * never make the two silently measure different things.
     * `methods` = (name, floor, approx top-10 frame with qid/vec_id);
     * `nearestDup` reads the per-session staged key legs. */
-  private[graft] final case class AnnRecallLegs(
-      exactTop10: org.apache.spark.sql.DataFrame,
-      exact1nn: org.apache.spark.sql.DataFrame,
-      nearestDup: org.apache.spark.sql.DataFrame,
-      methods: Seq[(String, Double, org.apache.spark.sql.DataFrame)])
+  private[graft] final case class AnnRecallLegs(exactTop10: DataFrame,
+      exact1nn: DataFrame, nearestDup: DataFrame,
+      methods: Seq[(String, Double, DataFrame)])
 
-  private[graft] def annRecallLegs(s: org.apache.spark.sql.SparkSession,
-      dir: String): AnnRecallLegs = {
+  private[graft] def annRecallLegs(s: SparkSession, dir: String): AnnRecallLegs = {
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"),
@@ -325,22 +231,21 @@ object PipelineQueries {
           Similarity.asDouble(col("embedding")).as("qv")),
         k = 1, broadcastQueries = false)
       .select(col("qid"), col("vec_id"))
-    val nearestDup = Similarity.nearestDupLshFrom(stagedNearDupLsh(s, dir))
+    val nearestDup = Similarity.nearestDupLshFrom(stage(s, dir, LshKeys))
       .select(col("qid"), col("nn").as("vec_id"))
-    // all IVF paths share the ONE staged quantizer (identical to what
-    // each would train itself — deterministic sample/seeds)
-    val cents = stagedIvfCents(s, dir)
+    // all IVF paths share the ONE staged quantizer
+    val ivf = stage(s, dir, Ann)
     val methods = Seq(
       ("lsh", 0.8,
         Similarity.lshTopK(emb, "vec_id", "embedding", queries, k = 10)),
       ("ivf", 0.75,
-        AnnIndex(Some(cents), AnnIndex.Flat)
+        ivf.copy(code = AnnIndex.Flat)
           .search(emb, "vec_id", "embedding", queries, k = 10)),
       ("sq8", 0.9,
         AnnIndex(None, AnnIndex.Sq8)
           .search(emb, "vec_id", "embedding", queries, k = 10)),
       ("ivf_sq8", 0.75,
-        AnnIndex(Some(cents), AnnIndex.Sq8)
+        ivf.copy(code = AnnIndex.Sq8)
           .search(emb, "vec_id", "embedding", queries, k = 10)),
       // PQ: observed 0.93-1.0 across sf0.001-0.1 at the default
       // m=8/ksub=256/refine=8 — floor 0.7 keeps >=30% margin
@@ -354,8 +259,7 @@ object PipelineQueries {
       // near-lossless at refine=8) — same 0.75 floor as the other IVF
       // paths, >=16% margin
       ("ivf_pq", 0.75,
-        AnnIndex(Some(cents), AnnIndex.Pq(stagedIvfPqBooks(s, dir)))
-          .search(emb, "vec_id", "embedding", queries, k = 10)))
+        ivf.search(emb, "vec_id", "embedding", queries, k = 10)))
     AnnRecallLegs(exact, exact1nn, nearestDup, methods)
   }
 
@@ -369,7 +273,7 @@ object PipelineQueries {
     * Recall ratios are vs-certificate-ground-truth (1.0 = perfect);
     * `hll_max_rel_err` is an error (lower is better);
     * `quality_heldout_acc` is held-out accuracy. */
-  private[graft] def certObserved(s: org.apache.spark.sql.SparkSession,
+  private[graft] def certObserved(s: SparkSession,
       dir: String): Seq[(String, Double)] = {
     val docs = Tables.documents(s, dir)
     def ratio(num: Long, den: Long): Double =
@@ -379,12 +283,12 @@ object PipelineQueries {
         shingleN = 3, threshold = 0.9)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
     val nPlanted = planted.count()
-    def plantedHits(found: org.apache.spark.sql.DataFrame): Long =
+    def plantedHits(found: DataFrame): Long =
       planted.join(found, Seq("doc_a", "doc_b"), "left_semi").count()
     val overlapRecall = ratio(plantedHits(
-      stagedOverlapPairs(s, dir).select(col("doc_a"), col("doc_b"))), nPlanted)
+      stage(s, dir, OverlapPairs).select(col("doc_a"), col("doc_b"))), nPlanted)
     val topkRecall = ratio(plantedHits(
-      TextAnalysis.overlapTopKOf(stagedOverlapPairs(s, dir), 5)
+      TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), 5)
         .select(least(col("doc"), col("partner")).as("doc_a"),
           greatest(col("doc"), col("partner")).as("doc_b"))
         .distinct()), nPlanted)
@@ -438,8 +342,7 @@ object PipelineQueries {
       "phash_planted_recall" -> phashRecall)
   }
 
-  private[graft] def plantedNearDups(base: org.apache.spark.sql.DataFrame,
-      offset: Long): org.apache.spark.sql.DataFrame =
+  private[graft] def plantedNearDups(base: DataFrame, offset: Long): DataFrame =
     base.filter(col("vec_id") < 16)
       .select((col("vec_id") + offset).as("vec_id"),
         transform(col("v"), (x, i) =>
@@ -474,8 +377,8 @@ object PipelineQueries {
     * no-BNLJ/cartesian). One task by construction — fine, the subset
     * is fixture-constant (~528 rows at any SF); do not "parallelize"
     * the key without re-checking the PlanSpec pin. */
-  private[graft] def certExactPairs(corpus: org.apache.spark.sql.DataFrame,
-      threshold: Double, offset: Long): org.apache.spark.sql.DataFrame = {
+  private[graft] def certExactPairs(corpus: DataFrame,
+      threshold: Double, offset: Long): DataFrame = {
     val sub = corpus
       .filter(col("vec_id") < certStratum || col("vec_id") >= offset)
       .withColumn("bk", pmod(col("vec_id"), lit(1L)))
@@ -502,8 +405,7 @@ object PipelineQueries {
     * tie-free heuristic quality label (`good`) plus the md5-portable
     * 50/50 train/heldout assignment (`is_train`) — both recomputable
     * verbatim in DuckDB. */
-  private def labeledQualityDocs(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def labeledQualityDocs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     docs.join(TextAnalysis.qualityScore(docs, "doc_id", "text"),
         Seq("doc_id"))
@@ -518,7 +420,7 @@ object PipelineQueries {
     * half never reaches the trainer). Cheap enough (one bounded
     * collect) to retrain per call — no memo, so there is no cache key
     * to get wrong across sessions/dirs. */
-  private[graft] def trainedQualityWeights(s: org.apache.spark.sql.SparkSession,
+  private[graft] def trainedQualityWeights(s: SparkSession,
       dir: String): QualityModel.Weights = {
     val feats = QualityModel.features(Tables.documents(s, dir),
       "doc_id", "text")
@@ -850,15 +752,13 @@ object PipelineQueries {
         // quantized preselection → no SQL oracle on rows; recall is
         // floored by embed_ann_recall (measured equal to plain IVF's
         // 0.888–0.900: the sq8+rerank layer is lossless within cells).
-        // Coarse quantizer STAGED per (session, dir) — see
-        // stagedIvfCents — so the row times the search (the per-query
-        // production cost), not a per-rep retrain; Bench times the
-        // training as the cold ann_stage_cents row (r16).
+        // Coarse quantizer from the staged [[Ann]] index, so the row
+        // times the search, not a per-rep retrain.
         val emb = Tables.embeddings(s, dir)
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        AnnIndex(Some(stagedIvfCents(s, dir)), AnnIndex.Sq8)
+        stage(s, dir, Ann).copy(code = AnnIndex.Sq8)
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       // r17: full oracle — the frozen golden quantizer
@@ -899,13 +799,12 @@ object PipelineQueries {
         // let DuckDB re-derive cells, residual codes, the ADC scan and
         // the rerank independently. Recall additionally floored by
         // embed_ann_recall (0.875-0.900 at nprobe=16/32, refine=8).
-        // Coarse quantizer + residual codebooks STAGED per
-        // (session, dir) — stagedIvfCents/stagedIvfPqBooks (r16).
+        // Coarse quantizer + residual codebooks: the staged [[Ann]].
         val emb = Tables.embeddings(s, dir)
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        AnnIndex(Some(stagedIvfCents(s, dir)), AnnIndex.Pq(stagedIvfPqBooks(s, dir)))
+        stage(s, dir, Ann)
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       Some(AnnOracles.ivfPqSql())),
@@ -944,12 +843,9 @@ object PipelineQueries {
         // the candidate join and the top-1 (AnnOracles
         // .nearestDupLshSql); recall vs the exact 1-NN additionally
         // stays ScalaTest-floored and surfaced by embed_ann_recall
-        // below. The key legs are
-        // STAGED once per (session, dir) — see stagedNearDupLsh — so
-        // repeated evaluations time the candidate join + scoring;
-        // Bench reports the staging cost as its own `lsh_stage_keys`
-        // row.
-        Similarity.nearestDupLshFrom(stagedNearDupLsh(s, dir)),
+        // below. The key legs are the staged [[LshKeys]], so
+        // repeated evaluations time the candidate join + scoring.
+        Similarity.nearestDupLshFrom(stage(s, dir, LshKeys)),
       Some(AnnOracles.nearestDupLshSql())),
 
     QueryDef("embed_ann_recall",
@@ -969,7 +865,7 @@ object PipelineQueries {
         // >=15-40% margin while still failing on any genuine recall
         // collapse.
         val legs = annRecallLegs(s, dir)
-        def recallOk(method: String, approx: org.apache.spark.sql.DataFrame,
+        def recallOk(method: String, approx: DataFrame,
             floor: Double) = {
           val hits = legs.exactTop10.join(approx.select(col("qid"), col("vec_id")),
               Seq("qid", "vec_id"), "left_semi")
@@ -1021,7 +917,7 @@ object PipelineQueries {
         val queries = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"),
             Similarity.asDouble(col("embedding")).as("qv"))
-        AnnIndex(Some(stagedIvfCents(s, dir)), AnnIndex.Flat)
+        stage(s, dir, Ann).copy(code = AnnIndex.Flat)
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
       // r17: full oracle over the frozen golden quantizer — see
@@ -1232,7 +1128,7 @@ object PipelineQueries {
     // (no UDF, no shuffle, no join) — see operators/LanguageModel.
     QueryDef("lm_perplexity",
       (s, dir) => LanguageModel.perplexity(Tables.documents(s, dir),
-        "doc_id", "text", stagedLm(s, dir)),
+        "doc_id", "text", stage(s, dir, Lm)),
       Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
              |pos AS (SELECT doc_id, i, t[i] AS w
              |        FROM tok, unnest(range(1, len(t) + 1)) AS r(i)),
@@ -1997,7 +1893,7 @@ object PipelineQueries {
     QueryDef("select_importance",
       (s, dir) => {
         val lw = ImportanceSampling.logWeights(Tables.documents(s, dir),
-          "doc_id", "text", stagedRatio(s, dir))
+          "doc_id", "text", stage(s, dir, Ratio))
         ImportanceSampling.resampleTopK(lw, "doc_id", k = 100, seed = "dsir")
           .select(col("doc_id"), round(col("log_weight"), 6).as("log_weight"),
             round(col("gumbel_score"), 6).as("gumbel_score"))
@@ -2032,8 +1928,8 @@ object PipelineQueries {
     // bigram DSIR (the paper's context-aware variant): log importance
     // weight = Σ ln p_target(bᵢ|aᵢ) − Σ ln q_raw(bᵢ|aᵢ) =
     // n_bigrams · (nll_raw − nll_target) — PURE COMPOSITION of the two
-    // staged bigram LMs (stagedLmTarget trains on the en slice,
-    // stagedLm on the raw corpus), scored as TWO BigramNll kernels in
+    // staged bigram LMs ([[LmTarget]] on the en slice, [[Lm]] on the
+    // raw corpus), scored as TWO BigramNll kernels in
     // one shuffle-free codegen map stage (no join between the legs),
     // then the same Gumbel top-k. Docs with no bigram evidence weight
     // 0 (they ride on the Gumbel alone). The oracle retrains BOTH
@@ -2041,8 +1937,8 @@ object PipelineQueries {
     QueryDef("select_importance_bigram",
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val lmT = stagedLmTarget(s, dir)
-        val lmR = stagedLm(s, dir)
+        val lmT = stage(s, dir, LmTarget)
+        val lmR = stage(s, dir, Lm)
         def nllOf(m: graft.operators.LanguageModel.BigramLm) =
           graft.functions.LmExprs.bigramNll(col("text"), m.vocab.toArray,
             m.unigrams.toArray, m.bigrams.toArray, m.alphabetSize, m.alpha)
@@ -2113,7 +2009,7 @@ object PipelineQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         val lw = ImportanceSampling.logWeights(docs, "doc_id", "text",
-            stagedRatio(s, dir))
+            stage(s, dir, Ratio))
           .join(docs.select(col("doc_id"),
             (col("lang") === "en").cast("double").as("is_t")), Seq("doc_id"))
         val sel = ImportanceSampling.resampleTopK(lw, "doc_id",
@@ -2285,7 +2181,7 @@ object PipelineQueries {
         val clean = TextAnalysis.stripBoilerplate(docs, "doc_id", "text")
           .filter(col("kept_spans") > 0).select(col("doc_id"))
         val fluent = LanguageModel.perplexity(docs, "doc_id", "text",
-            stagedLm(s, dir))
+            stage(s, dir, Lm))
           .filter(col("nll").isNotNull && col("nll") <= 3.43)
           .select(col("doc_id"))
         val kept = docs.join(clean, Seq("doc_id"), "left_semi")
@@ -2446,7 +2342,7 @@ object PipelineQueries {
         // Observed recall is 1.000 at sf0.001/0.01/0.1 (deterministic
         // hashes); floor 0.8 with margin.
         val docs = Tables.documents(s, dir)
-        val found = stagedOverlapPairs(s, dir)
+        val found = stage(s, dir, OverlapPairs)
           .select(col("doc_a"), col("doc_b"))
         val planted = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
             shingleN = 3, threshold = 0.9)
@@ -2473,7 +2369,7 @@ object PipelineQueries {
     // filtered pair join and the (shared DESC, partner ASC) rank;
     // overlap_topk_cert / overlap_recall_cert stay as certificates.
     QueryDef("overlap_topk",
-      (s, dir) => TextAnalysis.overlapTopKOf(stagedOverlapPairs(s, dir), 5),
+      (s, dir) => TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), 5),
       Some(RollingHashOracles.overlapTopKSql())),
 
     QueryDef("overlap_topk_cert",
@@ -2491,7 +2387,7 @@ object PipelineQueries {
         // 0.8 with margin).
         val docs = Tables.documents(s, dir)
         val k = 5
-        val topk = TextAnalysis.overlapTopKOf(stagedOverlapPairs(s, dir), k)
+        val topk = TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), k)
           .localCheckpoint() // two certificate legs read it
         val capped = topk.groupBy(col("doc"))
           .agg(count(lit(1)).as("c"), max(col("rank")).as("mr"))

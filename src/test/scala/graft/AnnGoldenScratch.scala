@@ -4,8 +4,8 @@ package graft
 // quantizers as golden literals for the DuckDB oracles of the
 // embed_ann_ivf / embed_ann_ivf_sq8 rows — the GoldenMediaHashes
 // pattern applied to the ANN family. For each shipped SF dir this
-// trains the centroids EXACTLY as PipelineQueries.stagedIvfCents does
-// (trainIvfCentroids, nlist=32, all defaults) and dumps a complete
+// trains the centroids EXACTLY as the staged PipelineQueries.Ann index
+// does (trainIvfCentroids, nlist=32, all defaults) and dumps a complete
 // GoldenAnnCents.scala to /tmp. Not a test; run with Test/runMain
 // after an INTENTIONAL trainer/fixture change only, then refresh
 // src/main/scala/graft/queries/GoldenAnnCents.scala.

@@ -1,14 +1,17 @@
 package graft
 
 import graft.operators.Similarity
+import graft.operators.Similarity.AnnIndex
 import graft.queries.{GoldenAnnCents, GoldenAnnPq, GoldenModels, PipelineQueries, Tables}
 
 /** Drift alarm for the frozen golden IVF quantizers backing the
   * embed_ann_ivf / embed_ann_ivf_sq8 DuckDB oracles
   * ([[graft.queries.GoldenAnnCents]]): retrain from each shipped
-  * fixture with the exact `stagedIvfCents` parameters and compare
-  * bit-for-bit. A failure means the trainer arithmetic or the fixture
-  * changed — regenerate via `Test/runMain graft.AnnGoldenScratch`
+  * fixture with the parameters of the staged ANN index
+  * (`PipelineQueries.Ann`) and compare bit-for-bit — both the bare
+  * trainers and that stage itself, whose values the oracles assume.
+  * A failure means the trainer arithmetic or the fixture changed —
+  * regenerate via `Test/runMain graft.AnnGoldenScratch`
   * ONLY after confirming the change is intentional (a silent refresh
   * would turn the oracle gate vacuous). Also pins the fingerprint
   * dispatch: every fixture must hit a DISTINCT frozen entry, because
@@ -34,14 +37,18 @@ class AnnGoldenSpec extends SparkSpecBase {
       val emb = Tables.embeddings(spark, dir)
       val fp = GoldenAnnCents.fingerprint(emb)
       val frozen = GoldenAnnCents.byFingerprint(fp)
-      val got = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
+      val trained = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
         nlist = 32)
-      assert(got.length === frozen.length, s"nlist drift at $dir")
-      got.zip(frozen).zipWithIndex.foreach { case ((g, f), i) =>
-        assert(java.util.Arrays.equals(g, f),
-          s"centroid $i drifted at $dir — trainer or fixture change? " +
-            "Regenerate via Test/runMain graft.AnnGoldenScratch " +
-            "only if intentional")
+      val staged = PipelineQueries.stage(spark, dir, PipelineQueries.Ann).coarse
+        .getOrElse(fail(s"staged ANN index has no coarse quantizer at $dir"))
+      Seq("trained" -> trained, "staged" -> staged).foreach { case (what, got) =>
+        assert(got.length === frozen.length, s"$what nlist drift at $dir")
+        got.zip(frozen).zipWithIndex.foreach { case ((g, f), i) =>
+          assert(java.util.Arrays.equals(g, f),
+            s"$what centroid $i drifted at $dir — trainer or fixture change? " +
+              "Regenerate via Test/runMain graft.AnnGoldenScratch " +
+              "only if intentional")
+        }
       }
     }
   }
@@ -103,6 +110,11 @@ class AnnGoldenSpec extends SparkSpecBase {
         Similarity.trainIvfPqCodebooks(emb, "vec_id", "embedding",
           GoldenAnnCents.byFingerprint(fp)),
         GoldenAnnPq.residByFingerprint(fp), "residual-PQ", dir)
+      PipelineQueries.stage(spark, dir, PipelineQueries.Ann).code match {
+        case AnnIndex.Pq(books) => assertBooksEqual(books,
+          GoldenAnnPq.residByFingerprint(fp), "staged residual-PQ", dir)
+        case c => fail(s"staged ANN index should be IVF,PQ, has code $c at $dir")
+      }
     }
   }
 }

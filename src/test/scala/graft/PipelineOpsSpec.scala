@@ -1598,19 +1598,25 @@ class PipelineOpsSpec extends SparkSpecBase {
 
   test("staged overlap pairs are memoized per session and released on eviction") {
     import graft.queries.PipelineQueries
+    import graft.queries.PipelineQueries.{stage, stagedCount, evictStaged}
     val child = spark.newSession()
     // Same (session, dir) → the memoized frame, not a recompute.
-    val a = PipelineQueries.stagedOverlapPairs(child, sf)
-    val b = PipelineQueries.stagedOverlapPairs(child, sf)
+    val a = stage(child, sf, PipelineQueries.OverlapPairs)
+    val b = stage(child, sf, PipelineQueries.OverlapPairs)
     assert(a eq b, "second lookup must hit the memo")
-    assert(PipelineQueries.stagedOverlapCount(child) === 1)
+    assert(stagedCount(child) === 1)
     // A different session object — even one sharing the context —
     // must get its own entry (the r12 identity-hash string key could
     // collide here and hand session B session A's checkpoint).
     val other = spark.newSession()
-    val c = PipelineQueries.stagedOverlapPairs(other, sf)
+    val c = stage(other, sf, PipelineQueries.OverlapPairs)
     assert(!(c eq a))
-    assert(PipelineQueries.stagedOverlapCount(other) === 1)
+    assert(stagedCount(other) === 1)
+    // Every registered stage lands in the one map, and one eviction
+    // drops them all — the driver-side models included.
+    val lm = stage(child, sf, PipelineQueries.Lm)
+    PipelineQueries.Stages.foreach(st => stage(child, sf, st))
+    assert(stagedCount(child) === 6)
     // Eviction drops the entries AND unpersists the localCheckpoint
     // blocks: the checkpoint RDD must leave the context's persistent
     // set, not just the map.
@@ -1620,25 +1626,29 @@ class PipelineOpsSpec extends SparkSpecBase {
     })
     assert(rddIds.forall(spark.sparkContext.getPersistentRDDs.contains),
       "checkpoint blocks should be persisted while cached")
-    PipelineQueries.evictOverlapPairs(child)
-    PipelineQueries.evictOverlapPairs(other)
-    assert(PipelineQueries.stagedOverlapCount(child) === 0)
-    assert(PipelineQueries.stagedOverlapCount(other) === 0)
+    evictStaged(child)
+    evictStaged(other)
+    assert(stagedCount(child) === 0)
+    assert(stagedCount(other) === 0)
     // unpersist(blocking=false) is async; poll briefly.
     val deadline = System.nanoTime() + 10e9.toLong
     while (rddIds.exists(spark.sparkContext.getPersistentRDDs.contains)
         && System.nanoTime() < deadline) Thread.sleep(50)
     assert(rddIds.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)),
       "evicted checkpoint blocks must be unpersisted")
+    assert(!(stage(child, sf, PipelineQueries.Lm) eq lm),
+      "an evicted model must be retrained, not served from the memo")
+    evictStaged(child)
   }
 
   test("staged LSH key legs: memoized per session, equivalent to the direct call, evicted") {
     import graft.queries.PipelineQueries
+    import graft.queries.PipelineQueries.{stage, stagedCount, evictStaged}
     val child = spark.newSession()
-    val st1 = PipelineQueries.stagedNearDupLsh(child, sf)
-    val st2 = PipelineQueries.stagedNearDupLsh(child, sf)
+    val st1 = stage(child, sf, PipelineQueries.LshKeys)
+    val st2 = stage(child, sf, PipelineQueries.LshKeys)
     assert(st1 eq st2, "second lookup must hit the memo")
-    assert(PipelineQueries.stagedNearDupCount(child) === 1)
+    assert(stagedCount(child) === 1)
     // staged-then-consumed ≡ the single-shot operator (same planes,
     // same seeds, same salting decision) — the bench row's restructure
     // must not change the registered query's output
@@ -1660,13 +1670,28 @@ class PipelineOpsSpec extends SparkSpecBase {
     })
     assert(rddIds.nonEmpty)
     assert(rddIds.forall(spark.sparkContext.getPersistentRDDs.contains))
-    PipelineQueries.evictOverlapPairs(child)
-    assert(PipelineQueries.stagedNearDupCount(child) === 0)
+    evictStaged(child)
+    assert(stagedCount(child) === 0)
     val deadline = System.nanoTime() + 10e9.toLong
     while (rddIds.exists(spark.sparkContext.getPersistentRDDs.contains)
         && System.nanoTime() < deadline) Thread.sleep(50)
     assert(rddIds.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)),
       "evicted stage checkpoints must be unpersisted")
+  }
+
+  test("stage-then-evict cycles on one session add at most one context listener") {
+    import graft.queries.PipelineQueries
+    val child = spark.newSession()
+    // build the session's own state (its listener bus) before counting
+    child.listenerManager
+    val sc = spark.sparkContext
+    val before = org.apache.spark.ListenerCount.of(sc)
+    (1 to 3).foreach { _ =>
+      PipelineQueries.stage(child, sf, PipelineQueries.Lm)
+      PipelineQueries.evictStaged(child)
+    }
+    assert(org.apache.spark.ListenerCount.of(sc) - before <= 1,
+      "eviction must not make the next stage register another listener")
   }
 
   test("certObserved emits every gated metric and clears the registered floors") {

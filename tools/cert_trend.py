@@ -33,12 +33,14 @@ def main() -> int:
     base_sf = base.get("sf", "")
     certs = bench.get("certs", {})
     ref = base.get("certs", {})
-    # exact basename match: substring tests would let sf0.15 or
-    # sf0.1_regen masquerade as sf0.1 and diff incomparable runs
-    bench_sf_name = sf.rstrip("/").rsplit("/", 1)[-1]
-    if base_sf and base_sf != bench_sf_name:
-        print(f"[certs] baseline recorded at {base_sf}, bench ran "
-              f"{bench_sf_name} — trend not comparable, skipping")
+    # exact basename match on both sides (a bench.json baseline stores
+    # the full path, tools/cert_baseline.json the basename): substring
+    # tests would let sf0.15 or sf0.1_regen masquerade as sf0.1
+    def sf_name(p):
+        return p.rstrip("/").rsplit("/", 1)[-1]
+    if base_sf and sf_name(base_sf) != sf_name(sf):
+        print(f"[certs] baseline recorded at {sf_name(base_sf)}, bench ran "
+              f"{sf_name(sf)} — trend not comparable, skipping")
         return 0
     bad = []
     print(f"[certs] trend vs {base_path} ({base.get('round', '?')}):")
