@@ -843,9 +843,10 @@ final case class SparseRel(
     val pivoted = df.groupBy(indexCols.map(col): _*)
       .pivot(COL, columnUniverse)
       .agg(sum(VALUE))
-    columnUniverse.foldLeft(pivoted) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), lit(0.0)))
-    }
+    // one projection: a withColumn per label would nest (and re-analyse)
+    // one Project per universe label
+    pivoted.select(indexCols.map(col) ++
+      columnUniverse.map(c => coalesce(col(c), lit(0.0)).as(c)): _*)
   }
 
   /** Human-readable summary (reference `__repr__`,

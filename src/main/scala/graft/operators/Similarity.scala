@@ -822,9 +822,12 @@ object Similarity {
     *  - `coarse` = Some(centroids) ([[trainIvfCentroids]]) puts every
     *    corpus vector in ONE cell, its nearest centroid, and a query
     *    scans only its `nprobe` closest cells: the cell equi-join
-    *    yields each (query, candidate) pair at most once, and on a
-    *    written index it dynamic-partition-prunes the scan to the
-    *    probed cells' files. Recall is bounded by the pruning: 16 of 32
+    *    yields each (query, candidate) pair at most once. A written
+    *    index holds one parquet file per cell, and for ANY query
+    *    relation — a filtered scan or a literal batch alike — the probe
+    *    join dynamic-partition-prunes the codes scan to the probed
+    *    cells' files, reusing the probe broadcast. Recall is bounded by
+    *    the pruning: 16 of 32
     *    cells measured 0.888–0.900 top-10 across sf0.001–0.1 for every
     *    code (8 of 16 measured 0.76–0.84 at the same scan fraction;
     *    floored at 0.75 by `embed_ann_recall`). At warehouse scale
@@ -838,9 +841,11 @@ object Similarity {
     *    the PQ books encode the cell RESIDUAL
     *    ([[trainIvfPqCodebooks]]) and a pair scores ⟨q,c_cell⟩ + ADC.
     *  - a quantized scan keeps the `k·refine` best candidates per query
-    *    and reranks only those on full-precision cosine: the float
-    *    vectors are fetched per shortlisted candidate only, so at scale
-    *    they stay cold. SQ8 at refine 4 measured top-10 recall ≥ 0.98;
+    *    and reranks only those on full-precision cosine: the corpus
+    *    streams once past the broadcast shortlist (at most
+    *    |Q|·k·refine id pairs, the size class of the broadcast
+    *    queries), so no float vector is ever shuffled. SQ8 at refine 4
+    *    measured top-10 recall ≥ 0.98;
     *    PQ defaults to refine 8 because its per-subspace error is
     *    coarser than per-dimension rounding.
     *
@@ -875,7 +880,8 @@ object Similarity {
     }
 
     /** Persist the index at `path`: the [[encode]]d corpus at
-      * `path`/codes, PARTITIONED BY cell under a coarse quantizer, plus
+      * `path`/codes, PARTITIONED BY cell with one file per cell under a
+      * coarse quantizer (small-file opens dominate a pruned scan), plus
       * the state that defined the codes beside it — `path`/centroids
       * (cell, centroid) and `path`/codebooks (j, c, centroid), both
       * small bounded relations. [[AnnIndex.read]] restores the index. */
@@ -883,8 +889,10 @@ object Similarity {
         path: String): Unit = {
       val spark = corpus.sparkSession
       import spark.implicits._
-      val w = encode(corpus, idCol, vecCol).write.mode("overwrite")
-      (if (coarse.isDefined) w.partitionBy("cell") else w).parquet(s"$path/codes")
+      val enc = encode(corpus, idCol, vecCol)
+      if (coarse.isDefined) enc.repartition(col("cell")).write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$path/codes")
+      else enc.write.mode("overwrite").parquet(s"$path/codes")
       def meta(df: DataFrame, name: String): Unit =
         df.coalesce(1).write.mode("overwrite").parquet(s"$path/$name")
       coarse.foreach(cents => meta(cents.toSeq.zipWithIndex
@@ -917,8 +925,17 @@ object Similarity {
             coarse.map(cents => CentroidDots.dots(col("qv"), cents).as("cdots")).toSeq,
             if (coarse.isEmpty) adc else element_at(col("cdots"), col("cell") + 1) + adc)
       }
-      val probes = queries.select((col("qid") +: qSide) ++ coarse.map(cents =>
+      val cellProbes = queries.select((col("qid") +: qSide) ++ coarse.map(cents =>
         explode(IvfCells.cells(col("qv"), cents, nprobe)).as("cell")): _*)
+      // on a written (cell-partitioned) index, the no-op `cell < nlist`
+      // range filter is what Spark's partition pruning takes as a
+      // selective probe side: the codes scan is pruned to the probed
+      // cells for any query relation, a literal batch included. Inline,
+      // it would only add a cell-kernel call to the scan's inferred filter.
+      val probes = (coarse, Option(codes)) match {
+        case (Some(cents), Some(_)) => cellProbes.filter(col("cell") < cents.length)
+        case _ => cellProbes
+      }
       val scan = Option(codes).getOrElse(encode(corpus, idCol, vecCol))
       val pairs = (if (coarse.isEmpty) scan.crossJoin(broadcast(probes))
         else scan.join(broadcast(probes), Seq("cell")))
@@ -926,15 +943,14 @@ object Similarity {
       if (code == Flat)
         return topKByCos(pairs.select(col("qid"), col("vec_id"), score.as("cos")), k)
       // the k·refine best (qcos desc, id) candidates per query, then the
-      // exact rerank fetches just their vectors by id
+      // exact rerank streams the corpus past them as the broadcast side
       val wq = Window.partitionBy(col("qid")).orderBy(col("qcos").desc, col("vec_id"))
       val shortlist = pairs.select(col("qid"), col("vec_id"), score.as("qcos"))
         .withColumn("qrn", row_number().over(wq))
         .filter(col("qrn") <= k * refine)
         .select(col("qid"), col("vec_id"))
-      topKByCos(shortlist
-        .join(corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v")),
-          Seq("vec_id"))
+      topKByCos(corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
+        .join(broadcast(shortlist), Seq("vec_id"))
         .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
         .select(col("qid"), col("vec_id"),
           round(cosine(col("v"), col("qv")), 6).as("cos")), k)
@@ -998,7 +1014,7 @@ object Similarity {
     def read(spark: SparkSession, path: String): (AnnIndex, DataFrame) = {
       val codes = parquetAt(spark, s"$path/codes")
       val coarse = if (!codes.columns.contains("cell")) None else {
-        val rows = metadataAt(spark, s"$path/centroids", "cell", "centroid")
+        val rows = metadataAt(spark, s"$path/centroids", "cell")
         val cents = rows.map(_.getSeq[Double](1).toArray)
         require(rows.map(_.getInt(0)).sameElements(rows.indices) &&
             cents.forall(_.length == cents.head.length),
@@ -1008,7 +1024,7 @@ object Similarity {
       val code = if (codes.columns.contains(Sq8.column)) Sq8
         else if (!codes.columns.contains("pq_codes")) Flat
         else {
-          val rows = metadataAt(spark, s"$path/codebooks", "j", "c", "centroid")
+          val rows = metadataAt(spark, s"$path/codebooks", "j", "c")
           val books = Array.tabulate(rows.map(_.getInt(0)).max + 1)(j =>
             rows.filter(_.getInt(0) == j).map(_.getSeq[Double](2).toArray))
           require(books.forall(_.nonEmpty) &&
@@ -1021,17 +1037,22 @@ object Similarity {
         col("cell").cast("int").as("cell")).toSeq) :+ col(code.column): _*))
     }
 
-    private def parquetAt(spark: SparkSession, dir: String): DataFrame =
-      try spark.read.parquet(dir)
+    private def parquetAt(spark: SparkSession, dir: String,
+        schema: Option[String] = None): DataFrame =
+      try schema.fold(spark.read)(spark.read.schema).parquet(dir)
       catch { case e: AnalysisException =>
         throw new IllegalArgumentException(s"ANN index part missing or empty at $dir", e) }
 
-    /** All rows of a metadata relation, ordered by its key columns. */
-    private def metadataAt(spark: SparkSession, dir: String, cols: String*): Array[Row] = {
-      val rows = parquetAt(spark, dir).select(cols.map(col): _*)
-        .orderBy(cols.init.map(col): _*).collect()
+    /** All rows of a metadata relation — int `keys` then the `centroid`
+      * array, the schema [[AnnIndex.write]] gives it, so no inference
+      * job — ordered by its keys on the driver, which collects them
+      * anyway. */
+    private def metadataAt(spark: SparkSession, dir: String, keys: String*): Array[Row] = {
+      val schema = (keys.map(k => s"$k INT") :+ "centroid ARRAY<DOUBLE>").mkString(", ")
+      val rows = parquetAt(spark, dir, Some(schema)).collect()
       require(rows.nonEmpty, s"ANN index part missing or empty at $dir")
-      rows
+      require(!rows.exists(_.anyNull), s"ANN index part at $dir does not hold $schema rows")
+      rows.sortBy(r => keys.indices.map(r.getInt))(Ordering.Implicits.seqOrdering)
     }
   }
 

@@ -9,9 +9,10 @@ import graft.operators.Similarity.AnnIndex
 import graft.queries.Tables
 
 /** Every [[AnnIndex]] kind, from one table: a written-then-read index
-  * searches exactly like the inline index (cell-partitioned and
-  * partition-pruned under IVF), and a missing or empty part of a
-  * written index fails on read with a message naming that part. */
+  * searches exactly like the inline index (cell-partitioned, one file
+  * per cell, and partition-pruned for filtered and literal query
+  * batches alike under IVF), and a missing or empty part of a written
+  * index fails on read with a message naming that part. */
 class AnnIndexSpec extends SparkSpecBase {
 
   private lazy val emb = Tables.embeddings(spark, sf)
@@ -29,11 +30,12 @@ class AnnIndexSpec extends SparkSpecBase {
     AnnIndex.fit(emb, "vec_id", "embedding", kind,
       centroids = if (kind.startsWith("IVF,")) cents else null)
 
-  private def withIndex(kind: String)(body: (AnnIndex, String) => Unit): Unit = {
+  private def withIndex(kind: String, corpus: => org.apache.spark.sql.DataFrame = emb)(
+      body: (AnnIndex, String) => Unit): Unit = {
     val dir = Files.createTempDirectory("graft_ann_idx")
     try {
       val idx = fit(kind)
-      idx.write(emb, "vec_id", "embedding", dir.toString)
+      idx.write(corpus, "vec_id", "embedding", dir.toString)
       body(idx, dir.toString)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
@@ -69,6 +71,34 @@ class AnnIndexSpec extends SparkSpecBase {
           assert(plan.contains("dynamicpruning"),
             s"expected a dynamic-partition-pruned cell scan in plan:\n$plan")
         }
+      }
+    }
+  }
+
+  kinds.filter(_.startsWith("IVF,")).foreach { kind =>
+    test(s"AnnIndex $kind: one file per cell, and a literal query batch prunes the scan") {
+      // written from four input partitions, so a cell's rows come from
+      // several tasks
+      withIndex(kind, emb.repartition(4)) { (idx, path) =>
+        val cellDirs = new java.io.File(s"$path/codes").listFiles()
+          .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+        assert(cellDirs.nonEmpty, s"no cell=* partition dirs under $path/codes")
+        cellDirs.foreach { d =>
+          val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+          assert(files.length === 1, s"${d.getName} holds ${files.length} parquet files")
+        }
+        // a driver-side batch, as an interactive caller sends it: no
+        // upstream filter for partition pruning to key on
+        val s = spark
+        import s.implicits._
+        val literal = queries.collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.toDF("qid", "qv")
+        val (back, codes) = AnnIndex.read(spark, path)
+        val probe = back.search(emb, "vec_id", "embedding", literal, 10, codes = codes)
+        val plan = probe.queryExecution.executedPlan.toString
+        assert(plan.contains("dynamicpruning"),
+          s"expected a dynamic-partition-pruned cell scan in plan:\n$plan")
+        assert(rows(probe) === rows(idx.search(emb, "vec_id", "embedding", queries, 10)))
       }
     }
   }

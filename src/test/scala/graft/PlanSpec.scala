@@ -224,6 +224,53 @@ class PlanSpec extends SparkSpecBase {
       "bruteForceTopK is expected to rank the raw cross join (oracle leg)")
   }
 
+  test("ANN rerank streams the corpus past a broadcast shortlist — no corpus exchange") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.operators.Similarity
+
+    // every quantized kind shortlists k·refine candidates per query and
+    // reranks them on the float vectors. The rerank join must be a
+    // broadcast hash join whose build side is the shortlist (the "qrn"
+    // filter) and whose streamed side is the corpus scan with no
+    // exchange in between: the vectors are never shuffled, whatever the
+    // corpus size.
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("qid"),
+        Similarity.asDouble(col("embedding")).as("qv"))
+    Seq("SQ8", "IVF,SQ8", "PQ", "IVF,PQ").foreach { kind =>
+      val df = Similarity.AnnIndex.fit(emb, "vec_id", "embedding", kind,
+          nlist = 8, m = 4, ksub = 16)
+        .search(emb, "vec_id", "embedding", queries, 5)
+      val p = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      // (build, streamed) sides of every broadcast hash join
+      val sides: Seq[(SparkPlan, SparkPlan)] = p.collect {
+        case j: BroadcastHashJoinExec =>
+          if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+      }
+      val reranks = sides.filter(_._1.exists {
+        case f: FilterExec => f.condition.toString.contains("qrn")
+        case _ => false
+      })
+      assert(reranks.size === 1,
+        s"$kind: expected one rerank join with the shortlist as broadcast build side:\n$p")
+      val streamed = reranks.head._2
+      assert(streamed.exists {
+        case scan: FileSourceScanExec => scan.output.exists(_.name == "embedding")
+        case _ => false
+      }, s"$kind: the rerank join does not stream the corpus scan:\n$p")
+      assert(!streamed.exists(_.isInstanceOf[Exchange]),
+        s"$kind: the corpus is exchanged before the rerank join:\n$p")
+    }
+  }
+
   test("shuffleOrder enumerates via range-partitioned sort, never a global window") {
     import graft.operators.Sampling
     val docs = Tables.documents(spark, sf).select(col("doc_id"))
