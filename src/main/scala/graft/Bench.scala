@@ -19,19 +19,16 @@ import graft.queries.PipelineQueries
   * for that file; JSON consumers check `"errors"`, which is exactly
   * what tools/release_check.sh does.
   *
-  * SCALING-PROBE LIMITATION (r22, documenting the r21 verdict's
-  * finding): the driver also re-runs this bench at a lower
-  * `SPARK_GRAFT_CPUS` and compares per-row times across core counts.
-  * At sf0.1 every row is dominated by fixed per-job/driver overhead
-  * (micro-batch planning, AQE stage scheduling, parquet footer reads)
-  * — the r21 measurement found NO row reaching even half the ideal
-  * core ratio, and rows with MANY tiny jobs can read faster at 8
-  * cores than 32 under ambient load. So the low-core comparison at
-  * this scale factor distinguishes overhead-bound rows from
-  * compute-bound ones; it cannot certify an operator as serial. A
-  * genuine serial-operator probe needs a larger scale factor (point
-  * `SPARK_GRAFT_SF_DIR` at one — the harness is SF-agnostic); none
-  * ships in this sandbox, so the limitation is recorded here instead.
+  * SCALE: the harness is SF-agnostic, so a larger input is just
+  * another `SPARK_GRAFT_SF_DIR`. At sf0.1 every row is dominated by
+  * fixed per-job/driver overhead (micro-batch planning, AQE stage
+  * scheduling, parquet footer reads) — the r21 measurement found NO
+  * row reaching even half the ideal core ratio — so a low-core re-run
+  * at that scale separates overhead-bound rows from compute-bound
+  * ones but cannot certify an operator as serial. For a larger input,
+  * derive one with [[ScaleFixture]] (`runMain graft.ScaleFixture
+  * <sfDir> <reps> <outDir>`, a closed-form `reps`× replica) and point
+  * `SPARK_GRAFT_SF_DIR` at it.
   */
 object Bench {
 
@@ -134,6 +131,9 @@ object Bench {
         System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
       }
     }
+    // the warm-up filled the stage registry; when it ran on sfDir itself
+    // the cold rows below would time a memo hit instead of the build
+    PipelineQueries.evictStaged(spark)
 
     // Repetitions: best-of-3 by default (env-overridable). Single-pass
     // timings in a shared single-JVM sandbox proved too noisy to steer

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The ONE way the measurement tools (Bench, ScaleRehearsal) force a
+/** The ONE way the measurement tool (Bench) forces a
   * query: execute the physical plan AS WRITTEN and count its rows.
   *
   * NOT `.count()`: that stacks an Aggregate count(1) on top and

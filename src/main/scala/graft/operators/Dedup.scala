@@ -636,8 +636,8 @@ object Dedup {
       val sample = edges.take(SmallGraphMaxEdges + 1)
       if (sample.length <= SmallGraphMaxEdges)
         smallGraphClusters(pairs.sparkSession, sample)
-      else propagateClusters(edges, maxIter)._1
-    } else duplicateClustersWithIters(pairs, maxIter)._1
+      else propagateClusters(edges, maxIter)
+    } else duplicateClustersDistributed(pairs, maxIter)
   }
 
   /** Edge cap for the driver union-find fast path: 1M undirected edge
@@ -682,14 +682,11 @@ object Dedup {
         "doc BIGINT NOT NULL, cluster BIGINT NOT NULL"))
   }
 
-  /** [[duplicateClusters]] plus the CONVERGENCE ROUND COUNT — the
-    * scale-evidence hook: pointer jumping promises O(log diameter)
-    * rounds, and ScaleRehearsal records the observed count at
-    * replicated cluster density to back that claim with a number
-    * instead of an assertion. Always the DISTRIBUTED path (the round
-    * count is the evidence being gathered). */
-  private[graft] def duplicateClustersWithIters(pairs: DataFrame,
-      maxIter: Int = 50): (DataFrame, Int) =
+  /** [[duplicateClusters]] always on the DISTRIBUTED propagation path —
+    * what non-long ids and graphs past [[SmallGraphMaxEdges]] take; the
+    * fast-path equivalence spec pins the driver union-find against it. */
+  private[graft] def duplicateClustersDistributed(pairs: DataFrame,
+      maxIter: Int = 50): DataFrame =
     propagateClusters(undirectedEdges(pairs), maxIter)
 
   /** The checkpointed undirected edge list of a pair relation. */
@@ -700,7 +697,7 @@ object Dedup {
       .localCheckpoint()
 
   private def propagateClusters(edges: DataFrame,
-      maxIter: Int): (DataFrame, Int) = {
+      maxIter: Int): DataFrame = {
     // localCheckpoint per round: truncates the iterative lineage (an
     // uncached loop would double the plan per iteration) and lets the
     // convergence probe reuse the materialized labels.
@@ -752,7 +749,7 @@ object Dedup {
       labels = updated.drop("__old")
       i += 1
     }
-    (labels, i)
+    labels
   }
 
   /** The documents to KEEP after near-dup clustering: every doc not in
@@ -812,7 +809,7 @@ object Dedup {
     * never a recompute of the upstream encode. */
   private[operators] def requireDupSparse(hashes: DataFrame,
       maxPairsPerDoc: Double, alternative: String): Unit = {
-    if (maxPairsPerDoc <= 0) return // explicit opt-out (rehearsals)
+    if (maxPairsPerDoc <= 0) return // explicit opt-out: quadratic output accepted
     val row = hashes.groupBy(col("hash"))
       .agg(count(lit(1)).as("g"))
       .agg(sum(col("g")).as("n"),

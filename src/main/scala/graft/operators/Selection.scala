@@ -33,15 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Selection {
 
-  /** Driver-side diagnostic of the last [[selectByBudget]] call:
-    * (buckets, rows in the boundary bucket — the only rows that paid
-    * the exact cumulative window — and total input rows). The scale
-    * rehearsal reads it to pin the claim that the sorted fraction
-    * stays ~1/buckets of the corpus at 10×; not part of any query
-    * result. */
-  private[graft] val lastDiag =
-    new java.util.concurrent.atomic.AtomicReference[(Int, Long, Long)]((0, 0L, 0L))
-
   /** Rows of `scored` whose running `costCol` total — accumulated in
     * (`scoreCol` DESC, `idCol` ASC) order — stays within `budget`.
     * Output columns = input columns; null scores/costs are excluded
@@ -70,22 +61,17 @@ object Selection {
       else least(lit(buckets),
         width_bucket(col(scoreCol).cast("double"), lit(lo), lit(hi), lit(buckets)))
     val hist = in.groupBy(bucketOf.cast("long").as("__b"))
-      .agg(sum(col(costCol).cast("long")).as("__t"),
-        count(lit(1)).as("__c"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      .agg(sum(col(costCol).cast("long")).as("__t"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // walk top-down: find the bucket where the running cost crosses
     var cum = 0L
     var boundary = -1L
     var aboveSum = 0L
     (buckets.toLong to 1L by -1L).foreach { b =>
-      val t = hist.get(b).map(_._1).getOrElse(0L)
+      val t = hist.getOrElse(b, 0L)
       if (boundary < 0 && cum + t > budget) { boundary = b; aboveSum = cum }
       cum += t
     }
-    val totalRows = hist.valuesIterator.map(_._2).sum
-    lastDiag.set((buckets,
-      if (boundary < 0) 0L else hist.get(boundary).map(_._2).getOrElse(0L),
-      totalRows))
     if (boundary < 0) return in // everything fits
     val above = in.filter(bucketOf > boundary)
     // exact residual prefix INSIDE the boundary bucket only: the

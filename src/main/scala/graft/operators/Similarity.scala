@@ -177,7 +177,7 @@ object Similarity {
     * small-norm planes. Native single pass: the interpreted
     * `array_sort(comparator)` HOF this replaces ran once per CORPUS
     * row on the nearestDupLsh probe leg. */
-  private[graft] def tableProbeKeys(v: Column, allPlanes: Seq[Array[Array[Double]]],
+  private def tableProbeKeys(v: Column, allPlanes: Seq[Array[Array[Double]]],
       multiProbe: Int): Column =
     graft.functions.LshKeys.keys(v, allPlanes, multiProbe)
 
@@ -204,29 +204,11 @@ object Similarity {
     topKByCos(scored, k)
   }
 
-  /** Approximate embedding-cosine nearest-duplicate over the WHOLE
-    * corpus: every vector's closest bucket-mate. This is the declared
-    * scale path for the all-vs-all 1-NN shape — a banded SELF
-    * equi-join on (table, bucket) LSH keys, so candidate pairs meet
-    * only inside a bucket: nothing is broadcast, no cartesian product,
-    * and the bucket id is an ordinary shuffle key. Vectors sharing no
-    * bucket with any other vector are absent from the output (no
-    * near-duplicate at this table/plane setting — by construction
-    * nothing is cosine-close to them under any of the `tables`
-    * projections). Recall vs the exact 1-NN is floor-tested in
-    * ScalaTest and surfaced by the `embed_ann_recall` query.
-    * `maxBucket` bounds within-bucket pair counts under skew (hot
-    * sign-pattern buckets on clustered embeddings) by deterministic
-    * sub-bucket salting. `multiProbe` adds query-directed bit-flip
-    * probes on ONE join leg (see the asymmetric-probe note in the
-    * body): default 2 lifts measured recall to 0.97-0.99 while the
-    * corpus-side index explode stays at `tables` rows per vector. */
   /** Corpus-size-derived plane count (~64 vectors per bucket, clamped
     * to [4, 20] bits) and per-table hyperplane seed — THE definitions
-    * [[nearestDupLsh]] uses, exposed so diagnostics (ScaleRehearsal's
-    * skew histogram) measure the operator's actual key space instead
-    * of a copy that could drift. */
-  private[graft] def derivedPlanes(n: Long): Int = {
+    * [[nearestDupLsh]] uses; the seed is shared with the DuckDB LSH
+    * oracles so they replay the operator's exact key space. */
+  private def derivedPlanes(n: Long): Int = {
     val buckets = math.max(16L, n / 64)
     math.min(20, math.max(4,
       64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)))
@@ -281,6 +263,23 @@ object Similarity {
       Seq(keyed) ++ (if (keyedProbe eq keyed) Nil else Seq(keyedProbe)) ++ hot
   }
 
+  /** Approximate embedding-cosine nearest-duplicate over the WHOLE
+    * corpus: every vector's closest bucket-mate. This is the declared
+    * scale path for the all-vs-all 1-NN shape — a banded SELF
+    * equi-join on (table, bucket) LSH keys, so candidate pairs meet
+    * only inside a bucket: nothing is broadcast, no cartesian product,
+    * and the bucket id is an ordinary shuffle key. Vectors sharing no
+    * bucket with any other vector are absent from the output (no
+    * near-duplicate at this table/plane setting — by construction
+    * nothing is cosine-close to them under any of the `tables`
+    * projections). Recall vs the exact 1-NN is floor-tested in
+    * ScalaTest and surfaced by the `embed_ann_recall` query.
+    * `maxBucket` bounds within-bucket pair counts under skew (hot
+    * sign-pattern buckets on clustered embeddings) by deterministic
+    * sub-bucket salting. `multiProbe` adds query-directed bit-flip
+    * probes on ONE join leg (see the asymmetric-probe note in the
+    * body): default 2 lifts measured recall to 0.97-0.99 while the
+    * corpus-side index explode stays at `tables` rows per vector. */
   def nearestDupLsh(corpus: DataFrame, idCol: String, vecCol: String,
       planes: Int = -1, tables: Int = 8, dim: Int = -1,
       maxBucket: Int = 4096, multiProbe: Int = 2): DataFrame =

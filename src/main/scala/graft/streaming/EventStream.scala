@@ -242,29 +242,6 @@ object EventStream {
         .agg(max_by(col("sessions"), col("events")).as("sessions"),
           max(col("events")).as("events")))
 
-  /** Rehearsal face of [[gapSessionsWatermarked]]: drain `events` in
-    * `files` REAL micro-batches (Append mode — only sessions the
-    * watermark closed are emitted; intervals still open when the
-    * finite drain ends stay in state, as production would hold them)
-    * and report the max state-store row count observed across
-    * micro-batches alongside the closed sessions. That number IS the
-    * scale claim: state rows = open intervals per user, not events —
-    * the drain's peak state must track the user count, never the
-    * event volume. */
-  def gapSessionsWatermarkedDrained(spark: SparkSession, events: DataFrame,
-      files: Int = 4, gapMicros: Long = 30L * 60 * 1000000L,
-      lateness: String = "1 hour"): (DataFrame, Long) = {
-    var maxState = -1L
-    val closed = drainEventsStaged(spark, events, files, OutputMode.Append)(
-      stream => gapSessionsWatermarked(spark, stream, gapMicros, lateness)
-        .toDF())(
-      identity,
-      q => maxState = q.recentProgress.iterator
-        .flatMap(p => Option(p.stateOperators).iterator.flatMap(_.iterator))
-        .map(_.numRowsTotal).foldLeft(0L)(math.max))
-    (closed, maxState)
-  }
-
   /** Streaming deduplication WITHIN the watermark horizon: keeps the
     * first document per 256-bit text digest among documents whose
     * event times fall inside the same `lateness` window. Uses
@@ -758,9 +735,7 @@ object EventStream {
     * cannot collide. */
   private def drainEventsStaged(spark: SparkSession, events: DataFrame,
       files: Int, mode: OutputMode)(plan: DataFrame => DataFrame)(
-      finish: DataFrame => DataFrame,
-      observe: org.apache.spark.sql.streaming.StreamingQuery => Unit
-        = _ => ()): DataFrame = {
+      finish: DataFrame => DataFrame): DataFrame = {
     sweepOrphanedStaging()
     val id = ProcessHandle.current().pid() + "_" + drainCounter.incrementAndGet()
     val stage = new java.io.File(
@@ -778,7 +753,7 @@ object EventStream {
         .parquet(stage)
       val q = plan(stream).writeStream.format("memory").queryName(sinkName)
         .outputMode(mode).start()
-      try { q.processAllAvailable(); observe(q) } finally q.stop()
+      try q.processAllAvailable() finally q.stop()
       finish(spark.table(sinkName)).localCheckpoint()
     } catch {
       case t: Throwable => primary = t; throw t

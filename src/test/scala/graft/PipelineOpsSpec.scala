@@ -357,13 +357,14 @@ class PipelineOpsSpec extends SparkSpecBase {
     import spark.implicits._
     // chains + stars + an isolated pair, with edges in adversarial
     // order; the public face takes the union-find fast path (long ids,
-    // under the cap), WithIters is pinned to the distributed loop
+    // under the cap), duplicateClustersDistributed is pinned to the
+    // distributed loop
     val pairs = Seq((9L, 8L), (1L, 2L), (8L, 7L), (2L, 3L), (7L, 1L),
       (30L, 31L), (30L, 32L), (32L, 33L), (50L, 51L))
       .toDF("doc_a", "doc_b")
     val fast = Dedup.duplicateClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.duplicateClustersWithIters(pairs)._1
+    val dist = Dedup.duplicateClustersDistributed(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast === dist)
     // non-long ids must keep the distributed path (min-label order is

@@ -77,6 +77,25 @@ class PlanSpec extends SparkSpecBase {
       s"scan reads more than the projection:\n$p")
   }
 
+  test("operator scans read only the columns the operator uses") {
+    import graft.operators.{Similarity, TextAnalysis}
+    def readSchema(df: org.apache.spark.sql.DataFrame): String =
+      "ReadSchema: [^\\n]*".r.findFirstIn(plan(df)).getOrElse("")
+    val onehot = readSchema(SparseRel.scanEvents(Tables.events(spark, sf),
+      "event_type", Seq("user_id"), Some(Tables.EventTypes)).df)
+    assert(onehot.contains("user_id") && onehot.contains("event_type") &&
+      !onehot.contains("props") && !onehot.contains("ts"), onehot)
+    val winnow = readSchema(TextAnalysis.fingerprintWinnow(
+      Tables.documents(spark, sf), "doc_id", "text"))
+    assert(winnow.contains("text") &&
+      Seq("lang", "source", "n_chars").forall(!winnow.contains(_)), winnow)
+    val emb = Tables.embeddings(spark, sf)
+    val bf = readSchema(Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+      emb.filter(col("vec_id") < 8).select(col("vec_id").as("qid"),
+        Similarity.asDouble(col("embedding")).as("qv")), 10))
+    assert(bf.contains("embedding") && !bf.contains("label"), bf)
+  }
+
   test("sampling ops are shuffle-free map stages; exact-k is partial top-k") {
     import graft.operators.Sampling
     val docs = Tables.documents(spark, sf)
