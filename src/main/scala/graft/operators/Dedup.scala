@@ -407,6 +407,16 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** The (doc, sh) signature relation an index stores — ONE definition
+    * shared by initial indexing, appends and the streaming ingest loop
+    * (which stages one hash pass and both probes and admits from it),
+    * so the paths can never hash inconsistently. */
+  private[graft] def signatures(docs: DataFrame, idCol: String,
+      textCol: String, shingleN: Int): DataFrame =
+    docs
+      .filter(size(tokens(col(textCol))) >= shingleN)
+      .select(col(idCol).as("doc"), shingleHashes(col(textCol), shingleN).as("sh"))
+
   /** Persist the corpus's near-dup signature index: band keys (for
     * candidate lookup) and shingle-hash arrays (for verification).
     * Indexing is one pass over the corpus; incremental ingestion then
@@ -414,23 +424,6 @@ object Dedup {
     * matters when the corpus is 100 TB and the daily delta is not. At
     * warehouse scale, bucket the band table by `bh` so the incremental
     * join is co-located. */
-  /** The (doc, sh) signature relation an index stores — ONE definition
-    * shared by initial indexing and appends, so the two paths can
-    * never hash inconsistently. */
-  private def signatures(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int): DataFrame =
-    docs
-      .filter(size(tokens(col(textCol))) >= shingleN)
-      .select(col(idCol).as("doc"), shingleHashes(col(textCol), shingleN).as("sh"))
-
-  /** The index's (doc, sh) signature relation, for callers that stage
-    * one hash pass and feed several consumers (the streaming ingest
-    * loop probes AND admits from a single pass). Must stay the one
-    * definition above — see its scaladoc. */
-  private[graft] def signaturesOf(docs: DataFrame, idCol: String,
-      textCol: String, shingleN: Int): DataFrame =
-    signatures(docs, idCol, textCol, shingleN)
-
   def writeNearDupIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String, shingleN: Int = 3, k: Int = 64, bands: Int = 16): Unit = {
     val spark = docs.sparkSession
@@ -486,31 +479,17 @@ object Dedup {
       textCol: String, path: String, maxIndexFiles: Int = 64): Unit = {
     val spark = newDocs.sparkSession
     val params @ (shingleN, _, _) = readIndexParams(spark, path)
-    appendSigToNearDupIndex(
-      signatures(newDocs, idCol, textCol, shingleN), path, params,
-      maxIndexFiles)
+    appendSigNoCompact(signatures(newDocs, idCol, textCol, shingleN), path,
+      params)
+    compactNearDupIndex(spark, path, maxIndexFiles)
   }
 
-  /** [[appendToNearDupIndex]] over an ALREADY-HASHED (doc, sh)
-    * signature relation with the index params in hand — the streaming
-    * ingest loop's entry point: the probe has already paid the
-    * tokenize+shingle-hash pass for the batch, so admitting it must
-    * not hash the text a second time (and must not re-open the
-    * sidecar the loop read at start). Same idempotency anti-join,
-    * write ordering and compaction contract as the public face. */
-  private[graft] def appendSigToNearDupIndex(sig: DataFrame, path: String,
-      params: (Int, Int, Int), maxIndexFiles: Int = 64): Unit = {
-    appendSigNoCompact(sig, path, params)
-    compactNearDupIndex(sig.sparkSession, path, maxIndexFiles)
-  }
-
-  /** The append half of [[appendSigToNearDupIndex]] WITHOUT the
-    * compaction sweep — for the streaming ingest loop, which runs the
-    * admit append CONCURRENTLY with the batch's probe jobs (§2.6; the
-    * probe's index reads snapshotted their file listing before the
-    * append, and appends never delete files) and must defer compaction
-    * — which DOES rewrite and delete files — until the probe has
-    * finished reading, via [[compactNearDupIndex]]. */
+  /** The append half of [[appendToNearDupIndex]] over an ALREADY-HASHED
+    * (doc, sh) signature relation with the index params in hand, WITHOUT
+    * the compaction sweep — the streaming ingest loop's admit
+    * ([[graft.streaming.EventStream.ingestBatch]] says when it may run
+    * beside the probe and why compaction waits). Same idempotency
+    * anti-join and write ordering as the public face. */
   private[graft] def appendSigNoCompact(sig: DataFrame, path: String,
       params: (Int, Int, Int)): Unit = {
     val spark = sig.sparkSession
@@ -530,11 +509,8 @@ object Dedup {
     }
   }
 
-  /** The compaction half of [[appendSigToNearDupIndex]] — bands before
-    * hashes, same crash-ordering rationale as the appends. Must not
-    * run while any plan holding a pre-compaction file listing of this
-    * index still has jobs to execute (compaction deletes the listed
-    * files). */
+  /** The compaction half of [[appendToNearDupIndex]] — bands before
+    * hashes, same crash-ordering rationale as the appends. */
   private[graft] def compactNearDupIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxIndexFiles: Int): Unit = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Size-triggered compaction for append-grown parquet directories —
   * the streaming-index decay guard. Steady-state ingestion
   * ([[graft.operators.Dedup.appendToNearDupIndex]], the
-  * [[graft.streaming.EventStream]] admit loops) appends one small
+  * [[graft.streaming.EventStream.ingestBatch]] admit loop) appends one small
   * parquet file set per micro-batch; at 100 TB cadence (thousands of
   * batches/day) the index directory degrades into a small-files swamp
   * whose LIST + open cost eventually dominates every probe. The fix is

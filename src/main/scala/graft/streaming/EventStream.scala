@@ -143,24 +143,32 @@ object EventStream {
         GroupStateTimeout.NoTimeout) {
         (userId: Long, batch: Iterator[Event], state: GroupState[GapSessionState]) =>
           val prev = state.getOption.getOrElse(GapSessionState(Nil, 0L))
-          var nEvents = prev.events
-          val fresh = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          batch.foreach { e =>
-            nEvents += 1
-            val i = e.ts.toInstant
-            val us = i.getEpochSecond * 1000000L + i.getNano / 1000L
-            fresh += ((us, us))
-          }
-          val merged = (prev.bounds ++ fresh).sortBy(_._1)
-            .foldLeft(List.empty[(Long, Long)]) {
-              case ((s0, e0) :: tail, (s1, e1)) if s1 - e0 <= gapMicros =>
-                (s0, math.max(e0, e1)) :: tail
-              case (acc, iv) => iv :: acc
-            }
-          state.update(GapSessionState(merged, nEvents))
+          val fresh = batch.map(pointInterval).toList
+          val merged = mergeIntervals(
+            prev.bounds.map { case (s, e) => (s, e, 0L) } ++ fresh, gapMicros)
+          val nEvents = prev.events + fresh.size
+          state.update(GapSessionState(merged.map(iv => (iv._1, iv._2)), nEvents))
           UserGapSessions(userId, merged.size.toLong, nEvents)
       }
   }
+
+  /** One event as a point interval (tsMicros, tsMicros, 1 event). */
+  private def pointInterval(e: Event): (Long, Long, Long) = {
+    val i = e.ts.toInstant
+    val us = i.getEpochSecond * 1000000L + i.getNano / 1000L
+    (us, us, 1L)
+  }
+
+  /** The interval merge both gap sessionizers run: (start, end, events)
+    * intervals at most `gapMicros` apart coalesce (strict `>` splits),
+    * returned ascending by start. */
+  private def mergeIntervals(ivs: Seq[(Long, Long, Long)],
+      gapMicros: Long): List[(Long, Long, Long)] =
+    ivs.sortBy(_._1).foldLeft(List.empty[(Long, Long, Long)]) {
+      case ((s0, e0, c0) :: tail, (s1, e1, c1)) if s1 - e0 <= gapMicros =>
+        (s0, math.max(e0, e1), c0 + c1) :: tail
+      case (acc, iv) => iv :: acc
+    }.reverse
 
   /** State for [[gapSessionsWatermarked]]: open session intervals as
     * (startMicros, endMicros, eventCount). */
@@ -198,17 +206,8 @@ object EventStream {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (userId: Long, batch: Iterator[Event], state: GroupState[GapIntervals]) =>
           val prev = state.getOption.getOrElse(GapIntervals(Nil))
-          val fresh = batch.map { e =>
-            val i = e.ts.toInstant
-            val us = i.getEpochSecond * 1000000L + i.getNano / 1000L
-            (us, us, 1L)
-          }.toList
-          val merged = (prev.intervals ++ fresh).sortBy(_._1)
-            .foldLeft(List.empty[(Long, Long, Long)]) {
-              case ((s0, e0, c0) :: tail, (s1, e1, c1)) if s1 - e0 <= gapMicros =>
-                (s0, math.max(e0, e1), c0 + c1) :: tail
-              case (acc, iv) => iv :: acc
-            }.reverse
+          val merged = mergeIntervals(
+            prev.intervals ++ batch.map(pointInterval), gapMicros)
           val wmUs = state.getCurrentWatermarkMs() * 1000L
           val (closed, open) = merged.partition(iv => iv._2 + gapMicros < wmUs)
           if (open.isEmpty) state.remove()
@@ -259,17 +258,24 @@ object EventStream {
       .dropDuplicatesWithinWatermark("text_sha")
 
   /** Streaming near-duplicate ingestion — the steady-state corpus
-    * loop (probe → keep → admit) as one `foreachBatch`: every
-    * micro-batch probes the PERSISTED signature index
-    * (graft.operators.Dedup), hands the found (doc_new, doc_indexed,
-    * jaccard) pairs to `onPairs` (route them to a sink/table), and
-    * admits the batch's non-duplicate survivors into the index so
-    * later batches deduplicate against them. Within one micro-batch,
-    * documents are probed against the index as it stood BEFORE the
-    * batch — compose `Dedup.exactDuplicates` upstream if intra-batch
-    * duplicates matter. The index grows by plain parquet appends; a
-    * failed batch retried by the engine re-probes before re-admitting,
-    * so duplicate admission needs idempotent ids upstream. */
+    * loop (probe → keep → admit, [[ingestBatch]]) as one
+    * `foreachBatch`: every micro-batch probes the PERSISTED signature
+    * index (graft.operators.Dedup), hands the found (doc_new,
+    * doc_indexed, jaccard) pairs to `onPairs` (route them to a
+    * sink/table), and admits the batch's non-duplicate survivors into
+    * the index so later batches deduplicate against them. Within one
+    * micro-batch, documents are probed against the index as it stood
+    * BEFORE the batch — compose `Dedup.exactDuplicates` upstream if
+    * intra-batch duplicates matter. The index grows by plain parquet
+    * appends; a failed batch retried by the engine re-probes before
+    * re-admitting, so duplicate admission needs idempotent ids
+    * upstream.
+    *
+    * `admitMatched` = audit mode: matched documents are indexed anyway
+    * (the dedup decision is deferred downstream), so the index holds
+    * the full corpus and the emitted pairs are exactly the cross-batch
+    * true pairs — a deterministic set for a deterministic batch split,
+    * whatever order the engine processes batches in. */
   def nearDupIngest(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, threshold: Double = 0.8,
       admitMatched: Boolean = false, maxIndexFiles: Int = 64)(
@@ -281,68 +287,88 @@ object EventStream {
     // were pure fixed overhead
     val params @ (shingleN, _, _) =
       Dedup.readIndexParams(docs.sparkSession, indexPath)
-    // admitMatched = audit mode: matched documents are indexed anyway
-    // (the dedup decision is deferred downstream), so the index holds
-    // the full corpus and the emitted pairs are exactly the
-    // cross-batch true pairs — a deterministic set for a deterministic
-    // batch split, whatever order the engine processes batches in
-    docs.writeStream
+    ingest(docs, admitMatched, onPairs, IngestFamily(
+      // ONE tokenize+shingle-hash pass per micro-batch, staged and
+      // shared by the probe and the admit
+      stage = Dedup.signatures(_, idCol, textCol, shingleN),
+      probe = sig => Dedup.incrementalNearDuplicatesOfSig(
+        sig.select(col("doc").as("doc_new"), col("sh").as("sh_new")),
+        indexPath, params, threshold),
+      admit = Dedup.appendSigNoCompact(_, indexPath, params),
+      compact = Dedup.compactNearDupIndex(_, indexPath, maxIndexFiles),
+      ids = ("doc_new", "doc")))
+  }
+
+  /** What one streaming dedup family plugs into [[ingestBatch]]:
+    * `stage` is the projection of a micro-batch that the loop
+    * checkpoints once for both the probe and the admit; `probe` builds the staged batch's pair plan against the
+    * persisted index; `admit` appends staged rows to the index without
+    * compacting it; `compact` is the index's size-triggered rewrite;
+    * `ids` = (probe id column, staged id column), the key dedup mode
+    * anti-joins the probe's matches on. */
+  private[graft] final case class IngestFamily(
+      stage: DataFrame => DataFrame,
+      probe: DataFrame => DataFrame,
+      admit: DataFrame => Unit,
+      compact: SparkSession => Unit,
+      ids: (String, String))
+
+  private def ingest(src: DataFrame, admitMatched: Boolean,
+      onPairs: (DataFrame, Long) => Unit, f: IngestFamily) =
+    src.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // ONE tokenize+shingle-hash pass per micro-batch, staged and
-        // shared by the probe and the admit — before this the probe
-        // and appendToNearDupIndex each re-hashed the batch text, and
-        // the batch rows themselves were checkpointed a third time
-        val sig = Dedup.signaturesOf(batch.toDF(), idCol, textCol, shingleN)
-          .localCheckpoint()
-        // probe plan CONSTRUCTED before any append: spark.read.parquet
-        // snapshots the index file listing here, so the probe sees the
-        // index as it stood before this batch whatever runs when
-        val probe = Dedup.incrementalNearDuplicatesOfSig(
-          sig.select(col("doc").as("doc_new"), col("sh").as("sh_new")),
-          indexPath, params, threshold)
-        val pairs = if (!admitMatched) {
-          // dedup mode: the admit anti-joins the probe result — strictly
-          // sequential, as before
-          val p = probe.localCheckpoint()
-          val dups = p.select(col("doc_new").as("doc")).distinct()
-          Dedup.appendSigToNearDupIndex(
-            sig.join(dups, Seq("doc"), "left_anti"), indexPath, params,
-            maxIndexFiles)
-          p
-        } else {
-          // audit mode: the admit is the staged signatures themselves —
-          // independent of the probe — so the probe jobs materialize
-          // CONCURRENTLY with the append writes (guide §2.6: overlap
-          // independent jobs; half of each micro-batch's wall was the
-          // other half's driver planning gaps). Appends only add files,
-          // and the probe's listing snapshot predates them; compaction
-          // (which deletes files) waits for the probe to finish.
-          val task = new java.util.concurrent.FutureTask(
-            () => probe.localCheckpoint())
-          val t = new Thread(task, s"graft-probe-batch-$batchId")
-          t.setDaemon(true)
-          t.start()
-          // a failed append must still AWAIT the probe before
-          // propagating: the drain's cleanup deletes the staging/index
-          // dirs, and racing that delete against still-running probe
-          // jobs turns one failure into a cascade
-          try Dedup.appendSigNoCompact(sig, indexPath, params)
-          catch { case e: Throwable =>
-            try task.get() catch { case _: Throwable => () }
-            throw e
-          }
-          val p =
-            try task.get()
-            catch { case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e) }
-          Dedup.compactNearDupIndex(sig.sparkSession, indexPath,
-            maxIndexFiles)
-          p
-        }
-        onPairs(pairs, batchId)
+        onPairs(ingestBatch(f, admitMatched, batch.toDF(), batchId), batchId)
       }
       .start()
+
+  /** One micro-batch of the probe → keep → admit loop, the same for
+    * every [[IngestFamily]]; returns the batch's checkpointed pairs.
+    *
+    * The index rule every family relies on is stated here only: the
+    * probe plan is BUILT before any append, so `spark.read.parquet`
+    * snapshots the index file listing and the probe sees the index as
+    * it stood before this batch whatever runs when; appends only ADD
+    * files, so they may run while the probe reads; compaction DELETES
+    * files, so it runs only after the probe has finished.
+    *
+    * Dedup mode checkpoints the probe, then admits the staged rows
+    * whose id it did not match — strictly sequential. Audit mode
+    * (`admitMatched`) admits the whole staged batch, which does not
+    * depend on the probe, so the probe jobs run on their own thread
+    * CONCURRENTLY with the append (guide §2.6: half of each
+    * micro-batch's wall was the other half's driver planning gaps). A
+    * failed append still AWAITS the probe before propagating: the
+    * drain's cleanup deletes the staging/index dirs, and racing that
+    * delete against still-running probe jobs turns one failure into a
+    * cascade. */
+  private[graft] def ingestBatch(f: IngestFamily, admitMatched: Boolean,
+      batch: DataFrame, batchId: Long): DataFrame = {
+    val staged = f.stage(batch).localCheckpoint()
+    val probe = f.probe(staged)
+    val pairs = if (!admitMatched) {
+      val p = probe.localCheckpoint()
+      val (probeId, stagedId) = f.ids
+      f.admit(staged.join(p.select(col(probeId).as(stagedId)).distinct(),
+        Seq(stagedId), "left_anti"))
+      p
+    } else {
+      val task = new java.util.concurrent.FutureTask(
+        () => probe.localCheckpoint())
+      val t = new Thread(task, s"graft-probe-batch-$batchId")
+      t.setDaemon(true)
+      t.start()
+      try f.admit(staged)
+      catch { case e: Throwable =>
+        try task.get() catch { case _: Throwable => () }
+        throw e
+      }
+      try task.get()
+      catch { case e: java.util.concurrent.ExecutionException =>
+        throw Option(e.getCause).getOrElse(e) }
+    }
+    f.compact(staged.sparkSession)
+    pairs
   }
 
   /** Driver-visible face of [[nearDupIngest]] (the `stream_near_dup`
@@ -380,31 +406,19 @@ object EventStream {
   /** Shared scaffold of the drained ingest queries: stage `src` as one
     * parquet file per `keyCol % files` residue class (batch membership
     * is then a pure key property, deterministic whatever order the
-    * file source picks the files up in), `prepare` an index from the
-    * STAGED relation, run the `start`ed probe-then-admit query to
+    * file source picks the files up in), `prepare` an empty index of
+    * `src`'s schema, run the `start`ed probe-then-admit query to
     * completion, union the per-batch pair frames (each already
-    * checkpointed by the ingest loop) and direction-`normalize`.
-    * The staging write, index preparation and drain all run INSIDE the
-    * try owning cleanup — a failure anywhere (including `prepare`'s
-    * driver jobs) still deletes both temp dirs, and a cleanup failure
-    * is suppressed onto the primary instead of replacing it. */
-  private def drainIngest(spark: SparkSession, src0: DataFrame,
+    * checkpointed by the ingest loop) and direction-`normalize`. All
+    * of it runs inside [[drain]], which owns the temp dirs. */
+  private def drainIngest(spark: SparkSession, src: DataFrame,
       keyCol: String, files: Int, tag: String, emptyDdl: String)(
       prepare: (DataFrame, String) => Unit)(
       start: (String, String, (DataFrame, Long) => Unit) =>
         org.apache.spark.sql.streaming.StreamingQuery)(
-      normalize: DataFrame => DataFrame): DataFrame = {
-    sweepOrphanedStaging()
-    val id = ProcessHandle.current().pid() + "_" + drainCounter.incrementAndGet()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val stage = new java.io.File(tmp, s"graft_${tag}_stage_$id").getAbsolutePath
-    val idx = new java.io.File(tmp, s"graft_${tag}_index_$id").getAbsolutePath
-    val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var primary: Throwable = null
-    try {
-      // staged once: prepare() and the write below would otherwise
-      // re-evaluate whatever plan produced src per use
-      val src = src0.localCheckpoint()
+      normalize: DataFrame => DataFrame): DataFrame =
+    drain(spark, tag, Seq("stage", "index")) { (_, dirs) =>
+      val Seq(stage, idx) = dirs
       // ONE staging job writing all residue files (was `files`
       // sequential filter+coalesce(1) jobs — one scan of src per
       // residue class, each paying full job latency). partitionBy
@@ -417,6 +431,8 @@ object EventStream {
       // stream). The stream read below declares the data schema; the
       // discovered __res partition column is appended by the source
       // and ignored by every consumer (all select named columns).
+      // This write is the only scan of `src`: both prepares read
+      // `src.limit(0)`, which the optimizer folds to an empty relation.
       // NOTE: the single write gives every residue file the same
       // modification time, so FileStreamSource's timestamp-ordered
       // pickup no longer replays batches in residue order (the old
@@ -429,6 +445,7 @@ object EventStream {
         .coalesce(1)
         .write.partitionBy("__res").mode("overwrite").parquet(stage)
       prepare(src, idx)
+      val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       val q = start(stage, idx,
         (pairs, _) => batches.synchronized { batches += pairs })
       try q.processAllAvailable() finally q.stop()
@@ -437,20 +454,7 @@ object EventStream {
         .getOrElse(spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.StructType.fromDDL(emptyDdl)))
-    } catch {
-      case t: Throwable => primary = t; throw t
-    } finally {
-      try {
-        val fs = new org.apache.hadoop.fs.Path(stage)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-        fs.delete(new org.apache.hadoop.fs.Path(idx), true)
-      } catch {
-        case c: Throwable =>
-          if (primary != null) primary.addSuppressed(c) else throw c
-      }
     }
-  }
 
   /** Streaming SEMANTIC (embedding-space) near-dup ingestion — the
     * [[nearDupIngest]] loop for vectors: every micro-batch probes a
@@ -482,18 +486,12 @@ object EventStream {
       admitMatched: Boolean = false, maxIndexFiles: Int = 64)(
       onPairs: (DataFrame, Long) => Unit) = {
     import graft.operators.Similarity
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-          .select(col(idCol),
-            Similarity.asDouble(col(vecCol)).as("__v"),
-            graft.functions.IvfCells.cells(
-              Similarity.asDouble(col(vecCol)), centroids, probes)
-              .as("__cells"))
-          .localCheckpoint()
-        val spark = b.sparkSession
-        val idx = spark.read.parquet(indexPath)
+    val v = Similarity.asDouble(col(vecCol))
+    ingest(vecs, admitMatched, onPairs, IngestFamily(
+      stage = _.select(col(idCol), v.as("__v"),
+        graft.functions.IvfCells.cells(v, centroids, probes).as("__cells")),
+      probe = b => {
+        val idx = b.sparkSession.read.parquet(indexPath)
         val probeLeg = b.select(col(idCol).as("vec_new"),
           explode(col("__cells")).as("cell"))
         val idxLeg = idx.select(col("vec_id"), explode(col("cells")).as("cell"))
@@ -501,7 +499,7 @@ object EventStream {
           .filter(col("vec_new") =!= col("vec_id"))
           .select(col("vec_new"), col("vec_id").as("vec_indexed"))
           .distinct()
-        val probe = cand
+        cand
           .join(b.select(col(idCol).as("vec_new"), col("__v").as("vn")),
             Seq("vec_new"))
           .join(idx.select(col("vec_id").as("vec_indexed"), col("v")),
@@ -511,49 +509,16 @@ object EventStream {
           .filter(col("__c") >= threshold)
           .select(col("vec_new"), col("vec_indexed"),
             round(col("__c"), 6).as("cos"))
-        def admitWrite(admit: DataFrame): Unit =
-          admit.select(col(idCol).as("vec_id"), col("__v").as("v"),
-              col("__cells").as("cells"))
-            .write.mode("append").parquet(indexPath)
-        val pairs = if (!admitMatched) {
-          // dedup mode: the admit anti-joins the probe result — strictly
-          // sequential, as before
-          val p = probe.localCheckpoint()
-          val dups = p.select(col("vec_new").as(idCol)).distinct()
-          admitWrite(b.join(dups, Seq(idCol), "left_anti"))
-          p
-        } else {
-          // audit mode: admit = the whole staged batch, independent of
-          // the probe — materialize the probe jobs CONCURRENTLY with
-          // the append (guide §2.6). `idx` snapshotted its file
-          // listing above, so the probe reads the pre-batch index
-          // whatever runs first; compaction (which deletes files)
-          // waits for the probe below.
-          val task = new java.util.concurrent.FutureTask(
-            () => probe.localCheckpoint())
-          val t = new Thread(task, s"graft-semprobe-batch-$batchId")
-          t.setDaemon(true)
-          t.start()
-          // same await-before-propagate discipline as the minhash loop
-          try admitWrite(b)
-          catch { case e: Throwable =>
-            try task.get() catch { case _: Throwable => () }
-            throw e
-          }
-          try task.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e) }
-        }
-        // per-batch appends accumulate small files; past the cap the
-        // index is rewritten coalesced (content-preserving, see
-        // ParquetCompact) so probe cost tracks index SIZE, not age.
-        // Runs strictly AFTER the probe checkpoint: the rewrite
-        // deletes files a still-running probe could be reading.
-        graft.sources.ParquetCompact.compactIfNeeded(spark, indexPath,
-          maxIndexFiles)
-        onPairs(pairs, batchId)
-      }
-      .start()
+      },
+      admit = _.select(col(idCol).as("vec_id"), col("__v").as("v"),
+          col("__cells").as("cells"))
+        .write.mode("append").parquet(indexPath),
+      // per-batch appends accumulate small files; past the cap the
+      // index is rewritten coalesced (content-preserving, see
+      // ParquetCompact) so probe cost tracks index SIZE, not age
+      compact = graft.sources.ParquetCompact.compactIfNeeded(_, indexPath,
+        maxIndexFiles),
+      ids = ("vec_new", idCol)))
   }
 
   /** Driver-visible face of [[embeddingIngest]] (the
@@ -660,6 +625,40 @@ object EventStream {
     }
   }
 
+  /** The setup and teardown every drain shares: reap orphaned staging
+    * ([[sweepOrphanedStaging]]), name one temp dir per `kinds` entry
+    * `graft_<tag>_<kind>_<pid>_<n>` (unique per process and call, so
+    * concurrent verifies cannot collide), run `body(id, dirs)`, and
+    * then — whatever happened — `release(id)` and delete the dirs. The
+    * caller's whole drain, staging write included, runs inside `body`,
+    * so a failure anywhere still cleans up; a cleanup failure is
+    * attached as suppressed to the primary error instead of replacing
+    * it, so the root cause propagates. */
+  private[graft] def drain[T](spark: SparkSession, tag: String,
+      kinds: Seq[String], release: String => Unit = _ => ())(
+      body: (String, Seq[String]) => T): T = {
+    sweepOrphanedStaging()
+    val id = s"${ProcessHandle.current().pid()}_${drainCounter.incrementAndGet()}"
+    val tmp = System.getProperty("java.io.tmpdir")
+    val dirs = kinds.map(k =>
+      new java.io.File(tmp, s"graft_${tag}_${k}_$id").getAbsolutePath)
+    var primary: Throwable = null
+    try body(id, dirs)
+    catch {
+      case t: Throwable => primary = t; throw t
+    } finally {
+      try {
+        release(id)
+        val fs = new org.apache.hadoop.fs.Path(tmp)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        dirs.foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+      } catch {
+        case c: Throwable =>
+          if (primary != null) primary.addSuppressed(c) else throw c
+      }
+    }
+  }
+
   private val drainCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Reap staging/index dirs abandoned by DEAD processes. Every drain
@@ -722,51 +721,30 @@ object EventStream {
     * REAL micro-batches hit the state store — not one batch in
     * disguise), run `plan` over the stream into a memory sink in
     * `mode`, and return `finish(sink)` checkpoint-detached from the
-    * sink (results are bounded aggregate rows).
-    *
-    * Both cleanups live in a `finally`: a failed or interrupted stream
-    * must not leak the staged parquet copy NOR the catalog-registered
-    * memory table (repeated verify runs would accumulate both); the
-    * view drop is a no-op when the failure preceded sink creation, and
-    * on success it runs after the result is checkpoint-detached. A
-    * cleanup failure must never REPLACE a streaming failure: it is
-    * attached as suppressed so the root cause propagates. Staging/sink
-    * names are unique per (process, call) so concurrent verifies
-    * cannot collide. */
+    * sink (results are bounded aggregate rows). [[drain]] deletes the
+    * staged parquet copy and drops the catalog-registered memory table
+    * (repeated verify runs would accumulate both); the view drop is a
+    * no-op when the failure preceded sink creation, and on success it
+    * runs after the result is checkpoint-detached. */
   private def drainEventsStaged(spark: SparkSession, events: DataFrame,
       files: Int, mode: OutputMode)(plan: DataFrame => DataFrame)(
       finish: DataFrame => DataFrame): DataFrame = {
-    sweepOrphanedStaging()
-    val id = ProcessHandle.current().pid() + "_" + drainCounter.incrementAndGet()
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_stage_$id").getAbsolutePath
-    events.select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .repartition(files)
-      .write.mode("overwrite").parquet(stage)
-    val sinkName = s"graft_stream_drain_$id"
-    var primary: Throwable = null
-    try {
+    def sinkName(id: String) = s"graft_stream_drain_$id"
+    drain(spark, "stream", Seq("stage"),
+        release = id => spark.catalog.dropTempView(sinkName(id))) { (id, dirs) =>
+      val Seq(stage) = dirs
+      events.select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+        .repartition(files)
+        .write.mode("overwrite").parquet(stage)
       val stream = spark.readStream
         .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
-      val q = plan(stream).writeStream.format("memory").queryName(sinkName)
+      val q = plan(stream).writeStream.format("memory").queryName(sinkName(id))
         .outputMode(mode).start()
       try q.processAllAvailable() finally q.stop()
-      finish(spark.table(sinkName)).localCheckpoint()
-    } catch {
-      case t: Throwable => primary = t; throw t
-    } finally {
-      try {
-        spark.catalog.dropTempView(sinkName)
-        val fs = new org.apache.hadoop.fs.Path(stage)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      } catch {
-        case c: Throwable =>
-          if (primary != null) primary.addSuppressed(c) else throw c
-      }
+      finish(spark.table(sinkName(id))).localCheckpoint()
     }
   }
 

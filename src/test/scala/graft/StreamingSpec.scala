@@ -417,6 +417,57 @@ class StreamingSpec extends SparkSpecBase {
       "absent pair member must trip the certificate")
   }
 
+  test("audit-mode ingest: a failed admit waits for the running probe, then rethrows the admit's error") {
+    import spark.implicits._
+    IngestProbeGate.reset()
+    // the probe's row signals that it runs, then keeps running well
+    // past the admit's failure
+    val slow = udf { (id: Long) =>
+      IngestProbeGate.started.countDown()
+      Thread.sleep(1500)
+      IngestProbeGate.done = true
+      id
+    }
+    val boom = new IllegalStateException("admit failed")
+    var compacted = false
+    val family = EventStream.IngestFamily(
+      stage = identity,
+      probe = _.select(slow(col("id")).as("id_new")),
+      admit = _ => {
+        assert(IngestProbeGate.started.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "probe never started")
+        throw boom
+      },
+      compact = _ => compacted = true,
+      ids = ("id_new", "id"))
+    val caught = intercept[Throwable] {
+      EventStream.ingestBatch(family, admitMatched = true,
+        Seq(1L).toDF("id"), batchId = 0L)
+    }
+    assert(caught eq boom, s"caller saw $caught instead of the admit's own error")
+    assert(IngestProbeGate.done, "the loop rethrew while the probe was still running")
+    assert(!compacted, "compaction must not follow a failed admit")
+  }
+
+  test("drain scaffold: the body's error wins, cleanup failures ride as suppressed") {
+    val boom = new IllegalStateException("drain failed")
+    var made = Seq.empty[java.io.File]
+    def failingDrain(release: String => Unit) = intercept[IllegalStateException] {
+      EventStream.drain(spark, "spec", Seq("stage", "index"), release) { (_, dirs) =>
+        made = dirs.map(new java.io.File(_))
+        made.foreach(d => assert(d.mkdir(), s"could not create $d"))
+        throw boom
+      }
+    }
+    assert(failingDrain(_ => ()) eq boom)
+    assert(made.size == 2 && made.forall(!_.exists), s"drain dirs left behind: $made")
+    val released = new IllegalStateException("release failed")
+    val caught = failingDrain(_ => throw released)
+    assert(caught eq boom, s"cleanup replaced the primary error: $caught")
+    assert(caught.getSuppressed.toSeq == Seq(released))
+    made.foreach(_.delete())
+  }
+
   test("mapGroupsWithState session accumulates per-user counts across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -477,5 +528,16 @@ class StreamingSpec extends SparkSpecBase {
       orphan.delete()
       mine.delete()
     }
+  }
+}
+
+/** Signals from the await-before-propagate spec's probe UDF, which runs
+  * on a task thread of the same local-mode JVM as the test. */
+object IngestProbeGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var done = false
+  def reset(): Unit = {
+    started = new java.util.concurrent.CountDownLatch(1)
+    done = false
   }
 }
