@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashExprs
+import graft.sources.ParquetCompact
 
 /** Deduplication operators for large-scale text corpora — the
   * training-data-pipeline layer (builder brief; beyond the reference
@@ -431,7 +432,7 @@ object Dedup {
     // is tokenized and shingle-hashed exactly once
     signatures(docs, idCol, textCol, shingleN)
       .write.mode("overwrite").parquet(s"$path/hashes")
-    spark.read.parquet(s"$path/hashes")
+    ParquetCompact.open(spark, s"$path/hashes")
       .select(col("doc"),
         explode(HashExprs.minhashBandKeys(col("sh"), k, bands)).as("bh"))
       .write.mode("overwrite").parquet(s"$path/bands")
@@ -494,14 +495,17 @@ object Dedup {
       params: (Int, Int, Int)): Unit = {
     val spark = sig.sparkSession
     val (_, k, bands) = params
-    val indexed = spark.read.parquet(s"$path/hashes").select(col("doc"))
+    val indexed = ParquetCompact.open(spark, s"$path/hashes").select(col("doc"))
+    val added = Observation()
     val newH = sig
       .join(indexed, Seq("doc"), "left_anti")
+      .observe(added, count(lit(1)).as("n"))
       .localCheckpoint() // hash once; both writes read the materialized batch
     // skip the append jobs entirely for a fully-deduplicated batch —
     // thousands of empty micro-batch part-files would degrade the
-    // index directories into a small-files swamp
-    if (!newH.isEmpty) {
+    // index directories into a small-files swamp. The row count is
+    // observed on the checkpoint pass itself, so the check costs no job.
+    if (added.get("n").asInstanceOf[Long] > 0) {
       newH.select(col("doc"),
           explode(HashExprs.minhashBandKeys(col("sh"), k, bands)).as("bh"))
         .write.mode("append").parquet(s"$path/bands")
@@ -514,10 +518,8 @@ object Dedup {
   private[graft] def compactNearDupIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxIndexFiles: Int): Unit = {
-    graft.sources.ParquetCompact.compactIfNeeded(spark, s"$path/bands",
-      maxIndexFiles)
-    graft.sources.ParquetCompact.compactIfNeeded(spark, s"$path/hashes",
-      maxIndexFiles)
+    ParquetCompact.compactIfNeeded(spark, s"$path/bands", maxIndexFiles)
+    ParquetCompact.compactIfNeeded(spark, s"$path/hashes", maxIndexFiles)
   }
 
   /** Read back the (shingleN, k, bands) an index was written with. */
@@ -569,12 +571,12 @@ object Dedup {
     val newBands = sigNew.select(col("doc_new"),
       explode(HashExprs.minhashBandKeys(col("sh_new"), k, bands)).as("bh"))
     val cands = newBands
-      .join(spark.read.parquet(s"$indexPath/bands"), Seq("bh"))
+      .join(ParquetCompact.open(spark, s"$indexPath/bands"), Seq("bh"))
       .filter(col("doc_new") =!= col("doc"))
       .select(col("doc_new"), col("doc").as("doc_indexed"))
       .distinct()
     cands.join(sigNew, Seq("doc_new"))
-      .join(spark.read.parquet(s"$indexPath/hashes")
+      .join(ParquetCompact.open(spark, s"$indexPath/hashes")
         .withColumnRenamed("doc", "doc_indexed")
         .withColumnRenamed("sh", "sh_idx"), Seq("doc_indexed"))
       .select(col("doc_new"), col("doc_indexed"),

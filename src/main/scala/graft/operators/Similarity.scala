@@ -1006,12 +1006,16 @@ object Similarity {
     /** Open an index [[AnnIndex.write]] wrote at `path`: the index —
       * its kind read off the codes' schema (a `cell` column means a
       * coarse quantizer, the code column names the code) — and its
-      * codes relation for [[AnnIndex.search]]. Centroids and codebooks
-      * are validated as they are read, so a truncated or corrupt index
-      * fails loud, naming the path, instead of an opaque empty-max
-      * error or a per-row dimension mismatch on executors. */
+      * codes relation for [[AnnIndex.search]]. The codes open with the
+      * schema of one part file's footer, so opening starts no job
+      * ([[graft.sources.ParquetCompact.open]]; under IVF the file sits
+      * in a `cell=*` dir and partition discovery adds `cell`).
+      * Centroids and codebooks are validated as they are read, so a
+      * truncated or corrupt index fails loud, naming the path, instead
+      * of an opaque empty-max error or a per-row dimension mismatch on
+      * executors. */
     def read(spark: SparkSession, path: String): (AnnIndex, DataFrame) = {
-      val codes = parquetAt(spark, s"$path/codes")
+      val codes = graft.sources.ParquetCompact.open(spark, s"$path/codes")
       val coarse = if (!codes.columns.contains("cell")) None else {
         val rows = metadataAt(spark, s"$path/centroids", "cell")
         val cents = rows.map(_.getSeq[Double](1).toArray)
@@ -1036,19 +1040,16 @@ object Similarity {
         col("cell").cast("int").as("cell")).toSeq) :+ col(code.column): _*))
     }
 
-    private def parquetAt(spark: SparkSession, dir: String,
-        schema: Option[String] = None): DataFrame =
-      try schema.fold(spark.read)(spark.read.schema).parquet(dir)
-      catch { case e: AnalysisException =>
-        throw new IllegalArgumentException(s"ANN index part missing or empty at $dir", e) }
-
     /** All rows of a metadata relation — int `keys` then the `centroid`
       * array, the schema [[AnnIndex.write]] gives it, so no inference
       * job — ordered by its keys on the driver, which collects them
       * anyway. */
     private def metadataAt(spark: SparkSession, dir: String, keys: String*): Array[Row] = {
       val schema = (keys.map(k => s"$k INT") :+ "centroid ARRAY<DOUBLE>").mkString(", ")
-      val rows = parquetAt(spark, dir, Some(schema)).collect()
+      val rows =
+        try spark.read.schema(schema).parquet(dir).collect()
+        catch { case e: AnalysisException =>
+          throw new IllegalArgumentException(s"ANN index part missing or empty at $dir", e) }
       require(rows.nonEmpty, s"ANN index part missing or empty at $dir")
       require(!rows.exists(_.anyNull), s"ANN index part at $dir does not hold $schema rows")
       rows.sortBy(r => keys.indices.map(r.getInt))(Ordering.Implicits.seqOrdering)

@@ -527,7 +527,7 @@ object PipelineQueries {
         // reads signatures, it never re-derives them.
         try
           Dedup.incrementalNearDuplicatesOfSig(
-            s.read.parquet(s"$idx/hashes")
+            graft.sources.ParquetCompact.open(s, s"$idx/hashes")
               .select(col("doc").as("doc_new"), col("sh").as("sh_new")),
             idx, params, threshold = 0.8).localCheckpoint()
         finally {

@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Size-triggered compaction for append-grown parquet directories —
   * the streaming-index decay guard. Steady-state ingestion
@@ -22,23 +26,62 @@ import org.apache.spark.sql.SparkSession
   * a LOUD failure on next read (no silent data loss), recovered by
   * renaming the `__compact_old` directory back. A leftover
   * `__compact_tmp`/`__compact_old` from a crashed run is cleaned up on
-  * the next call before anything else happens. */
+  * the next call before anything else happens.
+  *
+  * Every read of such a directory goes through [[open]], which takes
+  * the schema from one part file's footer on the driver: the index is
+  * re-read every micro-batch, and Spark's own schema inference would
+  * start a job for it each time. */
 object ParquetCompact {
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Parquet part-files directly under `dir` (metadata/hidden files —
-    * `_SUCCESS`, `.crc` — excluded). 0 if the directory is absent. */
+  /** The entries of `p` a Spark scan reads: metadata/hidden names —
+    * `_SUCCESS`, `.crc` — excluded, `k=v` partition dirs kept (Spark's
+    * own listing rule), in path order. */
+  private def visible(fs: FileSystem, p: Path): Array[FileStatus] =
+    fs.listStatus(p).filter { s =>
+      val n = s.getPath.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    }.sortBy(_.getPath.toString)
+
+  /** Parquet part-files directly under `dir`. 0 if the directory is
+    * absent. */
   def dataFileCount(spark: SparkSession, dir: String): Int = {
     val fs = fsOf(spark, dir)
     val p = new Path(dir)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    if (!fs.exists(p)) 0 else visible(fs, p).count(_.isFile)
   }
+
+  /** The Spark schema of the parquet directory `dir`, read on the
+    * driver from ONE part file's footer — the first in path order,
+    * inside the first partition dir for a `partitionBy` layout — by
+    * Spark's own footer rule:
+    * the `org.apache.spark.sql.parquet.row.metadata` schema a Spark
+    * writer stores, else the parquet schema converted under the
+    * session's parquet confs. Partition columns are not in it. Fails
+    * naming `dir` when it is missing or holds no part file. */
+  def schemaOf(spark: SparkSession, dir: String): StructType = {
+    val fs = fsOf(spark, dir)
+    def firstFile(p: Path): Option[FileStatus] = {
+      val (dirs, files) = visible(fs, p).partition(_.isDirectory)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath)).nextOption())
+    }
+    val file = Some(new Path(dir)).filter(fs.exists).flatMap(firstFile).getOrElse(
+      throw new IllegalArgumentException(s"parquet dir $dir is missing or holds no part file"))
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** `dir` as a DataFrame with the schema [[schemaOf]] reads: the same
+    * relation `spark.read.parquet(dir)` gives (partition discovery
+    * still adds `k=v` columns), without its schema-inference job. */
+  def open(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(schemaOf(spark, dir)).parquet(dir)
 
   /** Rewrite `dir` into `targetFiles` part-files iff it currently
     * holds more than `maxFiles`. Returns true when a rewrite happened.
@@ -62,7 +105,7 @@ object ParquetCompact {
     }
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (dataFileCount(spark, dir) <= maxFiles) return false
-    spark.read.parquet(dir)
+    open(spark, dir)
       .coalesce(targetFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     if (!fs.rename(new Path(dir), old))

@@ -32,14 +32,15 @@ object EventStream {
     * (caught when the fixture switched NANOS→NTZ-micros; the spec now
     * pins actual window timestamps, not just counts). So peek at the
     * batch reader's resolved type for the SAME path first — one
-    * footer read — and declare the streaming schema to match:
+    * footer read on the driver ([[graft.sources.ParquetCompact.schemaOf]],
+    * no inference job) — and declare the streaming schema to match:
     * TIMESTAMP(NANOS) surfaces as LONG (nanosAsLong conf) and floors
     * to micros like the batch reader (graft.queries.Tables.events);
     * NTZ normalizes under the naive==UTC contract
     * ([[graft.functions.Ts]]); UTC-adjusted passes through. */
   def readEvents(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(path).schema("ts").dataType
+    val tsType = graft.sources.ParquetCompact.schemaOf(spark, path)("ts").dataType
     def stream(tsDdl: String) = spark.readStream
       .schema(s"event_id LONG, ts $tsDdl, user_id LONG, event_type STRING, value DOUBLE")
       .parquet(path)
@@ -326,11 +327,12 @@ object EventStream {
     * every [[IngestFamily]]; returns the batch's checkpointed pairs.
     *
     * The index rule every family relies on is stated here only: the
-    * probe plan is BUILT before any append, so `spark.read.parquet`
-    * snapshots the index file listing and the probe sees the index as
-    * it stood before this batch whatever runs when; appends only ADD
-    * files, so they may run while the probe reads; compaction DELETES
-    * files, so it runs only after the probe has finished.
+    * probe plan is BUILT before any append, so opening the index
+    * ([[graft.sources.ParquetCompact.open]]) snapshots its file
+    * listing and the probe sees the index as it stood before this
+    * batch whatever runs when; appends only ADD files, so they may
+    * run while the probe reads; compaction DELETES files, so it runs
+    * only after the probe has finished.
     *
     * Dedup mode checkpoints the probe, then admits the staged rows
     * whose id it did not match — strictly sequential. Audit mode
@@ -491,7 +493,7 @@ object EventStream {
       stage = _.select(col(idCol), v.as("__v"),
         graft.functions.IvfCells.cells(v, centroids, probes).as("__cells")),
       probe = b => {
-        val idx = b.sparkSession.read.parquet(indexPath)
+        val idx = graft.sources.ParquetCompact.open(b.sparkSession, indexPath)
         val probeLeg = b.select(col(idCol).as("vec_new"),
           explode(col("__cells")).as("cell"))
         val idxLeg = idx.select(col("vec_id"), explode(col("cells")).as("cell"))
@@ -569,7 +571,7 @@ object EventStream {
         // quantizer trained once on the staged corpus (deterministic
         // sample), frozen for every batch — the offline contract
         cents = Similarity.trainIvfCentroids(
-          spark.read.parquet(stage), "vec_id", "v", nlist)
+          graft.sources.ParquetCompact.open(spark, stage), "vec_id", "v", nlist)
         embeddingIngest(
           spark.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
             .option("maxFilesPerTrigger", "1").parquet(stage),

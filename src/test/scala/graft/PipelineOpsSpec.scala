@@ -501,6 +501,52 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(ParquetCompact.dataFileCount(spark, s"$idx/hashes") <= 8)
   }
 
+  test("appendToNearDupIndex is idempotent: a replayed batch adds nothing") {
+    import graft.sources.ParquetCompact
+    val idx = "target/test_dedup_index_replay"
+    val ids = docs.select("doc_id").collect().map(_.getLong(0)).sorted
+    val mid = ids(ids.length / 2)
+    val b2 = docs.filter(col("doc_id") >= mid)
+    Dedup.writeNearDupIndex(docs.filter(col("doc_id") < mid), "doc_id", "text", idx)
+    Dedup.appendToNearDupIndex(b2, "doc_id", "text", idx)
+    def state = (
+      ParquetCompact.open(spark, s"$idx/hashes").count(),
+      ParquetCompact.dataFileCount(spark, s"$idx/bands"),
+      ParquetCompact.dataFileCount(spark, s"$idx/hashes"),
+      Dedup.incrementalNearDuplicates(docs, "doc_id", "text", idx)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    val admitted = state
+    assert(admitted._4.nonEmpty, "fixture must hold indexed near-dup pairs")
+    // a replayed batch, then the whole corpus: every doc is indexed already
+    Dedup.appendToNearDupIndex(b2, "doc_id", "text", idx)
+    Dedup.appendToNearDupIndex(docs, "doc_id", "text", idx)
+    assert(state === admitted, "re-appending indexed docs must change nothing")
+    // an empty batch writes no part file either
+    Dedup.appendToNearDupIndex(docs.limit(0), "doc_id", "text", idx)
+    assert(state === admitted, "an empty append must write nothing")
+  }
+
+  test("opening a written near-dup index or ANN codes dir starts no job") {
+    import graft.sources.ParquetCompact
+    val idx = "target/test_dedup_index_open"
+    Dedup.writeNearDupIndex(docs, "doc_id", "text", idx)
+    val ann = java.nio.file.Files.createTempDirectory("graft_ann_open")
+    try {
+      AnnIndex.fit(emb, "vec_id", "embedding", "IVF,SQ8", nlist = 8)
+        .write(emb, "vec_id", "embedding", ann.toString)
+      // the counter sees the inference job a plain read starts, so the
+      // zero below is a measurement
+      assert(jobsDuring(spark.read.parquet(s"$idx/hashes"))._2 >= 1)
+      val (opened, jobs) = jobsDuring(Seq(s"$idx/bands", s"$idx/hashes", s"$ann/codes")
+        .map(ParquetCompact.open(spark, _)))
+      assert(jobs === 0, "opening a graft-written parquet dir must start no job")
+      assert(opened.map(_.columns.toSeq) ===
+        Seq(Seq("doc", "bh"), Seq("doc", "sh"), Seq("vec_id", "codes", "cell")))
+      // the IVF index open is its centroids' collect and nothing else
+      assert(jobsDuring(AnnIndex.read(spark, ann.toString))._2 === 1)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ann.toFile)
+  }
+
   test("asofJoin: a NULL right value is still the visible latest row") {
     import graft.operators.AsOf
     import spark.implicits._

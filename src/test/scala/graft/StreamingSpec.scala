@@ -275,12 +275,17 @@ class StreamingSpec extends SparkSpecBase {
       (0L, base), (4L, base),            // same residue class
       (1L, other), (2L, other + " x"),   // different classes
       (3L, other + " y")).toDF("doc_id", "text")
-    val got = graft.streaming.EventStream
-      .nearDupIngestDrained(spark, docs, threshold = 0.8, files = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (drained, jobs) = jobsDuring(graft.streaming.EventStream
+      .nearDupIngestDrained(spark, docs, threshold = 0.8, files = 4))
+    val got = drained.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!got.contains((0L, 4L)), "same-batch pair must be invisible to the stream")
     assert(got.contains((1L, 2L)) && got.contains((1L, 3L)) && got.contains((2L, 3L)),
       s"cross-batch pairs missing: $got")
+    // job budget: 40 measured over the 4 micro-batches — per batch one
+    // staging checkpoint, the probe's stages, the admit's anti-join and
+    // its two appends, plus the staging write and the empty index's two
+    // writes spread over the batches. Opening the index dirs starts none.
+    assert(jobs / 4.0 <= 10.0, s"$jobs jobs over 4 micro-batches")
   }
 
   test("drained ingest with per-batch compaction equals the uncompacted run") {
