@@ -158,28 +158,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         jaccardExpr(col("sh_a"), col("sh_b")).as("jaccard"))
 
-  /** Exact n-gram Jaccard for given candidate pairs: joins the
-    * shingle-hash sets back and computes |∩|/|∪| with array
-    * expressions — touches only candidates. The signature relation is
-    * staged so each document is hashed once, not once per join leg.
-    *
-    * NOTE — eager staging, same contract as [[stagedSignatures]]:
-    * with `stage = true` (the default) merely CONSTRUCTING the
-    * returned DataFrame runs a Spark job and pins MEMORY_AND_DISK
-    * blocks that are freed only when the checkpointed RDD is GC'd, so
-    * a caller that re-builds this frame repeatedly (bench reps,
-    * interactive loops) accumulates executor storage until the driver
-    * GCs the old plans. Pass `stage = false` to keep the plan fully
-    * lazy (each join leg then re-hashes the documents — correct, just
-    * slower) when construction count, not per-query cost, dominates. */
-  def jaccardFor(candidates: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String, shingleN: Int,
-      stage: Boolean = true): DataFrame = {
-    val sig = docs.select(col(idCol).as("doc"),
-      shingleHashes(col(textCol), shingleN).as("sh"))
-    jaccardOf(candidates, if (stage) sig.localCheckpoint() else sig)
-  }
-
   /** Near-duplicate pairs: banded MinHash-LSH candidates, then exact
     * shingle-Jaccard verification at `threshold`. The scale path: LSH
     * prunes the pair space to same-bucket collisions; verification
@@ -229,65 +207,59 @@ object Dedup {
       threshold: Double = 0.8, plantedThreshold: Double = 0.9,
       recallFloor: Double = 0.9): DataFrame = {
     val sig = stagedSignatures(docs, idCol, textCol, shingleN)
-    // lsh and exact are each referenced from multiple plan legs (the
-    // output rows plus the certificate's subset/planted/missed
-    // aggregates) — stage them like the signatures, or Catalyst
-    // re-executes the heavy self-joins once per leg (the pair sets
-    // are hundreds of rows; the sweeps they'd re-run are not)
     val lsh = jaccardOf(lshCandidatesOf(sig, k, bands), sig)
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
+    // read by the certificate's join and its output rows
     val exact = ngramJaccardPairsOf(sig, threshold).localCheckpoint()
-    certifiedPairs(lsh, exact, "lsh_ok", plantedThreshold, recallFloor)
+    certifiedPairs(lsh, exact, Seq("doc_a", "doc_b"), "jaccard",
+      col("jaccard") >= plantedThreshold, "lsh_ok", recallFloor)
   }
 
-  /** Shared certificate tail of [[nearDuplicatesChecked]] /
-    * [[simhashNearDuplicatesChecked]]: attach `flagName` — "the approx
-    * pair set is a subset of exact AND recovered ≥ recallFloor of the
-    * planted (jaccard ≥ plantedThreshold) pairs" — to the exact rows,
-    * with the non-vacuous sentinel on a pair-free corpus.
+  /** The subset + recall certificate of an approximate pair set —
+    * [[nearDuplicatesChecked]]'s `lsh_ok`, [[simhashNearDuplicatesChecked]]'s
+    * `simhash_ok` and dedup_semantic's `sem_ok`: attach `flagName` —
+    * "every `approx` pair is in `exact` AND approx recovered ≥
+    * recallFloor of the `planted` exact rows" — to the exact rows, with
+    * the non-vacuous sentinel on a pair-free corpus. `exact` holds the
+    * two `keys` plus `value`; `approx` holds the keys; `planted` is a
+    * predicate over exact's columns; each input holds a pair at most
+    * once.
     *
     * ONE full-outer join + ONE aggregate computes every certificate
     * count (r22, §2.3 — was three separate anti-join/count branches +
     * two crossJoins, each spawning its own plan legs over the same two
-    * checkpointed pair relations: ~14 small jobs per evaluation at
-    * bench scale, and three passes over the pair relations at any
-    * scale). Flags: a pair is in approx, in exact, or both; every
-    * count is a flag predicate, so the count algebra is identical to
-    * the anti-join formulation (both inputs hold each pair at most
-    * once, so the join is 1:1 on its keys). */
-  private def certifiedPairs(approx: DataFrame, exact: DataFrame,
-      flagName: String, plantedThreshold: Double,
+    * pair relations). Flags: a pair is in approx, in exact, or both;
+    * every count is a flag predicate, so the join is 1:1 on its keys. */
+  private[graft] def certifiedPairs(approx: DataFrame, exact: DataFrame,
+      keys: Seq[String], value: String, planted: Column, flagName: String,
       recallFloor: Double): DataFrame = {
     val flags = approx.withColumn("__l", lit(true))
-      .join(exact.select(col("doc_a"), col("doc_b"), col("jaccard"))
+      .join(exact.select((keys :+ value).map(col): _*)
           .withColumn("__e", lit(true)),
-        Seq("doc_a", "doc_b"), "full_outer")
+        keys, "full_outer")
     val ok = flags.agg(
         count(when(col("__l") && col("__e").isNull, 1)).as("n_extra"),
-        count(when(col("__e") && col("jaccard") >= plantedThreshold, 1))
-          .as("n_planted"),
-        count(when(col("__e") && col("jaccard") >= plantedThreshold &&
-          col("__l").isNull, 1)).as("n_missed"),
+        count(when(col("__e") && planted, 1)).as("n_planted"),
+        count(when(col("__e") && planted && col("__l").isNull, 1))
+          .as("n_missed"),
         count(when(col("__e"), 1)).as("n_exact"))
       .select((col("n_extra") === 0 &&
         col("n_missed") <= (lit(1.0) - recallFloor) * col("n_planted"))
         .as(flagName), col("n_exact"))
-      .localCheckpoint() // one cert evaluation feeds both consumers below
+      .localCheckpoint() // read by the sentinel and the output rows
     // the certificate must not be VACUOUS on a pair-free corpus:
     // riding only on output rows, a false flag attached to zero rows
     // would vanish and the empty result would still match the empty
-    // oracle — emit a sentinel row instead, turning the gate red
-    // cast the sentinel ids to exact's ACTUAL id type: with a string
-    // idCol, a bare lit(-1L) would make unionByName coerce doc_a/doc_b
-    // to string for the whole result — silent schema drift vs
-    // the unchecked operators and the exact path
+    // oracle — emit a sentinel row instead, turning the gate red.
+    // Its ids are cast to exact's ACTUAL id type: with a string id, a
+    // bare lit(-1L) would make unionByName coerce the keys to string
+    // for the whole result — silent schema drift vs the unchecked
+    // operators and the exact path
     val sentinel = ok
       .filter(col("n_exact") === 0 && !col(flagName))
-      .select(lit(-1L).cast(exact.schema("doc_a").dataType).as("doc_a"),
-        lit(-1L).cast(exact.schema("doc_b").dataType).as("doc_b"),
-        lit(-1.0).as("jaccard"), col(flagName))
+      .select(keys.map(k => lit(-1L).cast(exact.schema(k).dataType).as(k)) :+
+        lit(-1.0).as(value) :+ col(flagName): _*)
     exact.crossJoin(broadcast(ok.select(col(flagName))))
       .unionByName(sentinel)
   }
@@ -373,17 +345,16 @@ object Dedup {
     * id spaces are in general unrelated. */
   def crossNgramJaccard(corpus: DataFrame, corpusIdCol: String,
       evalDocs: DataFrame, evalIdCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.8,
-      stage: Boolean = true): DataFrame = {
+      shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
     require(corpusIdCol != evalIdCol,
       s"corpus and eval id columns must differ, both are '$corpusIdCol'")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold $threshold not in (0,1]")
-    def sigOf(d: DataFrame, idCol: String): DataFrame = {
-      val s = d.filter(size(tokens(col(textCol))) >= shingleN)
+    // staged: read by the prefix legs and the verification join
+    def sigOf(d: DataFrame, idCol: String): DataFrame =
+      d.filter(size(tokens(col(textCol))) >= shingleN)
         .select(col(idCol).as("doc"), shingleHashes(col(textCol), shingleN).as("sh"))
-      if (stage) s.localCheckpoint() else s
-    }
+        .localCheckpoint()
     val sigC = sigOf(corpus, corpusIdCol)
     val sigE = sigOf(evalDocs, evalIdCol)
     val shC = explodedShingles(sigC)
@@ -835,6 +806,27 @@ object Dedup {
         HashExprs.simhash(col("sh")).as("hash")), chunks)
       .select(col("doc_a"), col("doc_b"))
 
+  /** The duplicated stride-1 `k`-token windows of [[substringDuplication]]
+    * and [[removeDuplicateSubstrings]], as (idCol, start, __dg): every
+    * window is sha2-digested and kept when its text occurs in more than
+    * one distinct document. */
+  private def duplicatedWindows(docs: DataFrame, idCol: String, t: Column,
+      k: Int): DataFrame = {
+    require(k >= 1, "window length must be positive")
+    // guard: sequence(0, negative) counts DOWN (same pitfall as
+    // [[shingles]]) — docs shorter than k tokens have zero windows
+    val wins = docs.select(col(idCol), posexplode(
+        when(size(t) < k, array().cast("array<string>"))
+          .otherwise(transform(sequence(lit(0), size(t) - k),
+            i => sha2(concat_ws(" ", slice(t, i + 1, lit(k))), 256))))
+        .as(Seq("start", "__dg")))
+    val dup = wins.groupBy(col("__dg"))
+      .agg(countDistinct(col(idCol)).as("__df"))
+      .filter(col("__df") > 1)
+      .select(col("__dg"))
+    wins.join(dup, Seq("__dg"), "left_semi")
+  }
+
   /** Exact-substring duplication measurement (the Lee et al. 2022
     * "Deduplicating Training Data Makes Language Models Better"
     * signal, distributed): every STRIDE-1 window of `k` tokens is
@@ -861,21 +853,8 @@ object Dedup {
     * the same exact-vs-screen split as suffix-array pipelines. */
   def substringDuplication(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 25): DataFrame = {
-    require(k >= 1, "window length must be positive")
     val t = tokens(col(textCol))
-    // guard: sequence(0, negative) counts DOWN (same pitfall as
-    // [[shingles]]) — docs shorter than k tokens have zero windows
-    val wins = docs.select(col(idCol), posexplode(
-        when(size(t) < k, array().cast("array<string>"))
-          .otherwise(transform(sequence(lit(0), size(t) - k),
-            i => sha2(concat_ws(" ", slice(t, i + 1, lit(k))), 256))))
-        .as(Seq("start", "__dg")))
-    val dup = wins.groupBy(col("__dg"))
-      .agg(countDistinct(col(idCol)).as("__df"))
-      .filter(col("__df") > 1)
-      .select(col("__dg"))
-    val dupStarts = wins.join(dup, Seq("__dg"), "left_semi")
-    val perDoc = dupStarts.groupBy(col(idCol))
+    val perDoc = duplicatedWindows(docs, idCol, t, k).groupBy(col(idCol))
       .agg(count(lit(1)).as("dup_windows"),
         sort_array(collect_list(col("start"))).as("__s"))
       .select(col(idCol), col("dup_windows"),
@@ -910,20 +889,10 @@ object Dedup {
     * [[graft.operators.TextAnalysis.stripBoilerplate]]. */
   def removeDuplicateSubstrings(docs: DataFrame, idCol: String,
       textCol: String, k: Int = 25): DataFrame = {
-    require(k >= 1, "window length must be positive")
     val t = tokens(col(textCol))
-    val wins = docs.select(col(idCol), posexplode(
-        when(size(t) < k, array().cast("array<string>"))
-          .otherwise(transform(sequence(lit(0), size(t) - k),
-            i => sha2(concat_ws(" ", slice(t, i + 1, lit(k))), 256))))
-        .as(Seq("start", "__dg")))
-    val dup = wins.groupBy(col("__dg"))
-      .agg(countDistinct(col(idCol)).as("__df"))
-      .filter(col("__df") > 1)
-      .select(col("__dg"))
     // merged disjoint intervals [lo, hi) per doc from the sorted
     // dup-window starts — the island list the membership test reads
-    val islands = wins.join(dup, Seq("__dg"), "left_semi")
+    val islands = duplicatedWindows(docs, idCol, t, k)
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(col("start"))).as("__s"))
       .select(col(idCol),
@@ -994,14 +963,12 @@ object Dedup {
       chunks: Int = 4, plantedThreshold: Double = 0.9,
       recallFloor: Double = 0.6): DataFrame = {
     val sig = stagedSignatures(docs, idCol, textCol, shingleN)
-    // staged like nearDuplicatesChecked's legs: sim and exact each
-    // feed multiple aggregates, and the self-join/sweep behind them
-    // must run once, not once per certificate leg
     val sim = jaccardOf(simhashCandidatesOf(sig, chunks), sig)
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
+    // read by the certificate's join and its output rows
     val exact = ngramJaccardPairsOf(sig, threshold).localCheckpoint()
-    certifiedPairs(sim, exact, "simhash_ok", plantedThreshold, recallFloor)
+    certifiedPairs(sim, exact, Seq("doc_a", "doc_b"), "jaccard",
+      col("jaccard") >= plantedThreshold, "simhash_ok", recallFloor)
   }
 }

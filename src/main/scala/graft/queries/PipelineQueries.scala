@@ -206,137 +206,202 @@ object PipelineQueries {
   private[graft] def stagedCount(s: SparkSession): Int =
     staged.keySet().stream().filter(_._1 eq s).count().toInt
 
-  /** The ANN recall certificate's legs — THE single definition of
-    * which approximate paths are gated, at which parameters, against
-    * which exact ground truth. `embed_ann_recall` (the driver-visible
-    * boolean gate) and [[certObserved]] (the machine-readable observed
-    * series Bench emits) both consume this, so a parameter retune can
-    * never make the two silently measure different things.
-    * `methods` = (name, floor, approx top-10 frame with qid/vec_id);
-    * `nearestDup` reads the per-session staged key legs. */
-  private[graft] final case class AnnRecallLegs(exactTop10: DataFrame,
-      exact1nn: DataFrame, nearestDup: DataFrame,
-      methods: Seq[(String, Double, DataFrame)])
-
-  private[graft] def annRecallLegs(s: SparkSession, dir: String): AnnRecallLegs = {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 8)
+  /** The 8 query vectors (vec_id < 8), as (qid, qv), that every
+    * embedding top-10 row and ANN recall certificate searches with. */
+  private def annQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"),
         Similarity.asDouble(col("embedding")).as("qv"))
-    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries,
-        k = 10)
-      .select(col("qid"), col("vec_id"))
-    val exact1nn = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-        emb.select(col("vec_id").as("qid"),
-          Similarity.asDouble(col("embedding")).as("qv")),
-        k = 1, broadcastQueries = false)
-      .select(col("qid"), col("vec_id"))
-    val nearestDup = Similarity.nearestDupLshFrom(stage(s, dir, LshKeys))
-      .select(col("qid"), col("nn").as("vec_id"))
-    // all IVF paths share the ONE staged quantizer
-    val ivf = stage(s, dir, Ann)
-    val methods = Seq(
-      ("lsh", 0.8,
-        Similarity.lshTopK(emb, "vec_id", "embedding", queries, k = 10)),
-      ("ivf", 0.75,
-        ivf.copy(code = AnnIndex.Flat)
-          .search(emb, "vec_id", "embedding", queries, k = 10)),
-      ("sq8", 0.9,
-        AnnIndex(None, AnnIndex.Sq8)
-          .search(emb, "vec_id", "embedding", queries, k = 10)),
-      ("ivf_sq8", 0.75,
-        ivf.copy(code = AnnIndex.Sq8)
-          .search(emb, "vec_id", "embedding", queries, k = 10)),
-      // PQ: observed 0.93-1.0 across sf0.001-0.1 at the default
-      // m=8/ksub=256/refine=8 — floor 0.7 keeps >=30% margin
-      ("pq", 0.7,
-        AnnIndex.fit(emb, "vec_id", "embedding", "PQ")
-          .search(emb, "vec_id", "embedding", queries, k = 10)),
-      // IVF-PQ: recall is bounded by the SAME cell pruning as the
-      // plain ivf/ivf_sq8 paths (shared cents, nprobe 16 of 32 —
-      // measured 0.875/0.888/0.900 at sf0.1/0.01/0.001, within a hit
-      // or two of plain ivf's 0.888-0.900: the residual-PQ layer is
-      // near-lossless at refine=8) — same 0.75 floor as the other IVF
-      // paths, >=16% margin
-      ("ivf_pq", 0.75,
-        ivf.search(emb, "vec_id", "embedding", queries, k = 10)))
-    AnnRecallLegs(exact, exact1nn, nearestDup, methods)
+
+  /** A recall certificate: its key in Bench's `certs` series, the gate
+    * query that floors it, the floor, and its (truth, found) legs. */
+  private[graft] final case class RecallCert(key: String, gate: String,
+      floor: Double, legs: (SparkSession, String) => (DataFrame, DataFrame)) {
+
+    /** The certificate's one (n, hits) row, keyed on truth's columns. */
+    def relation(s: SparkSession, dir: String): DataFrame = {
+      val (truth, found) = legs(s, dir)
+      recall(truth, found, truth.columns.toSeq)
+    }
+
+    /** The gate's view of [[relation]]: (n, recall_ok). */
+    def gateRow(s: SparkSession, dir: String): DataFrame =
+      relation(s, dir).select(col("n"),
+        (col("hits") >= col("n") * floor).as("recall_ok"))
+
+    /** This certificate's `method` row in embed_ann_recall. */
+    def method: String = key.stripPrefix("ann_").stripSuffix("_recall")
   }
 
-  /** OBSERVED certificate metrics — the values whose floored booleans
-    * gate the 12 hash-dependent rows. The floors only fail on a cliff;
-    * this emits the underlying measurements so a slow recall slide is
-    * visible round-over-round in the bench JSON (`"certs"` object)
-    * instead of surfacing only when a floor finally breaks. Keys are
-    * stable; every computation reuses the exact operator calls (and
-    * per-session staged relations) the cert queries themselves run.
-    * Recall ratios are vs-certificate-ground-truth (1.0 = perfect);
-    * `hll_max_rel_err` is an error (lower is better);
-    * `quality_heldout_acc` is held-out accuracy. */
-  private[graft] def certObserved(s: SparkSession,
-      dir: String): Seq[(String, Double)] = {
-    val docs = Tables.documents(s, dir)
-    def ratio(num: Long, den: Long): Double =
-      if (den == 0L) 1.0 else num.toDouble / den
-    // planted ground truth shared by the overlap + simhash certs
-    val planted = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+  /** THE recall relation: one row (n, hits) — `truth`'s row count and
+    * how many of those rows `found` holds on `keys`. `found` is cut to
+    * its distinct keys first, so the left join is 1:≤1 and each truth
+    * row counts at most once whatever `found` holds. */
+  private def recall(truth: DataFrame, found: DataFrame,
+      keys: Seq[String]): DataFrame =
+    truth.join(found.select(keys.map(col): _*).distinct()
+        .withColumn("__f", lit(true)), keys, "left")
+      .agg(count(lit(1)).as("n"), count(col("__f")).as("hits"))
+
+  /** Planted near-identical pairs (exact 3-gram Jaccard ≥ 0.9): the
+    * ground truth of the overlap, overlap_topk and simhash recalls. */
+  private def plantedPairs(s: SparkSession, dir: String): DataFrame =
+    Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
         shingleN = 3, threshold = 0.9)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val nPlanted = planted.count()
-    def plantedHits(found: DataFrame): Long =
-      planted.join(found, Seq("doc_a", "doc_b"), "left_semi").count()
-    val overlapRecall = ratio(plantedHits(
-      stage(s, dir, OverlapPairs).select(col("doc_a"), col("doc_b"))), nPlanted)
-    val topkRecall = ratio(plantedHits(
-      TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), 5)
+      .select(col("doc_a"), col("doc_b"))
+
+  /** Per-doc top-5 overlap partners: the overlap_topk row and both
+    * legs of its certificate. */
+  private def overlapTopK(s: SparkSession, dir: String): DataFrame =
+    TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), 5)
+
+  /** The legs of an ANN recall certificate — THE single definition of
+    * the exact ground truth: the exact top-10 of the [[annQueries]] vs
+    * `approx`'s top-10 of the same queries over the same corpus, both
+    * keyed (qid, vec_id). [[recallCerts]] names each gated path. */
+  private def annRecallLegs(
+      approx: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
+      : (SparkSession, String) => (DataFrame, DataFrame) = { (s, dir) =>
+    val emb = Tables.embeddings(s, dir)
+    val queries = annQueries(emb)
+    (Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, k = 10)
+        .select(col("qid"), col("vec_id")),
+      approx(s, dir, emb, queries).select(col("qid"), col("vec_id")))
+  }
+
+  /** [[annRecallLegs]] of an [[AnnIndex]] search at its defaults. */
+  private def annIndexLegs(index: (SparkSession, String, DataFrame) => AnnIndex) =
+    annRecallLegs((s, dir, emb, queries) =>
+      index(s, dir, emb).search(emb, "vec_id", "embedding", queries, k = 10))
+
+  /** Every recall certificate — THE single definition of its legs and
+    * floor. Its gate projects `hits >= n * floor` from
+    * [[RecallCert.relation]] and [[certObserved]] reads `hits / n` from
+    * the same relation, so a retune or a floor change can never make
+    * the two measure different things. Floors are measured-margin
+    * (deterministic: fixed hash seeds, hash-ordered training samples),
+    * observed across sf0.001/0.01/0.1 and still failing on any genuine
+    * recall collapse. */
+  private[graft] val recallCerts: Seq[RecallCert] = Seq(
+    // winnowing: a planted pair shares long token runs, so it collides
+    // on >= minShared fingerprints (observed 1.000)
+    RecallCert("overlap_recall", "overlap_recall_cert", 0.8, (s, dir) =>
+      (plantedPairs(s, dir),
+        stage(s, dir, OverlapPairs).select(col("doc_a"), col("doc_b")))),
+    // capping to the top 5 partners must not evict a planted pair: it
+    // shares more fingerprints than boilerplate (observed rank 1-2)
+    RecallCert("overlap_topk_recall", "overlap_topk_cert", 0.8, (s, dir) =>
+      (plantedPairs(s, dir), overlapTopK(s, dir)
         .select(least(col("doc"), col("partner")).as("doc_a"),
-          greatest(col("doc"), col("partner")).as("doc_b"))
-        .distinct()), nPlanted)
-    val simhashRecall = ratio(plantedHits(
-      Dedup.simhashNearDuplicates(docs, "doc_id", "text",
-          shingleN = 3, threshold = 0.5)
-        .select(col("doc_a"), col("doc_b"))), nPlanted)
-    val legs = annRecallLegs(s, dir)
-    val exact10 = legs.exactTop10.localCheckpoint()
-    val tot10 = exact10.count()
-    val ann = legs.methods.map { case (m, _, approx) =>
-      s"ann_${m}_recall" -> ratio(
-        exact10.join(approx.select(col("qid"), col("vec_id")),
-          Seq("qid", "vec_id"), "left_semi").count(), tot10)
-    }
-    val exact1 = legs.exact1nn.localCheckpoint()
-    val nnRecall = ratio(
-      exact1.join(legs.nearestDup, Seq("qid", "vec_id"), "left_semi").count(),
-      exact1.count())
-    val hllErr = Windows.distinctUsersExact(Tables.events(s, dir)).as("e")
+          greatest(col("doc"), col("partner")).as("doc_b")))),
+    // simhash at 0.5 (observed 0.68-0.85; the pigeonhole-guaranteed
+    // subset is spec-pinned)
+    RecallCert("simhash_recall", "simhash_recall_cert", 0.6, (s, dir) =>
+      (plantedPairs(s, dir), Dedup.simhashNearDuplicates(
+          Tables.documents(s, dir), "doc_id", "text", shingleN = 3,
+          threshold = 0.5)
+        .select(col("doc_a"), col("doc_b")))),
+    // multi-probe LSH (observed 0.96-0.98)
+    RecallCert("ann_lsh_recall", "embed_ann_recall", 0.8,
+      annRecallLegs((_, _, emb, queries) =>
+        Similarity.lshTopK(emb, "vec_id", "embedding", queries, k = 10))),
+    // every IVF path probes 16 of the staged quantizer's 32
+    // restart-trained cells (observed 0.888-0.900; random directions
+    // read 0.71-0.75)
+    RecallCert("ann_ivf_recall", "embed_ann_recall", 0.75,
+      annIndexLegs((s, dir, _) => stage(s, dir, Ann).copy(code = AnnIndex.Flat))),
+    // int8 scan + exact rerank (observed >= 0.98 at refine 4)
+    RecallCert("ann_sq8_recall", "embed_ann_recall", 0.9,
+      annIndexLegs((_, _, _) => AnnIndex(None, AnnIndex.Sq8))),
+    RecallCert("ann_ivf_sq8_recall", "embed_ann_recall", 0.75,
+      annIndexLegs((s, dir, _) => stage(s, dir, Ann).copy(code = AnnIndex.Sq8))),
+    // m=8/ksub=256/refine=8 (observed 0.93-1.0, >= 30% margin)
+    RecallCert("ann_pq_recall", "embed_ann_recall", 0.7,
+      annIndexLegs((_, _, emb) => AnnIndex.fit(emb, "vec_id", "embedding", "PQ"))),
+    // residual PQ is near-lossless at refine 8, so the cell pruning
+    // bounds it like plain IVF (observed 0.875-0.900)
+    RecallCert("ann_ivf_pq_recall", "embed_ann_recall", 0.75,
+      annIndexLegs((s, dir, _) => stage(s, dir, Ann))),
+    // every vector's exact 1-NN vs the staged LSH key legs' asymmetric
+    // multi-probe self-join (observed 0.973-0.992)
+    RecallCert("nearest_dup_lsh_recall", "embed_ann_recall", 0.7, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      (Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+          emb.select(col("vec_id").as("qid"),
+            Similarity.asDouble(col("embedding")).as("qv")),
+          k = 1, broadcastQueries = false)
+        .select(col("qid"), col("vec_id")),
+        Similarity.nearestDupLshFrom(stage(s, dir, LshKeys))
+          .select(col("qid"), col("nn").as("vec_id")))
+    }))
+
+  /** The declared [[recallCerts]] entry named `key`. */
+  private[graft] def recallCert(key: String): RecallCert =
+    recallCerts.find(_.key == key).getOrElse(
+      throw new NoSuchElementException(s"no recall certificate '$key'"))
+
+  /** THE HLL certificate relation, per event type: exact distinct
+    * users, the HLL++ estimate, and `within_bound` = |approx − exact| ≤
+    * 0.06·users + 1 (3× the configured rsd 0.02 with slack; observed
+    * max rel-err 0.00-0.02 across fixtures). The key joins null-safely,
+    * so a NULL event_type group survives the way the oracle's GROUP BY
+    * keeps it. Read by distinct_users_approx, hll_error_cert and
+    * [[certObserved]]'s hll_max_rel_err. */
+  private def hllCert(s: SparkSession, dir: String): DataFrame =
+    Windows.distinctUsersExact(Tables.events(s, dir)).as("e")
       .join(Windows.distinctUsersApprox(Tables.events(s, dir)).as("a"),
         col("e.event_type") <=> col("a.event_type"))
-      .select((abs(col("users_approx") - col("users")) /
-        col("users").cast("double")).as("re"))
-      .agg(max(col("re"))).head().getDouble(0)
-    val qualityAcc = labeledQualityDocs(s, dir).filter(!col("is_train"))
-      .join(QualityModel.score(docs, "doc_id", "text",
+      .select(col("e.event_type"), col("users"), col("users_approx"),
+        (abs(col("users_approx") - col("users")) <=
+          col("users") * 0.06 + lit(1.0)).as("within_bound"))
+
+  /** THE held-out certificate relation: one row (n_heldout,
+    * n_pos_heldout, acc) — the frozen classifier scored on the held-out
+    * half, which never reaches its trainer. Read by
+    * quality_classifier_cert and [[certObserved]]'s quality_heldout_acc. */
+  private def heldout(s: SparkSession, dir: String): DataFrame =
+    labeledQualityDocs(s, dir).filter(!col("is_train"))
+      .join(QualityModel.score(Tables.documents(s, dir), "doc_id", "text",
         trainedQualityWeights(s, dir)), Seq("doc_id"))
-      .agg(avg(when(col("predicted_good") === col("good"), 1.0)
-        .otherwise(0.0))).head().getDouble(0)
-    // phash planted-twin recall — the media_phash_dup invariant's
-    // observed value (16 JPEG re-encodes of patterned PNGs)
+      .agg(count(lit(1)).as("n_heldout"),
+        sum(when(col("good"), 1L).otherwise(0L)).as("n_pos_heldout"),
+        avg(when(col("predicted_good") === col("good"), 1.0)
+          .otherwise(0.0)).as("acc"))
+
+  /** OBSERVED certificate metrics — the values whose floored booleans
+    * gate the hash-dependent rows. A floor only fails on a cliff; these
+    * measurements make a slow slide visible round-over-round in the
+    * bench JSON (`"certs"` object). Keys are stable. Each value is one
+    * `head()` of the single relation its gate reads: a [[recallCerts]]
+    * entry's `hits / n` (1.0 when n = 0), [[hllCert]]'s max relative
+    * error (lower is better), [[heldout]]'s accuracy. Only
+    * `phash_planted_recall` keeps its own 16-doc computation: the
+    * media_phash_dup gate encodes the whole corpus. */
+  private[graft] def certObserved(s: SparkSession,
+      dir: String): Seq[(String, Double)] = {
+    val recalls = recallCerts.map { c =>
+      val r = c.relation(s, dir).head()
+      c.key -> (if (r.getLong(0) == 0L) 1.0 else r.getLong(1).toDouble / r.getLong(0))
+    }
+    val hllErr = hllCert(s, dir)
+      .agg(max(abs(col("users_approx") - col("users")) /
+        col("users").cast("double")))
+      .head().getDouble(0)
+    val qualityAcc = heldout(s, dir).select(col("acc")).head().getDouble(0)
+    // 16 JPEG re-encodes of patterned PNGs
     val phashRecall = {
       // doc filter BELOW the generator — above it, the checkpoint
-      // would PNG-encode the whole corpus to keep 16 rows
+      // would PNG-encode the whole corpus to keep 16 rows; read by the
+      // transcode and the union
       val base = Multimodal.syntheticPatternMedia(
-        docs.filter(col("doc_id") < 16)).localCheckpoint()
+        Tables.documents(s, dir).filter(col("doc_id") < 16)).localCheckpoint()
       val twins = Multimodal.transcodeImages(s, base, "jpg")
         .withColumn("media_id", col("media_id") + lit(twinOffsetBatch))
       val hashes = Multimodal.perceptualHash(s, base.unionByName(twins))
-      ratio(Multimodal.phashNearDup(hashes, maxHamming = 3)
-        .filter(col("id_b") === col("id_a") + twinOffsetBatch).count(), 16L)
+      Multimodal.phashNearDup(hashes, maxHamming = 3)
+        .filter(col("id_b") === col("id_a") + twinOffsetBatch).count() / 16.0
     }
-    Seq("overlap_recall" -> overlapRecall,
-      "overlap_topk_recall" -> topkRecall,
-      "simhash_recall" -> simhashRecall) ++
-      ann ++ Seq(
-      "nearest_dup_lsh_recall" -> nnRecall,
+    recalls ++ Seq(
       "hll_max_rel_err" -> hllErr,
       "quality_heldout_acc" -> qualityAcc,
       "phash_planted_recall" -> phashRecall)
@@ -562,12 +627,9 @@ object PipelineQueries {
       (s, dir) => {
         val base = Tables.embeddings(s, dir)
           .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
+        // read by the exact sweep and the approximate join
         val corpus = base.unionByName(plantedNearDups(base, twinOffsetBatch))
           .localCheckpoint()
-        val exact = certExactPairs(corpus, 0.95, twinOffsetBatch).localCheckpoint()
-        val approx = Similarity
-          .semanticDuplicates(corpus, "vec_id", "v", threshold = 0.95)
-          .select(col("vec_a"), col("vec_b")).localCheckpoint()
         // extras compare like with like: approx pairs WITHIN the
         // certificate subset vs the subset's exact sweep. Approx pairs
         // outside the subset are still false-positive-free by
@@ -575,26 +637,15 @@ object PipelineQueries {
         // cosine on the full vectors before thresholding).
         val inSub = (c: org.apache.spark.sql.Column) =>
           c < certStratum || c >= twinOffsetBatch
-        // ONE full-outer join + ONE aggregate for all three cert
-        // counts (r22, §2.3 — was an anti-join branch, a semi-join
-        // branch and a count branch + two crossJoins over the same two
-        // checkpointed pair relations). exact ⊆ the subset by
-        // construction, so approx rows outside the subset can never
-        // match an exact row — hits over the subset-filtered approx
-        // equals hits over the full approx; both inputs hold each pair
-        // once, so the join is 1:1 and the counts are identical to the
-        // branch formulation.
-        val flags = exact.withColumn("__e", lit(true))
-          .join(approx.filter(inSub(col("vec_a")) && inSub(col("vec_b")))
-              .withColumn("__a", lit(true)),
-            Seq("vec_a", "vec_b"), "full_outer")
-        val ok = flags.agg(
-            count(when(col("__a") && col("__e").isNull, 1)).as("n_extra"),
-            count(when(col("__e") && col("__a"), 1)).as("hits"),
-            count(when(col("__e"), 1)).as("tot"))
-          .select((col("n_extra") === 0 &&
-            col("hits") >= col("tot") * 0.8).as("sem_ok"))
-        exact.crossJoin(ok)
+        val approx = Similarity
+          .semanticDuplicates(corpus, "vec_id", "v", threshold = 0.95)
+          .select(col("vec_a"), col("vec_b"))
+          .filter(inSub(col("vec_a")) && inSub(col("vec_b")))
+        // every exact pair counts as planted: no natural pair reaches
+        // 0.95. Read by the certificate's join and its output rows.
+        val exact = certExactPairs(corpus, 0.95, twinOffsetBatch).localCheckpoint()
+        Dedup.certifiedPairs(approx, exact, Seq("vec_a", "vec_b"), "cos",
+          planted = lit(true), flagName = "sem_ok", recallFloor = 0.8)
       },
       Some(s"""WITH ${plantedCorpusSql(twinOffsetBatch)},
               |s AS (SELECT * FROM c
@@ -695,9 +746,7 @@ object PipelineQueries {
     QueryDef("embed_cosine_topk",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val queries = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv"))
+        val queries = annQueries(emb)
         Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, k = 10)
       },
       Some("""WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
@@ -713,9 +762,7 @@ object PipelineQueries {
     QueryDef("embed_ann_lsh",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val queries = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv"))
+        val queries = annQueries(emb)
         Similarity.lshTopK(emb, "vec_id", "embedding", queries, k = 10)
       },
       // r17: full oracle — the hyperplane bank is pure-Scala
@@ -732,9 +779,7 @@ object PipelineQueries {
         // embed_ann_recall (observed ≥0.98 at refine=4) and the
         // quantization kernels are property-tested in ScalaTest.
         val emb = Tables.embeddings(s, dir)
-        val queries = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv"))
+        val queries = annQueries(emb)
         AnnIndex(None, AnnIndex.Sq8)
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
@@ -755,9 +800,7 @@ object PipelineQueries {
         // Coarse quantizer from the staged [[Ann]] index, so the row
         // times the search, not a per-rep retrain.
         val emb = Tables.embeddings(s, dir)
-        val queries = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv"))
+        val queries = annQueries(emb)
         stage(s, dir, Ann).copy(code = AnnIndex.Sq8)
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
@@ -778,9 +821,7 @@ object PipelineQueries {
         // retrains them per fixture) let DuckDB re-derive the codes,
         // the ADC scan and the rerank independently.
         val emb = Tables.embeddings(s, dir)
-        val queries = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv"))
+        val queries = annQueries(emb)
         AnnIndex.fit(emb, "vec_id", "embedding", "PQ")
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
@@ -801,9 +842,7 @@ object PipelineQueries {
         // embed_ann_recall (0.875-0.900 at nprobe=16/32, refine=8).
         // Coarse quantizer + residual codebooks: the staged [[Ann]].
         val emb = Tables.embeddings(s, dir)
-        val queries = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv"))
+        val queries = annQueries(emb)
         stage(s, dir, Ann)
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
@@ -853,36 +892,11 @@ object PipelineQueries {
         // driver-visible verification for the hash-dependent ANN family:
         // recall of each approximate path against the oracle-green exact
         // top-k, computed INSIDE the query (one aggregate per path, no
-        // collect). Floors are measured-margin (deterministic — fixed
-        // hash seeds and a hash-ordered training sample): observed
-        // recall across sf0.001/0.01/0.1 is lsh 0.96-0.98
-        // (multi-probe), ivf 0.888-0.900 (restart-trained k-means
-        // centroids probing 16 of 32 cells — the same 50% scan
-        // fraction as the former 8-of-16, which measured 0.76-0.84;
-        // random directions 0.71-0.75), nearest-dup 0.973-0.992
-        // (asymmetric multi-probe on the self-join; was 0.59-0.72
-        // base-only) — floors 0.8/0.75/0.7 hold everywhere with
-        // >=15-40% margin while still failing on any genuine recall
-        // collapse.
-        val legs = annRecallLegs(s, dir)
-        def recallOk(method: String, approx: DataFrame,
-            floor: Double) = {
-          val hits = legs.exactTop10.join(approx.select(col("qid"), col("vec_id")),
-              Seq("qid", "vec_id"), "left_semi")
-            .agg(count(lit(1)).as("hits"))
-          legs.exactTop10.agg(count(lit(1)).as("tot")).crossJoin(hits)
-            .select(lit(method).as("method"),
-              (col("hits") >= col("tot") * floor).as("recall_ok"))
-        }
-        val nnHits = legs.exact1nn.join(legs.nearestDup,
-            Seq("qid", "vec_id"), "left_semi")
-          .agg(count(lit(1)).as("hits"))
-        val nnOk = legs.exact1nn.agg(count(lit(1)).as("tot")).crossJoin(nnHits)
-          .select(lit("nearest_dup_lsh").as("method"),
-            (col("hits") >= col("tot") * 0.7).as("recall_ok"))
-        legs.methods.map { case (m, floor, approx) => recallOk(m, approx, floor) }
+        // collect) from the declared [[recallCerts]] and their floors.
+        recallCerts.filter(_.gate == "embed_ann_recall")
+          .map(c => c.gateRow(s, dir)
+            .select(lit(c.method).as("method"), col("recall_ok")))
           .reduce(_ unionByName _)
-          .unionByName(nnOk)
       },
       Some("""SELECT 'lsh' AS method, TRUE AS recall_ok
              |UNION ALL SELECT 'ivf', TRUE
@@ -914,9 +928,7 @@ object PipelineQueries {
     QueryDef("embed_ann_ivf",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val queries = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv"))
+        val queries = annQueries(emb)
         stage(s, dir, Ann).copy(code = AnnIndex.Flat)
           .search(emb, "vec_id", "embedding", queries, k = 10)
       },
@@ -2252,24 +2264,15 @@ object PipelineQueries {
     // numbers for the same data), so the REGISTERED output is the
     // oracle-expressible contract instead — the exact count plus a
     // boolean asserting the HLL estimate landed within its error bound
-    // (|approx − exact| ≤ 6 % + 1, = 3× the configured rsd with slack;
-    // observed max rel-err is 0.00–0.02 across fixtures). The HLL
+    // (the [[hllCert]] relation hll_error_cert also reads). The HLL
     // aggregation still runs inside the query: a broken sketch flips
     // `approx_ok` and fails the hash. Timing is NOT comparable to the
     // ≤ r18 bench rows (those timed the bare HLL aggregation; this adds
     // the exact leg + join — recorded in BASELINE.md). The raw-estimate
     // surface stays available as [[Windows.distinctUsersApprox]].
     QueryDef("distinct_users_approx",
-      (s, dir) => {
-        val exact = Windows.distinctUsersExact(Tables.events(s, dir))
-        val approx = Windows.distinctUsersApprox(Tables.events(s, dir))
-        // null-safe key: a NULL event_type group must survive the join
-        exact.as("e").join(approx.as("a"),
-            col("e.event_type") <=> col("a.event_type"))
-          .select(col("e.event_type"), col("users").as("users_exact"),
-            (abs(col("users_approx") - col("users")) <=
-              col("users") * 0.06 + lit(1.0)).as("approx_ok"))
-      },
+      (s, dir) => hllCert(s, dir).select(col("event_type"),
+        col("users").as("users_exact"), col("within_bound").as("approx_ok")),
       Some("""SELECT event_type, COUNT(DISTINCT user_id) AS users_exact,
              |TRUE AS approx_ok
              |FROM events GROUP BY event_type""".stripMargin)),
@@ -2281,19 +2284,7 @@ object PipelineQueries {
     // invariant booleans whose floors sit far below observed behavior.
 
     QueryDef("hll_error_cert",
-      (s, dir) => {
-        // per event type: |approx - exact| / exact within 3× the
-        // configured rsd (0.02) — generous, stable across fixtures
-        val exact = Windows.distinctUsersExact(Tables.events(s, dir))
-        val approx = Windows.distinctUsersApprox(Tables.events(s, dir))
-        // null-safe key: a NULL event_type group must survive the join
-        // the way the oracle's GROUP BY keeps it
-        exact.as("e").join(approx.as("a"),
-            col("e.event_type") <=> col("a.event_type"))
-          .select(col("e.event_type"),
-            (abs(col("users_approx") - col("users")) <=
-              col("users") * 0.06 + lit(1.0)).as("within_bound"))
-      },
+      (s, dir) => hllCert(s, dir).select(col("event_type"), col("within_bound")),
       Some("""SELECT event_type, TRUE AS within_bound
              |FROM events GROUP BY event_type""".stripMargin)),
 
@@ -2334,30 +2325,11 @@ object PipelineQueries {
              |FROM documents""".stripMargin)),
 
     QueryDef("overlap_recall_cert",
-      (s, dir) => {
+      (s, dir) =>
         // partial-overlap detection (winnowing inverted index) must
-        // recover every planted near-identical pair — exact 3-gram
-        // Jaccard ≥ 0.9 means the documents share long token runs, so
-        // they must collide on ≥ minShared winnow fingerprints.
-        // Observed recall is 1.000 at sf0.001/0.01/0.1 (deterministic
-        // hashes); floor 0.8 with margin.
-        val docs = Tables.documents(s, dir)
-        val found = stage(s, dir, OverlapPairs)
-          .select(col("doc_a"), col("doc_b"))
-        val planted = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-            shingleN = 3, threshold = 0.9)
-          .select(col("doc_a"), col("doc_b"))
-        // ONE pass over planted computes total and hits (r22, §2.3 —
-        // was a semi-join branch + a count branch + crossJoin, each
-        // re-planning the planted sweep's consumer side). found holds
-        // each pair once (overlapPairs groups by pair), so the left
-        // join is 1:≤1 and count(1) stays the planted total.
-        planted.join(found.withColumn("__f", lit(true)),
-            Seq("doc_a", "doc_b"), "left")
-          .agg(count(lit(1)).as("n_planted"), count(col("__f")).as("hits"))
-          .select(col("n_planted"),
-            (col("hits") >= col("n_planted") * 0.8).as("recall_ok"))
-      },
+        // recover the planted near-identical pairs
+        recallCert("overlap_recall").gateRow(s, dir)
+          .select(col("n").as("n_planted"), col("recall_ok")),
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_planted,
               |TRUE AS recall_ok
               |FROM (${jaccardOracle(3, "0.9")})""".stripMargin)),
@@ -2369,7 +2341,7 @@ object PipelineQueries {
     // filtered pair join and the (shared DESC, partner ASC) rank;
     // overlap_topk_cert / overlap_recall_cert stay as certificates.
     QueryDef("overlap_topk",
-      (s, dir) => TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), 5),
+      (s, dir) => overlapTopK(s, dir),
       Some(RollingHashOracles.overlapTopKSql())),
 
     QueryDef("overlap_topk_cert",
@@ -2378,36 +2350,17 @@ object PipelineQueries {
         // DuckDB-computable ground truth: (1) capped_ok — no document
         // carries more than k partners and ranks are dense 1..c (the
         // O(N·k) output bound, THE point of the variant); (2)
-        // recall_ok — the planted near-identical pairs (exact 3-gram
-        // Jaccard ≥ 0.9, the overlap_recall_cert ground truth) still
-        // surface in the capped relation: a planted pair shares more
-        // fingerprints than boilerplate overlap, so capping to the
-        // top k=5 partners must not evict it (observed: every planted
-        // pair survives at rank 1-2 across sf0.001/0.01/0.1; floor
-        // 0.8 with margin).
-        val docs = Tables.documents(s, dir)
+        // recall_ok — the planted near-identical pairs still surface
+        // in the capped relation (the declared overlap_topk_recall).
         val k = 5
-        val topk = TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), k)
-          .localCheckpoint() // two certificate legs read it
-        val capped = topk.groupBy(col("doc"))
+        val capped = overlapTopK(s, dir).groupBy(col("doc"))
           .agg(count(lit(1)).as("c"), max(col("rank")).as("mr"))
           .agg(coalesce(max(col("c")) <= k && max(col("mr")) <= k &&
             sum(when(col("mr") =!= col("c"), 1L).otherwise(0L)) === 0L,
             lit(true)).as("capped_ok"))
-        val planted = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-            shingleN = 3, threshold = 0.9)
-          .select(col("doc_a"), col("doc_b"))
-        val found = topk.select(least(col("doc"), col("partner")).as("doc_a"),
-            greatest(col("doc"), col("partner")).as("doc_b"))
-          .distinct()
-        // one pass over planted for total + hits (same fold as
-        // overlap_recall_cert; found is distinct so the join is 1:≤1)
-        planted.join(found.withColumn("__f", lit(true)),
-            Seq("doc_a", "doc_b"), "left")
-          .agg(count(lit(1)).as("n_planted"), count(col("__f")).as("hits"))
+        recallCert("overlap_topk_recall").gateRow(s, dir)
           .crossJoin(capped)
-          .select(col("n_planted"), col("capped_ok"),
-            (col("hits") >= col("n_planted") * 0.8).as("recall_ok"))
+          .select(col("n").as("n_planted"), col("capped_ok"), col("recall_ok"))
       },
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_planted,
               |TRUE AS capped_ok, TRUE AS recall_ok
@@ -2507,23 +2460,11 @@ object PipelineQueries {
       Some(AnnOracles.qualityClassifierSql)),
 
     QueryDef("quality_classifier_cert",
-      (s, dir) => {
-        val labeled = labeledQualityDocs(s, dir)
-        val w = trainedQualityWeights(s, dir)
-        val held = labeled.filter(!col("is_train"))
-          .join(QualityModel.score(Tables.documents(s, dir), "doc_id",
-            "text", w), Seq("doc_id"))
-        val agg = held.agg(
-          count(lit(1)).as("n_heldout"),
-          sum(when(col("good"), 1L).otherwise(0L)).as("n_pos_heldout"),
-          avg(when(col("predicted_good") === col("good"), 1.0)
-            .otherwise(0.0)).as("acc"))
-        labeled.filter(col("is_train"))
-          .agg(count(lit(1)).as("n_train"))
-          .crossJoin(agg)
-          .select(col("n_train"), col("n_heldout"), col("n_pos_heldout"),
-            (col("acc") >= 0.85).as("acc_ok"))
-      },
+      (s, dir) => labeledQualityDocs(s, dir).filter(col("is_train"))
+        .agg(count(lit(1)).as("n_train"))
+        .crossJoin(heldout(s, dir))
+        .select(col("n_train"), col("n_heldout"), col("n_pos_heldout"),
+          (col("acc") >= 0.85).as("acc_ok")),
       Some(s"""WITH q AS (SELECT doc_id,
               |  ROUND(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
               |      / len(string_split(text, ' '))
@@ -2543,25 +2484,10 @@ object PipelineQueries {
               |FROM l""".stripMargin)),
 
     QueryDef("simhash_recall_cert",
-      (s, dir) => {
-        // simhash at threshold 0.5 must recover ≥60% of the
-        // oracle-computable planted pairs (exact Jaccard ≥ 0.9) —
-        // measured recall is 0.68-0.85 across sf0.001/0.01/0.1
-        // (deterministic seeds), so the floor holds with margin; the
-        // pigeonhole-guaranteed subset is spec-pinned in ScalaTest
-        val docs = Tables.documents(s, dir)
-        val found = Dedup.simhashNearDuplicates(docs, "doc_id", "text",
-            shingleN = 3, threshold = 0.5)
-          .select(col("doc_a"), col("doc_b"))
-        val planted = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-            shingleN = 3, threshold = 0.9)
-          .select(col("doc_a"), col("doc_b"))
-        val hits = planted.join(found, Seq("doc_a", "doc_b"), "left_semi")
-          .agg(count(lit(1)).as("hits"))
-        planted.agg(count(lit(1)).as("n_planted")).crossJoin(hits)
-          .select(col("n_planted"),
-            (col("hits") >= col("n_planted") * 0.6).as("recall_ok"))
-      },
+      (s, dir) =>
+        // simhash at threshold 0.5 must recover the planted pairs
+        recallCert("simhash_recall").gateRow(s, dir)
+          .select(col("n").as("n_planted"), col("recall_ok")),
       Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_planted,
               |TRUE AS recall_ok
               |FROM (${jaccardOracle(3, "0.9")})""".stripMargin))

@@ -192,7 +192,8 @@ class IvfPqSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & ivfpq).size.toDouble / bf.size
     info(f"ivf-pq recall: $recall%.3f")
-    assert(recall >= 0.75, s"IVF-PQ recall $recall too low")
+    assert(recall >= graft.queries.PipelineQueries.recallCert("ann_ivf_pq_recall").floor,
+      s"IVF-PQ recall $recall too low")
   }
 
   test("trainIvfPqCodebooks contracts: divisibility, ksub cap, mismatch guards") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Sampling, Similarity, TextAnalysis, Windows}
 import graft.operators.Similarity.AnnIndex
 import graft.queries.Tables
+import graft.queries.PipelineQueries.recallCert
 
 /** Behavior tests for the training-data-pipeline operators whose
   * outputs are hash-function-dependent (no DuckDB oracle): LSH recall
@@ -24,17 +25,6 @@ class PipelineOpsSpec extends SparkSpecBase {
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "fixture should contain planted near-duplicates")
     assert(lsh === exact)
-  }
-
-  test("jaccardFor stage=false (lazy opt-out) equals the staged default") {
-    import spark.implicits._
-    val cands = Seq((0L, 1L)).toDF("doc_a", "doc_b")
-    val a = Dedup.jaccardFor(cands, docs, "doc_id", "text", shingleN = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val b = Dedup.jaccardFor(cands, docs, "doc_id", "text", shingleN = 3,
-        stage = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(a === b)
   }
 
   test("nearDuplicatesChecked returns the exact pair set with a green lsh_ok flag") {
@@ -76,8 +66,9 @@ class PipelineOpsSpec extends SparkSpecBase {
       s"missed guaranteed pairs: ${guaranteed -- foundPairs}")
     val recall = (planted & foundPairs).size.toDouble / planted.size
     // measured 0.852 on this fixture (deterministic seeds) — the floor
-    // matches the driver-visible simhash_recall_cert at 0.6
-    assert(recall >= 0.6, s"simhash planted recall $recall too low")
+    // is the simhash_recall_cert gate's
+    assert(recall >= recallCert("simhash_recall").floor,
+      s"simhash planted recall $recall too low")
   }
 
   test("simhashNearDuplicatesChecked returns the exact pair set with a green simhash_ok flag") {
@@ -684,8 +675,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     val recall = (bf & ann).size.toDouble / bf.size
     // approximate by design; random-ish embeddings are the hard case.
     // measured 0.975 on this fixture with the default 8 tables ×
-    // 2 flip-probes (deterministic seeds) — floor with margin below
-    assert(recall >= 0.8, s"LSH recall $recall too low")
+    // 2 flip-probes (deterministic seeds) — the embed_ann_recall floor
+    assert(recall >= recallCert("ann_lsh_recall").floor, s"LSH recall $recall too low")
     // every ANN hit must be a real corpus vector scored correctly:
     // spot-check one pair's cosine against the brute-force score
     assert(ann.nonEmpty)
@@ -701,9 +692,9 @@ class PipelineOpsSpec extends SparkSpecBase {
     val recall = (exact & got).size.toDouble / exact.size
     // measured 0.973-0.992 across sf0.001-0.1 with asymmetric
     // multi-probe (deterministic seeds; was 0.59-0.72 base-only) —
-    // floor 0.7 matches the driver-visible embed_ann_recall cert
-    // with >=30% margin
-    assert(recall >= 0.7, s"nearest-dup LSH recall $recall too low")
+    // the embed_ann_recall gate's floor, >=30% margin
+    assert(recall >= recallCert("nearest_dup_lsh_recall").floor,
+      s"nearest-dup LSH recall $recall too low")
     // the declared scale path must never plan an all-pairs product
     val plan = lsh.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"cartesian in plan:\n$plan")
@@ -802,7 +793,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     val pq = pqIdx.search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & pq).size.toDouble / bf.size
-    assert(recall >= 0.7, s"PQ recall $recall below floor")
+    assert(recall >= recallCert("ann_pq_recall").floor, s"PQ recall $recall below floor")
     // codes are m-byte blobs, deterministic under repartitioning
     val codes = pqIdx.encode(emb, "vec_id", "embedding")
     assert(codes.select(length(col("pq_codes"))).distinct()
@@ -890,9 +881,9 @@ class PipelineOpsSpec extends SparkSpecBase {
     // measured 0.888-0.900 across sf0.001-0.1 with restart-trained
     // spherical-k-means centroids at the default 16-of-32 probing
     // (deterministic sample + seeds); 8-of-16 measured 0.76-0.84,
-    // random directions 0.71-0.75 — floor 0.75 matches the
-    // driver-visible embed_ann_recall cert with >=15% margin
-    assert(recall >= 0.75, s"IVF recall $recall too low")
+    // random directions 0.71-0.75 — the embed_ann_recall
+    // gate's floor, >=15% margin
+    assert(recall >= recallCert("ann_ivf_recall").floor, s"IVF recall $recall too low")
   }
 
   test("nearDuplicatesChecked on a pair-free corpus returns empty, no vacuous sentinel") {
@@ -1090,8 +1081,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     // measured 1.0 across sf0.001/0.01/0.1 at the default refine=4
     // (int8 error ~0.4% per element; the exact rerank fixes ordering,
     // so a miss needs a true neighbour outside the quantized top-40) —
-    // floor 0.9 matches the driver-visible embed_ann_recall cert
-    assert(recall >= 0.9, s"SQ8 recall $recall too low")
+    // the embed_ann_recall gate's floor
+    assert(recall >= recallCert("ann_sq8_recall").floor, s"SQ8 recall $recall too low")
   }
 
   test("ivfSq8TopK recall equals plain IVF — the sq8 layer is lossless within cells") {
@@ -1110,7 +1101,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     // measured 0.888-0.900 across sf0.001-0.1 — exactly the plain-IVF
     // numbers: recall is bounded by cell pruning, not by quantization
     // (int8 error ≪ the rerank's k·refine slack)
-    assert(recall >= 0.75, s"IVF-SQ8 recall $recall too low")
+    assert(recall >= recallCert("ann_ivf_sq8_recall").floor,
+      s"IVF-SQ8 recall $recall too low")
     assert((bf & ivfSq).size >= (bf & ivf).size - 1,
       "sq8 layer should not lose recall vs plain IVF beyond rounding ties")
   }
@@ -1752,18 +1744,11 @@ class PipelineOpsSpec extends SparkSpecBase {
       "ann_ivf_sq8_recall", "ann_pq_recall", "ann_ivf_pq_recall",
       "nearest_dup_lsh_recall", "hll_max_rel_err", "quality_heldout_acc",
       "phash_planted_recall"))
-    // the observed values must clear the same floors the cert queries
-    // gate on — if a cert would fail the driver gate, this fails first
-    assert(m("overlap_recall") >= 0.8)
-    assert(m("overlap_topk_recall") >= 0.8)
-    assert(m("simhash_recall") >= 0.6)
-    assert(m("ann_lsh_recall") >= 0.8)
-    assert(m("ann_ivf_recall") >= 0.75)
-    assert(m("ann_sq8_recall") >= 0.9)
-    assert(m("ann_ivf_sq8_recall") >= 0.75)
-    assert(m("ann_pq_recall") >= 0.7)
-    assert(m("ann_ivf_pq_recall") >= 0.75)
-    assert(m("nearest_dup_lsh_recall") >= 0.7)
+    // the observed recalls must clear the same floors the gates use —
+    // if a cert would fail its gate, this fails first
+    PipelineQueries.recallCerts.foreach { c =>
+      assert(m(c.key) >= c.floor, s"${c.key} = ${m(c.key)} < floor ${c.floor}")
+    }
     // hll cert bound is |approx-exact| <= 0.06*users + 1; with the
     // tiny per-type user counts at sf0.001 the +1 slack dominates, so
     // the relative form is loose here — 0.2 still catches a sketch
@@ -1771,5 +1756,21 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(m("hll_max_rel_err") >= 0.0 && m("hll_max_rel_err") <= 0.2)
     assert(m("quality_heldout_acc") >= 0.85)
     assert(m("phash_planted_recall") >= 0.9)
+  }
+
+  test("every recall gate's flag equals its observed value against the declared floor") {
+    import graft.queries.PipelineQueries
+    val observed = PipelineQueries.certObserved(spark, sf).toMap
+    val gates = PipelineQueries.all.map(q => q.name -> q.fn).toMap
+    PipelineQueries.recallCerts.groupBy(_.gate).foreach { case (gate, certs) =>
+      val rows = gates(gate)(spark, sf).collect()
+      certs.foreach { c =>
+        val row = if (gate == "embed_ann_recall")
+          rows.filter(_.getAs[String]("method") == c.method) else rows
+        assert(row.length == 1, s"${c.key}: one $gate row expected")
+        assert(row.head.getAs[Boolean]("recall_ok") === (observed(c.key) >= c.floor),
+          s"${c.key}: $gate disagrees with the observed ${observed(c.key)} vs floor ${c.floor}")
+      }
+    }
   }
 }

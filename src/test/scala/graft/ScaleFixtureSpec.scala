@@ -103,7 +103,8 @@ class ScaleFixtureSpec extends SparkSpecBase {
     val exact = pairs(Similarity.bruteForceTopK(emb, "vec_id", "embedding",
       queries, 10)).toSet
     val recall = (exact & got.toSet).size.toDouble / exact.size
-    assert(recall >= 0.75, s"recall $recall")
+    assert(recall >= graft.queries.PipelineQueries.recallCert("ann_ivf_pq_recall").floor,
+      s"recall $recall")
   }
 
   test("ScaleFixture refuses an id that would merge replicas") {
