@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 
-import graft.queries.Tables
+import graft.queries.{Golden, Tables}
 
 /** A `reps`× DERIVED fixture: the same ten `<table>.parquet` files with
   * the same columns as a shipped SF dir, so `Tables`, [[Bench]] and
@@ -32,6 +32,10 @@ import graft.queries.Tables
   *    every copy shares its base vector's buckets and cell, the
   *    maximum-concentration case for the vector skew guards.
   *  - the seven TPC-H tables are copied byte for byte.
+  *
+  * The derived dir also carries its own trained oracle state,
+  * `<outDir>/_golden` ([[Golden.train]] on the derived tables), so the
+  * oracles that replay trained models check it like a shipped fixture.
   *
   * `ts` is written naive (TIMESTAMP_NTZ micros), the shipped fixture's
   * annotation; `Tables.events` reads it back under the naive==UTC
@@ -92,6 +96,7 @@ object ScaleFixture {
       require(FileUtil.copy(srcFs, new Path(src, s"$t.parquet"), fs, to,
         false, conf), s"copy of $t failed")
     }
+    Golden.writeOwn(outDir, Golden.train(spark, outDir))
   }
 
   /** `reps` copies of `base`: column `c` of copy `r` is `f((c, r))`

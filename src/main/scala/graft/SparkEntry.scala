@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.SparseRel
-import graft.queries.{CoreQueries, PipelineQueries, QueryDef, Tables}
+import graft.queries.{CoreQueries, Golden, PipelineQueries, QueryDef, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -24,6 +24,9 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    defs.flatMap(d => d.oracle.map(sql => d.name -> sql)).toMap
+  def oracleSql: Map[String, String] = oracleSqlFor(Golden.committed)
+
+  /** [[oracleSql]] replaying the trained state in `golden`. */
+  private[graft] def oracleSqlFor(golden: Golden.Store): Map[String, String] =
+    defs.flatMap(d => d.oracle(golden).map(sql => d.name -> sql)).toMap
 }

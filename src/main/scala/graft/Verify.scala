@@ -5,7 +5,12 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2,
+      "usage: runMain graft.Verify <sfDir> <outDir> [<query>,...]")
     val (sfDir, outDir) = (args(0), args(1))
+    // the committed golden state plus the dir's own `_golden`, read
+    // before any query runs so a conflicting state fails first
+    val golden = graft.queries.Golden.forDir(sfDir)
     // optional third arg: comma-separated query names, for targeted
     // local iteration (the driver always runs the full set). Unknown
     // names abort: a typo must not produce an empty run that exits 0.
@@ -46,7 +51,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSqlFor(golden)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,16 +1,16 @@
 package graft.queries
 
 import graft.operators.Similarity
+import graft.queries.Golden.Mat
 
 /** DuckDB oracle SQL for the hash/quantization-dependent ANN rows —
-  * the r16 golden-literal pattern ([[GoldenMediaHashes]]) extended to
-  * the ANN family: every model constant the search depends on is
-  * either a pure-Scala deterministic function of a fixed seed
+  * every model constant the search depends on is either a pure-Scala
+  * deterministic function of a fixed seed
   * (the LSH hyperplane bank — [[Similarity.hyperplanes]] /
   * [[Similarity.tableSeed]], interpolated here at class-init with no
-  * Spark session) or a frozen golden literal retrained-and-checked by
-  * `AnnGoldenSpec` ([[GoldenAnnCents]], dispatched per fixture by an
-  * order-free integer fingerprint). DuckDB then RE-DERIVES the whole
+  * Spark session) or frozen trained state from a [[Golden.Store]]
+  * (retrained-and-checked by `AnnGoldenSpec`, dispatched per fixture by
+  * an order-free integer fingerprint). DuckDB then RE-DERIVES the whole
   * search — quantize, bucket/cell assignment, candidate join,
   * shortlist, exact rerank — independently of the Scala operators.
   *
@@ -42,11 +42,18 @@ private[graft] object AnnOracles {
 
   private def dbl(d: Double): String = java.lang.Double.toString(d)
 
-  /** The fixture fingerprint — MUST stay the exact DuckDB mirror of
-    * [[GoldenAnnCents.fingerprint]]. */
-  private val FP =
-    "(SELECT COUNT(*) + SUM(CAST(floor(abs(CAST(embedding AS DOUBLE[])[1])" +
-      " * 1048576.0) AS BIGINT)) FROM embeddings)"
+  private def list(v: Array[Double]): String = s"[${v.map(dbl).mkString(",")}]"
+
+  /** A fingerprint-keyed `VALUES` body: row `(fp, entry)` for each entry
+    * of each state, states in fingerprint order. */
+  private def keyed(byFp: Map[Long, Golden.State])(
+      entries: Golden.State => Seq[String]): String =
+    byFp.toSeq.sortBy(_._1).flatMap { case (fp, st) =>
+      entries(st).map(e => s"(CAST($fp AS BIGINT), $e)")
+    }.mkString(",\n")
+
+  /** `(i, row i)` entries: a quantizer's cells or a codebook's words. */
+  private def indexed(m: Mat): Seq[String] = m.indices.map(i => s"$i, ${list(m(i))}")
 
   /** Shared prologue: full-precision corpus and the vec_id<8 query
     * relation (the registered queries' exact query set). */
@@ -163,20 +170,14 @@ private[graft] object AnnOracles {
        |WHERE rn <= $k""".stripMargin
 
   /** The frozen per-fixture coarse quantizers as a VALUES relation
-    * (fp, cell, c), plus the fingerprint dispatch — shared by the two
-    * IVF oracles. An unknown fixture matches zero centroids and the
+    * (fp, cell, c), plus the fingerprint dispatch — shared by the IVF
+    * oracles. An unknown fixture matches zero centroids and the
     * oracle returns zero rows (loud fail, never silent pass). */
-  private val CENTS: String = {
-    val rows = GoldenAnnCents.byFingerprint.toSeq.sortBy(_._1).flatMap {
-      case (fp, cents) => cents.zipWithIndex.map { case (c, i) =>
-        s"(CAST($fp AS BIGINT), $i, [${c.map(dbl).mkString(",")}])"
-      }
-    }.mkString(",\n")
-    s"""fpv AS (SELECT $FP AS fp),
+  private def cents(golden: Golden.Store): String =
+    s"""${Golden.EmbFingerprintSql},
        |gc(gfp, cell, c) AS (VALUES
-       |$rows),
+       |${keyed(golden.byEmb)(st => indexed(st.cents))}),
        |cents AS (SELECT cell, c FROM gc, fpv WHERE gc.gfp = fpv.fp)""".stripMargin
-  }
 
   /** (vec, cell) dot ranks — corpus argmax cell and query top-nprobe
     * cells, the `IvfCells` tie rule (higher dot first, lower cell on
@@ -197,9 +198,9 @@ private[graft] object AnnOracles {
 
   /** embed_ann_ivf: probed-cell candidate join + round-6 cosine +
     * top-k over the frozen golden quantizer. */
-  def ivfSql(k: Int = 10, nprobe: Int = 16): String =
+  def ivfSql(golden: Golden.Store, k: Int = 10, nprobe: Int = 16): String =
     s"""WITH $BASE,
-       |$CENTS,
+       |${cents(golden)},
        |${cellRanks(nprobe)},
        |cand AS (SELECT DISTINCT qc.qid, cc.vec_id
        |  FROM cc JOIN qc ON cc.cell = qc.cell
@@ -216,9 +217,10 @@ private[graft] object AnnOracles {
 
   /** embed_ann_ivf_sq8: probed-cell int8 scan → k·refine shortlist →
     * exact rerank — the full FAISS IVF-SQ composition re-derived. */
-  def ivfSq8Sql(k: Int = 10, nprobe: Int = 16, refine: Int = 4): String =
+  def ivfSq8Sql(golden: Golden.Store, k: Int = 10, nprobe: Int = 16,
+      refine: Int = 4): String =
     s"""WITH $BASE,
-       |$CENTS,
+       |${cents(golden)},
        |${cellRanks(nprobe)},
        |$CODES,
        |cand AS (
@@ -230,8 +232,8 @@ private[graft] object AnnOracles {
        |${rerankTail(k, k * refine)}""".stripMargin
 
   // ------------------------------------------------------------------
-  // PQ family — frozen golden codebooks ([[GoldenAnnPq]], same
-  // fingerprint dispatch and drift alarm as the coarse quantizer)
+  // PQ family — frozen golden codebooks (same fingerprint dispatch
+  // and drift alarm as the coarse quantizer)
   // ------------------------------------------------------------------
 
   /** `Pq.unit` replay: x · (1/√Σx²), the exact multiply-by-reciprocal
@@ -243,15 +245,12 @@ private[graft] object AnnOracles {
 
   /** A codebook family as a VALUES relation (gfp, j, c, cent) +
     * fingerprint dispatch, one row per (fixture, subspace, codeword). */
-  private def bookValues(name: String,
-      byFp: Map[Long, Array[Array[Array[Double]]]]): String = {
-    val rows = byFp.toSeq.sortBy(_._1).flatMap { case (fp, books) =>
-      books.toSeq.zipWithIndex.flatMap { case (book, j) =>
-        book.toSeq.zipWithIndex.map { case (cent, c) =>
-          s"(CAST($fp AS BIGINT), $j, $c, [${cent.map(dbl).mkString(",")}])"
-        }
-      }
-    }.mkString(",\n")
+  private def bookValues(name: String, golden: Golden.Store)(
+      books: Golden.State => Golden.Books): String = {
+    val rows = keyed(golden.byEmb) { st =>
+      val b = books(st)
+      b.indices.flatMap(j => indexed(b(j)).map(e => s"$j, $e"))
+    }
     s"""${name}0(gfp, j, c, cent) AS (VALUES
        |$rows),
        |$name AS (SELECT j, c, cent FROM ${name}0, fpv
@@ -277,11 +276,12 @@ private[graft] object AnnOracles {
   /** embed_ann_pq: flat PQ — per-subspace argmin codes over the frozen
     * books, ADC scoring (Σ_j table lookups, summed in j order exactly
     * like `PqAdcScore`), k·refine shortlist, exact rerank. */
-  def pqSql(k: Int = 10, refine: Int = 8, dsub: Int = 8): String =
+  def pqSql(golden: Golden.Store, k: Int = 10, refine: Int = 8,
+      dsub: Int = 8): String =
     s"""WITH $BASE,
-       |fpv AS (SELECT $FP AS fp),
+       |${Golden.EmbFingerprintSql},
        |$UNIT,
-       |${bookValues("bks", GoldenAnnPq.flatByFingerprint)},
+       |${bookValues("bks", golden)(_.flat)},
        |pcodes AS (SELECT vec_id, j, c AS code FROM (
        |    SELECT n.vec_id, b.j, b.c,
        |      ROW_NUMBER() OVER (PARTITION BY n.vec_id, b.j
@@ -309,12 +309,12 @@ private[graft] object AnnOracles {
     * shortlist, exact rerank. Every CTE is written out literally — no
     * string surgery (the r17 regex-splice version shipped unbindable
     * SQL, VERDICT r17 §wrong-2). */
-  def ivfPqSql(k: Int = 10, nprobe: Int = 16, refine: Int = 8,
-      dsub: Int = 8): String =
+  def ivfPqSql(golden: Golden.Store, k: Int = 10, nprobe: Int = 16,
+      refine: Int = 8, dsub: Int = 8): String =
     s"""WITH $BASE,
-       |$CENTS,
+       |${cents(golden)},
        |$UNIT,
-       |${bookValues("rbks", GoldenAnnPq.residByFingerprint)},
+       |${bookValues("rbks", golden)(_.resid)},
        |ucd AS (SELECT n.vec_id, ct.cell, list_dot_product(n.u, ct.c) AS d
        |  FROM un n CROSS JOIN cents ct),
        |cc AS (SELECT vec_id, cell FROM (
@@ -361,21 +361,16 @@ private[graft] object AnnOracles {
   // ------------------------------------------------------------------
 
   /** sample_cluster_balanced_ivf: cells from the frozen nlist=8 golden
-    * quantizer ([[GoldenModels.cents8ByFingerprint]], retrain-pinned by
-    * AnnGoldenSpec), then the DEFINED per-cell semantics — cell_size =
-    * members, n_kept = min(cell_size, k): DuckDB re-derives both from
-    * the raw embeddings, independently checking the operator's cap. */
-  def clusterBalancedIvfSql(k: Int = 25): String = {
-    val rows = GoldenModels.cents8ByFingerprint.toSeq.sortBy(_._1).flatMap {
-      case (fp, cents) => cents.zipWithIndex.map { case (c, i) =>
-        s"(CAST($fp AS BIGINT), $i, [${c.map(dbl).mkString(",")}])"
-      }
-    }.mkString(",\n")
+    * quantizer (`State.cents8`, retrain-pinned by AnnGoldenSpec), then
+    * the DEFINED per-cell semantics — cell_size = members, n_kept =
+    * min(cell_size, k): DuckDB re-derives both from the raw embeddings,
+    * independently checking the operator's cap. */
+  def clusterBalancedIvfSql(golden: Golden.Store, k: Int = 25): String =
     s"""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
        |  FROM embeddings),
-       |fpv AS (SELECT $FP AS fp),
+       |${Golden.EmbFingerprintSql},
        |g8(gfp, cell, c) AS (VALUES
-       |$rows),
+       |${keyed(golden.byEmb)(st => indexed(st.cents8))}),
        |cents AS (SELECT cell, c FROM g8, fpv WHERE g8.gfp = fpv.fp),
        |cd AS (SELECT b.vec_id, ct.cell, list_dot_product(b.v, ct.c) AS d
        |  FROM base b CROSS JOIN cents ct),
@@ -389,23 +384,19 @@ private[graft] object AnnOracles {
        |  LEAST(COUNT(*), $k) AS n_kept,
        |  TRUE AS cap_ok
        |FROM cc GROUP BY cell""".stripMargin
-  }
 
-  /** quality_classifier: the frozen logistic weights
-    * ([[GoldenModels.qualityByFingerprint]], retrain-pinned) applied to
-    * features DuckDB recomputes from the text — the exact
-    * `QualityModel.featureColumns` vocabulary (token diversity,
+  /** quality_classifier: the frozen logistic weights (`State.quality`,
+    * retrain-pinned) applied to features DuckDB recomputes from the
+    * text — the exact `QualityModel.featureColumns` vocabulary (token diversity,
     * stopword ratio, their product, log1p chars) with the linear term
     * associated exactly like `linearColumn`'s foldLeft. Stopwords are
     * counted as list tokens (spec-pinned equal to the regexp count the
-    * Spark side uses for codegen). Dispatch fingerprint: COUNT(*) +
-    * SUM(length(text)) — doc_ids repeat across fixtures, texts don't. */
-  def qualityClassifierSql: String = {
-    val rows = GoldenModels.qualityByFingerprint.toSeq.sortBy(_._1).map {
-      case (fp, w) =>
-        s"(CAST($fp AS BIGINT), ${dbl(w.bias)}, ${w.w.map(dbl).mkString(", ")})"
-    }.mkString(",\n")
-    s"""WITH fpv AS (SELECT COUNT(*) + SUM(length(text)) AS fp FROM documents),
+    * Spark side uses for codegen). Dispatched on the documents
+    * fingerprint ([[Golden.docFingerprint]]). */
+  def qualityClassifierSql(golden: Golden.Store): String = {
+    val rows = keyed(golden.byDoc)(st =>
+      Seq((st.quality.bias +: st.quality.w).map(dbl).mkString(", ")))
+    s"""WITH ${Golden.DocFingerprintSql},
        |gw0(gfp, b, w1, w2, w3, w4) AS (VALUES
        |$rows),
        |gw AS (SELECT b, w1, w2, w3, w4 FROM gw0, fpv WHERE gw0.gfp = fpv.fp),

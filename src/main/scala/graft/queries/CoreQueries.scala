@@ -11,11 +11,23 @@ import graft.sources.SparseIO
   * against. Column names/types must match the oracle exactly — every
   * computed column is aliased identically on both sides, and oracle
   * doubles are CAST explicitly (DuckDB's SUM(DECIMAL) would otherwise
-  * produce a different result type than Spark's DOUBLE). */
-final case class QueryDef(
-    name: String,
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+  * produce a different result type than Spark's DOUBLE). The oracle is
+  * a function of the [[Golden.Store]] its SQL may replay trained state
+  * from; only the six queries declared with `replaying` read it. */
+final class QueryDef private (
+    val name: String,
+    val fn: (SparkSession, String) => DataFrame,
+    val oracle: Golden.Store => Option[String])
+
+object QueryDef {
+  def apply(name: String, fn: (SparkSession, String) => DataFrame,
+      oracle: Option[String]): QueryDef = new QueryDef(name, fn, _ => oracle)
+
+  /** A query whose oracle replays trained state from the golden store. */
+  def replaying(name: String, fn: (SparkSession, String) => DataFrame)(
+      oracle: Golden.Store => String): QueryDef =
+    new QueryDef(name, fn, g => Some(oracle(g)))
+}
 
 /** The reference-surface operator queries (SURVEY §2), each built on
   * [[SparseRel]] over the driver test tables and paired with its ANSI

@@ -64,7 +64,7 @@ object PipelineQueries {
   /** Shared golden-hash pair oracle for the two perceptual-dedup
     * gates (image dHash / audio envelope hash): DuckDB re-derives the
     * exact Hamming <= 3 pair relation from a frozen per-id hash table
-    * ([[GoldenMediaHashes]]) plus the 16 planted twins at
+    * ([[Golden.media]]) plus the 16 planted twins at
     * [[twinOffsetBatch]], with the planted-recall flag riding every
     * row. One definition so the pair semantics (id ordering, hamming
     * cast, planted-count subquery) cannot silently diverge between
@@ -147,9 +147,9 @@ object PipelineQueries {
   }
 
   /** The IVF coarse quantizer (nlist 32) plus residual-PQ codebooks, at
-    * the trainers' defaults — the values frozen in [[GoldenAnnCents]] /
-    * [[GoldenAnnPq]] that the `embed_ann_ivf*` oracles replay. Consumers
-    * take its `coarse` and swap the code. */
+    * the trainers' defaults — the values frozen in [[Golden]] that the
+    * `embed_ann_ivf*` oracles replay. Consumers take its `coarse` and
+    * swap the code. */
   private[graft] val Ann = Stage[AnnIndex]("ann",
       Some(StageRow("ann_stage_cents",
         "IVF cents + PQ books trained; embed_ann_ivf* rows read the memo",
@@ -788,7 +788,7 @@ object PipelineQueries {
       // shortlist → exact rerank with no model constants at all
       Some(AnnOracles.sq8Sql())),
 
-    QueryDef("embed_ann_ivf_sq8",
+    QueryDef.replaying("embed_ann_ivf_sq8",
       (s, dir) => {
         // IVF cell pruning × SQ8 quantized scoring + exact rerank —
         // the FAISS-IVF-SQ composition, the shape a 100 TB ANN
@@ -803,31 +803,31 @@ object PipelineQueries {
         val queries = annQueries(emb)
         stage(s, dir, Ann).copy(code = AnnIndex.Sq8)
           .search(emb, "vec_id", "embedding", queries, k = 10)
-      },
+      }
       // r17: full oracle — the frozen golden quantizer
-      // (GoldenAnnCents, fingerprint-dispatched; AnnGoldenSpec is the
+      // (Golden, fingerprint-dispatched; AnnGoldenSpec is the
       // drift alarm) lets DuckDB re-derive cells, the int8 scan and
       // the rerank independently
-      Some(AnnOracles.ivfSq8Sql())),
+    )(AnnOracles.ivfSq8Sql(_)),
 
-    QueryDef("embed_ann_pq",
+    QueryDef.replaying("embed_ann_pq",
       (s, dir) => {
         // product quantization + ADC + exact rerank — the FAISS-PQ
         // memory shape: the scan streams m=8 BYTES per vector (4×
         // less than SQ8, 32× less than float64 at d=32); each query
         // carries a precomputed m·ksub lookup table so scoring is m
         // array reads per pair. r18: full oracle — the frozen golden
-        // codebooks (GoldenAnnPq, fingerprint-dispatched; AnnGoldenSpec
+        // codebooks (Golden, fingerprint-dispatched; AnnGoldenSpec
         // retrains them per fixture) let DuckDB re-derive the codes,
         // the ADC scan and the rerank independently.
         val emb = Tables.embeddings(s, dir)
         val queries = annQueries(emb)
         AnnIndex.fit(emb, "vec_id", "embedding", "PQ")
           .search(emb, "vec_id", "embedding", queries, k = 10)
-      },
-      Some(AnnOracles.pqSql())),
+      }
+    )(AnnOracles.pqSql(_)),
 
-    QueryDef("embed_ann_ivf_pq",
+    QueryDef.replaying("embed_ann_ivf_pq",
       (s, dir) => {
         // IVF cell pruning × residual product quantization + exact
         // rerank — the full FAISS IndexIVFPQ composition and THE
@@ -835,8 +835,8 @@ object PipelineQueries {
         // m=8 bytes per vector; scoring is ⟨unit(q), c_cell⟩ (one
         // scalar per probed cell, broadcast side) + m ADC table
         // lookups on the shared residual codebooks. r18: full oracle —
-        // frozen golden centroids + residual codebooks (GoldenAnnCents
-        // / GoldenAnnPq, fingerprint-dispatched, AnnGoldenSpec-pinned)
+        // frozen golden centroids + residual codebooks (Golden,
+        // fingerprint-dispatched, AnnGoldenSpec-pinned)
         // let DuckDB re-derive cells, residual codes, the ADC scan and
         // the rerank independently. Recall additionally floored by
         // embed_ann_recall (0.875-0.900 at nprobe=16/32, refine=8).
@@ -845,8 +845,8 @@ object PipelineQueries {
         val queries = annQueries(emb)
         stage(s, dir, Ann)
           .search(emb, "vec_id", "embedding", queries, k = 10)
-      },
-      Some(AnnOracles.ivfPqSql())),
+      }
+    )(AnnOracles.ivfPqSql(_)),
 
     QueryDef("embed_nearest_dup",
       (s, dir) => {
@@ -925,16 +925,16 @@ object PipelineQueries {
              |      FROM embeddings)
              |GROUP BY label, pos""".stripMargin)),
 
-    QueryDef("embed_ann_ivf",
+    QueryDef.replaying("embed_ann_ivf",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         val queries = annQueries(emb)
         stage(s, dir, Ann).copy(code = AnnIndex.Flat)
           .search(emb, "vec_id", "embedding", queries, k = 10)
-      },
+      }
       // r17: full oracle over the frozen golden quantizer — see
       // embed_ann_ivf_sq8
-      Some(AnnOracles.ivfSql())),
+    )(AnnOracles.ivfSql(_)),
 
     // ---------------- text analysis ----------------
 
@@ -1395,8 +1395,8 @@ object PipelineQueries {
     // (id_a, id_b, hamming) plus the in-query planted-recall flag —
     // deterministic-gated (r16): the oracle rebuilds the identical
     // pair relation from the FROZEN golden dHash table
-    // ([[GoldenMediaHashes]] — the hashes are pure functions of
-    // doc_id through the real codec, frozen as literals so the oracle
+    // ([[Golden.media]] — the hashes are pure functions of
+    // doc_id through the real codec, frozen as committed text so the oracle
     // stays independent of the code under test) via xor/bit_count in
     // DuckDB. A recall collapse flips phash_ok on every row; a band
     // join/codec/plumbing drift hash-mismatches the pair values.
@@ -1421,8 +1421,8 @@ object PipelineQueries {
         // needed (unlike nearDuplicatesChecked's pair-free case)
         dup.crossJoin(broadcast(ok))
       },
-      Some(goldenPairOracleSql(GoldenMediaHashes.ImgHex,
-        GoldenMediaHashes.ImgTwinHex, "phash_ok"))),
+      Some(goldenPairOracleSql(Golden.media.img, Golden.media.imgTwin,
+        "phash_ok"))),
 
     // the SCALE shape of perceptual dedup: identical hashes group
     // FIRST (exact-dedup step), only distinct-hash representatives
@@ -1458,7 +1458,7 @@ object PipelineQueries {
         out.crossJoin(broadcast(ok))
       },
       Some(s"""WITH RECURSIVE g AS (SELECT i AS m,
-             |    ('0x' || substr('${GoldenMediaHashes.ImgHex}', CAST(i*16+1 AS INT), 16))::UBIGINT AS ph
+             |    ('0x' || substr('${Golden.media.img}', CAST(i*16+1 AS INT), 16))::UBIGINT AS ph
              |  FROM range(0, 5000) t(i)),
              |base AS (SELECT d.doc_id AS id, g.ph FROM documents d JOIN g ON g.m = d.doc_id),
              |grp AS (SELECT ph, MIN(id) AS rep FROM base GROUP BY ph),
@@ -1493,8 +1493,8 @@ object PipelineQueries {
         val ok = planted.agg((count(lit(1)) === 16L).as("audio_ok"))
         dup.crossJoin(broadcast(ok))
       },
-      Some(goldenPairOracleSql(GoldenMediaHashes.AudHex,
-        GoldenMediaHashes.AudTwinHex, "audio_ok"))),
+      Some(goldenPairOracleSql(Golden.media.aud, Golden.media.audTwin,
+        "audio_ok"))),
 
     // ---------------- windows & sketches ----------------
 
@@ -1825,7 +1825,7 @@ object PipelineQueries {
     // IS the per-cell cap invariant — n_kept must equal
     // min(cell_size, k) in every cell (`cap_ok`), with the spec
     // pinning semantics against the per-cluster window definition.
-    QueryDef("sample_cluster_balanced_ivf",
+    QueryDef.replaying("sample_cluster_balanced_ivf",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
@@ -1841,11 +1841,11 @@ object PipelineQueries {
           .join(sizes, Seq("cluster"))
           .select(col("cluster"), col("cell_size"), col("n_kept"),
             (col("n_kept") === least(col("cell_size"), lit(25L))).as("cap_ok"))
-      },
+      }
       // r18: full oracle — frozen golden nlist=8 quantizer
-      // (GoldenModels, AnnGoldenSpec-pinned) lets DuckDB re-derive
+      // (Golden, AnnGoldenSpec-pinned) lets DuckDB re-derive
       // cells, sizes and the cap independently
-      Some(AnnOracles.clusterBalancedIvfSql())),
+    )(AnnOracles.clusterBalancedIvfSql(_)),
 
     QueryDef("shuffle_order",
       (s, dir) => Sampling.shuffleOrder(Tables.documents(s, dir)
@@ -2442,7 +2442,7 @@ object PipelineQueries {
     // (quality >= 0.451117), so DuckDB recomputes the split sizes and
     // heldout positives exactly, and the learned model's held-out
     // accuracy rides as a certified boolean.
-    QueryDef("quality_classifier",
+    QueryDef.replaying("quality_classifier",
       (s, dir) => {
         // per-doc scores from the frozen model (no SQL oracle: the
         // weights come from driver-side gradient descent; the model's
@@ -2452,12 +2452,12 @@ object PipelineQueries {
         QualityModel.score(docs, "doc_id", "text", w)
           .select(col("doc_id"), round(col("score"), 6).as("score"),
             col("predicted_good"))
-      },
-      // r18: full oracle — frozen golden weights (GoldenModels,
+      }
+      // r18: full oracle — frozen golden weights (Golden,
       // AnnGoldenSpec retrains them per fixture) + features DuckDB
       // recomputes from the text; the held-out-accuracy certificate
       // stays quality_classifier_cert
-      Some(AnnOracles.qualityClassifierSql)),
+    )(AnnOracles.qualityClassifierSql),
 
     QueryDef("quality_classifier_cert",
       (s, dir) => labeledQualityDocs(s, dir).filter(col("is_train"))

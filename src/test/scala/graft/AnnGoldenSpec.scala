@@ -1,100 +1,84 @@
 package graft
 
+import java.nio.file.Paths
+
 import graft.operators.Similarity
 import graft.operators.Similarity.AnnIndex
-import graft.queries.{GoldenAnnCents, GoldenAnnPq, GoldenModels, PipelineQueries, Tables}
+import graft.queries.{Golden, PipelineQueries, Tables}
 
-/** Drift alarm for the frozen golden IVF quantizers backing the
-  * embed_ann_ivf / embed_ann_ivf_sq8 DuckDB oracles
-  * ([[graft.queries.GoldenAnnCents]]): retrain from each shipped
-  * fixture with the parameters of the staged ANN index
-  * (`PipelineQueries.Ann`) and compare bit-for-bit — both the bare
-  * trainers and that stage itself, whose values the oracles assume.
-  * A failure means the trainer arithmetic or the fixture changed —
-  * regenerate via `Test/runMain graft.AnnGoldenScratch`
-  * ONLY after confirming the change is intentional (a silent refresh
-  * would turn the oracle gate vacuous). Also pins the fingerprint
-  * dispatch: every fixture must hit a DISTINCT frozen entry, because
-  * the oracle selects centroids by fingerprint computed from the
-  * data. */
+/** Drift alarm for the committed golden state ([[graft.queries.Golden]])
+  * behind the six model-backed DuckDB oracles: retrain from each shipped
+  * fixture with the parameters of the registered queries and compare
+  * bit-for-bit — both the bare trainers and the staged ANN index
+  * (`PipelineQueries.Ann`) whose values the oracles assume. A failure
+  * means the trainer arithmetic or the fixture changed — regenerate
+  * with the command the message names ONLY after confirming the change
+  * is intentional (a silent refresh would turn the oracle gate vacuous).
+  * The fingerprint lookups pin the dispatch: every fixture must hit its
+  * own committed state, because the oracle selects it by the
+  * fingerprint computed from the data. */
 class AnnGoldenSpec extends SparkSpecBase {
 
-  private val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1")
+  private val sfDirs = Seq("sf0.001", "sf0.01", "sf0.1")
+    .map(n => Paths.get(sf).resolveSibling(n).toString)
+  private val regen = s"Regenerate via ${Golden.Regenerate} only if intentional"
+
+  private def committed(dir: String): Golden.State = {
+    val fp = Golden.embFingerprint(Tables.embeddings(spark, dir))
+    Golden.committed.byEmb.getOrElse(fp,
+      fail(s"embeddings fingerprint $fp of $dir is not committed — fixture changed? $regen"))
+  }
+
+  private def assertMatEqual(got: Golden.Mat, frozen: Golden.Mat, what: String,
+      dir: String): Unit = {
+    assert(got.length === frozen.length, s"$what row count drift at $dir")
+    got.zip(frozen).zipWithIndex.foreach { case ((g, f), i) =>
+      assert(java.util.Arrays.equals(g, f),
+        s"$what row $i drifted at $dir — trainer or fixture change? $regen")
+    }
+  }
+
+  private def assertBooksEqual(got: Golden.Books, frozen: Golden.Books,
+      what: String, dir: String): Unit = {
+    assert(got.length === frozen.length, s"$what m drift at $dir")
+    got.zip(frozen).zipWithIndex.foreach { case ((g, f), j) =>
+      assertMatEqual(g, f, s"$what book $j", dir)
+    }
+  }
 
   test("every fixture's fingerprint hits a distinct frozen quantizer") {
-    val fps = sfDirs.map(dir =>
-      GoldenAnnCents.fingerprint(Tables.embeddings(spark, dir)))
-    assert(fps.distinct.size === sfDirs.size,
-      s"fingerprint collision across fixtures: $fps")
-    fps.foreach(fp => assert(GoldenAnnCents.byFingerprint.contains(fp),
-      s"fingerprint $fp missing from the freeze — fixture changed? " +
-        "Regenerate via Test/runMain graft.AnnGoldenScratch"))
+    val states = sfDirs.map(committed)
+    assert(states.map(_.embFp).distinct.size === sfDirs.size,
+      s"fingerprint collision across fixtures: ${states.map(_.embFp)}")
+    assert(states.map(_.name) === Seq("sf0.001", "sf0.01", "sf0.1"))
   }
 
   test("retrained coarse quantizers match the freeze bit-for-bit") {
     sfDirs.foreach { dir =>
       val emb = Tables.embeddings(spark, dir)
-      val fp = GoldenAnnCents.fingerprint(emb)
-      val frozen = GoldenAnnCents.byFingerprint(fp)
-      val trained = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        nlist = 32)
-      val staged = PipelineQueries.stage(spark, dir, PipelineQueries.Ann).coarse
-        .getOrElse(fail(s"staged ANN index has no coarse quantizer at $dir"))
-      Seq("trained" -> trained, "staged" -> staged).foreach { case (what, got) =>
-        assert(got.length === frozen.length, s"$what nlist drift at $dir")
-        got.zip(frozen).zipWithIndex.foreach { case ((g, f), i) =>
-          assert(java.util.Arrays.equals(g, f),
-            s"$what centroid $i drifted at $dir — trainer or fixture change? " +
-              "Regenerate via Test/runMain graft.AnnGoldenScratch " +
-              "only if intentional")
-        }
-      }
-    }
-  }
-
-  private def assertBooksEqual(got: Array[Array[Array[Double]]],
-      frozen: Array[Array[Array[Double]]], what: String, dir: String): Unit = {
-    assert(got.length === frozen.length, s"$what m drift at $dir")
-    got.zip(frozen).zipWithIndex.foreach { case ((gb, fb), j) =>
-      assert(gb.length === fb.length, s"$what book $j ksub drift at $dir")
-      gb.zip(fb).zipWithIndex.foreach { case ((g, f), c) =>
-        assert(java.util.Arrays.equals(g, f),
-          s"$what codeword ($j,$c) drifted at $dir — trainer or fixture " +
-            "change? Regenerate via Test/runMain graft.AnnGoldenScratch " +
-            "only if intentional")
-      }
+      val frozen = committed(dir).cents
+      assertMatEqual(Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
+        nlist = 32), frozen, "trained centroid", dir)
+      assertMatEqual(PipelineQueries.stage(spark, dir, PipelineQueries.Ann).coarse
+        .getOrElse(fail(s"staged ANN index has no coarse quantizer at $dir")),
+        frozen, "staged centroid", dir)
     }
   }
 
   test("retrained small models (nlist=8 cents, quality weights) match " +
       "the freeze bit-for-bit; document fingerprints are distinct") {
-    import org.apache.spark.sql.functions._
-    val docFps = sfDirs.map { dir =>
-      Tables.documents(spark, dir)
-        .agg((count(lit(1)) + sum(length(col("text")))).as("fp"))
-        .head().getLong(0)
-    }
+    val docFps = sfDirs.map(dir => Golden.docFingerprint(Tables.documents(spark, dir)))
     assert(docFps.distinct.size === sfDirs.size,
       s"document fingerprint collision across fixtures: $docFps")
     sfDirs.zip(docFps).foreach { case (dir, docFp) =>
       val emb = Tables.embeddings(spark, dir)
-      val embFp = GoldenAnnCents.fingerprint(emb)
-      val got8 = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        nlist = 8)
-      val froz8 = GoldenModels.cents8ByFingerprint(embFp)
-      assert(got8.length === froz8.length, s"cents8 nlist drift at $dir")
-      got8.zip(froz8).zipWithIndex.foreach { case ((g, f), i) =>
-        assert(java.util.Arrays.equals(g, f),
-          s"cents8 centroid $i drifted at $dir — regenerate via " +
-            "Test/runMain graft.ModelGoldenScratch only if intentional")
-      }
+      assertMatEqual(Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
+        nlist = 8), committed(dir).cents8, "cents8 centroid", dir)
+      val frozW = Golden.committed.byDoc.getOrElse(docFp,
+        fail(s"documents fingerprint $docFp of $dir is not committed. $regen")).quality
       val gotW = PipelineQueries.trainedQualityWeights(spark, dir)
-      val frozW = GoldenModels.qualityByFingerprint(docFp)
-      assert(gotW.bias === frozW.bias &&
-          java.util.Arrays.equals(gotW.w, frozW.w),
-        s"quality weights drifted at $dir — regenerate via " +
-          "Test/runMain graft.ModelGoldenScratch only if intentional")
+      assert(gotW.bias === frozW.bias && java.util.Arrays.equals(gotW.w, frozW.w),
+        s"quality weights drifted at $dir. $regen")
     }
   }
 
@@ -102,17 +86,14 @@ class AnnGoldenSpec extends SparkSpecBase {
       "bit-for-bit") {
     sfDirs.foreach { dir =>
       val emb = Tables.embeddings(spark, dir)
-      val fp = GoldenAnnCents.fingerprint(emb)
-      assertBooksEqual(
-        Similarity.trainPqCodebooks(emb, "vec_id", "embedding"),
-        GoldenAnnPq.flatByFingerprint(fp), "flat-PQ", dir)
-      assertBooksEqual(
-        Similarity.trainIvfPqCodebooks(emb, "vec_id", "embedding",
-          GoldenAnnCents.byFingerprint(fp)),
-        GoldenAnnPq.residByFingerprint(fp), "residual-PQ", dir)
+      val frozen = committed(dir)
+      assertBooksEqual(Similarity.trainPqCodebooks(emb, "vec_id", "embedding"),
+        frozen.flat, "flat-PQ", dir)
+      assertBooksEqual(Similarity.trainIvfPqCodebooks(emb, "vec_id", "embedding",
+        frozen.cents), frozen.resid, "residual-PQ", dir)
       PipelineQueries.stage(spark, dir, PipelineQueries.Ann).code match {
-        case AnnIndex.Pq(books) => assertBooksEqual(books,
-          GoldenAnnPq.residByFingerprint(fp), "staged residual-PQ", dir)
+        case AnnIndex.Pq(books) =>
+          assertBooksEqual(books, frozen.resid, "staged residual-PQ", dir)
         case c => fail(s"staged ANN index should be IVF,PQ, has code $c at $dir")
       }
     }

@@ -3,17 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
-import graft.queries.GoldenMediaHashes
+import graft.queries.Golden
+import graft.queries.Golden.hashAt
 
-/** The frozen golden hash tables ([[graft.queries.GoldenMediaHashes]])
+/** The frozen golden hash tables ([[graft.queries.Golden.media]])
   * back the media-dedup oracles — this spec is the drift alarm: it
   * recomputes a sample of every table through the running JVM's real
   * codecs and compares bit-for-bit against the freeze. A failure here
   * means the JVM's PNG/JPEG/WAV codec or Java2D resampler changed —
-  * regenerate via `Test/runMain graft.PairScanScratch` ONLY after
+  * regenerate with the command the message names ONLY after
   * confirming the change is intentional (a silent regeneration would
   * turn the oracle gate vacuous). */
 class MediaGoldenSpec extends SparkSpecBase {
+
+  private val regen = s"codec change? Regenerate via ${Golden.Regenerate} only if intentional"
 
   // 64 base ids spread across the id space + all 16 twins: wide enough
   // to catch any codec drift (a resampler change moves essentially
@@ -29,8 +32,8 @@ class MediaGoldenSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === sampleIds.size)
     sampleIds.foreach { id =>
-      assert(got(id) === GoldenMediaHashes.imgHash(id.toInt),
-        s"image dHash drifted for id=$id — codec change?")
+      assert(got(id) === hashAt(Golden.media.img, id.toInt),
+        s"image dHash drifted for id=$id — $regen")
     }
   }
 
@@ -41,8 +44,8 @@ class MediaGoldenSpec extends SparkSpecBase {
             idsDf.filter(col("doc_id") < 16)), "jpg"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0 until 16).foreach { id =>
-      assert(got(id.toLong) === GoldenMediaHashes.imgTwinHash(id),
-        s"twin dHash drifted for id=$id")
+      assert(got(id.toLong) === hashAt(Golden.media.imgTwin, id),
+        s"twin dHash drifted for id=$id — $regen")
     }
   }
 
@@ -51,16 +54,16 @@ class MediaGoldenSpec extends SparkSpecBase {
         Multimodal.syntheticModulatedAudio(idsDf))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     sampleIds.foreach { id =>
-      assert(got(id) === GoldenMediaHashes.audHash(id.toInt),
-        s"audio hash drifted for id=$id")
+      assert(got(id) === hashAt(Golden.media.aud, id.toInt),
+        s"audio hash drifted for id=$id — $regen")
     }
     val twins = Multimodal.audioEnvelopeHash(spark,
         Multimodal.syntheticModulatedAudio(
           idsDf.filter(col("doc_id") < 16), ampScale = 1.02))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0 until 16).foreach { id =>
-      assert(twins(id.toLong) === GoldenMediaHashes.audTwinHash(id),
-        s"audio twin hash drifted for id=$id")
+      assert(twins(id.toLong) === hashAt(Golden.media.audTwin, id),
+        s"audio twin hash drifted for id=$id — $regen")
     }
   }
 }

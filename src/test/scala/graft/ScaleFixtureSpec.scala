@@ -10,7 +10,7 @@ import graft.ScaleFixture.OFFSET
 import graft.core.SparseRel
 import graft.operators.Similarity
 import graft.operators.Similarity.AnnIndex
-import graft.queries.Tables
+import graft.queries.{Golden, Tables}
 
 /** The closed forms of a [[ScaleFixture]] derivation (sf0.001 at
   * reps = 3), checked through the registered queries Bench times: row
@@ -18,7 +18,8 @@ import graft.queries.Tables
   * `user_id` range selects whole copies through a pushed scan filter,
   * the LSH certificate holds on both dirs, and a persisted IVF-PQ
   * index over the derived corpus stays partition-pruned and above its
-  * recall floor. An id that would merge replicas fails the guard. */
+  * recall floor. The derived dir carries its own golden state, and an
+  * id that would merge replicas fails the guard. */
 class ScaleFixtureSpec extends SparkSpecBase {
 
   private val reps = 3
@@ -105,6 +106,15 @@ class ScaleFixtureSpec extends SparkSpecBase {
     val recall = (exact & got.toSet).size.toDouble / exact.size
     assert(recall >= graft.queries.PipelineQueries.recallCert("ann_ivf_pq_recall").floor,
       s"recall $recall")
+  }
+
+  test("ScaleFixture: _golden is the derived dir's own trained state") {
+    val Seq(own) = Golden.own(big)
+    val retrained = Golden.train(spark, big)
+    assert((own.embFp, own.docFp) === (retrained.embFp, retrained.docFp))
+    assert(own.sameVectors(retrained) && own.sameQuality(retrained))
+    assert(!Golden.committed.byEmb.contains(own.embFp))
+    assert(!Golden.committed.byDoc.contains(own.docFp))
   }
 
   test("ScaleFixture refuses an id that would merge replicas") {

@@ -22,7 +22,8 @@ def main():
               "lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.loads((out_dir / "oracle_sql.json").read_text())
-    n_pass = n_fail = 0
+    n_pass = 0
+    failed = []
     for name in sorted(p.name for p in out_dir.iterdir() if p.is_dir()):
         got_rel = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
         got_cols = sorted(got_rel.columns)
@@ -37,14 +38,14 @@ def main():
         exp_cols = sorted(exp_rel.columns)
         if exp_cols != got_cols:
             print(f"  {name:24s} FAIL schema: got={got_cols} exp={exp_cols}")
-            n_fail += 1
+            failed.append(name)
             continue
         exp = con.execute(
             f"SELECT {', '.join(exp_cols)} FROM exp_rel ORDER BY ALL"
         ).fetchall()
         if len(got) != len(exp):
             print(f"  {name:24s} FAIL rows: got={len(got)} exp={len(exp)}")
-            n_fail += 1
+            failed.append(name)
             continue
         mism = 0
         first = None
@@ -55,12 +56,14 @@ def main():
                     first = (g, e)
         if mism:
             print(f"  {name:24s} FAIL values: {mism}/{len(got)} rows differ; first {first}")
-            n_fail += 1
+            failed.append(name)
         else:
             print(f"  {name:24s} OK rows={len(got)}")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    # the failing rows ride the summary line, so one line names every miss
+    print(f"== {n_pass} pass, {len(failed)} fail" +
+          (f": {', '.join(failed)}" if failed else ""))
+    sys.exit(1 if failed else 0)
 
 if __name__ == "__main__":
     main()
