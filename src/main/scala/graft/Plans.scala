@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization rounds' plan-evidence tool (plans/r{N}/<query>_{tag}.txt).
   *
@@ -15,14 +13,7 @@ object Plans {
     val outDir = java.nio.file.Paths.get(args(0))
     val tag = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(logLevel = "ERROR")
     java.nio.file.Files.createDirectories(outDir)
     val queries = SparkEntry.queries
     val names =

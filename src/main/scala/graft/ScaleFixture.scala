@@ -124,14 +124,7 @@ object ScaleFixture {
   def main(args: Array[String]): Unit = {
     require(args.length == 3,
       "usage: runMain graft.ScaleFixture <sfDir> <reps> <outDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     try write(spark, args(0), args(1).toInt, args(2))
     finally spark.stop()
   }

@@ -30,28 +30,6 @@ import graft.functions.{CentroidDots, IvfCells, Quantize}
   */
 object Similarity {
 
-  /** Dedicated bounded pool for the driver-side quantizer trainers
-    * (k-means restarts, PQ subspace Lloyd loops) — r22. These ran on
-    * the ForkJoinPool commonPool (width = cores − 1): on a loaded host
-    * the cores-wide burst contends with everything else on the box and
-    * the quiet-box ~2× training win evaporated (the r21 driver read
-    * ann_stage_cents flat under load). A pool of max(2, cores/4)
-    * daemon threads still covers the real task counts (4 restarts /
-    * 8 subspaces) while leaving headroom under contention. Reductions
-    * stay in submission order, so results remain bit-for-bit the
-    * serial trainer's. */
-  private lazy val trainPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(2, Runtime.getRuntime.availableProcessors() / 4),
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-train-${n.incrementAndGet()}")
-          t.setDaemon(true)
-          t
-        }
-      })
-
   /** Cast an array<float> to array<double> for stable math — a plain
     * array `Cast` (whole-stage-codegen'd), not a `transform` lambda
     * (higher-order functions evaluate interpreted and break the
@@ -463,30 +441,18 @@ object Similarity {
       .select(col("qid"), (-col("best.negid")).as("nn"), col("best.cos").as("cos"))
   }
 
-  /** Spherical k-means centroids for IVF coarse quantization, trained
-    * on a DETERMINISTIC BOUNDED sample of the corpus — the standard
-    * IVF training step (FAISS-style: train on a sample, assign at
-    * scale). One driver collect of ≤ `sampleSize` vectors chosen by
-    * hash order (`TakeOrderedAndProject` — a top-k, never a full
-    * sort), then seeded k-means++ init + Lloyd iterations locally:
-    * at 100 TB the training cost is unchanged, and cell assignment
-    * stays fully distributed. Vectors (and centroids after every
-    * update) are L2-normalized so argmax-dot = argmax-cosine, matching
-    * the search metric. Deterministic: hash-ordered sample, splitmix64
-    * seeding, fixed iteration count — re-runs and resumes agree.
-    * Falls back to [[hyperplanes]] directions when the corpus has
-    * fewer than `nlist` usable vectors (`dim`, when > 0, fixes that
-    * fallback's dimension without a deriveDim job). */
   /** The shared trainer sample: ≤`sampleSize` non-empty vectors in
     * xxhash64(id) order — a deterministic, partitioning-independent
-    * pseudo-random draw both quantizer trainers use. Vectors with a
+    * pseudo-random draw all three quantizer trainers use. Vectors with a
     * null or non-finite element are excluded: the ENCODE expressions
     * null such rows out per their contract, but a driver-side
     * `getSeq[Double].toArray` would throw unboxing a null slot — a
-    * single corrupt vector must not crash quantizer training. */
+    * single corrupt vector must not crash quantizer training. Vectors
+    * of different lengths raise: k-means over one slice of them would
+    * silently drop the longer vectors' tails. */
   private def hashOrderedSample(corpus: DataFrame, idCol: String,
-      vecCol: String, sampleSize: Int): Array[Array[Double]] =
-    corpus
+      vecCol: String, sampleSize: Int): Array[Array[Double]] = {
+    val sample = corpus
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .filter(col("v").isNotNull && size(col("v")) > 0 &&
         graft.functions.Quantize.allFinite(col("v")))
@@ -494,9 +460,14 @@ object Similarity {
       .limit(sampleSize)
       .collect()
       .map(_.getSeq[Double](1).toArray)
+    val dims = sample.map(_.length).distinct
+    require(dims.length <= 1, s"sampled vectors of $vecCol differ in dimension: " +
+      dims.sorted.mkString(", "))
+    sample
+  }
 
-  /** Deterministic uniform-[0,1) stream (splitmix64), shared by the
-    * k-means++ seeding of both quantizer trainers. */
+  /** Deterministic uniform-[0,1) stream (splitmix64) behind the
+    * k-means++ seeding of the quantizer trainers. */
   private def splitmixUnit(seed: Long): () => Double = {
     var state = seed
     () => {
@@ -505,125 +476,168 @@ object Similarity {
     }
   }
 
-  def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, sampleSize: Int = 10000, iters: Int = 15,
-      restarts: Int = 4, seed: Long = 0x9E3779B97F4A7C15L,
-      dim: Int = -1): Array[Array[Double]] = {
-    val sample = hashOrderedSample(corpus, idCol, vecCol, sampleSize)
-    def normalize(v: Array[Double]): Array[Double] = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      val n = math.sqrt(s)
-      if (n == 0.0) v else v.map(_ / n)
+  /** The trainers' fixed settings: the seed of their k-means++ draws,
+    * IVF's Lloyd rounds and restarts, and residual PQ's Lloyd rounds. */
+  private val TrainSeed = 0x9E3779B97F4A7C15L
+  private val IvfIters = 15
+  private val IvfRestarts = 4
+  private val ResidualIters = 10
+
+  /** Σ a(aOff + t)·b(t) over the length of `b`. */
+  private def dotAt(a: Array[Double], aOff: Int, b: Array[Double]): Double = {
+    var s = 0.0; var t = 0
+    while (t < b.length) { s += a(aOff + t) * b(t); t += 1 }
+    s
+  }
+
+  /** `v` divided by its L2 norm; a zero vector comes back as itself. */
+  private def normalize(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(dotAt(v, 0, v))
+    if (n == 0.0) v else v.map(_ / n)
+  }
+
+  /** The PQ training points: each nonzero vector of `sample` times the
+    * inverse of its norm (direction is what cosine scores); zero-norm
+    * vectors are dropped. A product, not [[normalize]]'s quotient: the
+    * two round differently, and the golden codebooks hold this one. */
+  private def unitNonzero(sample: Array[Array[Double]]): Array[Array[Double]] =
+    sample.flatMap { v =>
+      val ss = dotAt(v, 0, v)
+      if (ss == 0.0) None else { val inv = 1.0 / math.sqrt(ss); Some(v.map(_ * inv)) }
     }
-    val pts = sample.map(normalize)
+
+  /** How near centroid `c` is to the `[off, off + c.length)` slice of
+    * `p`, higher is nearer: the dot for spherical k-means, −d² for
+    * Euclidean (negation is exact, so argmax −d² is argmin d²). */
+  private def score(p: Array[Double], off: Int, c: Array[Double],
+      spherical: Boolean): Double =
+    if (spherical) dotAt(p, off, c)
+    else {
+      var s = 0.0; var t = 0
+      while (t < c.length) { val df = p(off + t) - c(t); s += df * df; t += 1 }
+      -s
+    }
+
+  /** The index of the best-scoring centroid (the first on ties) and its
+    * [[score]]. */
+  private def nearest(p: Array[Double], off: Int, cents: Array[Array[Double]],
+      spherical: Boolean): (Int, Double) = {
+    var best = 0; var bestS = score(p, off, cents(0), spherical); var j = 1
+    while (j < cents.length) {
+      val s = score(p, off, cents(j), spherical)
+      if (s > bestS) { bestS = s; best = j }
+      j += 1
+    }
+    (best, bestS)
+  }
+
+  /** One k-means run over the `[off, off + dsub)` slice of every point —
+    * the k-means++ seeding and Lloyd loop of all three quantizer
+    * trainers. Seeding reads one pre-drawn uniform per centroid
+    * (k = `draws.length`): the first picks a point uniformly, each later
+    * one picks by D² sampling on the distance to the nearest chosen
+    * centroid (1 − dot spherical, d² Euclidean). Each of the `iters`
+    * Lloyd rounds assigns every point to its [[nearest]] centroid, then
+    * moves each non-empty cell's centroid to the normalized sum of its
+    * points (spherical) or their mean (Euclidean); an emptied cell keeps
+    * its centroid. Pure driver-side compute on the bounded sample, so
+    * the cost is constant in corpus size. */
+  private def kmeans(pts: Array[Array[Double]], off: Int, dsub: Int,
+      draws: Array[Double], iters: Int, spherical: Boolean): Array[Array[Double]] = {
+    val k = draws.length
+    def dist(p: Array[Double], c: Array[Double]): Double = {
+      val s = score(p, off, c, spherical)
+      if (spherical) 1.0 - s else -s
+    }
+    def slice(i: Int) = java.util.Arrays.copyOfRange(pts(i), off, off + dsub)
+    val cents = new Array[Array[Double]](k)
+    cents(0) = slice((draws(0) * pts.length).toInt.min(pts.length - 1))
+    val bestD = pts.map(dist(_, cents(0)))
+    var c = 1
+    while (c < k) {
+      var r = draws(c) * bestD.sum
+      var pick = 0
+      while (pick < pts.length - 1 && r > bestD(pick)) { r -= bestD(pick); pick += 1 }
+      cents(c) = slice(pick)
+      var i = 0
+      while (i < pts.length) {
+        val d = dist(pts(i), cents(c))
+        if (d < bestD(i)) bestD(i) = d
+        i += 1
+      }
+      c += 1
+    }
+    var it = 0
+    while (it < iters) {
+      val sums = Array.fill(k)(new Array[Double](dsub))
+      val counts = new Array[Int](k)
+      pts.foreach { p =>
+        val j = nearest(p, off, cents, spherical)._1
+        val acc = sums(j)
+        var t = 0
+        while (t < dsub) { acc(t) += p(off + t); t += 1 }
+        counts(j) += 1
+      }
+      var j = 0
+      while (j < k) {
+        if (counts(j) > 0)
+          cents(j) = if (spherical) normalize(sums(j)) else sums(j).map(_ / counts(j))
+        j += 1
+      }
+      it += 1
+    }
+    cents
+  }
+
+  /** `f(0)`, …, `f(n - 1)` as parallel tasks on the common pool,
+    * results in index order — so the trainers stay bit-for-bit the
+    * serial loop's. */
+  private def inParallel[T](n: Int)(f: Int => T): IndexedSeq[T] =
+    (0 until n).map(i => java.util.concurrent.CompletableFuture.supplyAsync(() => f(i)))
+      .map(_.join())
+
+  /** Spherical k-means centroids for IVF coarse quantization, trained
+    * on a DETERMINISTIC BOUNDED sample of the corpus — the standard
+    * IVF training step (FAISS-style: train on a sample, assign at
+    * scale). One driver collect of ≤ `sampleSize` vectors chosen by
+    * hash order (`TakeOrderedAndProject` — a top-k, never a full
+    * sort), then [[kmeans]] locally: at 100 TB the training cost is
+    * unchanged, and cell assignment stays fully distributed. Vectors
+    * (and centroids after every update) are L2-normalized so
+    * argmax-dot = argmax-cosine, matching the search metric; zero-norm
+    * vectors stay in the sample. The best of four restarts by final
+    * quantization error Σ(1 − best dot) wins: cell placement bounds IVF
+    * recall, since a bad seeding wastes cells on one dense region and
+    * splits true neighbourhoods across cells, which nprobe then can't
+    * recover. Deterministic: hash-ordered sample, splitmix64 seeding,
+    * fixed iteration count — re-runs and resumes agree. Falls back to
+    * [[hyperplanes]] directions when the corpus has fewer than `nlist`
+    * usable vectors (`dim`, when > 0, fixes that fallback's dimension
+    * without a deriveDim job). */
+  def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, sampleSize: Int = 10000, dim: Int = -1): Array[Array[Double]] = {
+    val pts = hashOrderedSample(corpus, idCol, vecCol, sampleSize).map(normalize)
     if (pts.length < nlist)
       return hyperplanes(nlist,
         pts.headOption.map(_.length)
           .getOrElse(if (dim > 0) dim else deriveDim(corpus, vecCol)))
         .map(normalize)
-    def dotL(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val dim0 = pts(0).length
-    // One full k-means run (k-means++ D² seeding + `iters` Lloyd
-    // rounds) from one seed; returns the centroids AND the final
-    // quantization error Σ(1 − best-dot) so restarts can pick the
-    // best local optimum. All driver-side on the ≤sampleSize sample —
-    // cost is constant in corpus size, so restarts are cheap where
-    // they matter (cell placement quality bounds IVF recall: a bad
-    // seeding wastes cells on one dense region and splits true
-    // neighbourhoods across cells, which nprobe then can't recover).
-    def runOnce(runSeed: Long): (Array[Array[Double]], Double) = {
-      // k-means++ seeding on cosine distance (1 - dot of unit
-      // vectors): D² sampling with a deterministic splitmix64 stream
-      val nextUnit = splitmixUnit(runSeed)
-      val cents = new Array[Array[Double]](nlist)
-      cents(0) = pts((nextUnit() * pts.length).toInt.min(pts.length - 1))
-      val bestD = pts.map(p => 1.0 - dotL(p, cents(0)))
-      var c = 1
-      while (c < nlist) {
-        val total = bestD.sum
-        var r = nextUnit() * total
-        var pick = 0
-        while (pick < pts.length - 1 && r > bestD(pick)) { r -= bestD(pick); pick += 1 }
-        cents(c) = pts(pick)
-        var i = 0
-        while (i < pts.length) {
-          val d = 1.0 - dotL(pts(i), cents(c))
-          if (d < bestD(i)) bestD(i) = d
-          i += 1
-        }
-        c += 1
-      }
-      // Lloyd: argmax-cosine assignment, mean + renormalize update; an
-      // emptied cell keeps its previous centroid (deterministic)
-      var it = 0
+    // the restarts run in parallel; the reduction keeps restart order
+    // with strict <, so the first best run wins a tie
+    inParallel(IvfRestarts) { r =>
+      val next = splitmixUnit(TrainSeed + r * 0x100000001B3L)
+      val cents = kmeans(pts, 0, pts(0).length, Array.fill(nlist)(next()),
+        IvfIters, spherical = true)
       var err = 0.0
-      while (it < iters) {
-        val sums = Array.fill(nlist)(new Array[Double](dim0))
-        val counts = new Array[Int](nlist)
-        err = 0.0
-        var i = 0
-        while (i < pts.length) {
-          var best = 0; var bestS = dotL(pts(i), cents(0)); var j = 1
-          while (j < nlist) {
-            val s = dotL(pts(i), cents(j))
-            if (s > bestS) { bestS = s; best = j }
-            j += 1
-          }
-          err += 1.0 - bestS
-          val acc = sums(best)
-          var d = 0
-          while (d < dim0) { acc(d) += pts(i)(d); d += 1 }
-          counts(best) += 1
-          i += 1
-        }
-        var j = 0
-        while (j < nlist) {
-          if (counts(j) > 0) cents(j) = normalize(sums(j))
-          j += 1
-        }
-        it += 1
-      }
-      // err is the assignment error ENTERING the last update — one
-      // final assignment pass scores the returned centroids exactly
-      err = 0.0
-      var i = 0
-      while (i < pts.length) {
-        var bestS = dotL(pts(i), cents(0)); var j = 1
-        while (j < nlist) {
-          val s = dotL(pts(i), cents(j))
-          if (s > bestS) bestS = s
-          j += 1
-        }
-        err += 1.0 - bestS
-        i += 1
-      }
+      pts.foreach(p => err += 1.0 - nearest(p, 0, cents, spherical = true)._2)
       (cents, err)
-    }
-    // deterministic restart seeds; runs are independent, so they
-    // execute in PARALLEL on the driver (the trainer is pure local
-    // compute over the bounded sample — restarts were the dominant
-    // serial cost of the staged quantizer training). The reduction
-    // stays in restart order with strict <, keeping the FIRST best
-    // run on ties, so the result is bit-for-bit what the serial loop
-    // produced — re-runs and resumes agree.
-    val runs = (0 until math.max(1, restarts)).toArray.map { r =>
-      val s = if (r == 0) seed else seed + r * 0x100000001B3L
-      java.util.concurrent.CompletableFuture.supplyAsync(() => runOnce(s),
-        trainPool)
-    }.map(_.join())
-    runs.reduceLeft((best, cand) => if (cand._2 < best._2) cand else best)._1
+    }.reduceLeft((best, cand) => if (cand._2 < best._2) cand else best)._1
   }
 
   /** Product-quantization codebooks: `m` per-subspace codebooks of up
     * to `ksub` centroids each (`[m][ksub][dim/m]`), trained with
-    * per-subspace Euclidean k-means (k-means++ seeding, deterministic
-    * splitmix64 stream — the [[trainIvfCentroids]] discipline) on the
-    * SAME hash-ordered ≤`sampleSize` sample, L2-normalized so that
+    * per-subspace Euclidean k-means ([[pqBooks]]) on the SAME
+    * hash-ordered ≤`sampleSize` sample, L2-normalized so that
     * Σ_j ⟨q_j, c_{j,code_j}⟩ approximates full cosine. `dim` must
     * split evenly into `m` subspaces (the FAISS constraint; checked
     * only against a real sampled dimension — an empty corpus returns
@@ -633,8 +647,7 @@ object Similarity {
     * just smaller. `ksub` is capped at 256: a PQ code is one byte. */
   def trainPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 256, sampleSize: Int = 10000,
-      iters: Int = 10, seed: Long = 0x9E3779B97F4A7C15L,
-      dim: Int = -1): Array[Array[Array[Double]]] = {
+      iters: Int = 10, dim: Int = -1): Array[Array[Array[Double]]] = {
     require(m >= 1, "m must be >= 1")
     require(ksub >= 1 && ksub <= 256,
       s"ksub must be in [1, 256] (a PQ code is one byte), got $ksub")
@@ -657,102 +670,23 @@ object Similarity {
     }
     val d = sample.head.length
     require(d % m == 0, s"dim $d must be divisible by m=$m subspaces")
-    val dsub = d / m
-    // unit-normalize (direction is what cosine scores); drop zero-norm
-    val pts = sample.flatMap { v =>
-      var ss = 0.0; var i = 0
-      while (i < v.length) { ss += v(i) * v(i); i += 1 }
-      if (ss == 0.0) None
-      else { val inv = 1.0 / math.sqrt(ss); Some(v.map(_ * inv)) }
-    }
-    if (pts.isEmpty)
-      return Array.fill(m)(Array(new Array[Double](dsub)))
-    kmeansSubspaces(pts, m, dsub, ksub, iters, seed)
+    pqBooks(unitNonzero(sample), m, d / m, ksub, iters)
   }
 
-  /** Per-subspace Euclidean k-means over full-dim points — the shared
-    * codebook trainer of [[trainPqCodebooks]] (raw unit vectors) and
-    * [[trainIvfPqCodebooks]] (cell residuals). One deterministic
-    * splitmix64 stream shared across subspaces in order, so extraction
-    * preserved the flat-PQ trainer's outputs bit-for-bit. */
-  private def kmeansSubspaces(pts: Array[Array[Double]], m: Int,
-      dsub: Int, ksub: Int, iters: Int,
-      seed: Long): Array[Array[Array[Double]]] = {
-    val nextUnit = splitmixUnit(seed)
-    // The shared stream is consumed ONLY by seeding, exactly k draws
-    // per subspace (one per centroid), in subspace order — so the
-    // whole draw sequence is pre-computed here and the (independent)
-    // per-subspace trainings run in PARALLEL on the driver while
-    // consuming their own slice of it. Bit-for-bit the serial
-    // trainer's output; subspace training was the dominant serial
-    // cost of PQ codebook training (m×ksub Lloyd runs on one core).
-    val kDraws = math.min(ksub, pts.length)
-    val draws = Array.fill(m * kDraws)(nextUnit())
-    def d2(a: Array[Double], aOff: Int, b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < b.length) { val df = a(aOff + i) - b(i); s += df * df; i += 1 }
-      s
-    }
-    Array.tabulate(m) { j =>
-      java.util.concurrent.CompletableFuture.supplyAsync(() => {
-      var drawAt = j * kDraws
-      def nextDraw(): Double = { val v = draws(drawAt); drawAt += 1; v }
-      val off = j * dsub
-      val k = math.min(ksub, pts.length)
-      // k-means++ D² seeding per subspace, same deterministic stream
-      val cents = new Array[Array[Double]](k)
-      cents(0) = java.util.Arrays.copyOfRange(pts((nextDraw() * pts.length).toInt
-        .min(pts.length - 1)), off, off + dsub)
-      val bestD = pts.map(p => d2(p, off, cents(0)))
-      var c = 1
-      while (c < k) {
-        val total = bestD.sum
-        var r = nextDraw() * total
-        var pick = 0
-        while (pick < pts.length - 1 && r > bestD(pick)) { r -= bestD(pick); pick += 1 }
-        cents(c) = java.util.Arrays.copyOfRange(pts(pick), off, off + dsub)
-        var i = 0
-        while (i < pts.length) {
-          val dd = d2(pts(i), off, cents(c))
-          if (dd < bestD(i)) bestD(i) = dd
-          i += 1
-        }
-        c += 1
-      }
-      // Lloyd in the subspace; an emptied cell keeps its centroid
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(k)(new Array[Double](dsub))
-        val counts = new Array[Int](k)
-        var i = 0
-        while (i < pts.length) {
-          var best = 0; var bestS = d2(pts(i), off, cents(0)); var cc = 1
-          while (cc < k) {
-            val s = d2(pts(i), off, cents(cc))
-            if (s < bestS) { bestS = s; best = cc }
-            cc += 1
-          }
-          val acc = sums(best)
-          var t = 0
-          while (t < dsub) { acc(t) += pts(i)(off + t); t += 1 }
-          counts(best) += 1
-          i += 1
-        }
-        var cc = 0
-        while (cc < k) {
-          if (counts(cc) > 0) {
-            val mean = sums(cc)
-            var t = 0
-            while (t < dsub) { mean(t) /= counts(cc); t += 1 }
-            cents(cc) = mean
-          }
-          cc += 1
-        }
-        it += 1
-      }
-      cents
-      }, trainPool)
-    }.map(_.join())
+  /** The `m` subspace codebooks of [[trainPqCodebooks]] (unit vectors)
+    * and [[trainIvfPqCodebooks]] (cell residuals): Euclidean [[kmeans]]
+    * over each `dsub`-wide slice, k = min(ksub, points). One splitmix64
+    * stream pre-draws k seeding uniforms per subspace in subspace
+    * order, so the subspaces train in parallel, each reading its own
+    * slice of the draws. No points give one zero centroid per subspace. */
+  private def pqBooks(pts: Array[Array[Double]], m: Int, dsub: Int,
+      ksub: Int, iters: Int): Array[Array[Array[Double]]] = {
+    if (pts.isEmpty) return Array.fill(m)(Array(new Array[Double](dsub)))
+    val k = math.min(ksub, pts.length)
+    val next = splitmixUnit(TrainSeed)
+    val draws = Array.fill(m * k)(next())
+    inParallel(m)(j => kmeans(pts, j * dsub, dsub, draws.slice(j * k, j * k + k),
+      iters, spherical = false)).toArray
   }
 
   /** RESIDUAL PQ codebooks for IVF-PQ (the FAISS IndexIVFPQ trainer):
@@ -769,46 +703,33 @@ object Similarity {
     * decomposition ⟨q,v⟩ ≈ ⟨q,c⟩ + ⟨q,r̂⟩ needs the raw residual. */
   def trainIvfPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], m: Int = 8, ksub: Int = 256,
-      sampleSize: Int = 10000, iters: Int = 10,
-      seed: Long = 0x9E3779B97F4A7C15L): Array[Array[Array[Double]]] = {
+      sampleSize: Int = 10000): Array[Array[Array[Double]]] = {
     require(m >= 1, "m must be >= 1")
     require(ksub >= 1 && ksub <= 256,
       s"ksub must be in [1, 256] (a PQ code is one byte), got $ksub")
     require(centroids.nonEmpty, "ivf-pq needs at least one coarse centroid")
     val d = centroids.head.length
     require(d % m == 0, s"dim $d must be divisible by m=$m subspaces")
-    val dsub = d / m
     val sample = hashOrderedSample(corpus, idCol, vecCol, sampleSize)
-    // unit-normalize (drop zero-norm), assign to the nearest coarse
-    // centroid (argmax dot, ties keep the lower cell — the IvfCells /
-    // PqResidualCodes contract), keep the residual. Zero residuals
-    // (a vector equal to its centroid) are valid k-means points.
-    val pts = sample.flatMap { v =>
-      require(v.length == d,
-        s"sampled vector dim ${v.length} != coarse centroid dim $d")
-      var ss = 0.0; var i = 0
-      while (i < v.length) { ss += v(i) * v(i); i += 1 }
-      if (ss == 0.0) None
-      else {
-        val inv = 1.0 / math.sqrt(ss)
-        val u = v.map(_ * inv)
-        var cell = 0; var bestS = Double.NegativeInfinity; var c = 0
-        while (c < centroids.length) {
-          val cent = centroids(c)
-          var acc = 0.0; var t = 0
-          while (t < d) { acc += u(t) * cent(t); t += 1 }
-          if (acc > bestS) { bestS = acc; cell = c }
-          c += 1
-        }
-        val cent = centroids(cell)
-        i = 0
-        while (i < d) { u(i) -= cent(i); i += 1 }
-        Some(u)
+    sample.foreach(v => require(v.length == d,
+      s"sampled vector dim ${v.length} != coarse centroid dim $d"))
+    // assign each unit vector to its nearest coarse centroid (argmax
+    // dot, ties keep the lower cell — the IvfCells / PqResidualCodes
+    // contract) and keep the residual. Zero residuals (a vector equal
+    // to its centroid) are valid k-means points.
+    val residuals = unitNonzero(sample).map { u =>
+      var cell = 0; var bestS = Double.NegativeInfinity; var c = 0
+      while (c < centroids.length) {
+        val s = dotAt(u, 0, centroids(c))
+        if (s > bestS) { bestS = s; cell = c }
+        c += 1
       }
+      val cent = centroids(cell)
+      var i = 0
+      while (i < d) { u(i) -= cent(i); i += 1 }
+      u
     }
-    if (pts.isEmpty)
-      return Array.fill(m)(Array(new Array[Double](dsub)))
-    kmeansSubspaces(pts, m, dsub, ksub, iters, seed)
+    pqBooks(residuals, m, d / m, ksub, ResidualIters)
   }
 
   /** One approximate-nearest-neighbour index, composed the way the

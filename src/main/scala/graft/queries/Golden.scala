@@ -178,10 +178,7 @@ object Golden {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: runMain graft.queries.Golden <outDir> <sfDir> [<sfDir>...]")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     try {
       val out = Files.createDirectories(Paths.get(args(0)))
       writeStates(out.resolve("states.tsv"), args.tail.map(train(spark, _)).toSeq)

@@ -351,12 +351,7 @@ object TrailDb {
 object TdbConvert {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: TdbConvert <in.tdb> <outDir> [field]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     val ev = TrailDb.events(spark, args(0))
     ev.write.mode("overwrite").parquet(s"${args(1)}/events")
     println(s"[tdb] wrote ${spark.read.parquet(s"${args(1)}/events").count()} " +

@@ -16,8 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
+  /** One event-log row; `value` is None where the log holds NULL. */
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-      event_type: String, value: Double)
+      event_type: String, value: Option[Double])
 
   final case class SessionState(count: Long, valueSum: Double, lastTs: Long)
 
@@ -69,10 +70,12 @@ object EventStream {
 
   /** Custom per-user session state via mapGroupsWithState: counts and
     * sums events per user — the arbitrary-stateful-operator escape
-    * hatch for logic windows can't express. Pass `timeoutMs > 0` to arm
-    * a processing-time timeout that closes idle sessions (note the
-    * engine then triggers empty maintenance batches on a timer; leave
-    * it off for deterministic drain-and-stop runs like tests). */
+    * hatch for logic windows can't express. A NULL `value` sums as 0.0:
+    * the reference's rule that an absent value is 0.0 (SURVEY §1). Pass
+    * `timeoutMs > 0` to arm a processing-time timeout that closes idle
+    * sessions (note the engine then triggers empty maintenance batches
+    * on a timer; leave it off for deterministic drain-and-stop runs
+    * like tests). */
   def userSessions(spark: SparkSession, events: DataFrame,
       timeoutMs: Long = 0L): Dataset[UserSession] = {
     import spark.implicits._
@@ -94,7 +97,7 @@ object EventStream {
             var last = prev.lastTs
             batch.foreach { e =>
               count += 1
-              sum += e.value
+              sum += e.value.getOrElse(0.0)
               last = math.max(last, e.ts.getTime)
             }
             state.update(SessionState(count, sum, last))

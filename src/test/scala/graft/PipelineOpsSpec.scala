@@ -869,6 +869,17 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(!codes(1L) && !codes(2L) && codes(3L) && codes(4L) && codes(5L))
   }
 
+  test("quantizer trainers reject a sample whose vectors differ in dimension") {
+    import spark.implicits._
+    val mixed = Seq((1L, Seq(1.0, 0.0, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.0, 0.0)),
+      (3L, Seq(0.0, 0.0, 1.0, 0.0, 0.0))).toDF("vec_id", "v")
+    for (train <- Seq(() => Similarity.trainIvfCentroids(mixed, "vec_id", "v", nlist = 2),
+        () => Similarity.trainPqCodebooks(mixed, "vec_id", "v", m = 2))) {
+      val ex = intercept[IllegalArgumentException](train())
+      assert(ex.getMessage.contains("differ in dimension: 4, 5"), ex.getMessage)
+    }
+  }
+
   test("IVF ANN recall vs brute force") {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))

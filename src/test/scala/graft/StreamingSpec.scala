@@ -33,10 +33,10 @@ class StreamingSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
     val events = Seq(
-      Event(1, ts(0), 1, "click", 1.0),
-      Event(2, ts(10), 1, "click", 2.0),
-      Event(3, ts(50), 2, "view", 3.0),
-      Event(4, ts(59), 2, "click", 4.0))
+      Event(1, ts(0), 1, "click", Some(1.0)),
+      Event(2, ts(10), 1, "click", Some(2.0)),
+      Event(3, ts(50), 2, "view", Some(3.0)),
+      Event(4, ts(59), 2, "click", Some(4.0)))
     val q = EventStream.toMemorySink(
       EventStream.tumblingCounts(input.toDF(), "1 hour", "2 hours"),
       "stream_tumbling")
@@ -113,14 +113,14 @@ class StreamingSpec extends SparkSpecBase {
       // across micro-batches: the bridging 10:20 event arrives last.
       // user 2: exactly 30 min gap → SAME session (strict > contract).
       // user 3: 30 min + 1 s gap → two sessions.
-      input.addData(Event(1, ts(0), 1, "click", 1.0),
-        Event(3, Timestamp.valueOf("2024-01-01 11:30:00"), 1, "view", 1.0),
-        Event(4, ts(0), 2, "click", 1.0),
-        Event(5, Timestamp.valueOf("2024-01-01 10:30:00"), 2, "view", 1.0),
-        Event(6, ts(0), 3, "click", 1.0),
-        Event(7, Timestamp.valueOf("2024-01-01 10:30:01"), 3, "view", 1.0))
+      input.addData(Event(1, ts(0), 1, "click", Some(1.0)),
+        Event(3, Timestamp.valueOf("2024-01-01 11:30:00"), 1, "view", Some(1.0)),
+        Event(4, ts(0), 2, "click", Some(1.0)),
+        Event(5, Timestamp.valueOf("2024-01-01 10:30:00"), 2, "view", Some(1.0)),
+        Event(6, ts(0), 3, "click", Some(1.0)),
+        Event(7, Timestamp.valueOf("2024-01-01 10:30:01"), 3, "view", Some(1.0)))
       q.processAllAvailable()
-      input.addData(Event(2, ts(20), 1, "click", 1.0))
+      input.addData(Event(2, ts(20), 1, "click", Some(1.0)))
       q.processAllAvailable()
       val last = spark.table("stream_gap")
         .groupBy(col("user_id"))
@@ -145,14 +145,14 @@ class StreamingSpec extends SparkSpecBase {
       }
       val t1000 = ts(0); val t1010 = ts(10)
       // batch 1: user 1 session [10:00, 10:10]; nothing can close yet
-      input.addData(Event(1, t1000, 1, "click", 1.0),
-        Event(2, t1010, 1, "click", 1.0))
+      input.addData(Event(1, t1000, 1, "click", Some(1.0)),
+        Event(2, t1010, 1, "click", Some(1.0)))
       q.processAllAvailable()
       assert(spark.table("stream_gap_wm").count() === 0)
       // batch 2 moves max event time to 20:00 → watermark 19:00 takes
       // effect NEXT batch; 19:00 > 10:10 + 30 min, so batch 3 closes
       // the first session (watermark progress via timeout or new data)
-      input.addData(Event(3, Timestamp.valueOf("2024-01-01 20:00:00"), 1, "view", 1.0))
+      input.addData(Event(3, Timestamp.valueOf("2024-01-01 20:00:00"), 1, "view", Some(1.0)))
       q.processAllAvailable()
       // batch 3's 23:00 event advances the watermark to 22:00, which
       // passes the [20:00, 20:00] interval's close time (20:30). The
@@ -161,7 +161,7 @@ class StreamingSpec extends SparkSpecBase {
       // while [23:00, 23:00] stays open (23:30 > 22:00). A timeout
       // keyed off the max open close time would hold it until 23:30,
       // the laggard-session bug this pins against.
-      input.addData(Event(4, Timestamp.valueOf("2024-01-01 23:00:00"), 1, "view", 1.0))
+      input.addData(Event(4, Timestamp.valueOf("2024-01-01 23:00:00"), 1, "view", Some(1.0)))
       q.processAllAvailable()
       val t2000us = us(Timestamp.valueOf("2024-01-01 20:00:00"))
       val closed = spark.table("stream_gap_wm")
@@ -172,13 +172,15 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("gapSessionsDrained equals the batch LAG sessionization on the fixture") {
-    val ev = graft.queries.Tables.events(spark, sf)
-    val streamed = EventStream.gapSessionsDrained(spark, ev)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+  /** user_id → (sessions, events) of a sessions frame. */
+  private def sessionsOf(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
+    df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  /** The batch LAG sessionization: a gap over 30 min starts a session. */
+  private def batchSessions(ev: org.apache.spark.sql.DataFrame) = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"))
-    val batch = ev
+    sessionsOf(ev
       .withColumn("prev", lag(col("ts"), 1).over(w))
       .withColumn("new_s",
         when(col("prev").isNull ||
@@ -186,9 +188,23 @@ class StreamingSpec extends SparkSpecBase {
             graft.functions.Ts.epochMicros(col("prev")) > 1800000000L, 1L)
           .otherwise(0L))
       .groupBy(col("user_id"))
-      .agg(sum(col("new_s")).as("sessions"), count(lit(1)).as("events"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(streamed === batch)
+      .agg(sum(col("new_s")).as("sessions"), count(lit(1)).as("events")))
+  }
+
+  test("gapSessionsDrained equals the batch LAG sessionization on the fixture") {
+    val ev = graft.queries.Tables.events(spark, sf)
+    val streamed = sessionsOf(EventStream.gapSessionsDrained(spark, ev))
+    assert(streamed === batchSessions(ev))
+    assert(streamed.nonEmpty)
+  }
+
+  test("a NULL event value drains through gapSessionsDrained like the batch sessions") {
+    val ev = graft.queries.Tables.events(spark, sf)
+    val first = ev.agg(min(col("event_id"))).head().getLong(0)
+    val hostile = ev.withColumn("value", when(col("event_id") =!= first, col("value")))
+    assert(hostile.filter(col("value").isNull).count() === 1)
+    val streamed = sessionsOf(EventStream.gapSessionsDrained(spark, hostile))
+    assert(streamed === batchSessions(hostile))
     assert(streamed.nonEmpty)
   }
 
@@ -482,14 +498,15 @@ class StreamingSpec extends SparkSpecBase {
       .queryName("stream_sessions")
       .outputMode("update").start()
     try {
-      input.addData(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(1), 7, "view", 2.0))
+      input.addData(Event(1, ts(0), 7, "click", Some(1.0)), Event(2, ts(1), 7, "view", Some(2.0)))
       q.processAllAvailable()
-      input.addData(Event(3, ts(2), 7, "click", 4.0))
+      // a NULL value counts as an event and sums as 0.0
+      input.addData(Event(3, ts(2), 7, "click", Some(4.0)), Event(4, ts(3), 7, "view", None))
       q.processAllAvailable()
       val last = spark.table("stream_sessions")
         .filter(col("user_id") === 7)
         .orderBy(col("events").desc).limit(1).collect().head
-      assert(last.getAs[Long]("events") === 3L)
+      assert(last.getAs[Long]("events") === 4L)
       assert(last.getAs[Double]("value_sum") === 7.0)
     } finally q.stop()
   }

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: compare graft.Verify
 parquet dumps against the DuckDB oracle SQL, column-name-sorted,
-row-sorted, exact-match (with a tiny float tolerance fallback report)."""
+row-sorted, exact-match (with a tiny float tolerance fallback report).
+Every query graft.Verify lists in `<outDir>/_failed` (it threw) counts
+as a fail."""
 import json, math, sys
 from pathlib import Path
 
@@ -22,9 +24,13 @@ def main():
               "lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.loads((out_dir / "oracle_sql.json").read_text())
+    threw = (out_dir / "_failed").read_text().split()
     n_pass = 0
     failed = []
-    for name in sorted(p.name for p in out_dir.iterdir() if p.is_dir()):
+    for name in threw:
+        print(f"  {name:24s} FAIL threw in graft.Verify")
+        failed.append(name)
+    for name in sorted(p.name for p in out_dir.iterdir() if p.is_dir() and p.name not in threw):
         got_rel = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
         got_cols = sorted(got_rel.columns)
         got = con.execute(
