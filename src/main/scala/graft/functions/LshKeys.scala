@@ -218,7 +218,7 @@ object IvfCells {
   * each cell's score when a caller supplies non-unit centroids,
   * biasing the shortlist, because [[PqResidualCodes]]' residual
   * v − c is defined against the RAW centroid; (2) built per QUERY
-  * row on the broadcast side, one expression for all nlist cells —
+  * row on the query side, one expression for all nlist cells —
   * the nlist-separate-cosine-expressions chain it replaces embedded
   * a d-element literal per centroid and at warehouse-scale nlist
   * (~√N, thousands) that catalyst tree defeats codegen. Same

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   *
   * Search uses ASYMMETRIC distance computation (ADC): the query stays
   * un-quantized; [[PqAdcTable]] computes, once per query row (the
-  * tiny broadcast side), the dot product of each query subvector with
+  * tiny query side, collected on the driver), the dot product of each query subvector with
   * every centroid of that subspace — an array of m·ksub doubles —
   * and [[PqAdcScore]] then scores a corpus code against a query with
   * m table lookups, no float vector involved. Σ_j ⟨q_j, c_{j,code_j}⟩
@@ -150,7 +150,7 @@ case class PqCodes(child: Expression,
 
 /** Per-query ADC table: m·ksub doubles, entry j·ksub + c =
   * ⟨unit(qv)_j, codebook_j(c)⟩. Computed once per QUERY row — the
-  * broadcast side — so the corpus-side score is m lookups. */
+  * query side — so the corpus-side score is m lookups. */
 case class PqAdcTable(child: Expression,
     codebooks: Array[Array[Array[Double]]])
     extends UnaryExpression {

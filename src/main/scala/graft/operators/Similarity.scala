@@ -1,8 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, In,
+  InterpretedOrdering, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, MapType, StructField, StructType}
 
 import graft.functions.{CentroidDots, IvfCells, Quantize}
 
@@ -65,13 +72,11 @@ object Similarity {
   }
 
   /** Top `k` rows per query by (cos desc, id tie-break) with a rank
-    * column — the ONE definition of the ranking tail every top-k path
-    * shares, so the rounding/tie-break contract cannot silently
-    * diverge between the exact and approximate paths.
+    * column — the ranking tail of [[bruteForceTopK]] and [[lshTopK]];
+    * [[AnnIndex.search]] ranks by the same order in [[topPerQuery]].
     *
-    * CALLER CONTRACT: `scored` must be shortlist-bounded — candidates
-    * from a bucket/cell equi-join ([[lshTopK]], an IVF [[AnnIndex]])
-    * or a `k·refine` shortlist ([[AnnIndex.search]]); the one exception is
+    * CALLER CONTRACT: `scored` must be bucket-bounded — candidates
+    * from a bucket equi-join ([[lshTopK]]); the one exception is
     * [[bruteForceTopK]], the documented quadratic oracle leg. A
     * `row_number` window partitions all of `scored` by qid, so
     * applying it to an UNBOUNDED scored relation is exactly the
@@ -86,6 +91,34 @@ object Similarity {
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("qid"), col("vec_id"), col("cos"), col("rn"))
+  }
+
+  /** The best `n` rows of each query `0 until nq` in `scored` — (qidx
+    * INT, vec_id, score DOUBLE) — best first, by Spark's own ordering of
+    * `ORDER BY score DESC, vec_id`: NULL sorts last, NaN first under
+    * DESC, and -0.0 equals 0.0. The [[AnnIndex.search]] counterpart of
+    * [[topKByCos]], in ONE job with no shuffle: each task keeps at most
+    * `nq·n` rows, sorted per query, and the partial tops merge on the
+    * driver as the tasks finish (`treeAggregate` at depth 1: a deeper
+    * tree adds a shuffled level). Returns copied rows. */
+  private def topPerQuery(scored: DataFrame, nq: Int, n: Int): Array[Array[InternalRow]] = {
+    val ord = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(2, DoubleType, nullable = true), Descending),
+      SortOrder(BoundReference(1, scored.schema(1).dataType, nullable = true), Ascending)))
+    def keep(top: Array[InternalRow], r: InternalRow): Array[InternalRow] =
+      if (top.length == n && ord.compare(r, top(n - 1)) >= 0) top
+      else {
+        // after every row that ranks before or ties with r
+        val at = top.indexWhere(ord.compare(r, _) < 0) match { case -1 => top.length; case i => i }
+        (top.take(at) :+ r.copy()) ++ top.slice(at, n - 1)
+      }
+    val qe = scored.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("annTopK")) {
+      qe.toRdd.treeAggregate(Array.fill(nq)(Array.empty[InternalRow]))(
+        (tops, r) => { tops(r.getInt(0)) = keep(tops(r.getInt(0)), r); tops },
+        (a, b) => { a.indices.foreach(i => a(i) = b(i).foldLeft(a(i))(keep)); a },
+        depth = 1)
+    }
   }
 
   /** Deterministic pseudo-random hyperplanes: `planes` × `dim` values
@@ -741,18 +774,18 @@ object Similarity {
     *
     *  - `coarse` = Some(centroids) ([[trainIvfCentroids]]) puts every
     *    corpus vector in ONE cell, its nearest centroid, and a query
-    *    scans only its `nprobe` closest cells: the cell equi-join
-    *    yields each (query, candidate) pair at most once. A written
-    *    index holds one parquet file per cell, and for ANY query
-    *    relation — a filtered scan or a literal batch alike — the probe
-    *    join dynamic-partition-prunes the codes scan to the probed
-    *    cells' files, reusing the probe broadcast. Recall is bounded by
-    *    the pruning: 16 of 32
+    *    scans only its `nprobe` closest cells: a scanned row pairs with
+    *    the queries that probe its cell, so each (query, candidate)
+    *    pair is scored at most once. A written index holds one parquet
+    *    file per cell, and for ANY query relation — a filtered scan or
+    *    a literal batch alike — the codes scan reads only the probed
+    *    cells' files, through a static partition filter built from the
+    *    collected query side. Recall is bounded by the pruning: 16 of 32
     *    cells measured 0.888–0.900 top-10 across sf0.001–0.1 for every
     *    code (8 of 16 measured 0.76–0.84 at the same scan fraction;
     *    floored at 0.75 by `embed_ann_recall`). At warehouse scale
     *    raise nlist (~√N, the FAISS rule) and tune nprobe. None scans
-    *    the whole corpus against the broadcast queries.
+    *    the whole corpus against every query.
     *  - `code` is what the scan scores. [[AnnIndex.Flat]] scores the
     *    float vectors exactly and ranks them directly.
     *    [[AnnIndex.Sq8]] scores int8 codes ([[graft.functions.Quantize]],
@@ -761,13 +794,17 @@ object Similarity {
     *    the PQ books encode the cell RESIDUAL
     *    ([[trainIvfPqCodebooks]]) and a pair scores ⟨q,c_cell⟩ + ADC.
     *  - a quantized scan keeps the `k·refine` best candidates per query
-    *    and reranks only those on full-precision cosine: the corpus
-    *    streams once past the broadcast shortlist (at most
-    *    |Q|·k·refine id pairs, the size class of the broadcast
-    *    queries), so no float vector is ever shuffled. SQ8 at refine 4
+    *    and reranks only those on full-precision cosine: the rerank
+    *    scan of the corpus reads only the shortlisted ids' vectors (at
+    *    most |Q|·k·refine, an id filter on the scan), so no float
+    *    vector is ever shuffled. SQ8 at refine 4
     *    measured top-10 recall ≥ 0.98;
     *    PQ defaults to refine 8 because its per-subspace error is
     *    coarser than per-dimension rounding.
+    *
+    * [[search]] is eager and shuffle-free: the query side is
+    * collected on the driver, one scan job ranks in bounded per-task
+    * tops, and the rerank is one more scan (see there).
     *
     * Deterministic throughout: deterministic trainers, argmin/argmax
     * ties keep the lower index, id tie-breaks in shortlist and rerank.
@@ -825,55 +862,95 @@ object Similarity {
       }
     }
 
-    /** Top-`k` neighbours of every (qid, qv) query. The scan reads
-      * `codes` — [[AnnIndex.read]]'s relation for a written index —
-      * or, when null, encodes `corpus` inline; either way `corpus`
-      * feeds only the exact rerank of the shortlist. */
+    /** Top-`k` neighbours of every (qid, qv) query, as (qid, vec_id,
+      * cos, rn) — qid keeps its type in `queries`, vec_id the type of
+      * `idCol`. The scan reads `codes` — [[AnnIndex.read]]'s relation
+      * for a written index — or, when null, encodes `corpus` inline;
+      * either way `corpus` feeds only the exact rerank of the shortlist.
+      *
+      * EAGER: the search runs its jobs when called and returns the
+      * ranked rows as a local relation. A request is three steps with
+      * no shuffle, so no plan it executes holds an Exchange or a Window:
+      *  1. `queries` are collected with each code's per-query input
+      *     (int8 codes, ADC table, centroid dots) and, under IVF, their
+      *     probed cells. These are the same kernels the scan would run,
+      *     so the values are bit-identical, and a literal batch's
+      *     projection folds into its local relation without a job.
+      *     They reach the scan as literals: a written IVF index is read
+      *     only in the probed cells' files (a static `cell IN (…)`
+      *     partition filter), and each scanned row pairs with the
+      *     queries that probe its cell.
+      *  2. ONE scan job ranks: each task keeps the best `k·refine`
+      *     candidates per query (`k` for Flat), and the partial tops
+      *     merge on the driver ([[topPerQuery]]).
+      *  3. the exact rerank reads only the shortlisted ids' vectors
+      *     from `corpus` (an id filter on its scan) and ranks their
+      *     rounded cosine the same way: the float vectors are never
+      *     shuffled, whatever the corpus size.
+      * Each task holds at most |Q|·k·refine rows, and so does the
+      * driver after each merge. */
     def search(corpus: DataFrame, idCol: String, vecCol: String,
         queries: DataFrame, k: Int, nprobe: Int = 16,
         refine: Int = code.refine, codes: DataFrame = null): DataFrame = {
-      // query side (tiny, broadcast): the code's per-query kernel input
-      // — the ADC table is cell-independent, residual books being shared
-      // across cells — and, under IVF, one row per probed cell
-      val (qSide, score) = code match {
-        case Flat => (Seq(col("qv")), round(cosine(col("v"), col("qv")), 6))
-        case Sq8 => (Seq(Quantize.int8(col("qv")).as("qcodes")),
+      // the code's per-query kernel input — the ADC table is
+      // cell-independent, residual books being shared across cells —
+      // and the score of a (corpus row, query) pair
+      val (inputs, score) = code match {
+        case Flat => (Nil, round(cosine(col("v"), col("qv")), 6))
+        case Sq8 => (Seq("qcodes" -> Quantize.int8(col("qv"))),
           Quantize.cosine(col("codes"), col("qcodes")))
         case Pq(books) =>
           val adc = graft.functions.Pq.adcScore(col("pq_codes"), col("qtable"))
-          (graft.functions.Pq.adcTable(col("qv"), books).as("qtable") +:
-            coarse.map(cents => CentroidDots.dots(col("qv"), cents).as("cdots")).toSeq,
+          (("qtable" -> graft.functions.Pq.adcTable(col("qv"), books)) +:
+            coarse.map(cents => "cdots" -> CentroidDots.dots(col("qv"), cents)).toSeq,
             if (coarse.isEmpty) adc else element_at(col("cdots"), col("cell") + 1) + adc)
       }
-      val cellProbes = queries.select((col("qid") +: qSide) ++ coarse.map(cents =>
-        explode(IvfCells.cells(col("qv"), cents, nprobe)).as("cell")): _*)
-      // on a written (cell-partitioned) index, the no-op `cell < nlist`
-      // range filter is what Spark's partition pruning takes as a
-      // selective probe side: the codes scan is pruned to the probed
-      // cells for any query relation, a literal batch included. Inline,
-      // it would only add a cell-kernel call to the scan's inferred filter.
-      val probes = (coarse, Option(codes)) match {
-        case (Some(cents), Some(_)) => cellProbes.filter(col("cell") < cents.length)
-        case _ => cellProbes
+      // 1. the query side on the driver
+      val q = queries.select((col("qid") +: col("qv") +: inputs.map { case (n, c) => c.as(n) }) ++
+        coarse.map(cents => IvfCells.cells(col("qv"), cents, nprobe).as("cells")): _*)
+      val side = q.collect()
+      // query `name` of the (qidx) row: the collected column as a literal
+      def at(name: String): Column = ColumnBridge.column(Literal.create(
+        side.map(_.getAs[Any](name)).toSeq, ArrayType(q.schema(name).dataType)))
+        .getItem(col("qidx"))
+      // per cell, the queries that probe it
+      val probing = coarse.map(cents => Array.tabulate(cents.length)(c => side.indices.filter(i =>
+        Option(side(i).getAs[collection.Seq[Int]]("cells")).exists(_.contains(c))).toArray))
+      // 2. one scan job ranks the (candidate, query) pairs
+      val scan = Option(codes).fold(encode(corpus, idCol, vecCol))(c => probing.fold(c)(p =>
+        c.filter(col("cell").isin(p.indices.filter(p(_).nonEmpty): _*))))
+      val pairs = scan
+        .select(col("*"), explode(probing.fold(typedLit(side.indices.toArray))(p =>
+          typedLit(p).getItem(col("cell")))).as("qidx"))
+        .filter(col("vec_id") =!= at("qid"))
+        .select(col("*") +: ("qv" +: inputs.map(_._1)).map(n => at(n).as(n)): _*)
+        .select(col("qidx"), col("vec_id"), score)
+      val short = topPerQuery(pairs, side.length, if (code == Flat) k else k * refine)
+      val (scored, ranked) = if (code == Flat) (pairs, short) else {
+        // 3. the exact rerank of the shortlisted ids, each paired with
+        // the queries that shortlisted it
+        val shortType = pairs.schema("vec_id").dataType
+        val owners = short.indices.flatMap(i => short(i).map(r => r.get(1, shortType) -> i))
+          .groupMap(_._1)(_._2).toSeq
+        val byId = ColumnBridge.column(Literal(ArrayBasedMapData(owners.map(_._1).toArray,
+            owners.map(o => new GenericArrayData(o._2.toArray)).toArray),
+          MapType(shortType, ArrayType(IntegerType, containsNull = false), valueContainsNull = false)))
+        val reranked = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
+          .filter(ColumnBridge.column(In(ColumnBridge.expression(col("vec_id")),
+            owners.map(o => Literal(o._1, shortType)))))
+          .select(col("v"), col("vec_id"), explode(byId.getItem(col("vec_id"))).as("qidx"))
+          .select(col("qidx"), col("vec_id"), round(cosine(col("v"), at("qv")), 6))
+        (reranked, topPerQuery(reranked, side.length, k))
       }
-      val scan = Option(codes).getOrElse(encode(corpus, idCol, vecCol))
-      val pairs = (if (coarse.isEmpty) scan.crossJoin(broadcast(probes))
-        else scan.join(broadcast(probes), Seq("cell")))
-        .filter(col("vec_id") =!= col("qid"))
-      if (code == Flat)
-        return topKByCos(pairs.select(col("qid"), col("vec_id"), score.as("cos")), k)
-      // the k·refine best (qcos desc, id) candidates per query, then the
-      // exact rerank streams the corpus past them as the broadcast side
-      val wq = Window.partitionBy(col("qid")).orderBy(col("qcos").desc, col("vec_id"))
-      val shortlist = pairs.select(col("qid"), col("vec_id"), score.as("qcos"))
-        .withColumn("qrn", row_number().over(wq))
-        .filter(col("qrn") <= k * refine)
-        .select(col("qid"), col("vec_id"))
-      topKByCos(corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-        .join(broadcast(shortlist), Seq("vec_id"))
-        .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cosine(col("v"), col("qv")), 6).as("cos")), k)
+      val idType = scored.schema("vec_id").dataType
+      val toId = CatalystTypeConverters.createToScalaConverter(idType)
+      val rows = ranked.indices.flatMap(i => ranked(i).indices.map { rn =>
+        val r = ranked(i)(rn)
+        Row(side(i).get(0), toId(r.get(1, idType)), if (r.isNullAt(2)) null else r.getDouble(2), rn + 1)
+      })
+      corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        q.schema("qid"), StructField("vec_id", idType), StructField("cos", DoubleType),
+        StructField("rn", IntegerType, nullable = false))))
     }
   }
 

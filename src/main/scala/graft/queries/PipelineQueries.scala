@@ -833,7 +833,7 @@ object PipelineQueries {
         // rerank — the full FAISS IndexIVFPQ composition and THE
         // billion-vector shape: the scan is nprobe/nlist-pruned AND
         // m=8 bytes per vector; scoring is ⟨unit(q), c_cell⟩ (one
-        // scalar per probed cell, broadcast side) + m ADC table
+        // scalar per probed cell, query side) + m ADC table
         // lookups on the shared residual codebooks. r18: full oracle —
         // frozen golden centroids + residual codebooks (Golden,
         // fingerprint-dispatched, AnnGoldenSpec-pinned)

@@ -47,7 +47,9 @@ object Shards {
     * reads of `path`) with per-shard row counts, rank ranges and an
     * order-insensitive key checksum. The manifest is computed from the
     * data as WRITTEN (read back post-write), so it certifies the files
-    * on disk, not the plan that produced them. Returns the manifest. */
+    * on disk, not the plan that produced them. Both read-backs take
+    * their schema from a footer ([[ParquetCompact.open]]), so neither
+    * starts a schema-inference job. Returns the manifest. */
   def writeTrainingShards(df: DataFrame, keyCol: String, path: String,
       recordsPerShard: Long, seed: String = ""): DataFrame = {
     val spark = df.sparkSession
@@ -56,7 +58,7 @@ object Shards {
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("shuffle_pos"))
       .write.partitionBy("shard").mode("overwrite").parquet(path)
-    val manifest = spark.read.parquet(path)
+    val manifest = ParquetCompact.open(spark, path)
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("shuffle_pos")).as("pos_lo"),
@@ -66,6 +68,6 @@ object Shards {
         expr(s"bit_xor(xxhash64(cast(`$keyCol` as string)))")
           .as("key_checksum"))
     manifest.coalesce(1).write.mode("overwrite").parquet(s"$path/_manifest")
-    spark.read.parquet(s"$path/_manifest")
+    ParquetCompact.open(spark, s"$path/_manifest")
   }
 }

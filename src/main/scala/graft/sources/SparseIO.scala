@@ -106,7 +106,9 @@ object SparseIO {
       (0 until arr.size()).map(arr.get(_).asText())
     }
     // format/schema fields are optional for metadata written by older
-    // versions (parquet-only layout)
+    // versions (parquet-only layout). Parquet takes its schema from a
+    // footer (ParquetCompact.open), so it starts no inference job and
+    // needs no sidecar schema.
     val format = Option(node.get("format")).map(_.asText()).getOrElse("parquet")
     val reader = spark.read.format(format)
     val withSchema = Option(node.get("schema")).map(_.asText()) match {
@@ -120,10 +122,11 @@ object SparseIO {
     // (always-inline layout)
     val universe =
       if (Option(node.get("universeKind")).exists(_.asText() == "deferred"))
-        new ColUniverse.Deferred(spark.read.parquet(s"$path/dims"))
+        new ColUniverse.Deferred(ParquetCompact.open(spark, s"$path/dims"))
       else ColUniverse.Explicit(strings("columnUniverse"))
     SparseRel(
-      withSchema
+      if (format == "parquet") ParquetCompact.open(spark, s"$path/data")
+      else withSchema
         .options(if (format == "csv") Map("header" -> "true") else Map.empty[String, String])
         .load(s"$path/data"),
       strings("indexCols"),

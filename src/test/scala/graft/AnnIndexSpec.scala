@@ -4,15 +4,16 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.IvfCells
 import graft.operators.Similarity
 import graft.operators.Similarity.AnnIndex
 import graft.queries.Tables
 
 /** Every [[AnnIndex]] kind, from one table: a written-then-read index
   * searches exactly like the inline index (cell-partitioned, one file
-  * per cell, and partition-pruned for filtered and literal query
-  * batches alike under IVF), and a missing or empty part of a written
-  * index fails on read with a message naming that part. */
+  * per cell, and read only in the probed cells' files for filtered and
+  * literal query batches alike under IVF), and a missing or empty part
+  * of a written index fails on read with a message naming that part. */
 class AnnIndexSpec extends SparkSpecBase {
 
   private lazy val emb = Tables.embeddings(spark, sf)
@@ -43,6 +44,22 @@ class AnnIndexSpec extends SparkSpecBase {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
 
+  /** The codes scan in `qes` read exactly the files of the cells
+    * `queries` probe at `nprobe`, one per cell, selected by a static
+    * partition filter. Returns that file count. */
+  private def assertProbedOnly(qes: Seq[org.apache.spark.sql.execution.QueryExecution],
+      path: String, queries: org.apache.spark.sql.DataFrame, nprobe: Int): Long = {
+    val probed = queries.select(explode(IvfCells.cells(col("qv"), cents, nprobe)))
+      .distinct().count()
+    val scans = scansOf(qes, s"$path/codes")
+    assert(scans.size === 1, s"expected one codes scan, got ${scans.size}")
+    val (scan, files) = scans.head
+    assert(scan.partitionFilters.exists(_.references.exists(_.name == "cell")),
+      s"no cell partition filter on the codes scan:\n$scan")
+    assert(files === probed, s"read $files files for $probed probed cells")
+    files
+  }
+
   private def deep(idx: AnnIndex) = (
     idx.coarse.map(_.map(_.toSeq).toSeq),
     idx.code match {
@@ -56,20 +73,17 @@ class AnnIndexSpec extends SparkSpecBase {
       withIndex(kind) { (idx, path) =>
         val (back, codes) = AnnIndex.read(spark, path)
         assert(deep(back) === deep(idx), "read must restore the written state")
-        val fromIdxDf = back.search(emb, "vec_id", "embedding", queries, 10,
-          codes = codes)
+        val (fromIdxDf, qes) = plansDuring(back.search(emb, "vec_id", "embedding", queries, 10,
+          codes = codes))
         val inline = rows(idx.search(emb, "vec_id", "embedding", queries, 10))
         assert(inline.size === 80)
         assert(rows(fromIdxDf) === inline)
         if (idx.coarse.isDefined) {
-          // the cell-partitioned layout, and the probe join reaching the
-          // scan as a partition filter: only the probed cells' files
+          // the cell-partitioned layout, read only in the probed cells
           val cellDirs = new java.io.File(s"$path/codes").listFiles()
             .filter(f => f.isDirectory && f.getName.startsWith("cell="))
           assert(cellDirs.length > 1, s"expected cell=* partition dirs, got ${cellDirs.length}")
-          val plan = fromIdxDf.queryExecution.executedPlan.toString
-          assert(plan.contains("dynamicpruning"),
-            s"expected a dynamic-partition-pruned cell scan in plan:\n$plan")
+          assertProbedOnly(qes, path, queries, 16)
         }
       }
     }
@@ -94,11 +108,11 @@ class AnnIndexSpec extends SparkSpecBase {
         val literal = queries.collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.toDF("qid", "qv")
         val (back, codes) = AnnIndex.read(spark, path)
-        val probe = back.search(emb, "vec_id", "embedding", literal, 10, codes = codes)
-        val plan = probe.queryExecution.executedPlan.toString
-        assert(plan.contains("dynamicpruning"),
-          s"expected a dynamic-partition-pruned cell scan in plan:\n$plan")
-        assert(rows(probe) === rows(idx.search(emb, "vec_id", "embedding", queries, 10)))
+        val (probe, qes) = plansDuring(back.search(emb, "vec_id", "embedding", literal, 10,
+          nprobe = 2, codes = codes))
+        assert(assertProbedOnly(qes, path, queries, 2) < cellDirs.length)
+        assert(rows(probe) === rows(idx.search(emb, "vec_id", "embedding", queries, 10,
+          nprobe = 2)))
       }
     }
   }

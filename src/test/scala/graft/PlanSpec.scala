@@ -192,20 +192,20 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("ANN ranking windows consume only bucket/cell/shortlist-bounded relations") {
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import graft.operators.Similarity
 
     // topKByCos ranks with a per-qid row_number window — fine on a
-    // shortlist, the TopKAgg anti-pattern on a corpus-sized scored
-    // relation. Pin the shape: in every ANN path, any all-pairs
-    // operator under the final "rn" window must sit BELOW the
-    // k·refine shortlist filter ("qrn"), so the window only ever sees
-    // bounded rows. bruteForceTopK is pinned separately as the one
-    // documented exception (the quadratic oracle leg).
+    // bucket-bounded relation, the TopKAgg anti-pattern on a
+    // corpus-sized scored relation. Pin the shape: lshTopK's "rn"
+    // window consumes no all-pairs operator (candidates meet in a
+    // bucket equi-join), so it only ever sees bounded rows.
+    // bruteForceTopK is pinned as the one documented exception (the
+    // quadratic oracle leg); AnnIndex.search ranks without a window
+    // (pinned below).
     def unguardedAllPairs(p: SparkPlan): Boolean = p match {
-      case f: FilterExec if f.condition.toString.contains("qrn") => false
       case _: CartesianProductExec | _: BroadcastNestedLoopJoinExec => true
       case other => other.children.exists(unguardedAllPairs)
     }
@@ -213,28 +213,16 @@ class PlanSpec extends SparkSpecBase {
       df.queryExecution.sparkPlan.collect {
         case w: WindowExec if w.windowExpression.exists(_.name == "rn") => w
       }
-    def assertBounded(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val ws = rnWindows(df)
-      assert(ws.nonEmpty, s"$name: ranking window missing — tail changed?")
-      ws.foreach(w => assert(!unguardedAllPairs(w.child),
-        s"$name: the rn window consumes an unshortlisted all-pairs relation:\n" +
-          df.queryExecution.sparkPlan))
-    }
 
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("qid"),
         Similarity.asDouble(col("embedding")).as("qv"))
-    assertBounded("lshTopK",
-      Similarity.lshTopK(emb, "vec_id", "embedding", queries, 5))
-    // every AnnIndex kind but plain "Flat", which is the bruteForceTopK
-    // shape pinned below as the exception
-    Seq("IVF,Flat", "SQ8", "IVF,SQ8", "PQ", "IVF,PQ").foreach { kind =>
-      assertBounded(s"AnnIndex $kind",
-        Similarity.AnnIndex.fit(emb, "vec_id", "embedding", kind,
-            nlist = 8, m = 4, ksub = 16)
-          .search(emb, "vec_id", "embedding", queries, 5))
-    }
+    val lsh = Similarity.lshTopK(emb, "vec_id", "embedding", queries, 5)
+    assert(rnWindows(lsh).nonEmpty, "lshTopK: ranking window missing — tail changed?")
+    rnWindows(lsh).foreach(w => assert(!unguardedAllPairs(w.child),
+      s"lshTopK: the rn window consumes an unbounded all-pairs relation:\n" +
+        lsh.queryExecution.sparkPlan))
     // the documented exception: brute force IS the all-pairs oracle
     // leg — if this starts passing the bounded check, the contract
     // (and BASELINE.md's cost attribution) changed; notice it.
@@ -243,50 +231,73 @@ class PlanSpec extends SparkSpecBase {
       "bruteForceTopK is expected to rank the raw cross join (oracle leg)")
   }
 
-  test("ANN rerank streams the corpus past a broadcast shortlist — no corpus exchange") {
-    import org.apache.spark.sql.catalyst.optimizer.BuildRight
-    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  test("ANN index search executes no Exchange and no Window, inline or written") {
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.operators.Similarity
+
+    // a search ranks in bounded per-task tops merged on the driver, so
+    // no plan it runs shuffles or windows: ranking only ever sees the
+    // scan's rows, held at most k·refine per query
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("qid"),
+        Similarity.asDouble(col("embedding")).as("qv"))
+    Seq("Flat", "IVF,Flat", "SQ8", "IVF,SQ8", "PQ", "IVF,PQ").foreach { kind =>
+      val idx = Similarity.AnnIndex.fit(emb, "vec_id", "embedding", kind,
+        nlist = 8, m = 4, ksub = 16)
+      val dir = java.nio.file.Files.createTempDirectory("graft_plan_ann")
+      try {
+        idx.write(emb, "vec_id", "embedding", dir.toString)
+        val (_, written) = plansDuring {
+          val (back, codes) = Similarity.AnnIndex.read(spark, dir.toString)
+          back.search(emb, "vec_id", "embedding", queries, 5, codes = codes)
+        }
+        val (_, inline) = plansDuring(idx.search(emb, "vec_id", "embedding", queries, 5))
+        Seq("inline" -> inline, "written" -> written).foreach { case (how, qes) =>
+          assert(qes.nonEmpty, s"$kind $how: no query captured")
+          qes.foreach { qe =>
+            val bad = planNodes(qe.executedPlan).filter {
+              case _: Exchange | _: ReusedExchangeExec | _: WindowExec => true
+              case _ => false
+            }
+            assert(bad.isEmpty, s"$kind $how: ${bad.map(_.nodeName).mkString(", ")} in\n" +
+              qe.executedPlan)
+          }
+        }
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("ANN rerank scans the corpus with the id filter — no corpus exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import graft.operators.Similarity
 
     // every quantized kind shortlists k·refine candidates per query and
-    // reranks them on the float vectors. The rerank join must be a
-    // broadcast hash join whose build side is the shortlist (the "qrn"
-    // filter) and whose streamed side is the corpus scan with no
-    // exchange in between: the vectors are never shuffled, whatever the
-    // corpus size.
+    // reranks them on the float vectors: the rerank's corpus scan
+    // carries the shortlisted ids as a pushed filter and nothing above
+    // it exchanges, so the vectors are never shuffled, whatever the
+    // corpus size
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("qid"),
         Similarity.asDouble(col("embedding")).as("qv"))
     Seq("SQ8", "IVF,SQ8", "PQ", "IVF,PQ").foreach { kind =>
-      val df = Similarity.AnnIndex.fit(emb, "vec_id", "embedding", kind,
+      val (_, qes) = plansDuring(Similarity.AnnIndex.fit(emb, "vec_id", "embedding", kind,
           nlist = 8, m = 4, ksub = 16)
-        .search(emb, "vec_id", "embedding", queries, 5)
-      val p = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case other => other
-      }
-      // (build, streamed) sides of every broadcast hash join
-      val sides: Seq[(SparkPlan, SparkPlan)] = p.collect {
-        case j: BroadcastHashJoinExec =>
-          if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
-      }
-      val reranks = sides.filter(_._1.exists {
-        case f: FilterExec => f.condition.toString.contains("qrn")
+        .search(emb, "vec_id", "embedding", queries, 5))
+      val reranks = qes.map(_.executedPlan).filter(p => planNodes(p).exists {
+        case scan: FileSourceScanExec => scan.output.exists(_.name == "embedding") &&
+          scan.dataFilters.exists(f => f.isInstanceOf[In] || f.isInstanceOf[InSet])
         case _ => false
       })
       assert(reranks.size === 1,
-        s"$kind: expected one rerank join with the shortlist as broadcast build side:\n$p")
-      val streamed = reranks.head._2
-      assert(streamed.exists {
-        case scan: FileSourceScanExec => scan.output.exists(_.name == "embedding")
-        case _ => false
-      }, s"$kind: the rerank join does not stream the corpus scan:\n$p")
-      assert(!streamed.exists(_.isInstanceOf[Exchange]),
-        s"$kind: the corpus is exchanged before the rerank join:\n$p")
+        s"$kind: expected one rerank scan carrying the id filter, got ${reranks.size}:\n" +
+          qes.map(_.executedPlan).mkString("\n"))
+      assert(!planNodes(reranks.head).exists(_.isInstanceOf[Exchange]),
+        s"$kind: the corpus is exchanged in the rerank:\n${reranks.head}")
     }
   }
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ScaleFixture.OFFSET
 import graft.core.SparseRel
+import graft.functions.IvfCells
 import graft.operators.Similarity
 import graft.operators.Similarity.AnnIndex
 import graft.queries.{Golden, Tables}
@@ -94,9 +95,13 @@ class ScaleFixtureSpec extends SparkSpecBase {
     AnnIndex.fit(emb, "vec_id", "embedding", "IVF,PQ")
       .write(emb, "vec_id", "embedding", path)
     val (idx, codes) = AnnIndex.read(spark, path)
-    val probe = idx.search(emb, "vec_id", "embedding", queries, k = 10,
-      codes = codes)
-    assert(probe.queryExecution.executedPlan.toString.contains("dynamicpruning"))
+    val (probe, qes) = plansDuring(idx.search(emb, "vec_id", "embedding", queries, k = 10,
+      codes = codes))
+    // the codes scan reads the probed cells' files only, one per cell
+    val probed = queries.select(explode(IvfCells.cells(col("qv"), idx.coarse.get, 16)))
+      .distinct().count()
+    val Seq((scan, files)) = scansOf(qes, s"$path/codes")
+    assert(scan.partitionFilters.nonEmpty && files === probed, s"$files files, $probed cells")
     def pairs(df: DataFrame) = df.select(col("qid"), col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val got = pairs(probe)

@@ -73,4 +73,23 @@ class ShardsSpec extends SparkSpecBase {
         r.getLong(3), r.getLong(4))).toSet
     assert(again === got)
   }
+
+  test("writeTrainingShards reads its shards and manifest back without an inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val out = new java.io.File("target/shards_spec_jobs").getAbsolutePath
+    val input = docs
+    Shards.writeTrainingShards(input, "doc_id", out, 64L, seed = "s")
+    // a schema-inference job runs while a read is planned, outside any
+    // SQL execution; the write and the manifest aggregate run inside one
+    val outside = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.sql.execution.id") == null) outside.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (_, jobs) = try jobsDuring(Shards.writeTrainingShards(input, "doc_id", out, 64L, seed = "s"))
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs > 0)
+    assert(outside.get === 0, s"${outside.get} of $jobs jobs ran outside a query")
+  }
 }

@@ -36,7 +36,9 @@ class SparseIOSpec extends SparkSpecBase {
     assert(rel.universe.isInstanceOf[ColUniverse.Deferred])
     val path = "target/test_io_deferred"
     SparseIO.write(rel, path, rangePartitions = 2)
-    val back = SparseIO.read(spark, path)
+    // data and dims open from their footers: reading starts no job
+    val (back, jobs) = jobsDuring(SparseIO.read(spark, path))
+    assert(jobs === 0, s"reading a parquet SparseRel started $jobs jobs")
     assert(back.universe.isInstanceOf[ColUniverse.Deferred],
       "round-trip degraded the universe to a driver-side list")
     // the dims RELATION matches without ordering assumptions
@@ -68,6 +70,26 @@ class SparseIOSpec extends SparkSpecBase {
         .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSet
       assert(cells === Set((1, "a", 1.5), (2, "b", -2.0), (3, "a", 0.25)), fmt)
     }
+  }
+
+  test("a sidecar without format and schema fields reads as parquet, with no job") {
+    import spark.implicits._
+    val rel = SparseRel(Seq((1, "a", 1.5), (2, "b", -2.0)).toDF("k", SparseRel.COL, SparseRel.VALUE),
+      Seq("k"), ColUniverse.Explicit(Seq("a", "b")))
+    val path = "target/test_io/old_sidecar"
+    SparseIO.write(rel, path)
+    // the sidecar an older version wrote: parquet-only, no format/schema
+    val meta = java.nio.file.Paths.get(path, "_sparse_meta.json")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove(java.util.List.of("format", "schema", "universeKind"))
+    java.nio.file.Files.writeString(meta, node.toString)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "._sparse_meta.json.crc"))
+    val (back, jobs) = jobsDuring(SparseIO.read(spark, path))
+    assert(jobs === 0, s"reading started $jobs jobs")
+    assert(back.columnUniverse === Seq("a", "b"))
+    assert(back.df.collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSet ===
+      Set((1, "a", 1.5), (2, "b", -2.0)))
   }
 
   test("range-partitioned write prunes on locRange read") {

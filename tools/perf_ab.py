@@ -20,6 +20,11 @@ BENCHMARK.json (read from the change checkout) declares:
 Report lines a run prints as `name value unit` besides its result
 object (e.g. recall_at_10, peak_heap_mb) follow with each side's
 median and the per-pair change-minus-base range; they have no bound.
+So does `requests`, the count of the run's `# requests N attempted`
+line. A report line averaged over requests (recall_at_10 over the
+queries served) compares between the sides only at equal request
+counts: the faster side serves more requests in the same run time, so
+it averages over more of the workload's query pool.
 
 Exit status: 0 when every run was correct and no metric's median is
 worse than the base's by more than its bound; 1 otherwise (an
@@ -45,6 +50,7 @@ def parse_seeds(text):
 
 
 REPORT_LINE = re.compile(r"^([a-z][a-z0-9_.]*)\s+(-?[0-9][0-9.e+-]*)\s")
+REQUESTS_LINE = re.compile(r"^# requests ([0-9]+) attempted")
 
 
 def run(checkout, workload, seed, seconds):
@@ -64,6 +70,8 @@ def run(checkout, workload, seed, seconds):
         return None
     result["report"] = {m.group(1): float(m.group(2)) for m in map(REPORT_LINE.match, lines[:-1])
                         if m and m.group(1) not in result.get("metrics", {})}
+    result["report"].update(("requests", float(m.group(1)))
+                            for m in map(REQUESTS_LINE.match, lines[:-1]) if m)
     return result
 
 
