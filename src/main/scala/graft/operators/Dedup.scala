@@ -205,7 +205,7 @@ object Dedup {
   def nearDuplicatesChecked(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 128, bands: Int = 32,
       threshold: Double = 0.8, plantedThreshold: Double = 0.9,
-      recallFloor: Double = 0.9): DataFrame = {
+      recallFloor: Double): DataFrame = {
     val sig = stagedSignatures(docs, idCol, textCol, shingleN)
     val lsh = jaccardOf(lshCandidatesOf(sig, k, bands), sig)
       .filter(col("jaccard") >= threshold)
@@ -351,12 +351,8 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold $threshold not in (0,1]")
     // staged: read by the prefix legs and the verification join
-    def sigOf(d: DataFrame, idCol: String): DataFrame =
-      d.filter(size(tokens(col(textCol))) >= shingleN)
-        .select(col(idCol).as("doc"), shingleHashes(col(textCol), shingleN).as("sh"))
-        .localCheckpoint()
-    val sigC = sigOf(corpus, corpusIdCol)
-    val sigE = sigOf(evalDocs, evalIdCol)
+    val sigC = stagedSignatures(corpus, corpusIdCol, textCol, shingleN)
+    val sigE = stagedSignatures(evalDocs, evalIdCol, textCol, shingleN)
     val shC = explodedShingles(sigC)
     val shE = explodedShingles(sigE)
     // df over the UNION of both sides — the common global order the
@@ -943,8 +939,9 @@ object Dedup {
     *    Jaccard ≥ `plantedThreshold`). Unlike banded MinHash, simhash
     *    recall is not tunable to near-certainty — a Hamming-distance
     *    bucketing catches high-Jaccard pairs with observed recall
-    *    0.68–0.85 on the deterministic fixtures — so the floor is the
-    *    measured-margin 0.6 rather than minhash's 0.9.
+    *    0.68–0.85 on the deterministic fixtures — so its declared
+    *    floor (`simhash_recall` in `PipelineQueries.recallCerts`) is
+    *    lower than minhash's (`lsh_recall`).
     *
     * The row VALUES are reproducible SQL (the same prefix-filter sweep
     * DuckDB can replay), while a genuine simhash recall collapse flips
@@ -961,7 +958,7 @@ object Dedup {
   def simhashNearDuplicatesChecked(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int = 3, threshold: Double = 0.5,
       chunks: Int = 4, plantedThreshold: Double = 0.9,
-      recallFloor: Double = 0.6): DataFrame = {
+      recallFloor: Double): DataFrame = {
     val sig = stagedSignatures(docs, idCol, textCol, shingleN)
     val sim = jaccardOf(simhashCandidatesOf(sig, chunks), sig)
       .filter(col("jaccard") >= threshold)

@@ -46,8 +46,6 @@ object ImportanceSampling {
       alphabetSize: Int,
       alpha: Double)
 
-  private def toks(text: Column): Column = split(text, " ")
-
   /** Train the ratio model: vocab over RAW (count-desc/token
     * tie-break — the q side defines the support, per DSIR), then one
     * aggregation counting each mapped token on both sides at once
@@ -55,7 +53,7 @@ object ImportanceSampling {
     * Every collect is bounded by the closed alphabet. */
   def train(raw: DataFrame, isTarget: Column, textCol: String,
       vocabSize: Int = 64, alpha: Double = 0.5): RatioModel = {
-    val t = toks(col(textCol))
+    val t = Dedup.tokens(col(textCol))
     // NOT spread (r21, measured): the spread repartitioned the TEXT
     // payload and both passes re-executed that exchange — interleaved
     // A/B at sf0.1 read ~1.05 s with the spread vs ~0.6 s without.
@@ -99,7 +97,7 @@ object ImportanceSampling {
   def logWeights(docs: DataFrame, idCol: String, textCol: String,
       m: RatioModel): DataFrame =
     docs.select(col(idCol),
-      size(toks(col(textCol))).cast("long").as("n_tokens"),
+      size(Dedup.tokens(col(textCol))).cast("long").as("n_tokens"),
       graft.functions.LmExprs.ratioSum(col(textCol), m.vocab.toArray,
         m.ratio.toArray).as("log_weight"))
 

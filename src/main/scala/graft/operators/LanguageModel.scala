@@ -41,8 +41,6 @@ object LanguageModel {
       alphabetSize: Int,
       alpha: Double)
 
-  private def toks(text: Column): Column = split(text, " ")
-
   /** Train the bigram model over `docs`. TWO distributed jobs (was
     * three): the vocab top-k, then ONE corpus pass counting mapped
     * unigrams and bigrams together — a bigram key contains a space
@@ -57,7 +55,7 @@ object LanguageModel {
     * remains bounded by the closed alphabet, not the corpus. */
   def train(docs: DataFrame, idCol: String, textCol: String,
       vocabSize: Int = 64, alpha: Double = 0.5): BigramLm = {
-    val t = toks(col(textCol))
+    val t = Dedup.tokens(col(textCol))
     // NOT spread (r21, measured): Scale.spreadForKernel here
     // repartitions the TEXT payload and both passes re-execute that
     // exchange — interleaved A/B at sf0.1 read ~2.9 s with the spread
@@ -100,7 +98,7 @@ object LanguageModel {
     // chain evaluated interpreted at O(tokens × V) per document)
     val tagged = a.select(lit("a").as("side"), col(textCol).as("txt"))
       .unionByName(b.select(lit("b").as("side"), col(textCol).as("txt")))
-    val vocab = tagged.select(explode(toks(col("txt"))).as("w"))
+    val vocab = tagged.select(explode(Dedup.tokens(col("txt"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w")).limit(vocabSize)
       .collect().map(_.getString(0)).toSeq
@@ -139,7 +137,7 @@ object LanguageModel {
     * fold (spec + oracle pinned). */
   def perplexity(docs: DataFrame, idCol: String, textCol: String,
       lm: BigramLm): DataFrame = {
-    val n1 = greatest(size(toks(col(textCol))) - 1, lit(0))
+    val n1 = greatest(size(Dedup.tokens(col(textCol))) - 1, lit(0))
     docs.select(col(idCol),
       n1.cast("long").as("n_bigrams"),
       graft.functions.LmExprs.bigramNll(col(textCol), lm.vocab.toArray,

@@ -36,7 +36,7 @@ object QualityModel {
     * surface itself — and log length) so the learned gate and the
     * heuristic gate are comparable. */
   def featureColumns(textCol: Column): Seq[(String, Column)] = {
-    val t = split(textCol, " ")
+    val t = Dedup.tokens(textCol)
     val nTok = size(t).cast("double")
     // stopword count via a lookahead regex, NOT size(filter(t, isin)):
     // the higher-order ArrayFilter is CodegenFallback and drags the

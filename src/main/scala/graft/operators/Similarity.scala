@@ -4,32 +4,32 @@ import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSes
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, In,
   InterpretedOrdering, Literal, SortOrder}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType,
+  LongType, MapType, ShortType, StructField, StructType}
 
-import graft.functions.{CentroidDots, IvfCells, Quantize}
+import graft.functions.{CentroidDots, IvfCells, LshKeys, Quantize}
 
 /** Embedding similarity search over an `array<float>` column —
-  * training-data-pipeline layer. Top-k search has three shapes:
+  * training-data-pipeline layer. A query batch's top-k has two shapes,
+  * both eager and shuffle-free, ranked by one bounded per-query top-k
+  * merged on the driver ([[topPerQuery]]):
   *
-  *  - [[bruteForceTopK]]: exact cosine top-k of every query against the
-  *    full corpus. The corpus side streams (one pass, codegen'd dot
-  *    products); the query side is broadcast. Correct baseline, O(Q·N).
-  *  - [[lshTopK]]: random-hyperplane LSH — corpus and queries are
-  *    bucketed by sign-pattern, candidates meet only inside a bucket
-  *    (with optional multi-probe on 1-bit flips). At 100 TB this is the
-  *    shape that scales: the bucket id is a shuffle key, no all-pairs.
   *  - [[AnnIndex]]: one quantized index, optional IVF coarse cells ×
   *    a code (flat, SQ8 or PQ) × exact rerank, searched inline or
-  *    written once and read back.
+  *    written once and read back. `AnnIndex(None, Flat)` is the exact
+  *    cosine top-k of every query against the full corpus.
+  *  - [[lshTopK]]: random-hyperplane LSH — a corpus vector is scored
+  *    only against the queries that probe one of its sign-pattern
+  *    buckets (multi-probe on 1-bit flips).
   *
-  * All-vs-all near-duplicate shapes are [[nearestDupLsh]] (1-NN over
-  * LSH buckets) and [[semanticDuplicates]] (threshold pairs inside IVF
-  * cells).
+  * The all-vs-all 1-NN has two shapes ranked by one top-1 aggregate
+  * ([[nearestOf]]): [[exactNearest]] (every pair once, the oracle leg)
+  * and [[nearestDupLsh]] (1-NN over LSH buckets, the scale path).
+  * [[semanticDuplicates]] finds threshold pairs inside IVF cells.
   *
   * All vector math runs as native codegen'd expressions over doubles
   * (`DotProduct`, `LshKeys`, `IvfCells` — `graft.functions`): no UDFs
@@ -51,56 +51,15 @@ object Similarity {
   /** Cosine similarity of two double arrays. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact top-k cosine neighbours for each query vector. With
-    * `broadcastQueries` (the default) the query relation must be small
-    * — it is broadcast and the corpus streams once. Pass false for
-    * all-vs-all shapes (every vector as a query): Spark then plans a
-    * partitioned cartesian join instead of materializing the whole
-    * query side on every executor. Ranking is by rounded cosine with
-    * id tie-break for determinism. */
-  def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int,
-      broadcastQueries: Boolean = true): DataFrame = {
-    val c = corpus.select(col(idCol).as("vec_id"),
-      asDouble(col(vecCol)).as("v"))
-    val q = if (broadcastQueries) broadcast(queries) else queries
-    val scored = c.crossJoin(q)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos"))
-    topKByCos(scored, k)
-  }
-
-  /** Top `k` rows per query by (cos desc, id tie-break) with a rank
-    * column — the ranking tail of [[bruteForceTopK]] and [[lshTopK]];
-    * [[AnnIndex.search]] ranks by the same order in [[topPerQuery]].
-    *
-    * CALLER CONTRACT: `scored` must be bucket-bounded — candidates
-    * from a bucket equi-join ([[lshTopK]]); the one exception is
-    * [[bruteForceTopK]], the documented quadratic oracle leg. A
-    * `row_number` window partitions all of `scored` by qid, so
-    * applying it to an UNBOUNDED scored relation is exactly the
-    * O(pairs)-through-one-window anti-pattern that
-    * [[graft.functions.TopKAgg]] exists to avoid (map-side partial
-    * top-k, O(N·k) shuffle) — reach for TopKAgg, not this, if a
-    * corpus-sized scored relation ever needs ranking. PlanSpec pins
-    * every current caller's shape (`ANN ranking windows…`). */
-  private def topKByCos(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id"), col("cos"), col("rn"))
-  }
-
   /** The best `n` rows of each query `0 until nq` in `scored` — (qidx
     * INT, vec_id, score DOUBLE) — best first, by Spark's own ordering of
     * `ORDER BY score DESC, vec_id`: NULL sorts last, NaN first under
-    * DESC, and -0.0 equals 0.0. The [[AnnIndex.search]] counterpart of
-    * [[topKByCos]], in ONE job with no shuffle: each task keeps at most
-    * `nq·n` rows, sorted per query, and the partial tops merge on the
-    * driver as the tasks finish (`treeAggregate` at depth 1: a deeper
-    * tree adds a shuffled level). Returns copied rows. */
+    * DESC, and -0.0 equals 0.0. The one ranking of every query batch
+    * ([[AnnIndex.search]], [[lshTopK]]), in ONE job with no shuffle:
+    * each task keeps at most `nq·n` rows, sorted per query, and the
+    * partial tops merge on the driver as the tasks finish
+    * (`treeAggregate` at depth 1: a deeper tree adds a shuffled level).
+    * Returns copied rows. */
   private def topPerQuery(scored: DataFrame, nq: Int, n: Int): Array[Array[InternalRow]] = {
     val ord = new InterpretedOrdering(Seq(
       SortOrder(BoundReference(2, DoubleType, nullable = true), Descending),
@@ -119,6 +78,27 @@ object Similarity {
         (a, b) => { a.indices.foreach(i => a(i) = b(i).foldLeft(a(i))(keep)); a },
         depth = 1)
     }
+  }
+
+  /** Column `name` of the collected query `side` (schema `schema`) for
+    * the current row's `qidx`: the column as one literal array. */
+  private def queryAt(side: Array[Row], schema: StructType, name: String): Column =
+    ColumnBridge.column(Literal.create(side.map(_.getAs[Any](name)).toSeq,
+      ArrayType(schema(name).dataType))).getItem(col("qidx"))
+
+  /** The `ranked` tops of each collected query as a local relation
+    * (qid, vec_id, cos, rn): qid is `side`'s first column and keeps its
+    * field `qid`, vec_id has `idType`, rn counts from 1. */
+  private def rankedRelation(spark: SparkSession, side: Array[Row], qid: StructField,
+      idType: DataType, ranked: Array[Array[InternalRow]]): DataFrame = {
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
+    val rows = ranked.indices.flatMap(i => ranked(i).indices.map { rn =>
+      val r = ranked(i)(rn)
+      Row(side(i).get(0), toId(r.get(1, idType)), if (r.isNullAt(2)) null else r.getDouble(2), rn + 1)
+    })
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      qid, StructField("vec_id", idType), StructField("cos", DoubleType),
+      StructField("rn", IntegerType, nullable = false))))
   }
 
   /** Deterministic pseudo-random hyperplanes: `planes` × `dim` values
@@ -146,73 +126,72 @@ object Similarity {
       .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(1)
 
   /** Sign-pattern LSH bucket id of a double-array column under the
-    * given hyperplanes: bit p = 1 iff dot(v, plane_p) > 0. */
+    * given hyperplanes: bit p = 1 iff dot(v, plane_p) > 0 — the
+    * Column-composed reference the native [[LshKeys]] is spec-pinned
+    * against. */
   def lshBucket(v: Column, planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
       val planeArr = array(p.toIndexedSeq.map(lit): _*)
       when(dot(v, planeArr) > 0.0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
-  /** Approximate top-k via multi-table hyperplane LSH (the standard
-    * OR-amplification): `tables` independent sign-pattern hashes of
-    * `planes` planes each; a corpus vector is a candidate iff it
-    * shares a (table, bucket) key with the query in ANY table.
-    * Candidates meet only inside a bucket — a key-equi join, never
-    * all-pairs; recall/cost is tuned by (tables, planes): more planes
-    * → smaller buckets (cheaper, lower recall), more tables → higher
-    * recall (linearly more probe keys). `multiProbe` additionally
-    * probes, per table, the buckets reached by flipping the
-    * `multiProbe` smallest-margin sign bits (query-directed
-    * multi-probe): recall rises on the PROBE side only — the corpus
-    * explode, which is what scales with data size, stays at `tables`
-    * rows per vector, so at 100 TB multi-probe buys recall strictly
-    * cheaper than more tables. Defaults (8 tables × 2 flip-probes)
-    * measured on the synthetic fixtures: top-10 recall 0.96–0.98
-    * across sf0.001–0.1 (floor-certified at 0.8 by
-    * `embed_ann_recall`) — higher than 12 tables without multi-probe
-    * at two-thirds of the corpus-side cost. */
-  /** Per-table (table-tag | sign-bucket) key array of a vector under
-    * every table's hyperplanes — the base LSH keys. One native
-    * primitive pass per row ([[graft.functions.LshKeys]]); the
-    * previous `when`-folded Column chain is kept as the reference
-    * implementation in the equivalence spec. */
-  private[graft] def tableKeys(v: Column, allPlanes: Seq[Array[Array[Double]]]): Column =
-    graft.functions.LshKeys.keys(v, allPlanes, multiProbe = 0)
+  /** The hyperplane bank of [[lshTopK]]: `LshTables` independent
+    * sign-pattern hashes of `LshPlanes` planes each, and per table the
+    * query's `LshMultiProbe` smallest-margin bit flips. Measured on the
+    * synthetic fixtures: top-10 recall 0.96–0.98 across sf0.001–0.1
+    * (floor-certified at 0.8 by `embed_ann_recall`) — higher than 12
+    * tables without multi-probe at two-thirds of the corpus-side cost.
+    * The DuckDB oracle replays the same bank. */
+  private[graft] val LshPlanes = 4
+  private[graft] val LshTables = 8
+  private[graft] val LshMultiProbe = 2
 
-  /** Per-table base key PLUS the 1-bit-flip keys of the `multiProbe`
-    * smallest-margin planes — the planes the vector sits closest to,
-    * i.e. the neighbouring buckets most likely to hold missed
-    * neighbours (query-directed multi-probe). Margin is |dot|/‖plane‖
-    * (true point-to-hyperplane distance): the random planes are not
-    * unit-norm, and ranking by raw |dot| would bias flips toward
-    * small-norm planes. Native single pass: the interpreted
-    * `array_sort(comparator)` HOF this replaces ran once per CORPUS
-    * row on the nearestDupLsh probe leg. */
-  private def tableProbeKeys(v: Column, allPlanes: Seq[Array[Array[Double]]],
-      multiProbe: Int): Column =
-    graft.functions.LshKeys.keys(v, allPlanes, multiProbe)
-
+  /** Approximate top-`k` cosine neighbours of every (qid, qv) query by
+    * multi-table hyperplane LSH (the standard OR-amplification): a
+    * corpus vector is a candidate iff one of its base keys, one per
+    * table, is a probe key of the query — its own bucket in a table or
+    * a bucket one smallest-margin bit flip away (query-directed
+    * multi-probe: recall rises on the PROBE side only, so the corpus
+    * side stays at one key per table). Returns (qid, vec_id, cos, rn)
+    * like [[AnnIndex.search]]: qid keeps its type in `queries`, vec_id
+    * the type of `idCol`, cos is the rounded cosine, and a query's own
+    * id is never its neighbour.
+    *
+    * EAGER and shuffle-free, like [[AnnIndex.search]]: the queries are
+    * collected, the dimension is taken from their vectors and their
+    * probe keys come from the same [[graft.functions.LshKeys]] kernel on
+    * the driver; then ONE corpus scan computes each row's base keys,
+    * pairs it with the distinct queries that probe any of them (each
+    * (query, candidate) pair is scored once) and ranks in
+    * [[topPerQuery]]. */
   def lshTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, planes: Int = 4,
-      tables: Int = 8, dim: Int = -1, multiProbe: Int = 2): DataFrame = {
-    val d = if (dim > 0) dim else deriveDim(corpus, vecCol)
-    val allPlanes = (0 until tables).map(t =>
-      hyperplanes(planes, d, seed = tableSeed(t)))
-    def keysOf(v: Column): Column = tableKeys(v, allPlanes)
-    def probeKeysOf(v: Column): Column = tableProbeKeys(v, allPlanes, multiProbe)
-    // keys are one native LshKeys pass per row: compute the
-    // tables×planes dot products once, shuffle only (id, bucket) longs
+      queries: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("qid"), asDouble(col("qv")).as("qv"))
+    val side = q.collect()
+    def at(name: String): Column = queryAt(side, q.schema, name)
+    val dim = side.map(_.getSeq[Any](1)).find(v => v != null && v.nonEmpty)
+    val allPlanes = (0 until LshTables).map(t =>
+      hyperplanes(LshPlanes, dim.fold(1)(_.length), seed = tableSeed(t)))
+    // probe key -> the queries that probe it
+    val probedBy = side.indices.flatMap { i =>
+      val keys = LshKeys(Literal.create(side(i).get(1), q.schema("qv").dataType),
+        allPlanes.toArray, LshMultiProbe).eval().asInstanceOf[ArrayData]
+      Option(keys).fold(Array.empty[Long])(_.toLongArray()).map(_ -> i)
+    }.groupMap(_._1)(_._2).map { case (key, qs) => key -> qs.toArray }
     val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("__keys", keysOf(col("v")))
-      .select(col("vec_id"), col("v"), explode(col("__keys")).as("bucket"))
-    val probes = queries.withColumn("__keys", probeKeysOf(col("qv")))
-      .select(col("qid"), col("qv"), explode(col("__keys")).as("bucket"))
-    val scored = c.join(broadcast(probes), Seq("bucket"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cos"))
-      .distinct()
-    topKByCos(scored, k)
+    // no query holds a vector: nothing to scan (and no width to plane)
+    val ranked = if (probedBy.isEmpty) Array.fill(side.length)(Array.empty[InternalRow]) else {
+      val lookup = typedLit(probedBy)
+      val probing = array_distinct(flatten(array((1 to LshTables).map(t =>
+        coalesce(lookup.getItem(element_at(col("keys"), t)), typedLit(Array.empty[Int]))): _*)))
+      val pairs = c
+        .select(col("vec_id"), col("v"), LshKeys.keys(col("v"), allPlanes, 0).as("keys"))
+        .select(col("vec_id"), col("v"), explode(probing).as("qidx"))
+        .filter(col("vec_id") =!= at("qid"))
+        .select(col("qidx"), col("vec_id"), round(cosine(col("v"), at("qv")), 6))
+      topPerQuery(pairs, side.length, k)
+    }
+    rankedRelation(corpus.sparkSession, side, q.schema("qid"), c.schema("vec_id").dataType, ranked)
   }
 
   /** Corpus-size-derived plane count (~64 vectors per bucket, clamped
@@ -328,7 +307,6 @@ object Similarity {
     }
     val allPlanes = (0 until tables).map(t =>
       hyperplanes(p, d, seed = tableSeed(t)))
-    def keysOf(v: Column): Column = tableKeys(v, allPlanes)
     // The heavy self-join shuffles ONLY (vec_id, bucket) longs — the
     // wide embedding arrays never ride through the explode. Candidate
     // pairs are deduped across tables and undirected BEFORE the
@@ -353,7 +331,7 @@ object Similarity {
     // corpus itself stays un-materialized (scale-safety contract
     // above: only the key legs are ever checkpointed).
     val spread = Scale.spreadForKernel(c0, col("vec_id"))
-    val keyed = spread.withColumn("__keys", keysOf(col("v")))
+    val keyed = spread.withColumn("__keys", LshKeys.keys(col("v"), allPlanes, 0))
       .select(col("vec_id"), explode(col("__keys")).as("bucket"))
       .localCheckpoint()
     // ASYMMETRIC query-directed multi-probe (`multiProbe` > 0): one
@@ -371,8 +349,7 @@ object Similarity {
     // base-only; multiProbe=1 measures 0.92-0.96).
     val keyedProbe =
       if (multiProbe <= 0) keyed
-      else spread.withColumn("__keys",
-          tableProbeKeys(col("v"), allPlanes, multiProbe))
+      else spread.withColumn("__keys", LshKeys.keys(col("v"), allPlanes, multiProbe))
         .select(col("vec_id"), explode(col("__keys")).as("bucket"))
         .localCheckpoint()
     // Skew guard: clustered embeddings concentrate sign patterns, and
@@ -448,28 +425,52 @@ object Similarity {
         .select(least(col("a.vec_id"), col("b.vec_id")).as("ia"),
           greatest(col("a.vec_id"), col("b.vec_id")).as("ib"))
         .distinct()
-    val scored = pairs
+    nearestOf(pairs
       .join(c0.select(col("vec_id").as("ia"), col("v").as("va")), Seq("ia"))
       .join(c0.select(col("vec_id").as("ib"), col("v").as("vb")), Seq("ib"))
       .select(col("ia"), col("ib"),
-        round(cosine(col("va"), col("vb")), 6).as("cos"))
-    // both directions via ONE explode over the scored rows, not a
-    // two-leg union (r22, guide §2.3): a union re-EXECUTES the whole
-    // scored subtree — candidate join, pair dedup exchange, both
-    // vector-fetch joins — once per leg (the r21 plan shows the
-    // duplicated subtrees), where the explode emits the same row
-    // multiset from a single evaluation. Same rows, half the work.
-    val directed = scored
+        round(cosine(col("va"), col("vb")), 6).as("cos")))
+  }
+
+  /** Exact cosine 1-NN of every corpus vector against the rest of the
+    * corpus, as (qid, nn, cos) with cos rounded to 6 — the all-vs-all
+    * oracle leg of [[nearestDupLsh]], which is the scale path. LAZY and
+    * quadratic: each unordered pair is scored once (`a.vec_id <
+    * b.vec_id`), and [[nearestOf]] ranks it for both of its ends, so no
+    * window ever sees the N² pairs. Ids must be integral. */
+  def exactNearest(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
+    nearestOf(c.as("a").join(c.as("b"), col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("ia"), col("b.vec_id").as("ib"),
+        round(cosine(col("a.v"), col("b.v")), 6).as("cos")))
+  }
+
+  /** Every vector's best partner in `scored` — (ia, ib, cos), each
+    * unordered pair once — as (qid, nn, cos), ordered like Spark's
+    * `ORDER BY cos DESC, vec_id`: NaN first, NULL last, ties to the
+    * smaller id. THE top-1 of [[nearestDupLsh]] and [[exactNearest]].
+    *
+    * Both directions come from ONE explode over the scored rows, not a
+    * two-leg union (r22, guide §2.3): a union re-EXECUTES the whole
+    * scored subtree once per leg, where the explode emits the same row
+    * multiset from a single evaluation. The top-1 is a hash aggregate
+    * (max of a lexicographic struct; the negated id is the min-id
+    * tie-break), not a window: no per-partition sort, and map-side
+    * partial aggregation shrinks the shuffle to one row per (task,
+    * vector). Negating needs integral ids: any other id type fails
+    * here, as the plan is built. */
+  private def nearestOf(scored: DataFrame): DataFrame = {
+    val idType = scored.schema("ia").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"the 1-NN's min-id tie-break needs integral ids, not ${idType.simpleString}")
+    scored
       .select(explode(array(
         struct(col("ia").as("qid"), col("ib").as("vec_id"), col("cos")),
         struct(col("ib").as("qid"), col("ia").as("vec_id"), col("cos"))))
         .as("e"))
       .select(col("e.qid").as("qid"), col("e.vec_id").as("vec_id"),
         col("e.cos").as("cos"))
-    // top-1 via hash aggregate (max of a lexicographic struct; negated
-    // id = min-id tie-break), not a window: no per-partition sort, and
-    // map-side partial aggregation shrinks the shuffle
-    directed.groupBy(col("qid"))
+      .groupBy(col("qid"))
       .agg(max(struct(col("cos"), (-col("vec_id")).as("negid"))).as("best"))
       .select(col("qid"), (-col("best.negid")).as("nn"), col("best.cos").as("cos"))
   }
@@ -768,9 +769,10 @@ object Similarity {
   /** One approximate-nearest-neighbour index, composed the way the
     * FAISS index factory composes them: an optional IVF coarse
     * quantizer × a vector code × exact rerank. Every kind returns the
-    * (qid, vec_id, cos, rn) top-k of [[bruteForceTopK]], ranked by the
-    * same rounded-cosine/id order, so results differ from exact only
-    * when a true neighbour was pruned or fell outside the shortlist.
+    * (qid, vec_id, cos, rn) top-k of `AnnIndex(None, Flat)`, the exact
+    * search, ranked by the same rounded-cosine/id order, so results
+    * differ from exact only when a true neighbour was pruned or fell
+    * outside the shortlist.
     *
     *  - `coarse` = Some(centroids) ([[trainIvfCentroids]]) puts every
     *    corpus vector in ONE cell, its nearest centroid, and a query
@@ -909,10 +911,7 @@ object Similarity {
       val q = queries.select((col("qid") +: col("qv") +: inputs.map { case (n, c) => c.as(n) }) ++
         coarse.map(cents => IvfCells.cells(col("qv"), cents, nprobe).as("cells")): _*)
       val side = q.collect()
-      // query `name` of the (qidx) row: the collected column as a literal
-      def at(name: String): Column = ColumnBridge.column(Literal.create(
-        side.map(_.getAs[Any](name)).toSeq, ArrayType(q.schema(name).dataType)))
-        .getItem(col("qidx"))
+      def at(name: String): Column = queryAt(side, q.schema, name)
       // per cell, the queries that probe it
       val probing = coarse.map(cents => Array.tabulate(cents.length)(c => side.indices.filter(i =>
         Option(side(i).getAs[collection.Seq[Int]]("cells")).exists(_.contains(c))).toArray))
@@ -942,15 +941,8 @@ object Similarity {
           .select(col("qidx"), col("vec_id"), round(cosine(col("v"), at("qv")), 6))
         (reranked, topPerQuery(reranked, side.length, k))
       }
-      val idType = scored.schema("vec_id").dataType
-      val toId = CatalystTypeConverters.createToScalaConverter(idType)
-      val rows = ranked.indices.flatMap(i => ranked(i).indices.map { rn =>
-        val r = ranked(i)(rn)
-        Row(side(i).get(0), toId(r.get(1, idType)), if (r.isNullAt(2)) null else r.getDouble(2), rn + 1)
-      })
-      corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
-        q.schema("qid"), StructField("vec_id", idType), StructField("cos", DoubleType),
-        StructField("rn", IntegerType, nullable = false))))
+      rankedRelation(corpus.sparkSession, side, q.schema("qid"),
+        scored.schema("vec_id").dataType, ranked)
     }
   }
 

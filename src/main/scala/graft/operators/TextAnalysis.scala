@@ -21,12 +21,10 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "zh" -> Seq("的", "是", "了", "在", "和"))
 
-  private def toks(text: Column): Column = split(text, " ")
-
   /** Per-document statistics: char count, token count, distinct-token
     * count, mean token length, stopword ratio. */
   def textStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = toks(col(textCol))
+    val t = Dedup.tokens(col(textCol))
     val nTok = size(t).cast("double")
     val stops = Seq("a", "the", "and", "of", "to")
     docs.select(
@@ -45,7 +43,7 @@ object TextAnalysis {
     * filters (length/punct/stopword ratios), kept to components the
     * synthetic corpus actually exercises. */
   def qualityScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = toks(col(textCol))
+    val t = Dedup.tokens(col(textCol))
     val nTok = size(t).cast("double")
     val stops = Seq("a", "the", "and", "of", "to")
     val diversity = size(array_distinct(t)).cast("double") / nTok
@@ -59,7 +57,7 @@ object TextAnalysis {
     * cost before the real tokenizer runs). */
   def tokenCount(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol),
-      size(split(col(textCol), " ")).cast("long").as("ws_tokens"),
+      size(Dedup.tokens(col(textCol))).cast("long").as("ws_tokens"),
       regexp_count(col(textCol), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"))
         .cast("long").as("bpe_tokens"))
 
@@ -156,7 +154,7 @@ object TextAnalysis {
     * language order, 'und' when nothing matches). The distributed
     * shape of n-gram language-ID: per-row expression only. */
   def langId(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = toks(col(textCol))
+    val t = Dedup.tokens(col(textCol))
     val scored = LangMarkers.map { case (lang, markers) =>
       lang -> size(filter(t, x => x.isin(markers: _*)))
     }
@@ -183,7 +181,7 @@ object TextAnalysis {
       chunkSize: Int, overlap: Int): DataFrame = {
     require(chunkSize > overlap && overlap >= 0, "need chunkSize > overlap >= 0")
     val step = chunkSize - overlap
-    val t = toks(col(textCol))
+    val t = Dedup.tokens(col(textCol))
     docs
       .select(col(idCol), t.as("__t"))
       .select(col(idCol),
@@ -249,8 +247,8 @@ object TextAnalysis {
     // stage the token array: HOF lambdas evaluate interpreted and would
     // re-split the text once per n-gram otherwise
     val grams = docs
-      .filter(size(toks(col(textCol))) >= n)
-      .select(col(idCol), toks(col(textCol)).as("__t"))
+      .filter(size(Dedup.tokens(col(textCol))) >= n)
+      .select(col(idCol), Dedup.tokens(col(textCol)).as("__t"))
       .select(col(idCol),
         explode(transform(
           sequence(lit(0), size(col("__t")) - lit(n)),
@@ -277,7 +275,7 @@ object TextAnalysis {
   def vocabulary(docs: DataFrame, idCol: String, textCol: String,
       topK: Int): DataFrame =
     docs
-      .select(col(idCol), explode(toks(col(textCol))).as("tok"))
+      .select(col(idCol), explode(Dedup.tokens(col(textCol))).as("tok"))
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("cnt"),
         countDistinct(col(idCol)).as("doc_freq"))
@@ -292,7 +290,7 @@ object TextAnalysis {
     val n = docs.select(col(idCol)).distinct()
       .agg(count(lit(1)).cast("double").as("__n"))
     docs
-      .select(col(idCol), explode(array_distinct(toks(col(textCol)))).as("tok"))
+      .select(col(idCol), explode(array_distinct(Dedup.tokens(col(textCol)))).as("tok"))
       .groupBy(col("tok"))
       .agg(count(lit(1)).cast("double").as("__df"))
       .crossJoin(broadcast(n))

@@ -30,7 +30,7 @@ import graft.queries.Golden.Mat
   *   observed and vanishingly unlikely; a mismatch surfaces as a
   *   loud hash fail, not silent acceptance.
   * - final scores round to 6 decimals on BOTH sides before ranking
-  *   (the [[Similarity]] `topKByCos` contract), the same absorption
+  *   (the [[Similarity]] ranking contract), the same absorption
   *   every oracle-green cosine row already relies on.
   *
   * All SQL is fixture-independent text: the golden centroids carry a
@@ -81,9 +81,9 @@ private[graft] object AnnOracles {
       s"sqrt(list_dot_product($a, $a) * list_dot_product($b, $b))"
 
   /** The shared ranking tail: shortlist `perQuery` on the quantized
-    * score, exact-rerank with round-6 cosine, top `k` — `shortlistOf`
-    * + `rerankTopK` + `topKByCos` replayed. `cand` must provide
-    * (qid, vec_id, qcos). */
+    * score, exact-rerank with round-6 cosine, top `k` — the
+    * [[Similarity.AnnIndex]] shortlist, rerank and ranking replayed.
+    * `cand` must provide (qid, vec_id, qcos). */
   private def rerankTail(k: Int, perQuery: Int): String =
     s"""sl AS (SELECT qid, vec_id FROM (
        |  SELECT qid, vec_id,
@@ -113,11 +113,10 @@ private[graft] object AnnOracles {
        |  WHERE c.vec_id <> qc.qid),
        |${rerankTail(k, k * refine)}""".stripMargin
 
-  /** The 8-table × 4-plane hyperplane bank of `lshTopK` as a VALUES
-    * relation (t, i, nrm, c) — pure-Scala deterministic constants;
-    * `nrm` is the plane's L2 norm computed with the same Scala
-    * arithmetic `LshKeys.norms` uses. Dim is 64 on every shipped
-    * fixture (the `deriveDim` the operator runs returns 64). */
+  /** A `tables` × `planes` hyperplane bank as a VALUES relation
+    * (t, i, nrm, c) — pure-Scala deterministic constants; `nrm` is the
+    * plane's L2 norm computed with the same Scala arithmetic
+    * `LshKeys.norms` uses. Dim is 64 on every shipped fixture. */
   private def planeValues(tables: Int, planes: Int, dim: Int): String =
     (0 until tables).flatMap { t =>
       val hp = Similarity.hyperplanes(planes, dim, Similarity.tableSeed(t))
@@ -127,15 +126,16 @@ private[graft] object AnnOracles {
       }
     }.mkString(",\n")
 
-  /** embed_ann_lsh: sign-pattern buckets over the literal plane bank,
-    * query-directed 2-flip multi-probe (smallest point-to-hyperplane
-    * margin, ties to the lower plane index — the `LshKeys` insertion
-    * order), bucket equi-join, round-6 cosine, top-k. */
-  def lshSql(k: Int = 10, planes: Int = 4, tables: Int = 8,
-      dim: Int = 64, multiProbe: Int = 2): String =
+  /** embed_ann_lsh: sign-pattern buckets over `lshTopK`'s literal
+    * plane bank ([[Similarity.LshTables]] × [[Similarity.LshPlanes]]),
+    * query-directed [[Similarity.LshMultiProbe]]-flip multi-probe
+    * (smallest point-to-hyperplane margin, ties to the lower plane
+    * index — the `LshKeys` insertion order), bucket equi-join, round-6
+    * cosine, top-k. */
+  def lshSql(k: Int = 10): String =
     s"""WITH $BASE,
        |pl(t, i, nrm, c) AS (VALUES
-       |${planeValues(tables, planes, dim)}),
+       |${planeValues(Similarity.LshTables, Similarity.LshPlanes, 64)}),
        |dots AS (SELECT b.vec_id, p.t, p.i, p.nrm,
        |    list_dot_product(b.v, p.c) AS d
        |  FROM base b CROSS JOIN pl p),
@@ -153,7 +153,7 @@ private[graft] object AnnOracles {
        |            ORDER BY abs(d) / nrm ASC, i) AS rn
        |        FROM dots WHERE vec_id < 8) d
        |  JOIN ck kk ON kk.vec_id = d.vec_id AND kk.t = d.t
-       |  WHERE d.rn <= $multiProbe),
+       |  WHERE d.rn <= ${Similarity.LshMultiProbe}),
        |probes AS (SELECT qid, bucket FROM qbase
        |  UNION ALL SELECT qid, bucket FROM qflip),
        |cand AS (SELECT DISTINCT p.qid, c.vec_id
@@ -464,7 +464,7 @@ private[graft] object AnnOracles {
        |            ORDER BY abs(d) / nrm ASC, i) AS rn
        |        FROM dots) d
        |  JOIN ck kk ON kk.vec_id = d.vec_id AND kk.t = d.t
-       |  WHERE d.rn <= $multiProbe),
+       |  WHERE d.rn <= ${Similarity.LshMultiProbe}),
        |pk AS (SELECT vec_id, bucket FROM ck
        |  UNION ALL SELECT vec_id, bucket FROM flips),
        |cand AS (SELECT DISTINCT LEAST(a.vec_id, p.vec_id) AS ia,

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
@@ -214,126 +215,150 @@ object PipelineQueries {
         Similarity.asDouble(col("embedding")).as("qv"))
 
   /** A recall certificate: its key in Bench's `certs` series, the gate
-    * query that floors it, the floor, and its (truth, found) legs. */
-  private[graft] final case class RecallCert(key: String, gate: String,
-      floor: Double, legs: (SparkSession, String) => (DataFrame, DataFrame)) {
+    * query that floors it, the floor, its truth, and the relation whose
+    * rows it checks against that truth. Certificates that share a truth
+    * hold the same function value, so [[relations]] builds it once per
+    * call. */
+  private[graft] final case class RecallCert(key: String, gate: String, floor: Double,
+      truth: (SparkSession, String) => DataFrame, found: (SparkSession, String) => DataFrame) {
 
-    /** The certificate's one (n, hits) row, keyed on truth's columns. */
-    def relation(s: SparkSession, dir: String): DataFrame = {
-      val (truth, found) = legs(s, dir)
-      recall(truth, found, truth.columns.toSeq)
+    /** THE recall relation: one row (n, hits) — the row count of
+      * `truthRows`, a build of [[truth]], and how many of those rows
+      * `found` holds on their columns. `found` is cut to its distinct
+      * keys first, so the left join is 1:≤1 and each truth row counts
+      * at most once whatever `found` holds. */
+    def relation(s: SparkSession, dir: String, truthRows: DataFrame): DataFrame = {
+      val keys = truthRows.columns.toSeq
+      truthRows.join(found(s, dir).select(keys.map(col): _*).distinct()
+          .withColumn("__f", lit(true)), keys, "left")
+        .agg(count(lit(1)).as("n"), count(col("__f")).as("hits"))
     }
 
-    /** The gate's view of [[relation]]: (n, recall_ok). */
-    def gateRow(s: SparkSession, dir: String): DataFrame =
-      relation(s, dir).select(col("n"),
-        (col("hits") >= col("n") * floor).as("recall_ok"))
+    /** The gate's view of one of this certificate's relations:
+      * (n, recall_ok). */
+    def gate(rel: DataFrame): DataFrame =
+      rel.select(col("n"), (col("hits") >= col("n") * floor).as("recall_ok"))
+
+    /** [[gate]] over this certificate's own truth build. */
+    def gateRow(s: SparkSession, dir: String): DataFrame = gate(relation(s, dir, truth(s, dir)))
 
     /** This certificate's `method` row in embed_ann_recall. */
     def method: String = key.stripPrefix("ann_").stripSuffix("_recall")
   }
 
-  /** THE recall relation: one row (n, hits) — `truth`'s row count and
-    * how many of those rows `found` holds on `keys`. `found` is cut to
-    * its distinct keys first, so the left join is 1:≤1 and each truth
-    * row counts at most once whatever `found` holds. */
-  private def recall(truth: DataFrame, found: DataFrame,
-      keys: Seq[String]): DataFrame =
-    truth.join(found.select(keys.map(col): _*).distinct()
-        .withColumn("__f", lit(true)), keys, "left")
-      .agg(count(lit(1)).as("n"), count(col("__f")).as("hits"))
-
   /** Planted near-identical pairs (exact 3-gram Jaccard ≥ 0.9): the
-    * ground truth of the overlap, overlap_topk and simhash recalls. */
-  private def plantedPairs(s: SparkSession, dir: String): DataFrame =
+    * truth of the overlap, overlap_topk, simhash and MinHash-LSH
+    * recalls. */
+  private val PlantedPairs: (SparkSession, String) => DataFrame = { (s, dir) =>
     Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
         shingleN = 3, threshold = 0.9)
       .select(col("doc_a"), col("doc_b"))
+  }
+
+  /** Every vector's exact 1-NN, keyed (qid, vec_id). */
+  private val ExactNearest: (SparkSession, String) => DataFrame = { (s, dir) =>
+    Similarity.exactNearest(Tables.embeddings(s, dir), "vec_id", "embedding")
+      .select(col("qid"), col("nn").as("vec_id"))
+  }
 
   /** Per-doc top-5 overlap partners: the overlap_topk row and both
     * legs of its certificate. */
   private def overlapTopK(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.overlapTopKOf(stage(s, dir, OverlapPairs), 5)
 
-  /** The legs of an ANN recall certificate — THE single definition of
-    * the exact ground truth: the exact top-10 of the [[annQueries]] vs
-    * `approx`'s top-10 of the same queries over the same corpus, both
-    * keyed (qid, vec_id). [[recallCerts]] names each gated path. */
-  private def annRecallLegs(
-      approx: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
-      : (SparkSession, String) => (DataFrame, DataFrame) = { (s, dir) =>
+  /** An ANN top-10 certificate's found side: `approx`'s top-10 of the
+    * [[annQueries]], keyed (qid, vec_id). */
+  private def annFound(approx: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
-    val queries = annQueries(emb)
-    (Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, k = 10)
-        .select(col("qid"), col("vec_id")),
-      approx(s, dir, emb, queries).select(col("qid"), col("vec_id")))
+    approx(s, dir, emb, annQueries(emb)).select(col("qid"), col("vec_id"))
   }
 
-  /** [[annRecallLegs]] of an [[AnnIndex]] search at its defaults. */
-  private def annIndexLegs(index: (SparkSession, String, DataFrame) => AnnIndex) =
-    annRecallLegs((s, dir, emb, queries) =>
+  /** [[annFound]] of an [[AnnIndex]] search at its defaults. */
+  private def annIndexFound(index: (SparkSession, String, DataFrame) => AnnIndex) =
+    annFound((s, dir, emb, queries) =>
       index(s, dir, emb).search(emb, "vec_id", "embedding", queries, k = 10))
 
-  /** Every recall certificate — THE single definition of its legs and
-    * floor. Its gate projects `hits >= n * floor` from
-    * [[RecallCert.relation]] and [[certObserved]] reads `hits / n` from
-    * the same relation, so a retune or a floor change can never make
-    * the two measure different things. Floors are measured-margin
-    * (deterministic: fixed hash seeds, hash-ordered training samples),
-    * observed across sf0.001/0.01/0.1 and still failing on any genuine
-    * recall collapse. */
+  /** The exact top-10 of the [[annQueries]], keyed (qid, vec_id): the
+    * truth of every ANN top-10 recall. An eager search, so it is
+    * already a local relation. */
+  private val ExactTop10 = annIndexFound((_, _, _) => AnnIndex(None, AnnIndex.Flat))
+
+  /** Every recall certificate — THE single definition of its truth,
+    * found side and floor. A `recall_ok` gate projects `hits >= n *
+    * floor` from [[RecallCert.relation]], dedup_minhash_lsh and
+    * dedup_simhash pass the floor to their in-query flag, and
+    * [[certObserved]] reads `hits / n` from the same relation, so a
+    * retune or a floor change can never make the two measure different
+    * things. Floors are measured-margin (deterministic: fixed hash
+    * seeds, hash-ordered training samples), observed across
+    * sf0.001/0.01/0.1 and still failing on any genuine recall
+    * collapse. */
   private[graft] val recallCerts: Seq[RecallCert] = Seq(
     // winnowing: a planted pair shares long token runs, so it collides
     // on >= minShared fingerprints (observed 1.000)
-    RecallCert("overlap_recall", "overlap_recall_cert", 0.8, (s, dir) =>
-      (plantedPairs(s, dir),
-        stage(s, dir, OverlapPairs).select(col("doc_a"), col("doc_b")))),
+    RecallCert("overlap_recall", "overlap_recall_cert", 0.8, PlantedPairs,
+      (s, dir) => stage(s, dir, OverlapPairs).select(col("doc_a"), col("doc_b"))),
     // capping to the top 5 partners must not evict a planted pair: it
     // shares more fingerprints than boilerplate (observed rank 1-2)
-    RecallCert("overlap_topk_recall", "overlap_topk_cert", 0.8, (s, dir) =>
-      (plantedPairs(s, dir), overlapTopK(s, dir)
+    RecallCert("overlap_topk_recall", "overlap_topk_cert", 0.8, PlantedPairs,
+      (s, dir) => overlapTopK(s, dir)
         .select(least(col("doc"), col("partner")).as("doc_a"),
-          greatest(col("doc"), col("partner")).as("doc_b")))),
+          greatest(col("doc"), col("partner")).as("doc_b"))),
     // simhash at 0.5 (observed 0.68-0.85; the pigeonhole-guaranteed
-    // subset is spec-pinned)
-    RecallCert("simhash_recall", "simhash_recall_cert", 0.6, (s, dir) =>
-      (plantedPairs(s, dir), Dedup.simhashNearDuplicates(
+    // subset is spec-pinned); the floor of dedup_simhash's simhash_ok
+    RecallCert("simhash_recall", "simhash_recall_cert", 0.6, PlantedPairs,
+      (s, dir) => Dedup.simhashNearDuplicates(
           Tables.documents(s, dir), "doc_id", "text", shingleN = 3,
           threshold = 0.5)
-        .select(col("doc_a"), col("doc_b")))),
+        .select(col("doc_a"), col("doc_b"))),
+    // banded MinHash at k=128/bands=32 misses a j >= 0.9 pair with
+    // p ~ 1.5e-15; the floor of dedup_minhash_lsh's lsh_ok
+    RecallCert("lsh_recall", "dedup_minhash_lsh", 0.9, PlantedPairs,
+      (s, dir) => Dedup.nearDuplicates(Tables.documents(s, dir), "doc_id", "text",
+          shingleN = 3, k = 128, bands = 32, threshold = 0.8)
+        .select(col("doc_a"), col("doc_b"))),
     // multi-probe LSH (observed 0.96-0.98)
-    RecallCert("ann_lsh_recall", "embed_ann_recall", 0.8,
-      annRecallLegs((_, _, emb, queries) =>
+    RecallCert("ann_lsh_recall", "embed_ann_recall", 0.8, ExactTop10,
+      annFound((_, _, emb, queries) =>
         Similarity.lshTopK(emb, "vec_id", "embedding", queries, k = 10))),
     // every IVF path probes 16 of the staged quantizer's 32
     // restart-trained cells (observed 0.888-0.900; random directions
     // read 0.71-0.75)
-    RecallCert("ann_ivf_recall", "embed_ann_recall", 0.75,
-      annIndexLegs((s, dir, _) => stage(s, dir, Ann).copy(code = AnnIndex.Flat))),
+    RecallCert("ann_ivf_recall", "embed_ann_recall", 0.75, ExactTop10,
+      annIndexFound((s, dir, _) => stage(s, dir, Ann).copy(code = AnnIndex.Flat))),
     // int8 scan + exact rerank (observed >= 0.98 at refine 4)
-    RecallCert("ann_sq8_recall", "embed_ann_recall", 0.9,
-      annIndexLegs((_, _, _) => AnnIndex(None, AnnIndex.Sq8))),
-    RecallCert("ann_ivf_sq8_recall", "embed_ann_recall", 0.75,
-      annIndexLegs((s, dir, _) => stage(s, dir, Ann).copy(code = AnnIndex.Sq8))),
+    RecallCert("ann_sq8_recall", "embed_ann_recall", 0.9, ExactTop10,
+      annIndexFound((_, _, _) => AnnIndex(None, AnnIndex.Sq8))),
+    RecallCert("ann_ivf_sq8_recall", "embed_ann_recall", 0.75, ExactTop10,
+      annIndexFound((s, dir, _) => stage(s, dir, Ann).copy(code = AnnIndex.Sq8))),
     // m=8/ksub=256/refine=8 (observed 0.93-1.0, >= 30% margin)
-    RecallCert("ann_pq_recall", "embed_ann_recall", 0.7,
-      annIndexLegs((_, _, emb) => AnnIndex.fit(emb, "vec_id", "embedding", "PQ"))),
+    RecallCert("ann_pq_recall", "embed_ann_recall", 0.7, ExactTop10,
+      annIndexFound((_, _, emb) => AnnIndex.fit(emb, "vec_id", "embedding", "PQ"))),
     // residual PQ is near-lossless at refine 8, so the cell pruning
     // bounds it like plain IVF (observed 0.875-0.900)
-    RecallCert("ann_ivf_pq_recall", "embed_ann_recall", 0.75,
-      annIndexLegs((s, dir, _) => stage(s, dir, Ann))),
+    RecallCert("ann_ivf_pq_recall", "embed_ann_recall", 0.75, ExactTop10,
+      annIndexFound((s, dir, _) => stage(s, dir, Ann))),
     // every vector's exact 1-NN vs the staged LSH key legs' asymmetric
     // multi-probe self-join (observed 0.973-0.992)
-    RecallCert("nearest_dup_lsh_recall", "embed_ann_recall", 0.7, { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      (Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-          emb.select(col("vec_id").as("qid"),
-            Similarity.asDouble(col("embedding")).as("qv")),
-          k = 1, broadcastQueries = false)
-        .select(col("qid"), col("vec_id")),
-        Similarity.nearestDupLshFrom(stage(s, dir, LshKeys))
-          .select(col("qid"), col("nn").as("vec_id")))
-    }))
+    RecallCert("nearest_dup_lsh_recall", "embed_ann_recall", 0.7, ExactNearest,
+      (s, dir) => Similarity.nearestDupLshFrom(stage(s, dir, LshKeys))
+        .select(col("qid"), col("nn").as("vec_id"))))
+
+  /** Each of `certs` with its (n, hits) relation, every truth they
+    * share built once. A truth that several of them read is
+    * materialized: the planted pairs are checkpointed here, while the
+    * exact top-10 comes back from an eager search as a local relation
+    * already. */
+  private def relations(s: SparkSession, dir: String,
+      certs: Seq[RecallCert]): Seq[(RecallCert, DataFrame)] = {
+    val truths = certs.groupBy(_.truth).map { case (t, readers) =>
+      val rows = t(s, dir)
+      val local = rows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+      t -> (if (readers.length > 1 && !local) rows.localCheckpoint() else rows)
+    }
+    certs.map(c => c -> c.relation(s, dir, truths(c.truth)))
+  }
 
   /** The declared [[recallCerts]] entry named `key`. */
   private[graft] def recallCert(key: String): RecallCert =
@@ -373,14 +398,15 @@ object PipelineQueries {
     * measurements make a slow slide visible round-over-round in the
     * bench JSON (`"certs"` object). Keys are stable. Each value is one
     * `head()` of the single relation its gate reads: a [[recallCerts]]
-    * entry's `hits / n` (1.0 when n = 0), [[hllCert]]'s max relative
+    * entry's `hits / n` (1.0 when n = 0; [[relations]] builds each
+    * truth once per call), [[hllCert]]'s max relative
     * error (lower is better), [[heldout]]'s accuracy. Only
     * `phash_planted_recall` keeps its own 16-doc computation: the
     * media_phash_dup gate encodes the whole corpus. */
   private[graft] def certObserved(s: SparkSession,
       dir: String): Seq[(String, Double)] = {
-    val recalls = recallCerts.map { c =>
-      val r = c.relation(s, dir).head()
+    val recalls = relations(s, dir, recallCerts).map { case (c, rel) =>
+      val r = rel.head()
       c.key -> (if (r.getLong(0) == 0L) 1.0 else r.getLong(1).toDouble / r.getLong(0))
     }
     val hllErr = hllCert(s, dir)
@@ -534,8 +560,8 @@ object PipelineQueries {
     // are the exact prefix-filtered pair set (reproducible SQL — the
     // same jaccardOracle as before), while the LSH path's behaviour is
     // asserted IN-QUERY by the constant lsh_ok column: LSH pairs ⊆
-    // exact pairs (n_extra == 0) AND recall ≥ 0.9 over planted pairs
-    // (exact j ≥ 0.9, per-pair LSH miss ~1.5e-15 at k=128/bands=32).
+    // exact pairs (n_extra == 0) AND recall over planted pairs (exact
+    // j ≥ 0.9) at the declared `lsh_recall` floor.
     // Previously the oracle demanded exact EQUALITY of the LSH output,
     // which a ~5e-8-per-borderline-pair miss could turn spuriously
     // red on an unlucky new fixture; now a borderline miss cannot
@@ -543,7 +569,8 @@ object PipelineQueries {
     // lsh_ok against the oracle's TRUE.
     QueryDef("dedup_minhash_lsh",
       (s, dir) => Dedup.nearDuplicatesChecked(Tables.documents(s, dir),
-        "doc_id", "text", shingleN = 3, k = 128, bands = 32, threshold = 0.8),
+        "doc_id", "text", shingleN = 3, k = 128, bands = 32, threshold = 0.8,
+        recallFloor = recallCert("lsh_recall").floor),
       Some(s"""SELECT doc_a, doc_b, jaccard, TRUE AS lsh_ok
               |FROM (${jaccardOracle(3, "0.8")})""".stripMargin)),
 
@@ -731,13 +758,14 @@ object PipelineQueries {
     // values are the exact prefix-filtered pair set at threshold 0.5
     // (reproducible SQL), while the simhash path is asserted IN-QUERY
     // by the constant simhash_ok column — pairs ⊆ exact AND recall
-    // ≥ 0.6 over planted pairs (j ≥ 0.9; observed 0.68–0.85 across
-    // the deterministic fixtures). Retires the last rows-only check
+    // over planted pairs (j ≥ 0.9) at the declared `simhash_recall`
+    // floor. Retires the last rows-only check
     // in the dedup family (the pre-r15 registration had no oracle
     // because the candidate set depends on xxhash64).
     QueryDef("dedup_simhash",
       (s, dir) => Dedup.simhashNearDuplicatesChecked(Tables.documents(s, dir),
-        "doc_id", "text", shingleN = 3, threshold = 0.5),
+        "doc_id", "text", shingleN = 3, threshold = 0.5,
+        recallFloor = recallCert("simhash_recall").floor),
       Some(s"""SELECT doc_a, doc_b, jaccard, TRUE AS simhash_ok
               |FROM (${jaccardOracle(3, "0.5")})""".stripMargin)),
 
@@ -746,8 +774,7 @@ object PipelineQueries {
     QueryDef("embed_cosine_topk",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val queries = annQueries(emb)
-        Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, k = 10)
+        AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding", annQueries(emb), k = 10)
       },
       Some("""WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
              |  FROM embeddings WHERE vec_id < 8),
@@ -855,12 +882,7 @@ object PipelineQueries {
         // Exact all-vs-all here — it exists as the ORACLE CROSS-CHECK
         // for embed_nearest_dup_lsh below, which is the declared scale
         // path for this shape (banded self-join, no cartesian).
-        val emb = Tables.embeddings(s, dir)
-        val queries = emb.select(col("vec_id").as("qid"),
-          Similarity.asDouble(col("embedding")).as("qv"))
-        Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, k = 1,
-            broadcastQueries = false)
-          .select(col("qid"), col("vec_id").as("nn"), col("cos"))
+        Similarity.exactNearest(Tables.embeddings(s, dir), "vec_id", "embedding")
       },
       Some("""WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
              |  FROM embeddings),
@@ -893,9 +915,10 @@ object PipelineQueries {
         // recall of each approximate path against the oracle-green exact
         // top-k, computed INSIDE the query (one aggregate per path, no
         // collect) from the declared [[recallCerts]] and their floors.
-        recallCerts.filter(_.gate == "embed_ann_recall")
-          .map(c => c.gateRow(s, dir)
-            .select(lit(c.method).as("method"), col("recall_ok")))
+        relations(s, dir, recallCerts.filter(_.gate == "embed_ann_recall"))
+          .map { case (c, rel) =>
+            c.gate(rel).select(lit(c.method).as("method"), col("recall_ok"))
+          }
           .reduce(_ unionByName _)
       },
       Some("""SELECT 'lsh' AS method, TRUE AS recall_ok
@@ -1954,7 +1977,7 @@ object PipelineQueries {
         def nllOf(m: graft.operators.LanguageModel.BigramLm) =
           graft.functions.LmExprs.bigramNll(col("text"), m.vocab.toArray,
             m.unigrams.toArray, m.bigrams.toArray, m.alphabetSize, m.alpha)
-        val n1 = greatest(size(split(col("text"), " ")) - 1, lit(0))
+        val n1 = greatest(size(Dedup.tokens(col("text"))) - 1, lit(0))
           .cast("double")
         val lw = docs.select(col("doc_id"),
           coalesce(n1 * (nllOf(lmR) - nllOf(lmT)), lit(0.0)).as("log_weight"))

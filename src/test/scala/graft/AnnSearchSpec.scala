@@ -2,69 +2,20 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CentroidDots, IvfCells, Quantize}
 import graft.operators.Similarity
 import graft.operators.Similarity.AnnIndex
 import graft.queries.Tables
 
-/** [[AnnIndex.search]] against the reference formulation of its
-  * ranking — a broadcast probe join and two `row_number` windows over
-  * (score DESC, vec_id), kept here only as the reference — for every
-  * kind, inline and written, row for row and bit for bit; and the job
-  * budget of one literal request on a written IVF,SQ8 index. */
+/** [[AnnIndex.search]] against the window formulation of its ranking
+  * ([[TopKReference.search]]) for every kind, inline and written, row
+  * for row and bit for bit; and the job budget of one literal request
+  * on a written IVF,SQ8 index. */
 class AnnSearchSpec extends SparkSpecBase {
 
-  /** The top-k of `queries` by the window formulation: pairs from a
-    * broadcast (cell) equi-join or cross join, the k·refine best
-    * (qcos desc, id) per query, and an exact rerank of those on the
-    * float vectors, ranked again by (cos desc, id). */
-  private def reference(idx: AnnIndex, corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, nprobe: Int, codes: DataFrame): DataFrame = {
-    import AnnIndex._
-    def topK(scored: DataFrame, score: String, k: Int): DataFrame =
-      scored.withColumn("rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col(score).desc, col("vec_id"))))
-        .filter(col("rn") <= k)
-    val (qSide, score) = idx.code match {
-      case Flat => (Seq(col("qv")), round(Similarity.cosine(col("v"), col("qv")), 6))
-      case Sq8 => (Seq(Quantize.int8(col("qv")).as("qcodes")),
-        Quantize.cosine(col("codes"), col("qcodes")))
-      case Pq(books) =>
-        val adc = graft.functions.Pq.adcScore(col("pq_codes"), col("qtable"))
-        (graft.functions.Pq.adcTable(col("qv"), books).as("qtable") +:
-          idx.coarse.map(cents => CentroidDots.dots(col("qv"), cents).as("cdots")).toSeq,
-          if (idx.coarse.isEmpty) adc else element_at(col("cdots"), col("cell") + 1) + adc)
-    }
-    val probes = queries.select((col("qid") +: qSide) ++ idx.coarse.map(cents =>
-      explode(IvfCells.cells(col("qv"), cents, nprobe)).as("cell")): _*)
-    val scan = Option(codes).getOrElse(idx.encode(corpus, idCol, vecCol))
-    val pairs = (if (idx.coarse.isEmpty) scan.crossJoin(broadcast(probes))
-      else scan.join(broadcast(probes), Seq("cell")))
-      .filter(col("vec_id") =!= col("qid"))
-    val out = if (idx.code == Flat) topK(pairs.select(col("qid"), col("vec_id"), score.as("cos")), "cos", k)
-      else {
-        val shortlist = topK(pairs.select(col("qid"), col("vec_id"), score.as("qcos")),
-            "qcos", k * idx.code.refine)
-          .select(col("qid"), col("vec_id"))
-        topK(corpus.select(col(idCol).as("vec_id"), Similarity.asDouble(col(vecCol)).as("v"))
-          .join(broadcast(shortlist), Seq("vec_id"))
-          .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
-          .select(col("qid"), col("vec_id"),
-            round(Similarity.cosine(col("v"), col("qv")), 6).as("cos")), "cos", k)
-      }
-    out.select(col("qid"), col("vec_id"), col("cos"), col("rn"))
-  }
-
-  /** (qid, vec_id, raw cos bits, rn), sorted: equal means bit-identical. */
-  private def rows(df: DataFrame): Seq[(String, String, Long, Int)] =
-    df.collect().toSeq.map { case Row(q, v, c, rn: Int) =>
-      (q.toString, v.toString,
-        if (c == null) -1L else java.lang.Double.doubleToRawLongBits(c.asInstanceOf[Double]), rn)
-    }.sorted
+  import TopKReference.rows
 
   private lazy val emb = Tables.embeddings(spark, sf)
   private def queriesOf(corpus: DataFrame, ids: Column = col("vec_id") < 8) = corpus.filter(ids)
@@ -116,7 +67,7 @@ class AnnSearchSpec extends SparkSpecBase {
           val (back, codes) = AnnIndex.read(spark, dir.toString)
           Seq("inline" -> (idx, null: DataFrame), "written" -> (back, codes)).foreach {
             case (how, (index, c)) =>
-              val want = rows(reference(index, corpus, "vec_id", "embedding", queries, 10, nprobe, c))
+              val want = rows(TopKReference.search(index, corpus, "vec_id", "embedding", queries, 10, nprobe, c))
               assert(want.nonEmpty, s"$kind $how: empty reference")
               assert(rows(index.search(corpus, "vec_id", "embedding", queries, 10, nprobe,
                 codes = c)) === want, s"$kind $how")

@@ -185,7 +185,7 @@ class IvfPqSpec extends SparkSpecBase {
   }
 
   test("ivfPqTopK recall vs brute force") {
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
+    val bf = AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivfpq = AnnIndex(Some(cents), AnnIndex.Pq(books))
       .search(emb, "vec_id", "embedding", queries, 10)

@@ -29,7 +29,8 @@ class PipelineOpsSpec extends SparkSpecBase {
 
   test("nearDuplicatesChecked returns the exact pair set with a green lsh_ok flag") {
     val checked = Dedup.nearDuplicatesChecked(docs, "doc_id", "text",
-      shingleN = 3, k = 128, bands = 32, threshold = 0.8)
+      shingleN = 3, k = 128, bands = 32, threshold = 0.8,
+      recallFloor = recallCert("lsh_recall").floor)
     val rows = checked.collect()
     assert(rows.nonEmpty, "fixture should contain planted near-duplicates")
     // the certificate column is constant true: LSH ⊆ exact and planted
@@ -73,7 +74,7 @@ class PipelineOpsSpec extends SparkSpecBase {
 
   test("simhashNearDuplicatesChecked returns the exact pair set with a green simhash_ok flag") {
     val checked = Dedup.simhashNearDuplicatesChecked(docs, "doc_id", "text",
-      shingleN = 3, threshold = 0.5)
+      shingleN = 3, threshold = 0.5, recallFloor = recallCert("simhash_recall").floor)
     val rows = checked.collect()
     assert(rows.nonEmpty, "fixture should contain pairs at j >= 0.5")
     // certificate column constant true: simhash ⊆ exact AND planted
@@ -668,7 +669,7 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("LSH ANN recall vs brute force") {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
+    val bf = AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ann = Similarity.lshTopK(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -683,9 +684,7 @@ class PipelineOpsSpec extends SparkSpecBase {
   }
 
   test("LSH nearest-dup recall vs exact 1-NN, and no cartesian in its plan") {
-    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-        emb.select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv")),
-        k = 1, broadcastQueries = false)
+    val exact = Similarity.exactNearest(emb, "vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = Similarity.nearestDupLsh(emb, "vec_id", "embedding")
     val got = lsh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -786,7 +785,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     import spark.implicits._
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
+    val bf = AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val books = Similarity.trainPqCodebooks(emb, "vec_id", "embedding")
     val pqIdx = AnnIndex(None, AnnIndex.Pq(books))
@@ -883,7 +882,7 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("IVF ANN recall vs brute force") {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
+    val bf = AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivf = AnnIndex.fit(emb, "vec_id", "embedding", "IVF,Flat")
       .search(emb, "vec_id", "embedding", queries, 10)
@@ -904,7 +903,8 @@ class PipelineOpsSpec extends SparkSpecBase {
       (3L, "lambda mu nu xi omicron")).toDF("doc_id", "text")
     // no pairs and a holding certificate → empty result (matches an
     // empty oracle); the sentinel row appears only if the cert FAILS
-    assert(Dedup.nearDuplicatesChecked(d, "doc_id", "text").count() === 0)
+    assert(Dedup.nearDuplicatesChecked(d, "doc_id", "text",
+      recallFloor = recallCert("lsh_recall").floor).count() === 0)
   }
 
   test("nearestDupLsh on an empty corpus returns empty without crashing") {
@@ -1013,7 +1013,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     import spark.implicits._
     val d = Seq(("a", "alpha beta gamma delta epsilon"),
       ("b", "alpha beta gamma delta zeta")).toDF("doc_id", "text")
-    val checked = Dedup.nearDuplicatesChecked(d, "doc_id", "text")
+    val checked = Dedup.nearDuplicatesChecked(d, "doc_id", "text",
+      recallFloor = recallCert("lsh_recall").floor)
     assert(checked.schema("doc_a").dataType ===
       org.apache.spark.sql.types.StringType)
     assert(checked.schema("doc_b").dataType ===
@@ -1083,7 +1084,7 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("sq8TopK recall vs brute force") {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
+    val bf = AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sq8 = AnnIndex(None, AnnIndex.Sq8)
       .search(emb, "vec_id", "embedding", queries, 10)
@@ -1099,7 +1100,7 @@ class PipelineOpsSpec extends SparkSpecBase {
   test("ivfSq8TopK recall equals plain IVF — the sq8 layer is lossless within cells") {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 10)
+    val bf = AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding", queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", nlist = 32)
     val ivf = AnnIndex(Some(cents), AnnIndex.Flat)
@@ -1419,7 +1420,8 @@ class PipelineOpsSpec extends SparkSpecBase {
     // evaluations: each document was hashed exactly once, at staging
     for ((name, df) <- Seq(
         "nearDuplicates" -> Dedup.nearDuplicates(docs, "doc_id", "text"),
-        "nearDuplicatesChecked" -> Dedup.nearDuplicatesChecked(docs, "doc_id", "text"),
+        "nearDuplicatesChecked" -> Dedup.nearDuplicatesChecked(docs, "doc_id", "text",
+          recallFloor = recallCert("lsh_recall").floor),
         "simhash" -> Dedup.simhashNearDuplicates(docs, "doc_id", "text"),
         "ngramJaccard" -> Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8))) {
       val plan = df.queryExecution.executedPlan.toString
@@ -1750,7 +1752,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     // stable key set — the round-over-round series the bench JSON
     // carries; a key rename would silently break the trend record
     assert(m.keySet === Set(
-      "overlap_recall", "overlap_topk_recall", "simhash_recall",
+      "overlap_recall", "overlap_topk_recall", "simhash_recall", "lsh_recall",
       "ann_lsh_recall", "ann_ivf_recall", "ann_sq8_recall",
       "ann_ivf_sq8_recall", "ann_pq_recall", "ann_ivf_pq_recall",
       "nearest_dup_lsh_recall", "hll_max_rel_err", "quality_heldout_acc",
@@ -1776,12 +1778,30 @@ class PipelineOpsSpec extends SparkSpecBase {
     PipelineQueries.recallCerts.groupBy(_.gate).foreach { case (gate, certs) =>
       val rows = gates(gate)(spark, sf).collect()
       certs.foreach { c =>
-        val row = if (gate == "embed_ann_recall")
-          rows.filter(_.getAs[String]("method") == c.method) else rows
-        assert(row.length == 1, s"${c.key}: one $gate row expected")
-        assert(row.head.getAs[Boolean]("recall_ok") === (observed(c.key) >= c.floor),
+        val flags = gate match {
+          case "embed_ann_recall" => rows.filter(_.getAs[String]("method") == c.method)
+            .map(_.getAs[Boolean]("recall_ok"))
+          // lsh_ok rides on every pair row, one value for the query
+          case "dedup_minhash_lsh" => rows.map(_.getAs[Boolean]("lsh_ok")).distinct
+          case _ => rows.map(_.getAs[Boolean]("recall_ok"))
+        }
+        assert(flags.length == 1, s"${c.key}: one $gate flag expected")
+        assert(flags.head === (observed(c.key) >= c.floor),
           s"${c.key}: $gate disagrees with the observed ${observed(c.key)} vs floor ${c.floor}")
       }
     }
+  }
+
+  test("a warm certObserved call at sf0.01 builds each recall truth once") {
+    import graft.queries.PipelineQueries
+    val dir = "/root/testdata/sf0.01"
+    try {
+      PipelineQueries.certObserved(spark, dir)
+      // 144 jobs for the 13 values when every certificate built its
+      // own truth; 130 for 14 with the planted pairs and the exact
+      // top-10 built once each
+      val (_, jobs) = jobsDuring(PipelineQueries.certObserved(spark, dir))
+      assert(jobs <= 130, s"$jobs jobs")
+    } finally PipelineQueries.evictStaged(spark)
   }
 }

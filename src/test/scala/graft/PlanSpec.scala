@@ -89,11 +89,14 @@ class PlanSpec extends SparkSpecBase {
       Tables.documents(spark, sf), "doc_id", "text"))
     assert(winnow.contains("text") &&
       Seq("lang", "source", "n_chars").forall(!winnow.contains(_)), winnow)
+    // the exact search is eager: its scans are in the plans it runs
     val emb = Tables.embeddings(spark, sf)
-    val bf = readSchema(Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-      emb.filter(col("vec_id") < 8).select(col("vec_id").as("qid"),
+    val (_, qes) = plansDuring(Similarity.AnnIndex(None, Similarity.AnnIndex.Flat).search(
+      emb, "vec_id", "embedding", emb.filter(col("vec_id") < 8).select(col("vec_id").as("qid"),
         Similarity.asDouble(col("embedding")).as("qv")), 10))
-    assert(bf.contains("embedding") && !bf.contains("label"), bf)
+    val flat = scansOf(qes, s"$sf/embeddings.parquet").map(_._1.requiredSchema.fieldNames.toSeq)
+    assert(flat.nonEmpty && flat.forall(f => f.contains("embedding") && !f.contains("label")),
+      flat.toString)
   }
 
   test("sampling ops are shuffle-free map stages; exact-k is partial top-k") {
@@ -191,44 +194,31 @@ class PlanSpec extends SparkSpecBase {
       s"LM scoring must be pure Column arithmetic, not a UDF:\n$p")
   }
 
-  test("ANN ranking windows consume only bucket/cell/shortlist-bounded relations") {
-    import org.apache.spark.sql.execution.SparkPlan
+  test("lshTopK executes no Exchange and no Window; exactNearest ranks without a Window") {
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import graft.operators.Similarity
 
-    // topKByCos ranks with a per-qid row_number window — fine on a
-    // bucket-bounded relation, the TopKAgg anti-pattern on a
-    // corpus-sized scored relation. Pin the shape: lshTopK's "rn"
-    // window consumes no all-pairs operator (candidates meet in a
-    // bucket equi-join), so it only ever sees bounded rows.
-    // bruteForceTopK is pinned as the one documented exception (the
-    // quadratic oracle leg); AnnIndex.search ranks without a window
-    // (pinned below).
-    def unguardedAllPairs(p: SparkPlan): Boolean = p match {
-      case _: CartesianProductExec | _: BroadcastNestedLoopJoinExec => true
-      case other => other.children.exists(unguardedAllPairs)
-    }
-    def rnWindows(df: org.apache.spark.sql.DataFrame): Seq[WindowExec] =
-      df.queryExecution.sparkPlan.collect {
-        case w: WindowExec if w.windowExpression.exists(_.name == "rn") => w
-      }
-
+    // lshTopK ranks like AnnIndex.search (pinned below): bounded
+    // per-task tops merged on the driver, so no plan it runs shuffles
+    // or windows
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("qid"),
         Similarity.asDouble(col("embedding")).as("qv"))
-    val lsh = Similarity.lshTopK(emb, "vec_id", "embedding", queries, 5)
-    assert(rnWindows(lsh).nonEmpty, "lshTopK: ranking window missing — tail changed?")
-    rnWindows(lsh).foreach(w => assert(!unguardedAllPairs(w.child),
-      s"lshTopK: the rn window consumes an unbounded all-pairs relation:\n" +
-        lsh.queryExecution.sparkPlan))
-    // the documented exception: brute force IS the all-pairs oracle
-    // leg — if this starts passing the bounded check, the contract
-    // (and BASELINE.md's cost attribution) changed; notice it.
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 5)
-    assert(rnWindows(bf).exists(w => unguardedAllPairs(w.child)),
-      "bruteForceTopK is expected to rank the raw cross join (oracle leg)")
+    val (_, qes) = plansDuring(Similarity.lshTopK(emb, "vec_id", "embedding", queries, 5))
+    assert(qes.nonEmpty, "lshTopK: no query captured")
+    qes.foreach { qe =>
+      val bad = planNodes(qe.executedPlan).filter {
+        case _: Exchange | _: ReusedExchangeExec | _: WindowExec => true
+        case _ => false
+      }
+      assert(bad.isEmpty, s"lshTopK: ${bad.map(_.nodeName).mkString(", ")} in\n" +
+        qe.executedPlan)
+    }
+    // the all-vs-all 1-NN is a top-1 aggregate: no window over N² pairs
+    val nn = Similarity.exactNearest(emb, "vec_id", "embedding").queryExecution.sparkPlan
+    assert(nn.collect { case w: WindowExec => w }.isEmpty, s"window in exactNearest:\n$nn")
   }
 
   test("ANN index search executes no Exchange and no Window, inline or written") {

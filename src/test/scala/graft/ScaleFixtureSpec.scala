@@ -106,7 +106,7 @@ class ScaleFixtureSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1)))
     val got = pairs(probe)
     assert(got.length === 80)
-    val exact = pairs(Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+    val exact = pairs(AnnIndex(None, AnnIndex.Flat).search(emb, "vec_id", "embedding",
       queries, 10)).toSet
     val recall = (exact & got.toSet).size.toDouble / exact.size
     assert(recall >= graft.queries.PipelineQueries.recallCert("ann_ivf_pq_recall").floor,
