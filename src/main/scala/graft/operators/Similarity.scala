@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, In,
@@ -48,8 +51,10 @@ object Similarity {
 
   def norm(v: Column): Column = sqrt(dot(v, v))
 
-  /** Cosine similarity of two double arrays. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Cosine similarity of two double arrays; NULL when either norm is
+    * zero (the direction is undefined), as [[Quantize.cosine]],
+    * [[LshKeys]] and [[graft.functions.Pq]] state for their inputs. */
+  def cosine(a: Column, b: Column): Column = try_divide(dot(a, b), norm(a) * norm(b))
 
   /** The best `n` rows of each query `0 until nq` in `scored` — (qidx
     * INT, vec_id, score DOUBLE) — best first, by Spark's own ordering of
@@ -996,15 +1001,62 @@ object Similarity {
     /** Open an index [[AnnIndex.write]] wrote at `path`: the index —
       * its kind read off the codes' schema (a `cell` column means a
       * coarse quantizer, the code column names the code) — and its
-      * codes relation for [[AnnIndex.search]]. The codes open with the
-      * schema of one part file's footer, so opening starts no job
-      * ([[graft.sources.ParquetCompact.open]]; under IVF the file sits
-      * in a `cell=*` dir and partition discovery adds `cell`).
-      * Centroids and codebooks are validated as they are read, so a
-      * truncated or corrupt index fails loud, naming the path, instead
+      * codes relation for [[AnnIndex.search]].
+      *
+      * A session holds what it opened, per path, while the index on
+      * disk is unchanged: a warm open starts no job and reads no footer,
+      * and the codes relation keeps its file index. Unchanged means the
+      * same [[stampOf]] — the (path, length, modification time) of every
+      * entry listed directly under `path`, `path`/codes,
+      * `path`/centroids and `path`/codebooks, a missing dir stamped as
+      * absent — which four listings check. Any other stamp drops the
+      * held entry and opens afresh. A cold open reads one part file's
+      * footer for the codes' schema ([[graft.sources.ParquetCompact.open]];
+      * under IVF the file sits in a `cell=*` dir and partition
+      * discovery adds `cell`) and runs one job, the collect of the
+      * centroids and codebooks, which are validated as they are read:
+      * a truncated or corrupt index fails loud, naming the part, instead
       * of an opaque empty-max error or a per-row dimension mismatch on
-      * executors. */
+      * executors. Two requests that both miss both open; the last one's
+      * entry stays. */
     def read(spark: SparkSession, path: String): (AnnIndex, DataFrame) = {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val key = fs.makeQualified(root).toString
+      val stamp = stampOf(fs, root)
+      val held = opened.get(spark, key).filter(_.stamp == stamp).getOrElse {
+        opened.remove(spark, key)
+        val fresh = open(spark, path, stamp)
+        opened.put(spark, key, fresh)
+        fresh
+      }
+      (held.index, held.codes)
+    }
+
+    /** Per listed dir, its entries' (path, length, mtime); None if absent. */
+    private type Stamp = Seq[Option[Set[(String, Long, Long)]]]
+
+    /** An opened index and the stamp of the files it was read from. */
+    private final case class Opened(stamp: Stamp, index: AnnIndex, codes: DataFrame)
+
+    /** Every index a session opened, by qualified path. */
+    private val opened = new graft.SessionMap[String, Opened]()
+
+    /** The (path, length, modification time) of each entry listed
+      * directly under `root` and its three part dirs; None for a missing
+      * dir. A length and an mtime are all a listing's status is read
+      * for: an owner, group or permission would be looked up per file,
+      * which a local file system without native Hadoop does by forking
+      * a shell. */
+    private def stampOf(fs: FileSystem, root: Path): Stamp =
+      (root +: Seq("codes", "centroids", "codebooks").map(new Path(root, _))).map { dir =>
+        try Some(fs.listStatus(dir).map(st =>
+          (st.getPath.toString, st.getLen, st.getModificationTime)).toSet)
+        catch { case _: FileNotFoundException => None }
+      }
+
+    /** A cold open of `path` (see [[read]]), held under `stamp`. */
+    private def open(spark: SparkSession, path: String, stamp: Stamp): Opened = {
       val codes = graft.sources.ParquetCompact.open(spark, s"$path/codes")
       val coarse = if (!codes.columns.contains("cell")) None else {
         val rows = metadataAt(spark, s"$path/centroids", "cell")
@@ -1026,7 +1078,7 @@ object Similarity {
               "or do not split the centroid dim")
           Pq(books)
         }
-      (AnnIndex(coarse, code), codes.select((col("vec_id") +: coarse.map(_ =>
+      Opened(stamp, AnnIndex(coarse, code), codes.select((col("vec_id") +: coarse.map(_ =>
         col("cell").cast("int").as("cell")).toSeq) :+ col(code.column): _*))
     }
 

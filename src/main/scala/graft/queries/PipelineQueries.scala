@@ -1,9 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
@@ -162,50 +158,33 @@ object PipelineQueries {
   private[graft] val Stages: Seq[Stage[_ <: AnyRef]] =
     Seq(OverlapPairs, LshKeys, Lm, LmTarget, Ratio, Ann)
 
-  // Keyed by the session OBJECT (tuple equality compares it by
-  // reference), so a fresh session never sees another's checkpoint.
-  private val staged = new ConcurrentHashMap[(SparkSession, String, String), AnyRef]
-  private val hookedContexts = ConcurrentHashMap.newKeySet[SparkContext]()
+  /** Every stage built, keyed by (session, sf dir, stage name). */
+  private val staged = new graft.SessionMap[(String, String), AnyRef](unpersistStage)
 
-  private[graft] def stage[A <: AnyRef](s: SparkSession, dir: String,
-      st: Stage[A]): A = {
-    // one listener per context: when it ends, every session's entries go
-    val sc = s.sparkContext
-    if (hookedContexts.add(sc))
-      sc.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          evictWhere(_.sparkContext eq sc)
-          hookedContexts.remove(sc)
-        }
-      })
-    staged.computeIfAbsent((s, dir, st.name), _ => st.build(s, dir))
-      .asInstanceOf[A]
-  }
-
-  /** Drop every stage `s` holds and unpersist its checkpoint blocks.
-    * Safe on a stopped context: the blocks die with it anyway. */
-  private[graft] def evictStaged(s: SparkSession): Unit = evictWhere(_ eq s)
-
-  private def evictWhere(owned: SparkSession => Boolean): Unit = {
+  /** Unpersist the checkpoint blocks a dropped stage holds. */
+  private def unpersistStage(value: AnyRef): Unit = {
     def unpersist(df: Dataset[_]): Unit = df.queryExecution.analyzed match {
       case l: LogicalRDD =>
         try l.rdd.unpersist(blocking = false) catch { case _: Exception => () }
       case _ => ()
     }
-    staged.entrySet().removeIf { e =>
-      val mine = owned(e.getKey._1)
-      if (mine) e.getValue match {
-        case df: Dataset[_] => unpersist(df)
-        case st: Similarity.LshStage => st.checkpointed.foreach(unpersist)
-        case _ => ()
-      }
-      mine
+    value match {
+      case df: Dataset[_] => unpersist(df)
+      case st: Similarity.LshStage => st.checkpointed.foreach(unpersist)
+      case _ => ()
     }
   }
 
+  private[graft] def stage[A <: AnyRef](s: SparkSession, dir: String,
+      st: Stage[A]): A =
+    staged.getOrBuild(s, (dir, st.name))(st.build(s, dir)).asInstanceOf[A]
+
+  /** Drop every stage `s` holds and unpersist its checkpoint blocks.
+    * Safe on a stopped context: the blocks die with it anyway. */
+  private[graft] def evictStaged(s: SparkSession): Unit = staged.evictWhere(_ eq s)
+
   /** Test hook: stages currently held for `s`. */
-  private[graft] def stagedCount(s: SparkSession): Int =
-    staged.keySet().stream().filter(_._1 eq s).count().toInt
+  private[graft] def stagedCount(s: SparkSession): Int = staged.count(s)
 
   /** The 8 query vectors (vec_id < 8), as (qid, qv), that every
     * embedding top-10 row and ANN recall certificate searches with. */

@@ -13,7 +13,8 @@ import graft.queries.Tables
   * searches exactly like the inline index (cell-partitioned, one file
   * per cell, and read only in the probed cells' files for filtered and
   * literal query batches alike under IVF), and a missing or empty part
-  * of a written index fails on read with a message naming that part. */
+  * of a written index fails on read with a message naming that part,
+  * even after the session has opened the index. */
 class AnnIndexSpec extends SparkSpecBase {
 
   private lazy val emb = Tables.embeddings(spark, sf)
@@ -125,6 +126,10 @@ class AnnIndexSpec extends SparkSpecBase {
         parts.foreach { part =>
           val dir = Paths.get(path, part)
           val aside = Paths.get(path, s"$part.aside")
+          // the session holds the opened index: a held entry must never
+          // mask the failure below
+          AnnIndex.read(spark, path)
+          assert(jobsDuring(AnnIndex.read(spark, path))._2 === 0, s"$part: warm read")
           Files.move(dir, aside)
           def failsNaming(state: String): Unit = {
             val e = intercept[IllegalArgumentException](AnnIndex.read(spark, path))

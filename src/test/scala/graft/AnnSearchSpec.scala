@@ -11,8 +11,9 @@ import graft.queries.Tables
 
 /** [[AnnIndex.search]] against the window formulation of its ranking
   * ([[TopKReference.search]]) for every kind, inline and written, row
-  * for row and bit for bit; and the job budget of one literal request
-  * on a written IVF,SQ8 index. */
+  * for row and bit for bit; the job budget of a literal request on a
+  * written IVF,SQ8 index, first and repeated; and a zero-norm vector,
+  * which scores NULL instead of aborting the search. */
 class AnnSearchSpec extends SparkSpecBase {
 
   import TopKReference.rows
@@ -77,7 +78,7 @@ class AnnSearchSpec extends SparkSpecBase {
     }
   }
 
-  test("a literal 8-query batch on a written IVF,SQ8 index: <= 4 jobs, no shuffle bytes") {
+  test("a literal IVF,SQ8 request: <= 3 jobs, a repeat <= 2, no shuffle bytes") {
     val dir = Files.createTempDirectory("graft_ann_budget")
     try {
       Similarity.writeIvfSq8Index(emb, "vec_id", "embedding", dir.toString, centroids = cents)
@@ -85,11 +86,59 @@ class AnnSearchSpec extends SparkSpecBase {
       import s.implicits._
       val literal = queriesOf(emb).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.toDF("qid", "qv")
-      val (rows, jobs, shuffled) = workDuring(Similarity.ivfSq8TopKFromIndex(spark, dir.toString,
-        emb, "vec_id", "embedding", literal, 10, nprobe = 8).collect())
+      def request() = workDuring(Similarity.ivfSq8TopKFromIndex(spark, dir.toString,
+        emb, "vec_id", "embedding", literal, 10, nprobe = 8).collect().toSeq)
+      // the first request opens the index: the centroids' collect, the
+      // codes scan and the rerank scan
+      val (rows, jobs, shuffled) = request()
       assert(rows.length === 80)
-      assert(jobs <= 4, s"$jobs jobs")
+      assert(jobs <= 3, s"$jobs jobs")
       assert(shuffled === 0L, s"$shuffled shuffle bytes written")
+      // a repeat reuses the opened index: the two scans only
+      val (again, warmJobs, warmShuffled) = request()
+      assert(warmJobs <= 2, s"$warmJobs jobs on a repeat")
+      assert(warmShuffled === 0L, s"$warmShuffled shuffle bytes written on a repeat")
+      assert(again === rows)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("a zero-norm vector scores NULL, no abort: Flat, SQ8, IVF,SQ8, exactNearest") {
+    val base = emb.select(col("vec_id"), col("embedding"))
+    val dim = base.select(size(col("embedding"))).head().getInt(0)
+    val zeroId = 900000L
+    val withZero = base.unionByName(base.limit(1).select(lit(zeroId).as("vec_id"),
+      array_repeat(lit(0.0f), dim).as("embedding")))
+    val queries = queriesOf(base)
+    val zeroQuery = queries.limit(1).select(lit(zeroId + 1).as("qid"),
+      array_repeat(lit(0.0), dim).as("qv"))
+    def search(idx: AnnIndex, corpus: DataFrame, q: DataFrame, written: Boolean) =
+      if (!written) rows(idx.search(corpus, "vec_id", "embedding", q, 10))
+      else {
+        val dir = Files.createTempDirectory("graft_ann_zero")
+        try {
+          idx.write(corpus, "vec_id", "embedding", dir.toString)
+          val (back, codes) = AnnIndex.read(spark, dir.toString)
+          rows(back.search(corpus, "vec_id", "embedding", q, 10, codes = codes))
+        } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
+    Seq(("Flat", false), ("SQ8", false), ("IVF,SQ8", true)).foreach { case (kind, written) =>
+      val idx = indexes(kind)
+      val want = search(idx, base, queries, written)
+      assert(want.length === 80, kind)
+      val got = search(idx, withZero, queries.unionByName(zeroQuery), written)
+      // every row of a non-zero query is the row without the zero
+      // vector; the zero query still gets k rows, each scoring NULL
+      assert(got.filter(_._1 != s"${zeroId + 1}") === want, kind)
+      val zeroRows = got.filter(_._1 == s"${zeroId + 1}")
+      assert(zeroRows.length === 10 && zeroRows.forall(_._3 == -1L), s"$kind: $zeroRows")
+    }
+    val exact = Similarity.exactNearest(withZero, "vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.get(1), r.get(2))).sortBy(_._1).toSeq
+    val (zeroRows, others) = exact.partition(_._1 == zeroId)
+    assert(others === Similarity.exactNearest(base, "vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.get(1), r.get(2))).sortBy(_._1).toSeq)
+    // the zero vector's every cosine is NULL: its 1-NN is the smallest id
+    assert(zeroRows.map(r => (r._2, r._3)) ===
+      Seq((base.agg(min(col("vec_id"))).head().getLong(0), null)))
   }
 }

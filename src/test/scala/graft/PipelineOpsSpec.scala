@@ -534,8 +534,35 @@ class PipelineOpsSpec extends SparkSpecBase {
       assert(jobs === 0, "opening a graft-written parquet dir must start no job")
       assert(opened.map(_.columns.toSeq) ===
         Seq(Seq("doc", "bh"), Seq("doc", "sh"), Seq("vec_id", "codes", "cell")))
-      // the IVF index open is its centroids' collect and nothing else
+      // a cold IVF index open is its centroids' collect and nothing
+      // else; a warm one, of the unchanged index, starts no job
       assert(jobsDuring(AnnIndex.read(spark, ann.toString))._2 === 1)
+      assert(jobsDuring(AnnIndex.read(spark, ann.toString))._2 === 0)
+      // rewritten in place with other centroids: the stamp differs, so
+      // the read is cold again and returns the new index
+      val rewritten = AnnIndex.fit(emb, "vec_id", "embedding", "IVF,SQ8", nlist = 4)
+      rewritten.write(emb, "vec_id", "embedding", ann.toString)
+      val ((back, _), cold) = jobsDuring(AnnIndex.read(spark, ann.toString))
+      assert(cold === 1)
+      assert(back.coarse.map(_.map(_.toSeq).toSeq) === rewritten.coarse.map(_.map(_.toSeq).toSeq))
+      assert(jobsDuring(AnnIndex.read(spark, ann.toString))._2 === 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ann.toFile)
+  }
+
+  test("a fresh session opens an ANN index afresh; its own reads are then warm") {
+    val ann = java.nio.file.Files.createTempDirectory("graft_ann_session")
+    try {
+      AnnIndex.fit(emb, "vec_id", "embedding", "IVF,SQ8", nlist = 8)
+        .write(emb, "vec_id", "embedding", ann.toString)
+      AnnIndex.read(spark, ann.toString)
+      assert(jobsDuring(AnnIndex.read(spark, ann.toString))._2 === 0)
+      // same context, another session object: its own entry
+      val other = spark.newSession()
+      val ((theirs, _), cold) = jobsDuring(AnnIndex.read(other, ann.toString))
+      assert(cold === 1, "a fresh session must not see another session's entry")
+      assert(jobsDuring(AnnIndex.read(other, ann.toString))._2 === 0)
+      assert(theirs.coarse.map(_.map(_.toSeq).toSeq) ===
+        AnnIndex.read(spark, ann.toString)._1.coarse.map(_.map(_.toSeq).toSeq))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(ann.toFile)
   }
 

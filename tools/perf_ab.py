@@ -15,7 +15,10 @@ BENCHMARK.json (read from the change checkout) declares:
   - the change's delta in %, signed so that positive is better,
   - each side's spread as IQR/median,
   - in how many seed pairs the change was better,
-  - the metric's bound.
+  - the metric's bound,
+  - whether a gain is claimable: `gain` when the change won at least
+    nine tenths of all seed pairs run (ties count for neither) and its
+    median differs from the base's by more than the base's IQR, else `-`.
 
 Report lines a run prints as `name value unit` besides its result
 object (e.g. recall_at_10, peak_heap_mb) follow with each side's
@@ -75,13 +78,25 @@ def run(checkout, workload, seed, seconds):
     return result
 
 
-def spread(values):
-    """IQR / median (0 for fewer than two values)."""
+def iqr(values):
+    """Distance between the quartiles (0 for fewer than two values)."""
     if len(values) < 2:
         return 0.0
     q1, _, q3 = statistics.quantiles(values, n=4)
+    return q3 - q1
+
+
+def spread(values):
+    """IQR / median (0 for fewer than two values)."""
     med = statistics.median(values)
-    return (q3 - q1) / med if med else float("inf")
+    return iqr(values) / med if med else float("inf")
+
+
+def claimable(wins, pairs_run, base, change):
+    """A gain may be claimed when the change won at least 9 of every 10
+    pairs run and the medians differ by more than the base's IQR."""
+    return (10 * wins >= 9 * pairs_run
+            and abs(statistics.median(change) - statistics.median(base)) > iqr(base))
 
 
 def failed_share(results):
@@ -120,7 +135,7 @@ def main():
 
     print(f"# {a.workload}: {len(pairs)} of {len(seeds)} seed pairs, {seconds:g} s each")
     print(f"# {'metric':14s} {'base':>11s} {'change':>11s} {'delta':>8s} "
-          f"{'iqr/med b':>9s} {'iqr/med c':>9s} {'wins':>6s} {'bound':>6s}")
+          f"{'iqr/med b':>9s} {'iqr/med c':>9s} {'wins':>6s} {'bound':>6s} {'claim':>5s}")
     for m in spec["end_to_end"]:
         name, bound, higher = m["name"], m["bound"], m["better"] == "higher"
         got = [(b["metrics"][name]["value"], c["metrics"][name]["value"])
@@ -136,9 +151,10 @@ def main():
         wins = sum((c > b) if higher else (c < b) for b, c in got)
         worse = gain < -bound
         ok = ok and not worse
+        claim = "gain" if claimable(wins, len(seeds), bv, cv) else "-"
         print(f"  {name:14s} {mb:11.4g} {mc:11.4g} {100 * gain:+7.1f}% "
               f"{spread(bv):9.3f} {spread(cv):9.3f} {wins:>3d}/{len(got):<2d} "
-              f"{bound:6.2f}{'  WORSE' if worse else ''}")
+              f"{bound:6.2f} {claim:>5s}{'  WORSE' if worse else ''}")
     names = sorted(set().union(*(b["report"].keys() & c["report"].keys() for b, c in pairs)))
     for name in names:
         got = [(b["report"][name], c["report"][name]) for b, c in pairs
