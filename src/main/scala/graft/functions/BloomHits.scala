@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -21,13 +19,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * the filter's `fpp`. A null element yields NULL for the row (the
   * [[SortedJaccard]] contract). */
 case class BloomLongHits(child: Expression, bloom: BloomFilter)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, Any](ArrayType(LongType), nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got $other")
-  }
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
@@ -41,16 +34,6 @@ case class BloomLongHits(child: Expression, bloom: BloomFilter)
       i += 1
     }
     hits
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomHitsExpr", this, classOf[BloomLongHits].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      Object r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Integer) r).intValue(); }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): BloomLongHits =

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -33,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * independent built-ins, not asserted by the kernel itself. NULL
   * text yields NULL. */
 case class BpeTokens(child: Expression, merges: Array[(String, String)])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, GenericArrayData](StringType) {
 
   // trained merge lists are duplicate-free by construction (a pair is
   // merged away the round it is learned), but a hand-built list (SQL
@@ -43,11 +41,6 @@ case class BpeTokens(child: Expression, merges: Array[(String, String)])
   require(merges.distinct.length == merges.length,
     "bpe merges must not contain duplicate pairs")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got $other")
-  }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
 
@@ -129,15 +122,6 @@ case class BpeTokens(child: Expression, merges: Array[(String, String)])
       if (i > start) tokenizeWord(s.substring(start, i), out)
     }
     new GenericArrayData(out.toArray)
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeTokensExpr", this, classOf[BpeTokens].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $ref.compute($c);
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeTokens =

@@ -1,20 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the dedup signature math — the
-  * step past a Scala UDF (builder guide preference order): inputs stay
-  * `ArrayData` (no Seq boxing / Catalyst converters), evaluation is a
-  * primitive-long loop, and `doGenCode` keeps the projection inside
-  * the surrounding whole-stage-codegen span instead of breaking it the
-  * way `ScalaUDF` does.
+/** [[Kernel]]s for the dedup signature math.
   *
   * All salts derive from a fixed splitmix64 stream, so results are
   * deterministic across runs, partitions, and resumes.
@@ -96,16 +89,10 @@ object HashExprs {
   * A null element actually encountered (possible only via the SQL
   * surface) yields NULL instead of reading an undefined slot. */
 case class SortedJaccard(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData, Any](
+      ArrayType(LongType), ArrayType(LongType), nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects two array<bigint>, got $other")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+  override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
   def compute(a: ArrayData, b: ArrayData): Any = {
@@ -136,17 +123,6 @@ case class SortedJaccard(left: Expression, right: Expression)
     // replicate Spark round(x, 6): HALF_UP decimal rounding
     BigDecimal(inter.toDouble / union)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sjExpr", this, classOf[SortedJaccard].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object r = $ref.compute($a, $b);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Double) r).doubleValue(); }
-    """)
   }
 
   override protected def withNewChildrenInternal(
@@ -203,30 +179,17 @@ private[functions] object RollingHash {
   * all `w`-byte windows — the min-sampled document fingerprint, now
   * one O(len) primitive pass (previously O(len·w) interpreted). */
 case class RollingMinHash64(child: Expression, w: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, Long](StringType) {
   require(w >= 2, "window width must be at least 2 bytes")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got $other")
-  }
   override def dataType: DataType = LongType
 
-  def compute(input: org.apache.spark.unsafe.types.UTF8String): Long = {
+  def compute(input: UTF8String): Long = {
     val hs = RollingHash.windowHashes(input.getBytes, w)
     var min = hs(0)
     var i = 1
     while (i < hs.length) { if (hs(i) < min) min = hs(i); i += 1 }
     min
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("rollExpr", this, classOf[RollingMinHash64].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): RollingMinHash64 =
@@ -243,18 +206,13 @@ case class RollingMinHash64(child: Expression, w: Int)
   * partial overlap, not just whole-document similarity. The sliding
   * minima use a monotone deque: O(len) total, not O(len·g). */
 case class WinnowHashes(child: Expression, w: Int, g: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, ArrayData](StringType) {
   require(w >= 2, "window width must be at least 2 bytes")
   require(g >= 1, "winnow window must be at least 1 hash")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got $other")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  def compute(input: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+  def compute(input: UTF8String): ArrayData = {
     val hs = RollingHash.windowHashes(input.getBytes, w)
     val n = hs.length
     if (n <= g) {
@@ -294,14 +252,6 @@ case class WinnowHashes(child: Expression, w: Int, g: Int)
     new GenericArrayData(out)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winnowExpr", this, classOf[WinnowHashes].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): WinnowHashes =
     copy(child = newChild)
 
@@ -312,17 +262,10 @@ case class WinnowHashes(child: Expression, w: Int, g: Int)
   * primitive loop — the vector-math hot path for cosine similarity
   * search, replacing an interpreted zip_with + aggregate chain. */
 case class DotProduct(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData, Double](
+      ArrayType(DoubleType), ArrayType(DoubleType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(org.apache.spark.sql.types.DoubleType, _),
-            ArrayType(org.apache.spark.sql.types.DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects two array<double>, got $other")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+  override def dataType: DataType = DoubleType
 
   def compute(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
@@ -334,14 +277,6 @@ case class DotProduct(left: Expression, right: Expression)
     var i = 0
     while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
     acc
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dotExpr", this, classOf[DotProduct].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
   }
 
   override protected def withNewChildrenInternal(
@@ -359,17 +294,12 @@ case class DotProduct(left: Expression, right: Expression)
   * interpreted split → transform(slice/concat_ws) → array_distinct
   * chain that dominated dedup runtime. */
 case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, ArrayData](StringType) {
   require(n >= 1, "shingle size must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got $other")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  def compute(input: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+  def compute(input: UTF8String): ArrayData = {
     val bytes = input.getBytes
     // 1. token hashes: FNV-1a 64 per token, split on 0x20
     var tokenCount = 1
@@ -421,14 +351,6 @@ case class ShingleHashes(child: Expression, n: Int)
     }
   }
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingleExpr", this, classOf[ShingleHashes].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
 
@@ -439,7 +361,7 @@ case class ShingleHashes(child: Expression, n: Int)
   * functions, min over the input hashes, each band of k/bands minima
   * FNV-folded to one key with the band index baked in. */
 case class MinHashBandKeys(child: Expression, k: Int, bands: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(LongType)) {
   require(k > 0 && bands > 0 && k % bands == 0, "k must be divisible by bands")
 
   private val rows = k / bands
@@ -448,14 +370,8 @@ case class MinHashBandKeys(child: Expression, k: Int, bands: Int)
   private val adds: Array[Long] =
     HashExprs.splitmix(0xCAFEF00DL).take(k).toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got $other")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  /** Primitive-loop kernel shared by interpreted eval and codegen. */
   def compute(input: ArrayData): ArrayData = {
     val n = input.numElements()
     val mins = new Array[Long](k)
@@ -488,14 +404,6 @@ case class MinHashBandKeys(child: Expression, k: Int, bands: Int)
     new GenericArrayData(keys)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashExpr", this, classOf[MinHashBandKeys].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): MinHashBandKeys =
     copy(child = newChild)
 
@@ -505,13 +413,8 @@ case class MinHashBandKeys(child: Expression, k: Int, bands: Int)
 /** `simhash64(hashes)`: bit b of the result is 1 iff the +1/−1 tally
   * of bit b across the input hashes is positive. */
 case class SimHash64(child: Expression)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, Long](ArrayType(LongType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got $other")
-  }
   override def dataType: DataType = LongType
 
   def compute(input: ArrayData): Long = {
@@ -534,14 +437,6 @@ case class SimHash64(child: Expression)
       b += 1
     }
     out
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashExpr", this, classOf[SimHash64].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
@@ -30,13 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
 case class BigramNll(child: Expression, vocab: Array[String],
     unigrams: Array[(String, Long)], bigrams: Array[(String, Long)],
     alphabetSize: Int, alpha: Double)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, Any](StringType, nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got $other")
-  }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -95,20 +88,6 @@ case class BigramNll(child: Expression, vocab: Array[String],
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramNllExpr", this, classOf[BigramNll].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      Object r = $ref.compute($c);
-      if (r == null) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = ((Double) r).doubleValue();
-      }
-    """)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): BigramNll =
     copy(child = newChild)
 
@@ -134,13 +113,8 @@ case class BigramNll(child: Expression, vocab: Array[String],
   * covers vocab ∪ <unk>, but the contract must match). */
 case class RatioSum(child: Expression, vocab: Array[String],
     ratio: Array[(String, Double)])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, Any](StringType, nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got $other")
-  }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -169,20 +143,6 @@ case class RatioSum(child: Expression, vocab: Array[String],
       i += 1
     }
     acc
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ratioSumExpr", this, classOf[RatioSum].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      Object r = $ref.compute($c);
-      if (r == null) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = ((Double) r).doubleValue();
-      }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): RatioSum =
@@ -214,13 +174,8 @@ case class RatioSum(child: Expression, vocab: Array[String],
   * contracts turns a gate red. */
 case class MappedKeys(child: Expression, vocab: Array[String],
     withBigrams: Boolean)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, ArrayData](StringType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got $other")
-  }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
 
@@ -251,13 +206,6 @@ case class MappedKeys(child: Expression, vocab: Array[String],
       }
     }
     new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mappedKeysExpr", this, classOf[MappedKeys].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MappedKeys =

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** All (table-tag | sign-bucket) LSH keys of a double vector under a
   * fixed hyperplane bank, plus — when `multiProbe` > 0 — the
@@ -32,13 +30,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * same contract as [[SortedJaccard]]. */
 case class LshKeys(child: Expression,
     planes: Array[Array[Array[Double]]], multiProbe: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(DoubleType), nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   @transient private lazy val norms: Array[Array[Double]] =
@@ -105,17 +98,7 @@ case class LshKeys(child: Expression,
     new GenericArrayData(out)
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
   override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lshKeysExpr", this, classOf[LshKeys].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): LshKeys =
     copy(child = newChild)
@@ -141,15 +124,10 @@ object LshKeys {
   * a null slot in a parquet-read embedding yields NULL for the row. */
 case class IvfCells(child: Expression,
     centroids: Array[Array[Double]], n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(DoubleType), nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
   override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
+    ArrayType(IntegerType, containsNull = false)
 
   def compute(v: ArrayData): ArrayData = {
     var s = 0
@@ -186,17 +164,7 @@ case class IvfCells(child: Expression,
     new GenericArrayData(java.util.Arrays.copyOf(bi, filled).asInstanceOf[Array[Int]])
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
   override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfCellsExpr", this, classOf[IvfCells].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): IvfCells =
     copy(child = newChild)
@@ -226,13 +194,8 @@ object IvfCells {
   * a zero-norm vector yields NULL (no unit direction exists). */
 case class CentroidDots(child: Expression,
     centroids: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(DoubleType), nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   def compute(v: ArrayData): ArrayData = {
@@ -262,17 +225,7 @@ case class CentroidDots(child: Expression,
     new GenericArrayData(out)
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
   override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroidDotsExpr", this, classOf[CentroidDots].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): CentroidDots =
     copy(child = newChild)

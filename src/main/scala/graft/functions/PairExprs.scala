@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
@@ -29,13 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * overlap fold collects at most maxDocFreq docs per fingerprint —
   * the stop-fingerprint guard), so the per-row allocation is
   * ≤ maxDocFreq²/2 structs. */
-case class OrderedPairs(child: Expression) extends UnaryExpression {
+case class OrderedPairs(child: Expression)
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(LongType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got $other")
-  }
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("a", LongType, nullable = false),
       StructField("b", LongType, nullable = false))),
@@ -67,13 +60,6 @@ case class OrderedPairs(child: Expression) extends UnaryExpression {
     }
     // equal-value pairs emit nothing, so the array may be short — slice
     new GenericArrayData(if (k == out.length) out else out.take(k))
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("orderedPairsExpr", this, classOf[OrderedPairs].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): OrderedPairs =

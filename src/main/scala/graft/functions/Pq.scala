@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, StructField, StructType}
@@ -83,18 +81,13 @@ object Pq {
   * centroid index). One primitive pass per row. */
 case class PqCodes(child: Expression,
     codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, Array[Byte]](ArrayType(DoubleType), nullResult = true) {
 
   // a code is ONE byte: more than 256 centroids per subspace would
   // silently wrap best.toByte into a wrong (and valid-looking) code
   require(codebooks.forall(_.length <= 256),
     s"pq codebooks exceed 256 centroids per subspace (max ${codebooks.map(_.length).max})")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
 
@@ -132,16 +125,6 @@ case class PqCodes(child: Expression,
     out
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCodesExpr", this, classOf[PqCodes].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      byte[] r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PqCodes =
     copy(child = newChild)
 
@@ -153,13 +136,8 @@ case class PqCodes(child: Expression,
   * query side — so the corpus-side score is m lookups. */
 case class PqAdcTable(child: Expression,
     codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData](ArrayType(DoubleType), nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
 
@@ -194,16 +172,6 @@ case class PqAdcTable(child: Expression,
     new GenericArrayData(out)
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqAdcTableExpr", this, classOf[PqAdcTable].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PqAdcTable =
     copy(child = newChild)
 
@@ -215,22 +183,11 @@ case class PqAdcTable(child: Expression,
   * kernel. Raises when the table length is not a multiple of the code
   * length (mismatched m). */
 case class PqAdcScore(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[Array[Byte], ArrayData, Double](BinaryType, ArrayType(DoubleType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (binary codes, array<double> table), got $other")
-    }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  // returns a primitive double (never null — null INPUTS are handled
-  // by nullSafeEval/nullSafeCodeGen): Janino needs the declared Java
-  // return type to be `double` for the generated assignment to compile
-  // (an Object-returning compute would fail codegen and silently drop
-  // the whole stage to interpreted mode)
   def compute(codes: Array[Byte], table: ArrayData): Double = {
     val m = codes.length
     val n = table.numElements()
@@ -245,16 +202,6 @@ case class PqAdcScore(left: Expression, right: Expression)
       j += 1
     }
     acc
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqAdcScoreExpr", this, classOf[PqAdcScore].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      ${ev.value} = $ref.compute($a, $b);
-    """)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -286,17 +233,12 @@ case class PqAdcScore(left: Expression, right: Expression)
 case class PqResidualCodes(child: Expression,
     centroids: Array[Array[Double]],
     codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, InternalRow](ArrayType(DoubleType), nullResult = true) {
 
   require(centroids.nonEmpty, "ivf-pq needs at least one centroid")
   require(codebooks.forall(_.length <= 256),
     s"pq codebooks exceed 256 centroids per subspace (max ${codebooks.map(_.length).max})")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
   override def dataType: DataType = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),
     StructField("codes", BinaryType, nullable = false)))
@@ -355,17 +297,6 @@ case class PqResidualCodes(child: Expression,
       j += 1
     }
     new GenericInternalRow(Array[Any](cell, out))
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqResidualCodesExpr", this,
-      classOf[PqResidualCodes].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.InternalRow r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqResidualCodes =

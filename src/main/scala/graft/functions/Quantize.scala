@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, DoubleType}
 
 /** Symmetric per-vector int8 scalar quantization (SQ8) of a double
   * vector: byte i = round(x_i * 127 / max|x|), the standard
@@ -28,13 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * slot has no meaningful int8 code: silently mapping NaN to 0 would
   * let a garbage vector rank normally in the quantized scan while
   * the exact path scores it NaN). One primitive pass per row. */
-case class QuantizeInt8(child: Expression) extends UnaryExpression {
+case class QuantizeInt8(child: Expression)
+    extends UnaryKernel[ArrayData, Array[Byte]](ArrayType(DoubleType), nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
 
@@ -62,16 +56,6 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
     out
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("quantizeExpr", this, classOf[QuantizeInt8].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      byte[] r = $ref.compute($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-    """)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
     copy(child = newChild)
 
@@ -86,14 +70,9 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
   * vector); raises on a length mismatch like [[DotProduct]]. The
   * single sqrt of the norm product makes self-cosine exactly 1.0. */
 case class QuantizedCosine(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[Array[Byte], Array[Byte], Any](
+      BinaryType, BinaryType, nullResult = true) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects two binary code blobs, got $other")
-    }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -121,17 +100,6 @@ case class QuantizedCosine(left: Expression, right: Expression)
     else dot.toDouble / math.sqrt(na.toDouble * nb.toDouble)
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("qcosExpr", this, classOf[QuantizedCosine].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object r = $ref.compute($a, $b);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Double) r).doubleValue(); }
-    """)
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): QuantizedCosine =
     copy(left = newLeft, right = newRight)
@@ -143,15 +111,11 @@ case class QuantizedCosine(left: Expression, right: Expression)
   * — the usable-vector predicate of the quantizer trainers' sample
   * scans (a corpus-sized path: an interpreted `forall(...)` lambda
   * here would break the scan's whole-stage-codegen span). One
-  * primitive pass; NULL input handled by the null-safe wrapper. */
-case class AllFinite(child: Expression) extends UnaryExpression {
+  * primitive pass. */
+case class AllFinite(child: Expression)
+    extends UnaryKernel[ArrayData, Boolean](ArrayType(DoubleType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got $other")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+  override def dataType: DataType = BooleanType
   override def nullable: Boolean = true
 
   def compute(v: ArrayData): Boolean = {
@@ -163,15 +127,6 @@ case class AllFinite(child: Expression) extends UnaryExpression {
       i += 1
     }
     true
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("allFiniteExpr", this, classOf[AllFinite].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $ref.compute($c);
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): AllFinite =

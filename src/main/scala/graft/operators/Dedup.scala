@@ -472,12 +472,12 @@ object Dedup {
     // thousands of empty micro-batch part-files would degrade the
     // index directories into a small-files swamp. The row count is
     // observed on the checkpoint pass itself, so the check costs no job.
-    if (added.get("n").asInstanceOf[Long] > 0) {
+    try if (added.get("n").asInstanceOf[Long] > 0) {
       newH.select(col("doc"),
           explode(HashExprs.minhashBandKeys(col("sh"), k, bands)).as("bh"))
         .write.mode("append").parquet(s"$path/bands")
       newH.write.mode("append").parquet(s"$path/hashes")
-    }
+    } finally Scale.releaseCheckpoint(newH)
   }
 
   /** The compaction half of [[appendToNearDupIndex]] — bands before

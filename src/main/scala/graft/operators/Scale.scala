@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.core.SparseRel
@@ -29,6 +30,17 @@ object Scale {
   def readBucketed(spark: SparkSession, table: String,
       indexCols: Seq[String], universe: Seq[String]): SparseRel =
     SparseRel(spark.table(table), indexCols, universe)
+
+  /** Drop the blocks a `localCheckpoint`ed relation holds now, not
+    * when a GC happens to find it unreachable; a no-op on any other
+    * relation. Non-blocking, and safe on a stopped context (the blocks
+    * die with it anyway). */
+  private[graft] def releaseCheckpoint(df: Dataset[_]): Unit =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        try l.rdd.unpersist(blocking = false) catch { case _: Exception => () }
+      case _ => ()
+    }
 
   /** Spread a COMPUTE-DENSE relation across the session's parallelism
     * before an expensive per-row kernel (shingle/winnow hashing, codec

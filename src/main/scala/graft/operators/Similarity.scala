@@ -211,33 +211,6 @@ object Similarity {
   private[graft] def tableSeed(t: Int): Long =
     0x9E3779B97F4A7C15L + t * 1000003L
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Diagnostics for the [[nearestDupLsh]] derive-job footgun: how many
-    * times the (n, dim) derivation aggregate ran over a NON-scan input
-    * plan (a join/aggregate/union that the derive job then evaluates a
-    * second time, on top of the operator's own passes). Spec-pinned so
-    * the warning can never silently stop firing. */
-  private[graft] val deriveOnDerivedInput =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** True iff `plan` is a leaf relation (parquet scan, local data, a
-    * checkpointed RDD — all cheap to re-evaluate) under only
-    * projections/filters/aliases. Anything else (join, aggregate,
-    * union, window…) re-runs real work each time the plan is
-    * evaluated. */
-  private[graft] def scanLikePlan(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    plan match {
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        scanLikePlan(p.child)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        scanLikePlan(f.child)
-      case a: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        scanLikePlan(a.child)
-      case leaf => leaf.children.isEmpty
-    }
-
   /** The staged, per-(corpus, parameters) intermediates of
     * [[nearestDupLsh]]: the projected (vec_id, v) corpus view, the two
     * CHECKPOINTED (vec_id, bucket) join legs, and the hot-bucket split
@@ -252,10 +225,9 @@ object Similarity {
     * call with behavior identical to the pre-staging implementation. */
   private[graft] final case class LshStage(
       c0: DataFrame, keyed: DataFrame, keyedProbe: DataFrame,
-      hot: Option[DataFrame], multiProbe: Int) {
+      hot: Option[DataFrame]) {
     /** The frames holding localCheckpoint blocks (for eviction). */
-    private[graft] def checkpointed: Seq[DataFrame] =
-      Seq(keyed) ++ (if (keyedProbe eq keyed) Nil else Seq(keyedProbe)) ++ hot
+    private[graft] def checkpointed: Seq[DataFrame] = Seq(keyed, keyedProbe) ++ hot
   }
 
   /** Approximate embedding-cosine nearest-duplicate over the WHOLE
@@ -266,52 +238,33 @@ object Similarity {
     * and the bucket id is an ordinary shuffle key. Vectors sharing no
     * bucket with any other vector are absent from the output (no
     * near-duplicate at this table/plane setting — by construction
-    * nothing is cosine-close to them under any of the `tables`
+    * nothing is cosine-close to them under any of the `LshTables`
     * projections). Recall vs the exact 1-NN is floor-tested in
     * ScalaTest and surfaced by the `embed_ann_recall` query.
     * `maxBucket` bounds within-bucket pair counts under skew (hot
     * sign-pattern buckets on clustered embeddings) by deterministic
-    * sub-bucket salting. `multiProbe` adds query-directed bit-flip
-    * probes on ONE join leg (see the asymmetric-probe note in the
-    * body): default 2 lifts measured recall to 0.97-0.99 while the
-    * corpus-side index explode stays at `tables` rows per vector. */
+    * sub-bucket salting; <= 0 turns the guard off. One join leg adds
+    * the `LshMultiProbe` query-directed bit-flip probes (see the
+    * asymmetric-probe note in the body), which lifts measured recall
+    * to 0.97-0.99 while the corpus-side index explode stays at
+    * `LshTables` rows per vector. */
   def nearestDupLsh(corpus: DataFrame, idCol: String, vecCol: String,
-      planes: Int = -1, tables: Int = 8, dim: Int = -1,
-      maxBucket: Int = 4096, multiProbe: Int = 2): DataFrame =
-    nearestDupLshFrom(stageNearestDupLsh(corpus, idCol, vecCol,
-      planes, tables, dim, maxBucket, multiProbe))
+      maxBucket: Int = 4096): DataFrame =
+    nearestDupLshFrom(stageNearestDupLsh(corpus, idCol, vecCol, maxBucket))
 
   private[graft] def stageNearestDupLsh(corpus: DataFrame, idCol: String,
-      vecCol: String, planes: Int = -1, tables: Int = 8, dim: Int = -1,
-      maxBucket: Int = 4096, multiProbe: Int = 2): LshStage = {
+      vecCol: String, maxBucket: Int = 4096): LshStage = {
     val c0 = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
     // bucket count tracks corpus size (~64 vectors per bucket), so
     // within-bucket pair counts stay bounded as N grows — a FIXED
     // plane count degenerates toward all-pairs once N ≫ 2^planes.
-    // Size + dimension come from ONE aggregate job; note it evaluates
-    // the corpus plan once (cheap only when the input is a plain scan
-    // or already materialized) — pass planes AND dim explicitly to
-    // skip it on expensive derived inputs, and maxBucket <= 0 as well
-    // if the skew-guard histogram (which otherwise still runs, since
-    // the corpus size is then unknown) should also be skipped.
-    val (d, p, n) = if (planes > 0 && dim > 0) (dim, planes, -1L) else {
-      if (!scanLikePlan(corpus.queryExecution.analyzed)) {
-        deriveOnDerivedInput.incrementAndGet()
-        log.warn("nearestDupLsh is deriving (n, dim) with an extra " +
-          "aggregate job over a DERIVED input plan (join/aggregate/" +
-          "union) — that plan is evaluated once more than necessary; " +
-          "pass planes and dim explicitly (or localCheckpoint the " +
-          "input) to skip the derive job")
-      }
-      val r = corpus.select(count(lit(1)).as("n"),
-        first(size(col(vecCol)), ignoreNulls = true).as("d")).head()
-      val derivedDim = if (r.isNullAt(1)) 1 else r.getInt(1)
-      (if (dim > 0) dim else derivedDim,
-        if (planes > 0) planes else derivedPlanes(r.getLong(0)),
-        r.getLong(0))
-    }
-    val allPlanes = (0 until tables).map(t =>
-      hyperplanes(p, d, seed = tableSeed(t)))
+    // Size + dimension come from ONE aggregate job over the corpus plan
+    // (cheap on a plain scan or an already materialized input).
+    val r = corpus.select(count(lit(1)).as("n"),
+      first(size(col(vecCol)), ignoreNulls = true).as("d")).head()
+    val n = r.getLong(0)
+    val allPlanes = (0 until LshTables).map(t => hyperplanes(derivedPlanes(n),
+      if (r.isNullAt(1)) 1 else r.getInt(1), seed = tableSeed(t)))
     // The heavy self-join shuffles ONLY (vec_id, bucket) longs — the
     // wide embedding arrays never ride through the explode. Candidate
     // pairs are deduped across tables and undirected BEFORE the
@@ -339,24 +292,23 @@ object Similarity {
     val keyed = spread.withColumn("__keys", LshKeys.keys(col("v"), allPlanes, 0))
       .select(col("vec_id"), explode(col("__keys")).as("bucket"))
       .localCheckpoint()
-    // ASYMMETRIC query-directed multi-probe (`multiProbe` > 0): one
-    // join leg (the "index" side) keeps the base keys ONLY — the
-    // explode that scales with corpus size stays at `tables` rows per
-    // vector — while the other leg additionally probes the buckets
-    // reached by flipping its `multiProbe` smallest-margin sign bits.
+    // ASYMMETRIC query-directed multi-probe: one join leg (the "index"
+    // side) keeps the base keys ONLY — the explode that scales with
+    // corpus size stays at `LshTables` rows per vector — while the
+    // other leg additionally probes the buckets reached by flipping its
+    // `LshMultiProbe` smallest-margin sign bits.
     // A pair (x, y) is then found when EITHER endpoint's probe keys
     // hit the other's base bucket (the join below runs both
     // directions), so recall rises like two extra probe rounds at
-    // `tables`×`multiProbe` extra rows on ONE side — strictly cheaper
-    // than more tables, which would widen BOTH legs and the staged
-    // relation. Measured 1-NN recall vs the exact path at the default
-    // multiProbe=2: 0.973-0.992 across sf0.001-0.1 (was 0.59-0.72
-    // base-only; multiProbe=1 measures 0.92-0.96).
-    val keyedProbe =
-      if (multiProbe <= 0) keyed
-      else spread.withColumn("__keys", LshKeys.keys(col("v"), allPlanes, multiProbe))
-        .select(col("vec_id"), explode(col("__keys")).as("bucket"))
-        .localCheckpoint()
+    // `LshTables`×`LshMultiProbe` extra rows on ONE side — strictly
+    // cheaper than more tables, which would widen BOTH legs and the
+    // staged relation. Measured 1-NN recall vs the exact path with 2
+    // flip probes: 0.973-0.992 across sf0.001-0.1 (was 0.59-0.72
+    // base-only; 1 flip probe measures 0.92-0.96).
+    val keyedProbe = spread
+      .withColumn("__keys", LshKeys.keys(col("v"), allPlanes, LshMultiProbe))
+      .select(col("vec_id"), explode(col("__keys")).as("bucket"))
+      .localCheckpoint()
     // Skew guard: clustered embeddings concentrate sign patterns, and
     // one hot bucket holding k vectors contributes k²/2 pairs no
     // matter how many planes there are. Buckets over `maxBucket` are
@@ -372,11 +324,11 @@ object Similarity {
     // a vector contributes at most one row per (table, bucket) on
     // either leg, so no bucket can exceed n rows — a corpus no larger
     // than maxBucket provably has no hot bucket even with probe keys
-    val noSalt = maxBucket <= 0 || (n >= 0 && n <= maxBucket)
+    val noSalt = maxBucket <= 0 || n <= maxBucket
     // The histogram (and the hot-bucket split map) is built from the
-    // PROBE leg when multi-probe is on: each vector's probe keys
-    // include its base key, so the probe rowset is a superset of the
-    // base rowset — a bucket made hot purely by probe-key
+    // PROBE leg: each vector's probe keys include its base key, so the
+    // probe rowset is a superset of the base rowset — a bucket made
+    // hot purely by probe-key
     // concentration (base count under maxBucket, but a neighbouring
     // hot cluster flipping its smallest-margin bits into it) is
     // caught too, where a base-only histogram would let the join
@@ -386,7 +338,7 @@ object Similarity {
     // unchanged, salting strictly more conservative.
     val hot =
       if (noSalt) None
-      else Some((if (multiProbe <= 0) keyed else keyedProbe)
+      else Some(keyedProbe
         .groupBy(col("bucket")).agg(count(lit(1)).as("__bc"))
         .filter(col("__bc") > maxBucket)
         .withColumn("__splits", ceil(col("__bc") / lit(maxBucket.toDouble)))
@@ -395,17 +347,13 @@ object Similarity {
         // materialized at stage time so re-evaluations broadcast the
         // blocks instead of re-running the histogram aggregate
         .localCheckpoint())
-    LshStage(c0, keyed, keyedProbe, hot, multiProbe)
+    LshStage(c0, keyed, keyedProbe, hot)
   }
 
   /** The per-evaluation half of [[nearestDupLsh]]: candidate self-join
     * over the staged key legs, pair dedup, vector fetch, cosine, top-1.
     * See [[stageNearestDupLsh]] for what is staged and why. */
   private[graft] def nearestDupLshFrom(st: LshStage): DataFrame = {
-    val c0 = st.c0
-    val keyed = st.keyed
-    val keyedProbe = st.keyedProbe
-    val multiProbe = st.multiProbe
     def saltOf(rel: DataFrame): DataFrame = st.hot match {
       case None => rel.withColumn("__sub", lit(0L))
       case Some(h) => rel.join(broadcast(h), Seq("bucket"), "left")
@@ -413,26 +361,18 @@ object Similarity {
           coalesce(pmod(xxhash64(col("vec_id")), col("__splits")), lit(0L))
             .as("__sub"))
     }
-    val pairs = if (multiProbe <= 0) {
-      val salted = saltOf(keyed)
-      salted.as("a").join(salted.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.__sub") === col("b.__sub") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("ia"), col("b.vec_id").as("ib"))
-        .distinct()
-    } else
-      // base × probe: both directions covered by vec_id inequality +
-      // canonicalization (probe keys include the base keys, so this
-      // strictly supersets the symmetric base-only candidates)
-      saltOf(keyed).as("a").join(saltOf(keyedProbe).as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.__sub") === col("b.__sub") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(least(col("a.vec_id"), col("b.vec_id")).as("ia"),
-          greatest(col("a.vec_id"), col("b.vec_id")).as("ib"))
-        .distinct()
+    // base × probe: both directions covered by vec_id inequality +
+    // canonicalization (probe keys include the base keys, so this
+    // strictly supersets the symmetric base-only candidates)
+    val pairs = saltOf(st.keyed).as("a").join(saltOf(st.keyedProbe).as("b"),
+        col("a.bucket") === col("b.bucket") && col("a.__sub") === col("b.__sub") &&
+          col("a.vec_id") =!= col("b.vec_id"))
+      .select(least(col("a.vec_id"), col("b.vec_id")).as("ia"),
+        greatest(col("a.vec_id"), col("b.vec_id")).as("ib"))
+      .distinct()
     nearestOf(pairs
-      .join(c0.select(col("vec_id").as("ia"), col("v").as("va")), Seq("ia"))
-      .join(c0.select(col("vec_id").as("ib"), col("v").as("vb")), Seq("ib"))
+      .join(st.c0.select(col("vec_id").as("ia"), col("v").as("va")), Seq("ia"))
+      .join(st.c0.select(col("vec_id").as("ib"), col("v").as("vb")), Seq("ib"))
       .select(col("ia"), col("ib"),
         round(cosine(col("va"), col("vb")), 6).as("cos")))
   }

@@ -2,10 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AsOf, Dedup, ImportanceSampling, LanguageModel, Multimodal, Packing, QualityModel, RangeJoin, Sampling, Similarity, TextAnalysis, Windows}
+import graft.operators.{AsOf, Dedup, ImportanceSampling, LanguageModel, Multimodal, Packing, QualityModel, RangeJoin, Sampling, Scale, Similarity, TextAnalysis, Windows}
 import graft.operators.Similarity.AnnIndex
 
 /** Training-data-pipeline operator queries (builder brief): dedup
@@ -162,17 +161,10 @@ object PipelineQueries {
   private val staged = new graft.SessionMap[(String, String), AnyRef](unpersistStage)
 
   /** Unpersist the checkpoint blocks a dropped stage holds. */
-  private def unpersistStage(value: AnyRef): Unit = {
-    def unpersist(df: Dataset[_]): Unit = df.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        try l.rdd.unpersist(blocking = false) catch { case _: Exception => () }
-      case _ => ()
-    }
-    value match {
-      case df: Dataset[_] => unpersist(df)
-      case st: Similarity.LshStage => st.checkpointed.foreach(unpersist)
-      case _ => ()
-    }
+  private def unpersistStage(value: AnyRef): Unit = value match {
+    case df: Dataset[_] => Scale.releaseCheckpoint(df)
+    case st: Similarity.LshStage => st.checkpointed.foreach(Scale.releaseCheckpoint)
+    case _ => ()
   }
 
   private[graft] def stage[A <: AnyRef](s: SparkSession, dir: String,

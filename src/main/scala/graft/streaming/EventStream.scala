@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Scale
+
 /** Structured Streaming over the event log — the streaming face of the
   * same operators the batch layer runs (the reference itself is
   * batch-only, SURVEY §2.10; this is the pipeline-layer extension).
@@ -346,34 +348,37 @@ object EventStream {
     * failed append still AWAITS the probe before propagating: the
     * drain's cleanup deletes the staging/index dirs, and racing that
     * delete against still-running probe jobs turns one failure into a
-    * cascade. */
+    * cascade. The staged batch's checkpoint blocks are released when
+    * the batch ends, so a long stream holds only the pairs it returned. */
   private[graft] def ingestBatch(f: IngestFamily, admitMatched: Boolean,
       batch: DataFrame, batchId: Long): DataFrame = {
     val staged = f.stage(batch).localCheckpoint()
-    val probe = f.probe(staged)
-    val pairs = if (!admitMatched) {
-      val p = probe.localCheckpoint()
-      val (probeId, stagedId) = f.ids
-      f.admit(staged.join(p.select(col(probeId).as(stagedId)).distinct(),
-        Seq(stagedId), "left_anti"))
-      p
-    } else {
-      val task = new java.util.concurrent.FutureTask(
-        () => probe.localCheckpoint())
-      val t = new Thread(task, s"graft-probe-batch-$batchId")
-      t.setDaemon(true)
-      t.start()
-      try f.admit(staged)
-      catch { case e: Throwable =>
-        try task.get() catch { case _: Throwable => () }
-        throw e
+    try {
+      val probe = f.probe(staged)
+      val pairs = if (!admitMatched) {
+        val p = probe.localCheckpoint()
+        val (probeId, stagedId) = f.ids
+        f.admit(staged.join(p.select(col(probeId).as(stagedId)).distinct(),
+          Seq(stagedId), "left_anti"))
+        p
+      } else {
+        val task = new java.util.concurrent.FutureTask(
+          () => probe.localCheckpoint())
+        val t = new Thread(task, s"graft-probe-batch-$batchId")
+        t.setDaemon(true)
+        t.start()
+        try f.admit(staged)
+        catch { case e: Throwable =>
+          try task.get() catch { case _: Throwable => () }
+          throw e
+        }
+        try task.get()
+        catch { case e: java.util.concurrent.ExecutionException =>
+          throw Option(e.getCause).getOrElse(e) }
       }
-      try task.get()
-      catch { case e: java.util.concurrent.ExecutionException =>
-        throw Option(e.getCause).getOrElse(e) }
-    }
-    f.compact(staged.sparkSession)
-    pairs
+      f.compact(staged.sparkSession)
+      pairs
+    } finally Scale.releaseCheckpoint(staged)
   }
 
   /** Driver-visible face of [[nearDupIngest]] (the `stream_near_dup`

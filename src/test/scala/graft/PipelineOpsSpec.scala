@@ -1622,34 +1622,6 @@ class PipelineOpsSpec extends SparkSpecBase {
       .agg(sum("cnt")).head().getLong(0) === 2 * total)
   }
 
-  test("nearestDupLsh flags its (n, dim) derive job on derived inputs only") {
-    val base = emb.select(col("vec_id"),
-      Similarity.asDouble(col("embedding")).as("v"))
-    // scan-like input (projection over the parquet scan): no flag
-    val c0 = Similarity.deriveOnDerivedInput.get()
-    Similarity.nearestDupLsh(emb, "vec_id", "embedding")
-    assert(Similarity.deriveOnDerivedInput.get() === c0,
-      "a plain scan input must not trip the derived-input warning")
-    // derived input (a union) without planes/dim: the flag fires
-    val derived = base.unionByName(base.select(
-      (col("vec_id") + 100000L).as("vec_id"), col("v")))
-    Similarity.nearestDupLsh(derived, "vec_id", "v")
-    assert(Similarity.deriveOnDerivedInput.get() === c0 + 1,
-      "a derived input without planes/dim must trip the warning")
-    // explicit planes + dim skip the derive job (and the flag) entirely
-    val d = Similarity.deriveDim(emb, "embedding")
-    Similarity.nearestDupLsh(derived, "vec_id", "v", planes = 8, dim = d)
-    assert(Similarity.deriveOnDerivedInput.get() === c0 + 1,
-      "explicit planes+dim must skip the derive job")
-    // the plan classifier itself: checkpointed inputs are scan-like
-    // (materialized — re-evaluation is cheap), joins are not
-    assert(Similarity.scanLikePlan(
-      base.localCheckpoint().queryExecution.analyzed))
-    assert(!Similarity.scanLikePlan(
-      base.join(base.select(col("vec_id")), Seq("vec_id"))
-        .queryExecution.analyzed))
-  }
-
   test("supplied quantizer state must be shape-consistent with the tuning params") {
     val queries = emb.filter(col("vec_id") < 2)
       .select(col("vec_id").as("qid"),

@@ -304,6 +304,26 @@ class StreamingSpec extends SparkSpecBase {
     assert(jobs / 4.0 <= 10.0, s"$jobs jobs over 4 micro-batches")
   }
 
+  test("a drained ingest keeps only its per-batch pair checkpoints persisted") {
+    import spark.implicits._
+    // 16 docs over 4 residue files: every micro-batch stages its
+    // signatures and admits new ones, so each batch checkpoints a
+    // staged batch, an admit batch and its pairs; only the pairs, which
+    // the drain unions into its result, may outlive the batch
+    val docs = (0L until 16L).map(i =>
+        (i, (1 to 20).map(t => s"w${(i + t) % 24}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val drained = EventStream.nearDupIngestDrained(spark, docs, threshold = 0.8, files = 4)
+    val pairs = drained.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(pairs.size === 4, s"one pair checkpoint per micro-batch, got $pairs")
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held === pairs, s"checkpoints still persisted after the drain: ${held -- pairs}")
+  }
+
   test("drained ingest with per-batch compaction equals the uncompacted run") {
     import spark.implicits._
     // 3x the usual batch count (12 vs 4) and maxIndexFiles=1, so the
